@@ -1,21 +1,36 @@
-"""CdcEngine — the epoch loop: binlog tail → dedup → MERGE → manifest.
+"""CdcEngine — the epoch loop: binlog tail → dedup → MERGE → manifest → models.
 
 The Spark rebuild of the reference's per-endpoint incremental kernel
 ``extract_repsly_endpoint`` (extractors/repsly/extractor.py:1359-1488):
   gate → state snapshot → bounded scan from watermark → project →
   verified idempotent load → advance watermark atomically.
 
-Here (SURVEY.md §3.2):
-  1. slice = changes WHERE lsn in (checkpoint, hi]        (pushed scan)
-  2. salted LWW dedup to one net op per (conv_id, turn_idx)
-  3. split upserts / deletes, project onto the evolving schema
-     (Arrow-vectorized when an evolution is in flight)
-  4. copy-on-write MERGE into the lake table — atomic snapshot commit
-     stamped with the epoch id AND the full manifest payload
-  5. finalize the checkpoint manifest (offsets, lineage, metrics)
+Warehouse-agnostic like the reference (config/warehouse_config.py:25-45):
+the sink is the engine's lake table or any ``WarehouseBackend``, and
+both go through ONE loop (``_tail``), ONE epoch body (``_epoch``), ONE
+recover (``_recover``) and ONE manifest builder (``_manifest``)
+(SURVEY.md §3.2):
+  1. slice = changes WHERE lsn in (watermark, hi]          (pushed scan;
+     hi from the LSN-span planner or the row-bounded one)
+  2. writer-schema registry, slice stats via an Observation, add-only
+     schema evolution executed by the sink
+  3. salted LWW dedup to one net op per (conv_id, turn_idx), projected
+     onto the evolving schema (Arrow-vectorized when it evolves)
+  4. materialize the delta — the one sink-dependent step: a lake table
+     stages it as bucketed parquet (durable lineage, per-bucket footer
+     offsets); a warehouse takes a localCheckpoint (nothing retained)
+  5. MERGE into the sink under the epoch id (atomic, ledgered)
+  6. finalize the checkpoint manifest and apply the attached models.
 
-Crash between 4 and 5: ``recover()`` finds the epoch in snapshot
-summaries and finalizes the manifest from the summary without
+Ordering rule for 6: a durable staged delta finalizes first and the
+models run after (a crash mid-models replays them from the retained
+staging dir); with no retained delta the models run first and the
+manifest finalizes after (a crash mid-models leaves the epoch
+un-finalized, so the loop replays it).
+
+Crash between 5 and 6: ``recover`` finds the epoch in the sink's
+ledger (the lake table's snapshot summaries, a warehouse's ``_epochs``
+table) and finalizes the manifest from what was RECORDED, without
 re-applying — the write-ahead ordering the reference implements as
 "advance watermark only after verified load"
 (extractors/repsly/extractor.py:1441-1475).
@@ -27,6 +42,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from functools import partial
 
 import uuid
 
@@ -45,8 +61,9 @@ from etl_warehouse_agnostic_spark.operators.evolution import (
 from etl_warehouse_agnostic_spark.schemas import KEY_COLS, ORDER_COLS
 from etl_warehouse_agnostic_spark.sources.changes import ChangeStreamSource
 
-# Change-envelope columns that are not table payload.
-CDC_COLS = {"op", "lsn", "schema_ver"}
+# Change-envelope columns that are not table payload, with their types.
+CDC_TYPES = {"op": T.StringType(), "lsn": T.LongType(), "schema_ver": T.IntegerType()}
+CDC_COLS = set(CDC_TYPES)
 
 
 def _footer_offsets(staging_dir: str, lsn_col: str = "lsn") -> dict:
@@ -84,6 +101,20 @@ def _footer_offsets(staging_dir: str, lsn_col: str = "lsn") -> dict:
     return offsets
 
 
+def _observed(obs: Observation, df: DataFrame, metrics: list) -> dict:
+    """``obs``'s metrics, or the same aggregates recomputed over ``df``
+    when Catalyst folded the CollectMetrics node away (seen with empty
+    local-relation inputs)."""
+    try:
+        return obs.get
+    except Exception:
+        return df.agg(*metrics).first().asDict()
+
+
+def _utc_now() -> str:
+    return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+
+
 @dataclass
 class EpochResult:
     epoch: int
@@ -96,10 +127,14 @@ class EpochResult:
     snapshot_version: int | None = None
     offsets: dict = field(default_factory=dict)
     # per-model maintenance wall (ms), keyed by model name — wall_ms
-    # above covers ONLY the bronze apply; the model DAG runs after the
-    # bronze finalize, so scaling/soak harnesses need it separately to
-    # attribute non-scaling components (see tools/bench_scaling.py).
+    # above covers ONLY the bronze apply; the model DAG runs outside
+    # it, so scaling/soak harnesses need it separately to attribute
+    # non-scaling components (see tools/bench_scaling.py).
     model_wall_ms: dict = field(default_factory=dict)
+    # the lsn range the epoch's manifest finalized — the tail loop's
+    # next watermark (a sink ledger hit may record a narrower range
+    # than the slice the loop planned)
+    lsn_range: tuple[int, int] | None = None
 
 
 class CdcEngine:
@@ -113,7 +148,6 @@ class CdcEngine:
         dedup_method: str = "window",
         num_salts: int = 16,
         source_partitions: int = 32,
-        arrow_projection: bool = True,
         source_name: str = "transcripts_changes",
         schema_registry: dict[int, list[str]] | None = None,
         silver_models: list | None = None,
@@ -130,7 +164,6 @@ class CdcEngine:
         self.dedup_method = dedup_method
         self.num_salts = num_salts
         self.source_partitions = source_partitions
-        self.arrow_projection = arrow_projection
         self.source_name = source_name
         # Debezium-style writer-schema registry: schema_ver → payload
         # column names. When set, a slice only carries (and can only
@@ -139,14 +172,14 @@ class CdcEngine:
         self.schema_registry = schema_registry
         # Incremental silver models (silver.SilverModel /
         # AggregateModel) maintained by the tail loop: each bronze
-        # epoch's staged delta is transformed and merged into the
-        # model's own table under the same epoch id (the dbt-per-cycle
-        # analog). Models may CHAIN (model.parent) — the dbt raw →
-        # staging → curated graph — and are stored here in topological
-        # order so a chained model always reads its parent's
-        # post-epoch state; a chained model's input is its parent's
-        # epoch_delta, recomputed lazily from the one bronze staged
-        # delta (no extra staged storage anywhere in the DAG).
+        # epoch's delta is transformed and merged into the model's own
+        # table under the same epoch id (the dbt-per-cycle analog).
+        # Models may CHAIN (model.parent) — the dbt raw → staging →
+        # curated graph — and are stored here in topological order so
+        # a chained model always reads its parent's post-epoch state; a
+        # chained model's input is its parent's epoch_delta, recomputed
+        # lazily from the one bronze delta (no extra staged storage
+        # anywhere in the DAG).
         from etl_warehouse_agnostic_spark.silver import model_dag_order
 
         self.silver_models = model_dag_order(silver_models or [])
@@ -171,51 +204,403 @@ class CdcEngine:
         # epoch, logged in bootstrap_log.
         self.bootstrap_if_behind = bootstrap_if_behind
         self.bootstrap_log: list[dict] = []
-        # Staged epoch deltas are written once and read back at most
-        # twice (merge + silver replay) before deletion — a light codec
-        # there trades ephemeral bytes for CPU; the table's at-rest
-        # files keep the session default (zstd). Overridable for
-        # deployments where staging lands on slow/expensive storage.
-        self.staging_compression: str | None = os.environ.get(
-            "SPARK_GRAFT_STAGING_CODEC", "snappy"
+
+    # ---------------- public entry points ----------------
+
+    def run(
+        self,
+        source: ChangeStreamSource,
+        epoch_size: int,
+        max_epochs: int | None = None,
+        lookback: int = 0,
+    ) -> list[EpochResult]:
+        """Tail the change stream from the last checkpoint in epochs of
+        ``epoch_size`` LSNs. Lookback re-reads are deduped away (P6)."""
+        return self._tail(self.table, source, _lsn_spans(epoch_size), lookback, max_epochs)
+
+    def run_bounded(
+        self,
+        source: ChangeStreamSource,
+        max_rows_per_epoch: int,
+        lookback: int = 0,
+        granules: int = 1024,
+    ) -> list[EpochResult]:
+        """Tail the change stream in epochs bounded by ROW COUNT rather
+        than LSN span (S5 semantics folded into the engine): one pushed
+        histogram over the backlog plans the epoch boundaries, so a
+        burst of densely-packed LSNs can't blow an epoch past executor
+        memory and a sparse stretch doesn't produce hundreds of
+        near-empty epochs. Same exactly-once path per epoch."""
+        plan = partial(source.plan_bounded_slices, max_rows=max_rows_per_epoch, granules=granules)
+        return self._tail(self.table, source, plan, lookback)
+
+    def run_warehouse(
+        self,
+        warehouse,
+        source: ChangeStreamSource,
+        epoch_size: int,
+        max_epochs: int | None = None,
+        lookback: int = 0,
+    ) -> list[EpochResult]:
+        """:meth:`run` against any ``WarehouseBackend`` (the
+        warehouse-agnostic path): the warehouse executes the add-only
+        evolution (e.g. ALTER TABLE ADD COLUMN) and the MERGE."""
+        return self._tail(warehouse, source, _lsn_spans(epoch_size), lookback, max_epochs)
+
+    def run_warehouse_bounded(
+        self,
+        warehouse,
+        source: ChangeStreamSource,
+        max_rows_per_epoch: int,
+        lookback: int = 0,
+        granules: int = 1024,
+    ) -> list[EpochResult]:
+        """:meth:`run_bounded` against any ``WarehouseBackend``."""
+        plan = partial(source.plan_bounded_slices, max_rows=max_rows_per_epoch, granules=granules)
+        return self._tail(warehouse, source, plan, lookback)
+
+    def apply_epoch(
+        self,
+        changes: DataFrame,
+        epoch: int,
+        lsn_range: tuple[int, int] | None = None,
+    ) -> EpochResult:
+        """Apply one epoch of changes to the lake table exactly once."""
+        return self._epoch(self.table, changes, epoch, lsn_range)
+
+    def apply_epoch_warehouse(
+        self,
+        warehouse,
+        changes: DataFrame,
+        epoch: int,
+        lsn_range: tuple[int, int] | None = None,
+    ) -> EpochResult:
+        """Apply one epoch of changes to a ``WarehouseBackend`` exactly
+        once — also the streaming ``foreachBatch`` target (each
+        micro-batch = one epoch)."""
+        return self._epoch(warehouse, changes, epoch, lsn_range)
+
+    def recover(self) -> list[int]:
+        """Heal the lake table's crash window (see :meth:`_recover`);
+        returns the healed epoch ids."""
+        return self._recover(self.table)
+
+    def recover_warehouse(self, warehouse) -> list[int]:
+        """Heal a ``WarehouseBackend``'s crash window (see
+        :meth:`_recover`); returns the healed epoch ids."""
+        return self._recover(warehouse)
+
+    # ---------------- the tail loop ----------------
+
+    def _tail(self, sink, source, plan, lookback: int = 0,
+              max_epochs: int | None = None) -> list[EpochResult]:
+        """Recover, then apply ``plan(watermark, source_max)``'s slices
+        as consecutive epochs. Recovering BEFORE planning is what makes
+        pre-planned slices crash-safe: they start from the healed
+        watermark, so a crashed epoch's gap is inside the plan rather
+        than between stale plan boundaries."""
+        lake = sink is self.table
+        if lake:
+            self.recover()
+        else:
+            self.recover_warehouse(sink)
+        results: list[EpochResult] = []
+        hi_water = self.checkpoints.high_water_lsn()
+        source_max = source.max_lsn()
+        epoch = (self.checkpoints.last_epoch() or 0) + 1
+        for _, hi in plan(hi_water, source_max):
+            if max_epochs is not None and len(results) >= max_epochs:
+                break
+            if hi <= hi_water:
+                continue  # covered by a wider range a ledger hit finalized
+            changes = source.read_slice(hi_water, hi, lookback=lookback)
+            rng = (hi_water, hi)
+            res = (
+                self.apply_epoch(changes, epoch, lsn_range=rng) if lake
+                else self.apply_epoch_warehouse(sink, changes, epoch, lsn_range=rng)
+            )
+            results.append(res)
+            # The range the epoch actually finalized is the watermark,
+            # never the planned bound: a ledger hit finalizes the range
+            # the sink RECORDED, and the next slice starts there.
+            hi_water = res.lsn_range[1]
+            epoch += 1
+            self._maybe_maintain(sum(1 for r in results if not r.skipped))
+        return results
+
+    def _maybe_maintain(self, epochs_done: int) -> None:
+        """Compaction policy hook: fires every ``maintenance_every``
+        APPLIED (non-skipped) epochs — replayed/skipped epochs do not
+        advance the cadence; content-preserving (proven by test) and
+        epoch-ledger-preserving, so exactly-once is unaffected."""
+        if not self.maintenance_every or self.table is None:
+            return
+        if epochs_done == 0 or epochs_done % self.maintenance_every:
+            return
+        if self._last_maintained == epochs_done:
+            # A skipped (replayed) epoch after a firing multiple keeps
+            # the count unchanged — don't re-fire compaction across
+            # every table on each consecutive skipped epoch.
+            return
+        self._last_maintained = epochs_done
+        # Bronze AND every attached model table: silver/gold merge per
+        # epoch and fragment exactly like bronze does (VERDICT r5 #4 —
+        # a long-running deployment with models attached otherwise
+        # re-acquires the problem this hook solves). Model tables on a
+        # warehouse backend compact themselves (server-side merges) and
+        # are skipped.
+        targets = [("bronze", self.table)] + [
+            (m.name, m.table)
+            for m in self.silver_models
+            if hasattr(m.table, "rewrite_small_files")
+        ]
+        for label, t in targets:
+            res = t.rewrite_small_files(
+                target_file_bytes=self.maintenance_target_file_bytes,
+                min_files=self.maintenance_min_files,
+            )
+            res["table"] = label
+            res["after_epoch"] = self.checkpoints.last_epoch()
+            self.maintenance_log.append(res)
+
+    # ---------------- one epoch ----------------
+
+    def _epoch(self, sink, changes: DataFrame, epoch: int,
+               lsn_range: tuple[int, int] | None) -> EpochResult:
+        if self.checkpoints.is_finalized(epoch):
+            rng = self.checkpoints.get(epoch)["lineage"]["lsn_range"]
+            return EpochResult(epoch=epoch, skipped=True, lsn_range=tuple(rng))
+        t0 = time.monotonic()
+
+        # Writer-schema resolution: with a registry, the slice's payload
+        # is the max writer schema it actually contains; without one,
+        # whatever columns the batch physically carries. Registry mode
+        # (used when the change log physically stores the union schema)
+        # needs the slice's max writer version before projection — one
+        # small agg job; the default path pays no extra job.
+        schema_ver_max = 1
+        if self.schema_registry is not None:
+            row = changes.agg(F.max("schema_ver")).first()
+            schema_ver_max = int(row[0]) if row and row[0] is not None else 1
+            payload_cols = self.schema_registry[schema_ver_max]
+            keep = [c for c in changes.columns if c in CDC_COLS or c in self.key_cols]
+            changes = changes.select(*keep, *[c for c in payload_cols if c not in keep])
+
+        # Global slice stats and the delta census ride along on the job
+        # that materializes the delta (Observations upstream of it) — no
+        # separate stats pass.
+        slice_metrics = [
+            F.count(F.lit(1)).alias("rows_read"),
+            F.min("lsn").alias("min_lsn"),
+            F.max("lsn").alias("max_lsn"),
+        ]
+        if "schema_ver" in changes.columns:
+            slice_metrics.append(F.max("schema_ver").alias("sv_max"))
+        obs_slice = Observation(f"slice-e{epoch}-{uuid.uuid4().hex[:6]}")
+        changes = changes.observe(obs_slice, *slice_metrics)
+
+        # Add-only schema evolution: payload columns in this batch that
+        # the sink doesn't know yet become ADD COLUMNs before apply.
+        added = new_fields(changes, sink.schema, passthrough=CDC_COLS)
+        schema = sink.evolve_schema(added) if added else sink.schema
+
+        deduped = lww_dedup(
+            changes, self.key_cols, self.order_cols,
+            method=self.dedup_method, num_salts=self.num_salts,
         )
+        envelope = [c for c in CDC_TYPES if c in deduped.columns]
+        project = project_arrow if added else project_columns
+        delta_metrics = [
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_del"),
+        ]
+        obs_delta = Observation(f"delta-e{epoch}-{uuid.uuid4().hex[:6]}")
+        projected = project(deduped, schema, keep=envelope).observe(obs_delta, *delta_metrics)
+
+        # Materialize the delta once for the merge's two sides and every
+        # model — the one sink-dependent step. A lake table stages it as
+        # bucketed parquet: durable lineage for the epoch, per-bucket
+        # footer offsets, and the census (affected buckets) its merge
+        # prunes with. Staged files are written once and read back at
+        # most twice before deletion, so a light codec there trades
+        # ephemeral bytes for CPU. A warehouse retains nothing, so the
+        # delta is checkpointed (epoch-bounded); on a cluster a lost
+        # checkpoint partition fails the epoch, which simply replays.
+        staging_dir = None
+        if sink is self.table:
+            from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
+
+            staging_dir = self._staging_dir(epoch)
+            sink.write_bucketed(
+                projected.withColumn("_bucket", bucket_of(self.key_cols[0], sink.num_buckets)),
+                staging_dir, compression="snappy",
+            )
+            staged_schema = T.StructType(
+                list(schema.fields)
+                + [T.StructField(c, CDC_TYPES[c], True) for c in envelope]
+            )
+            delta = sink.read_bucketed(staging_dir, staged_schema)
+        else:
+            delta = projected.localCheckpoint()
+
+        slice_stats = _observed(obs_slice, changes, slice_metrics)
+        census = _observed(obs_delta, delta, delta_metrics)
+        rows_read = int(slice_stats.get("rows_read") or 0)
+        n_rows = int(census.get("rows") or 0)
+        n_del = int(census.get("n_del") or 0)
+        if lsn_range is None:
+            lsn_range = (
+                int(slice_stats.get("min_lsn") or 0),
+                int(slice_stats.get("max_lsn") or 0),
+            )
+        offsets = (
+            _footer_offsets(staging_dir) if staging_dir
+            else {"all": {"max_lsn": lsn_range[1], "rows": n_rows}}
+        )
+        manifest = self._manifest(
+            epoch, lsn_range, offsets, rows_read, n_rows - n_del, n_del,
+            schema_ver_max=int(slice_stats.get("sv_max") or schema_ver_max),
+            added_columns=[f.name for f in added],
+        )
+        # The lake table's commit carries the manifest (recover heals
+        # from it) and prunes by the staged census; the exact delta size
+        # lets it broadcast the changed-key set into the anti-join. A
+        # warehouse ledgers the lsn range instead.
+        merge_kw = (
+            {"extra_summary": {"manifest": manifest}, "changed_rows": n_rows,
+             "affected_buckets": sink.staged_buckets(staging_dir)}
+            if staging_dir else {"lsn_range": lsn_range}
+        )
+        upserts, deletes = split_ops(delta)
+        res = sink.merge(
+            upserts.drop("lsn", "schema_ver"), deletes.select(*self.key_cols),
+            epoch_id=epoch, **merge_kw,
+        )
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        if res.skipped:
+            # Ledger hit: the epoch already committed (a crash before
+            # finalize), possibly under a NARROWER lsn range than this
+            # recomputed slice if the source gained LSNs before restart.
+            # Finalize what the sink RECORDED so the watermark never
+            # passes rows that were not applied; a legacy ledger row
+            # without lsn_lo keeps the loop's lo (0 would read as a
+            # false gap/overlap in pipeline_health).
+            manifest = self._ledger_manifest(sink, epoch, lo=lsn_range[0]) or manifest
+        else:
+            manifest["metrics"].update(bytes_written=res.bytes_written, wall_ms=wall_ms)
+            manifest.update(snapshot_version=res.version, committed_at=_utc_now())
+
+        # Models ride the same delta (no extra pass over the slice; the
+        # reference ran its dbt models against the warehouse,
+        # airflow/dags/repsly_dag.py:643-1040). See the module docstring
+        # for the finalize/models ordering rule.
+        model_walls = {} if staging_dir else self._apply_silver(delta, epoch)
+        self.checkpoints.finalize(epoch, manifest)
+        if staging_dir:
+            model_walls = self._apply_silver(delta, epoch)
+            shutil.rmtree(staging_dir, ignore_errors=True)
+        rng = tuple(manifest["lineage"]["lsn_range"])
+        if res.skipped:
+            return EpochResult(epoch=epoch, skipped=True, model_wall_ms=model_walls, lsn_range=rng)
+        return EpochResult(
+            epoch=epoch, skipped=False, rows_read=rows_read,
+            rows_upserted=n_rows - n_del, rows_deleted=n_del,
+            bytes_written=res.bytes_written, wall_ms=wall_ms,
+            snapshot_version=res.version, offsets=offsets,
+            model_wall_ms=model_walls, lsn_range=rng,
+        )
+
+    def _manifest(self, epoch: int, lsn_range: tuple[int, int], offsets: dict,
+                  rows_read: int | None, rows_upserted: int, rows_deleted: int | None,
+                  schema_ver_max: int | None = None, added_columns: tuple = ()) -> dict:
+        """The one checkpoint-manifest shape, for every sink and for
+        ledger heals. ``None`` marks a count a ledger did not record;
+        bytes_written, wall_ms and snapshot_version are post-commit."""
+        return {
+            "epoch": epoch,
+            "offsets": offsets,
+            "metrics": {"rows_read": rows_read, "rows_upserted": rows_upserted,
+                        "rows_deleted": rows_deleted, "bytes_written": 0, "wall_ms": 0},
+            "lineage": {"source": self.source_name, "lsn_range": list(lsn_range),
+                        "schema_ver_max": schema_ver_max, "added_columns": list(added_columns)},
+            "snapshot_version": None,
+            "committed_at": _utc_now(),
+        }
 
     # ---------------- recovery (T2) ----------------
 
-    def recover(self) -> list[int]:
-        """Finalize manifests for epochs whose MERGE committed but whose
-        manifest write was lost (crash window). Returns healed epochs.
-
-        The manifest embedded in the snapshot was serialized *before*
-        the merge ran, so its post-commit metrics are zeroed; backfill
-        them from the snapshot's own summary/fields so a healed manifest
-        has the same shape as a normal-path one. Also sweeps staging
-        dirs of finalized epochs (a crash between merge-commit and
-        finalize leaves ``_staging/e<N>`` behind forever otherwise).
-        """
+    def _recover(self, sink) -> list[int]:
+        """Finalize manifests for epochs the sink's ledger committed but
+        whose manifest write was lost (the crash window between merge
+        and finalize), from what the ledger RECORDED, without
+        re-applying. Then make sure every model is current and, on the
+        lake table, replay retained staged deltas into the models and
+        sweep the staging dirs of finished epochs (a crash between
+        merge commit and cleanup leaves them behind otherwise)."""
+        lake = sink is self.table
         healed = []
-        for epoch in self.table.committed_epochs():
-            if not self.checkpoints.is_finalized(epoch):
-                snap = self.table.epoch_snapshot(epoch)
-                if snap is None:
-                    continue
-                manifest = snap["summary"].get("manifest")
-                if manifest is not None:
-                    manifest = dict(manifest)
-                    metrics = dict(manifest.get("metrics", {}))
-                    metrics["bytes_written"] = int(snap["summary"].get("bytes_written") or 0)
-                    manifest["metrics"] = metrics
-                    manifest.setdefault("snapshot_version", snap["version"])
-                    manifest.setdefault("committed_at", snap["committed_at"])
-                    self.checkpoints.finalize(epoch, manifest)
-                    healed.append(epoch)
+        for epoch in sink.committed_epochs():
+            if self.checkpoints.is_finalized(epoch):
+                continue
+            if not lake and not all(m.epoch_committed(epoch) for m in self.silver_models):
+                # No retained delta: finalizing here would advance the
+                # watermark past rows the models never saw. Leave the
+                # epoch un-finalized — the loop replays it, the merge
+                # skips via the ledger, and the models catch up from
+                # the recomputed slice before the late finalize.
+                continue
+            manifest = self._ledger_manifest(sink, epoch)
+            if manifest is not None:
+                self.checkpoints.finalize(epoch, manifest)
+                healed.append(epoch)
         # Check (and possibly auto-bootstrap) BEFORE replaying staged
         # deltas: a bootstrap stamped with the last finalized epoch
         # already covers any still-staged epoch's content from bronze.
-        self._check_silver_current()
-        self._recover_silver()
-        self._sweep_staging()
+        staged = self._staged_epochs() if lake else {}
+        self._check_silver_current(sink, staged)
+        if lake:
+            self._recover_silver(staged)
         return healed
+
+    def _ledger_manifest(self, sink, epoch: int, lo: int | None = None) -> dict | None:
+        """The manifest of a committed epoch, rebuilt from the sink's
+        ledger and marked ``healed``; None when the ledger does not say
+        which lsn range was applied (``lo`` stands in for a missing
+        recorded lower bound). The lake table's commit carries the whole
+        pre-merge manifest: backfill its post-commit fields."""
+        if sink is self.table:
+            snap = sink.epoch_snapshot(epoch)
+            manifest = snap and snap["summary"].get("manifest")
+            if manifest is None:
+                return None
+            metrics = dict(manifest["metrics"], healed=True,
+                           bytes_written=int(snap["summary"].get("bytes_written") or 0))
+            return dict(manifest, metrics=metrics, snapshot_version=snap["version"],
+                        committed_at=snap["committed_at"])
+        info = sink.epoch_info(epoch) or {}
+        if info.get("lsn_lo") is not None:
+            lo = int(info["lsn_lo"])
+        if info.get("lsn_hi") is None or lo is None:
+            return None
+        hi, rows = int(info["lsn_hi"]), int(info.get("rows_written") or 0)
+        manifest = self._manifest(epoch, (lo, hi), {"all": {"max_lsn": hi, "rows": rows}},
+                                  rows_read=None, rows_upserted=rows, rows_deleted=None)
+        manifest["metrics"]["healed"] = True
+        return manifest
+
+    def _staging_dir(self, epoch: int) -> str:
+        return os.path.join(self.table.path, "_staging", f"e{epoch:08d}")
+
+    def _staged_epochs(self) -> dict[int, str]:
+        """The lake table's retained staging dirs, by epoch id."""
+        root = os.path.dirname(self._staging_dir(0))
+        if not os.path.isdir(root):
+            return {}
+        return {
+            int(d[1:]): os.path.join(root, d)
+            for d in os.listdir(root)
+            if d.startswith("e") and d[1:].isdigit()
+        }
 
     def _staged_schema(self, staging_dir: str) -> T.StructType | None:
         """Reconstruct the schema of a retained staging dir from one
@@ -235,13 +620,8 @@ class CdcEngine:
         if sample is None:
             return None
         names = set(pq.ParquetFile(sample).metadata.schema.names)
-        env_types = {"op": T.StringType(), "lsn": T.LongType(), "schema_ver": T.IntegerType()}
         fields = [f for f in self.table.schema.fields if f.name in names]
-        fields += [
-            T.StructField(c, env_types[c], True)
-            for c in ("op", "lsn", "schema_ver")
-            if c in names
-        ]
+        fields += [T.StructField(c, t, True) for c, t in CDC_TYPES.items() if c in names]
         return T.StructType(fields)
 
     def _apply_silver(self, staged: DataFrame, epoch: int) -> dict[str, int]:
@@ -309,71 +689,32 @@ class CdcEngine:
                     f.result()
         return walls
 
-    def _check_silver_current(self) -> None:
-        """Refuse to tail forward past a model that is behind with its
-        staged deltas GONE (e.g. attached to a bronze that was already
-        populated): maintaining it forward would permanently miss those
-        epochs' rows — a silent divergence. The fix is explicit:
-        ``model.bootstrap(...)`` (full refresh stamped with bronze's
-        last epoch), or rebuild the model's table."""
-        if not self.silver_models or self.table is None:
-            return
-        finalized = self.checkpoints.epochs()
-        if not finalized:
-            return
-        staging_root = os.path.join(self.table.path, "_staging")
-        staged: set[int] = set()
-        if os.path.isdir(staging_root):
-            for d in os.listdir(staging_root):
-                if d.startswith("e"):
-                    try:
-                        staged.add(int(d[1:]))
-                    except ValueError:
-                        pass
+    def _check_silver_current(self, sink, staged: dict[int, str]) -> None:
+        """Refuse to tail forward past a model that is behind on
+        finalized epochs whose deltas are gone (swept or never staged —
+        a warehouse sink retains none, e.g. a model attached to an
+        already-populated sink): maintaining it forward would
+        permanently miss those epochs' rows — a silent divergence.
+        Un-finalized epochs are fine: the loop replays them. The fix is
+        explicit: ``model.bootstrap(...)`` (full refresh stamped with
+        the sink's last epoch), or rebuild the model's table."""
+        finalized = self.checkpoints.epochs() if self.silver_models else []
+        staged_finalized = sorted(set(staged) & set(finalized))
         for m in self.silver_models:
             last = m.last_epoch()
             behind = [e for e in finalized if e > last and e not in staged]
-            if behind:
-                if self.bootstrap_if_behind:
-                    self._bootstrap_model(
-                        m, self.table, behind,
-                        staged_finalized=[e for e in staged if e in set(finalized)],
-                    )
-                    continue
-                raise ValueError(
-                    f"silver model {m.name!r} is missing epoch(s) "
-                    f"{behind[:5]}{'...' if len(behind) > 5 else ''} whose staged "
-                    "deltas are gone — bootstrap it from bronze "
-                    "(model.bootstrap(...)) or rebuild its table before "
-                    "attaching, or attach with bootstrap_if_behind=True"
-                )
-
-    def _check_silver_current_warehouse(self, warehouse) -> None:
-        """Warehouse-path analog of :meth:`_check_silver_current`: a
-        FINALIZED epoch a model never committed is unreachable (the
-        warehouse path retains no staged delta at all), so maintaining
-        forward would silently miss it — fail loudly with the
-        bootstrap pointer. Un-finalized epochs are fine: the loop
-        replays them inline."""
-        if not self.silver_models:
-            return
-        finalized = self.checkpoints.epochs()
-        if not finalized:
-            return
-        for m in self.silver_models:
-            committed = set(m.table.committed_epochs())
-            behind = [e for e in finalized if e not in committed and e > m.last_epoch()]
-            if behind:
-                if self.bootstrap_if_behind:
-                    self._bootstrap_model(m, warehouse, behind)
-                    continue
-                raise ValueError(
-                    f"silver model {m.name!r} is missing finalized epoch(s) "
-                    f"{behind[:5]}{'...' if len(behind) > 5 else ''} and the "
-                    "warehouse path retains no staged deltas — bootstrap it "
-                    "(model.bootstrap(...)) or rebuild its table before "
-                    "attaching, or attach with bootstrap_if_behind=True"
-                )
+            if not behind:
+                continue
+            if self.bootstrap_if_behind:
+                self._bootstrap_model(m, sink, behind, staged_finalized)
+                continue
+            raise ValueError(
+                f"silver model {m.name!r} is missing finalized epoch(s) "
+                f"{behind[:5]}{'...' if len(behind) > 5 else ''} whose deltas "
+                "are gone — bootstrap it (model.bootstrap(...)) or rebuild "
+                "its table before attaching, or attach with "
+                "bootstrap_if_behind=True"
+            )
 
     def _bootstrap_model(
         self, m, default_source, behind: list[int],
@@ -408,529 +749,24 @@ class CdcEngine:
              "stamped_staged": covered_staged}
         )
 
-    def _recover_silver(self) -> None:
-        """Catch silver models up from retained staging dirs — the
-        crash window between bronze manifest-finalize and silver apply
-        (or between two models). Epoch-idempotent merges make the
-        replay safe; the staging dir is only swept once every model
-        has committed the epoch."""
-        if not self.silver_models or self.table is None:
-            return
-        staging_root = os.path.join(self.table.path, "_staging")
-        if not os.path.isdir(staging_root):
-            return
-        for d in sorted(os.listdir(staging_root)):
-            if not d.startswith("e"):
-                continue
-            try:
-                epoch = int(d[1:])
-            except ValueError:
-                continue
+
+    def _recover_silver(self, staged: dict[int, str]) -> None:
+        """Catch models up from retained staging dirs — the crash window
+        between bronze manifest-finalize and the model applies (or
+        between two models) — then sweep each finalized epoch's dir.
+        Epoch-idempotent merges make the replay safe; a dir is only
+        swept once every model has committed its epoch."""
+        for epoch, staging_dir in sorted(staged.items()):
             if not self.checkpoints.is_finalized(epoch):
                 continue  # bronze itself will replay this epoch
-            if all(m.epoch_committed(epoch) for m in self.silver_models):
-                continue
-            staging_dir = os.path.join(staging_root, d)
-            schema = self._staged_schema(staging_dir)
-            if schema is None:
-                continue
-            staged = self.table.read_bucketed(staging_dir, schema)
-            self._apply_silver(staged, epoch)
+            if not all(m.epoch_committed(epoch) for m in self.silver_models):
+                schema = self._staged_schema(staging_dir)
+                if schema is None:
+                    continue
+                self._apply_silver(self.table.read_bucketed(staging_dir, schema), epoch)
+            shutil.rmtree(staging_dir, ignore_errors=True)
 
-    def _sweep_staging(self) -> None:
-        """Remove staged epoch deltas whose epoch is already finalized —
-        the normal path deletes them post-finalize; this reclaims the
-        leak when a crash lands between merge commit and cleanup."""
-        staging_root = os.path.join(self.table.path, "_staging")
-        if not os.path.isdir(staging_root):
-            return
-        for d in os.listdir(staging_root):
-            if not d.startswith("e"):
-                continue
-            try:
-                epoch = int(d[1:])
-            except ValueError:
-                continue
-            if self.checkpoints.is_finalized(epoch) and all(
-                m.epoch_committed(epoch) for m in self.silver_models
-            ):
-                shutil.rmtree(os.path.join(staging_root, d), ignore_errors=True)
 
-    # ---------------- one epoch ----------------
-
-    def apply_epoch(
-        self,
-        changes: DataFrame,
-        epoch: int,
-        lsn_range: tuple[int, int] | None = None,
-    ) -> EpochResult:
-        t0 = time.monotonic()
-        if self.checkpoints.is_finalized(epoch):
-            return EpochResult(epoch=epoch, skipped=True)
-        if self.table.epoch_committed(epoch):
-            self.recover()
-            return EpochResult(epoch=epoch, skipped=True)
-
-        # Writer-schema resolution: with a registry, the slice's payload
-        # is the max writer schema it actually contains; without one,
-        # whatever columns the batch physically carries. Registry mode
-        # (used when the change log physically stores the union schema)
-        # needs the slice's max writer version before projection — one
-        # small agg job; the default path pays no extra job.
-        schema_ver_max = 1
-        if self.schema_registry is not None:
-            row = changes.agg(F.max("schema_ver")).first()
-            schema_ver_max = int(row[0]) if row and row[0] is not None else 1
-            payload_cols = self.schema_registry[schema_ver_max]
-            keep = [c for c in changes.columns if c in CDC_COLS or c in self.key_cols]
-            changes = changes.select(*keep, *[c for c in payload_cols if c not in keep])
-
-        # Global slice stats ride along on the staging job (Observation
-        # attached upstream of the dedup) — no separate stats pass.
-        obs_in = Observation(f"slice-e{epoch}-{uuid.uuid4().hex[:6]}")
-        in_metrics = [
-            F.count(F.lit(1)).alias("rows_read"),
-            F.min("lsn").alias("min_lsn"),
-            F.max("lsn").alias("max_lsn"),
-        ]
-        if "schema_ver" in changes.columns:
-            in_metrics.append(F.max("schema_ver").alias("sv_max"))
-        changes = changes.observe(obs_in, *in_metrics)
-
-        # Add-only schema evolution: payload columns in this batch that
-        # the table doesn't know yet become ADD COLUMNs before apply.
-        added = new_fields(changes, self.table.schema, passthrough=CDC_COLS)
-        schema = self.table.evolve_schema(added) if added else self.table.schema
-
-        # Dedup once, stage the epoch delta (bucketed, tiny relative to
-        # the slice), then merge from the staged files. One pass over
-        # the raw slice; census (affected buckets + op counts) falls out
-        # of the staging write's Observation + directory listing — no
-        # extra Spark jobs. The staged delta doubles as durable lineage
-        # for the epoch.
-        from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
-
-        deduped = lww_dedup(
-            changes, self.key_cols, self.order_cols,
-            method=self.dedup_method, num_salts=self.num_salts,
-        )
-        envelope = [c for c in ("op", "lsn", "schema_ver") if c in deduped.columns]
-        projected = (
-            project_arrow(deduped, schema, keep=envelope)
-            if (added and self.arrow_projection)
-            else project_columns(deduped, schema, keep=envelope)
-        ).withColumn("_bucket", bucket_of(self.key_cols[0], self.table.num_buckets))
-
-        staging_dir = os.path.join(self.table.path, "_staging", f"e{epoch:08d}")
-        _, observed, _ = self.table.write_bucketed(
-            projected, staging_dir,
-            extra_metrics={"n_del": F.sum(F.when(F.col("op") == "D", 1).otherwise(0))},
-            compression=self.staging_compression,
-        )
-        n_del = observed.get("n_del", 0)
-        n_up = observed["rows"] - n_del
-        affected = self.table.staged_buckets(staging_dir)
-
-        try:
-            slice_stats = obs_in.get
-        except Exception:
-            # CollectMetrics folded away (local-relation inputs):
-            # recompute slice stats with an explicit agg.
-            aggs = [F.count(F.lit(1)).alias("rows_read"),
-                    F.min("lsn").alias("min_lsn"), F.max("lsn").alias("max_lsn")]
-            if "schema_ver" in changes.columns:
-                aggs.append(F.max("schema_ver").alias("sv_max"))
-            slice_stats = changes.agg(*aggs).first().asDict()
-        rows_read = int(slice_stats.get("rows_read") or 0)
-        schema_ver_max = int(slice_stats.get("sv_max") or schema_ver_max or 1)
-        if lsn_range is None:
-            lsn_range = (
-                int(slice_stats.get("min_lsn") or 0),
-                int(slice_stats.get("max_lsn") or 0),
-            )
-        # Per-bucket offsets/lineage from the staged parquet footers —
-        # driver-side metadata only, no job.
-        offsets = _footer_offsets(staging_dir)
-
-        env_types = {"op": T.StringType(), "lsn": T.LongType(), "schema_ver": T.IntegerType()}
-        staged_schema = T.StructType(
-            list(schema.fields)
-            + [T.StructField(c, env_types[c], True) for c in envelope]
-        )
-        staged = self.table.read_bucketed(staging_dir, staged_schema)
-        upserts, deletes = split_ops(staged)
-        payload = upserts.drop("lsn", "schema_ver")
-        delete_keys = deletes.select(*self.key_cols)
-
-        manifest = {
-            "epoch": epoch,
-            "offsets": offsets,
-            "metrics": {
-                "rows_read": rows_read,
-                "rows_upserted": n_up,
-                "rows_deleted": n_del,
-                "bytes_written": 0,  # patched post-merge
-                "wall_ms": 0,
-            },
-            "lineage": {
-                "source": self.source_name,
-                "lsn_range": list(lsn_range),
-                "schema_ver_max": schema_ver_max,
-                "added_columns": [f.name for f in added],
-            },
-        }
-        res = self.table.merge(
-            payload, delete_keys, epoch_id=epoch,
-            extra_summary={"manifest": manifest},
-            affected_buckets=affected,
-            # Exact delta size from the staging write's Observation lets
-            # the merge broadcast the changed-key set (anti-join build
-            # side) instead of shuffling the survivors scan by key.
-            changed_rows=observed["rows"],
-        )
-
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        manifest["metrics"]["bytes_written"] = res.bytes_written
-        manifest["metrics"]["wall_ms"] = wall_ms
-        manifest["committed_at"] = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        manifest["snapshot_version"] = res.version
-        self.checkpoints.finalize(epoch, manifest)
-        # Incremental silver maintenance rides the SAME staged delta
-        # (no extra pass over the slice); the staging dir survives
-        # until every model has committed the epoch so a crash here
-        # replays through _recover_silver.
-        model_walls = self._apply_silver(staged, epoch)
-        shutil.rmtree(staging_dir, ignore_errors=True)
-        return EpochResult(
-            epoch=epoch, skipped=res.skipped, rows_read=rows_read,
-            rows_upserted=n_up, rows_deleted=n_del,
-            bytes_written=res.bytes_written, wall_ms=wall_ms,
-            snapshot_version=res.version, offsets=offsets,
-            model_wall_ms=model_walls,
-        )
-
-    # ---------------- the tail loop ----------------
-
-    def _maybe_maintain(self, epochs_done: int) -> None:
-        """Compaction policy hook: fires every ``maintenance_every``
-        APPLIED (non-skipped) epochs — replayed/skipped epochs do not
-        advance the cadence; content-preserving (proven by test) and
-        epoch-ledger-preserving, so exactly-once is unaffected."""
-        if not self.maintenance_every or self.table is None:
-            return
-        if epochs_done == 0 or epochs_done % self.maintenance_every:
-            return
-        if self._last_maintained == epochs_done:
-            # A skipped (replayed) epoch after a firing multiple keeps
-            # the count unchanged — don't re-fire compaction across
-            # every table on each consecutive skipped epoch.
-            return
-        self._last_maintained = epochs_done
-        # Bronze AND every attached model table: silver/gold merge per
-        # epoch and fragment exactly like bronze does (VERDICT r5 #4 —
-        # a long-running deployment with models attached otherwise
-        # re-acquires the problem this hook solves). Model tables on a
-        # warehouse backend compact themselves (server-side merges) and
-        # are skipped.
-        targets = [("bronze", self.table)] + [
-            (m.name, m.table)
-            for m in self.silver_models
-            if hasattr(m.table, "rewrite_small_files")
-        ]
-        for label, t in targets:
-            res = t.rewrite_small_files(
-                target_file_bytes=self.maintenance_target_file_bytes,
-                min_files=self.maintenance_min_files,
-            )
-            res["table"] = label
-            res["after_epoch"] = self.checkpoints.last_epoch()
-            self.maintenance_log.append(res)
-
-    def run(
-        self,
-        source: ChangeStreamSource,
-        epoch_size: int,
-        max_epochs: int | None = None,
-        lookback: int = 0,
-    ) -> list[EpochResult]:
-        """Tail the change stream from the last checkpoint in epochs of
-        ``epoch_size`` LSNs. Lookback re-reads are deduped away (P6)."""
-        self.recover()
-        results = []
-        hi_water = self.checkpoints.high_water_lsn()
-        source_max = source.max_lsn()
-        epoch = (self.checkpoints.last_epoch() or 0) + 1
-        while hi_water < source_max:
-            if max_epochs is not None and len(results) >= max_epochs:
-                break
-            hi = min(hi_water + epoch_size, source_max)
-            slice_df = source.read_slice(hi_water, hi, lookback=lookback)
-            results.append(self.apply_epoch(slice_df, epoch, lsn_range=(hi_water, hi)))
-            hi_water = hi
-            epoch += 1
-            self._maybe_maintain(sum(1 for r in results if not r.skipped))
-        return results
-
-    def run_warehouse(
-        self,
-        warehouse,
-        source: ChangeStreamSource,
-        epoch_size: int,
-        max_epochs: int | None = None,
-        lookback: int = 0,
-    ) -> list[EpochResult]:
-        """The same tail loop against ANY ``WarehouseBackend`` (the
-        warehouse-agnostic path): slice → add-only evolution (the
-        warehouse executes it, e.g. ALTER TABLE ADD COLUMN) → salted
-        LWW dedup → split → backend MERGE with the epoch id → manifest.
-
-        Exactly-once holds per backend contract: a replayed epoch id is
-        a skipped no-op inside ``merge``; a crash between merge and
-        manifest-finalize heals on the next run (epoch found in the
-        backend's ledger → manifest finalized from the ledger's
-        RECORDED lsn range, without re-applying). The recorded range
-        matters: if the crashed epoch was truncated by the then-current
-        source max and new LSNs accrued before restart, the recomputed
-        slice bound would be wider than what was actually applied —
-        finalizing with it would advance the watermark past rows that
-        were never merged (permanent loss). After each epoch the loop
-        therefore re-reads the watermark from the finalized manifest
-        rather than trusting its own recomputed bound.
-        The lake-table path (``run``) additionally stages the delta for
-        per-bucket footer lineage — a LakeTable specialization this
-        generic loop does not assume.
-        """
-        self.recover_warehouse(warehouse)
-        results: list[EpochResult] = []
-        hi_water = self.checkpoints.high_water_lsn()
-        source_max = source.max_lsn()
-        epoch = (self.checkpoints.last_epoch() or 0) + 1
-        while hi_water < source_max:
-            if max_epochs is not None and len(results) >= max_epochs:
-                break
-            hi = min(hi_water + epoch_size, source_max)
-            changes = source.read_slice(hi_water, hi, lookback=lookback)
-            results.append(
-                self.apply_epoch_warehouse(warehouse, changes, epoch, lsn_range=(hi_water, hi))
-            )
-            # The manifest (possibly healed from the backend ledger) is
-            # the truth about what was applied — never the loop's own
-            # recomputed bound.
-            hi_water, epoch = self.checkpoints.high_water_lsn(), epoch + 1
-        return results
-
-    def recover_warehouse(self, warehouse) -> list[int]:
-        """The warehouse analog of :meth:`recover`: finalize manifests
-        for epochs the backend's ledger committed but whose manifest
-        write was lost (crash window), using the ledger's RECORDED lsn
-        range. Running this BEFORE a loop plans its slices is what
-        makes pre-planned (bounded) epochs crash-safe — planning must
-        start from the healed watermark, not a stale one. Epochs whose
-        ledger predates the lsn columns (legacy) heal inline at their
-        replay instead (the recomputed bounds are all we have)."""
-        self._check_silver_current_warehouse(warehouse)
-        healed: list[int] = []
-        for epoch in warehouse.committed_epochs():
-            if self.checkpoints.is_finalized(epoch):
-                continue
-            if self.silver_models and not all(
-                m.epoch_committed(epoch) for m in self.silver_models
-            ):
-                # A crash between the warehouse merge and the model
-                # applies: finalizing here would advance the watermark
-                # past rows the models never saw. Leave the epoch
-                # un-finalized — the loop replays it, the warehouse
-                # merge skips via its ledger, and the models catch up
-                # from the recomputed slice before the late finalize.
-                continue
-            info = warehouse.epoch_info(epoch)
-            if info is None or info.get("lsn_hi") is None or info.get("lsn_lo") is None:
-                # no recorded range (or a half-recorded one): heal
-                # inline at replay instead — coercing a NULL lsn_lo to
-                # 0 would make pipeline_health report a false
-                # gap/overlap against the previous epoch's hi
-                continue
-            lo = int(info["lsn_lo"])
-            hi = int(info["lsn_hi"])
-            manifest = {
-                "epoch": epoch,
-                "offsets": {"all": {"max_lsn": hi, "rows": info.get("rows_written", 0)}},
-                "metrics": {
-                    "rows_upserted": int(info.get("rows_written") or 0),
-                    "wall_ms": 0,
-                    "healed": True,
-                },
-                "lineage": {
-                    "source": self.source_name,
-                    "lsn_range": [lo, hi],
-                },
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-            self.checkpoints.finalize(epoch, manifest)
-            healed.append(epoch)
-        return healed
-
-    def run_warehouse_bounded(
-        self,
-        warehouse,
-        source: ChangeStreamSource,
-        max_rows_per_epoch: int,
-        lookback: int = 0,
-        granules: int = 1024,
-    ) -> list[EpochResult]:
-        """Row-bounded epochs (S5, histogram-planned — see
-        :meth:`run_bounded`) against any ``WarehouseBackend``. Crash
-        safety with PRE-PLANNED slices requires the upfront
-        :meth:`recover_warehouse`: slices are derived from the healed
-        watermark, so a crashed epoch's gap is inside the new plan
-        rather than between stale plan boundaries."""
-        self.recover_warehouse(warehouse)
-        results: list[EpochResult] = []
-        hi_water = self.checkpoints.high_water_lsn()
-        source_max = source.max_lsn()
-        if hi_water >= source_max:
-            return results
-        epoch = (self.checkpoints.last_epoch() or 0) + 1
-        for lo, hi in source.plan_bounded_slices(
-            hi_water, source_max, max_rows=max_rows_per_epoch, granules=granules
-        ):
-            changes = source.read_slice(lo, hi, lookback=lookback)
-            results.append(
-                self.apply_epoch_warehouse(warehouse, changes, epoch, lsn_range=(lo, hi))
-            )
-            epoch += 1
-        return results
-
-    def apply_epoch_warehouse(
-        self,
-        warehouse,
-        changes: DataFrame,
-        epoch: int,
-        lsn_range: tuple[int, int] | None = None,
-    ) -> EpochResult:
-        """One epoch against a ``WarehouseBackend`` — the single-epoch
-        body of :meth:`run_warehouse`, also the streaming
-        ``foreachBatch`` target (each micro-batch = one epoch)."""
-        if self.checkpoints.is_finalized(epoch):
-            return EpochResult(epoch=epoch, skipped=True)
-        t0 = time.monotonic()
-        # Writer-schema registry (same semantics as the lake path): the
-        # slice carries only the columns of the max writer schema it
-        # actually contains, even when the change log physically stores
-        # the union schema — so a column never evolves into the
-        # warehouse before a writer has produced it.
-        if self.schema_registry is not None:
-            row = changes.agg(F.max("schema_ver")).first()
-            sv = int(row[0]) if row and row[0] is not None else 1
-            payload_cols = self.schema_registry[sv]
-            keep = [c for c in changes.columns if c in CDC_COLS or c in self.key_cols]
-            changes = changes.select(*keep, *[c for c in payload_cols if c not in keep])
-        added = new_fields(changes, warehouse.schema, passthrough=CDC_COLS)
-        schema = warehouse.evolve_schema(added) if added else warehouse.schema
-        deduped = lww_dedup(
-            changes, self.key_cols, self.order_cols,
-            method=self.dedup_method, num_salts=self.num_salts,
-        )
-        envelope = [c for c in ("op", "lsn", "schema_ver") if c in deduped.columns]
-        projected = (
-            project_arrow(deduped, schema, keep=envelope)
-            if (added and self.arrow_projection)
-            else project_columns(deduped, schema, keep=envelope)
-        )
-        # The warehouse path has no staged-delta files to reuse, so the
-        # upsert export, the delete-key export, and each attached model
-        # would otherwise EACH recompute the slice + dedup from source
-        # (round-7 profile: the bare loop paid the dedup twice — once
-        # per split_ops side). Materialize the deduped delta once
-        # (epoch-bounded); every consumer then reads the same cached
-        # partitions. On a cluster a lost checkpoint partition fails
-        # the epoch, which simply replays — same at-least-once retry
-        # story as any task.
-        projected = projected.localCheckpoint()
-        upserts, deletes = split_ops(projected)
-        if lsn_range is None:
-            row = changes.agg(F.min("lsn"), F.max("lsn")).first()
-            lsn_range = (int(row[0] or 0), int(row[1] or 0))
-        res = warehouse.merge(
-            upserts.drop("lsn", "schema_ver"),
-            delete_keys=deletes.select(*self.key_cols),
-            epoch_id=epoch,
-            lsn_range=lsn_range,
-        )
-        if res.skipped:
-            # Backend-ledger hit: the epoch already applied, under a
-            # possibly NARROWER lsn range than the recomputed slice (a
-            # crash between merge and finalize, with the source gaining
-            # LSNs before restart). Finalize the manifest from the
-            # RECORDED range so the watermark never advances past rows
-            # that were not applied — the loop then re-slices the gap
-            # into the next epoch. A legacy ledger row may carry only
-            # lsn_hi: take the recorded hi (what was actually applied)
-            # but keep the loop's computed lo rather than substituting
-            # 0 (which would read as a false gap/overlap in
-            # pipeline_health's watermark flags).
-            info = warehouse.epoch_info(epoch)
-            if info is not None and info.get("lsn_hi") is not None:
-                lo = info.get("lsn_lo")
-                lsn_range = (
-                    lsn_range[0] if lo is None else int(lo),
-                    int(info["lsn_hi"]),
-                )
-        # Curated models on the warehouse path (the reference ran its
-        # dbt models AGAINST the warehouse, airflow/dags/repsly_dag.py:
-        # 643-1040): same DAG walk, fed the deduped projected delta,
-        # applied BEFORE finalize — a crash mid-models leaves the epoch
-        # un-finalized, so the loop replays it (the warehouse merge
-        # skips via its ledger) and the models catch up exactly-once
-        # from the recomputed slice.
-        if self.silver_models:
-            self._apply_silver(projected, epoch)
-        manifest = {
-            "epoch": epoch,
-            "offsets": {"all": {"max_lsn": lsn_range[1], "rows": res.rows_written}},
-            "metrics": {
-                "rows_upserted": 0 if res.skipped else res.rows_written,
-                "wall_ms": int((time.monotonic() - t0) * 1000),
-            },
-            "lineage": {
-                "source": self.source_name,
-                "lsn_range": list(lsn_range),
-                "added_columns": [f.name for f in added],
-            },
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        self.checkpoints.finalize(epoch, manifest)
-        return EpochResult(
-            epoch=epoch, skipped=res.skipped,
-            rows_upserted=manifest["metrics"]["rows_upserted"],
-            wall_ms=manifest["metrics"]["wall_ms"],
-        )
-
-    def run_bounded(
-        self,
-        source: ChangeStreamSource,
-        max_rows_per_epoch: int,
-        lookback: int = 0,
-        granules: int = 1024,
-    ) -> list[EpochResult]:
-        """Tail the change stream in epochs bounded by ROW COUNT rather
-        than LSN span (S5 semantics folded into the engine): one pushed
-        histogram over the backlog plans the epoch boundaries, so a
-        burst of densely-packed LSNs can't blow an epoch past executor
-        memory and a sparse stretch doesn't produce hundreds of
-        near-empty epochs. Same exactly-once path per epoch."""
-        self.recover()
-        results: list[EpochResult] = []
-        hi_water = self.checkpoints.high_water_lsn()
-        source_max = source.max_lsn()
-        if hi_water >= source_max:
-            return results
-        epoch = (self.checkpoints.last_epoch() or 0) + 1
-        for lo, hi in source.plan_bounded_slices(
-            hi_water, source_max, max_rows=max_rows_per_epoch, granules=granules
-        ):
-            slice_df = source.read_slice(lo, hi, lookback=lookback)
-            results.append(self.apply_epoch(slice_df, epoch, lsn_range=(lo, hi)))
-            epoch += 1
-            self._maybe_maintain(sum(1 for r in results if not r.skipped))
-        return results
+def _lsn_spans(epoch_size: int):
+    """Slice planner: consecutive spans of ``epoch_size`` LSNs."""
+    return lambda lo, hi: ((a, min(a + epoch_size, hi)) for a in range(lo, hi, epoch_size))

@@ -35,7 +35,10 @@ Exactly-once: every backend keeps an ``_epochs`` ledger
 short-circuits to a skipped no-op BEFORE any mutation, and the
 recorded lsn range lets the engine heal a crash between merge and
 manifest-finalize without ever advancing the watermark past rows that
-were not applied (see ``CdcEngine.apply_epoch_warehouse``).
+were not applied: ``CdcEngine``'s one recover finalizes such an epoch
+from the ledger before the loop plans, and its one epoch body does the
+same inline when a replayed epoch hits the ledger (see the
+``etl_warehouse_agnostic_spark.engine`` module docstring).
 """
 
 from __future__ import annotations

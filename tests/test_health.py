@@ -5,7 +5,10 @@ the failure it watches for."""
 import os
 import time
 
+import pytest
+
 from etl_warehouse_agnostic_spark.engine import CdcEngine
+from etl_warehouse_agnostic_spark.lake.backends import DuckBackend
 from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
 from etl_warehouse_agnostic_spark.lake.table import LakeTable
 from etl_warehouse_agnostic_spark.operators.health import pipeline_health
@@ -26,14 +29,23 @@ def _manifest(epoch, lo, hi, rows_read=10, n_up=6, n_del=2,
     }
 
 
-def test_health_frame_matches_engine_run(spark, tmpdir_path):
+@pytest.mark.parametrize("sink", ["lake", "duckdb"])
+def test_health_frame_matches_engine_run(spark, tmpdir_path, sink):
+    """Both sinks finalize the same manifest shape, so the health frame
+    agrees with the engine's results on either path."""
     chg = generate_changes(spark, 2000, n_convs=20, turns_per_conv=6, seed=3).localCheckpoint()
-    table = LakeTable.create(
-        spark, os.path.join(tmpdir_path, "t"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
-    )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, table, ck, num_salts=4)
-    results = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=800)
+    src = ChangeStreamSource(spark, df=chg)
+    if sink == "lake":
+        table = LakeTable.create(
+            spark, os.path.join(tmpdir_path, "t"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
+        )
+        results = CdcEngine(spark, table, ck, num_salts=4).run(src, epoch_size=800)
+    else:
+        duck = DuckBackend.create(
+            spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
+        )
+        results = CdcEngine(spark, None, ck, num_salts=4).run_warehouse(duck, src, epoch_size=800)
 
     rows = {r.epoch: r for r in pipeline_health(spark, ck).collect()}
     assert len(rows) == len(results)
