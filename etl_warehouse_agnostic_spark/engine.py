@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
-from etl_warehouse_agnostic_spark.lake.table import LakeTable
+from etl_warehouse_agnostic_spark.lake.table import EpochCensus, LakeTable, observed
 from etl_warehouse_agnostic_spark.operators.dedup import lww_dedup, split_ops
 from etl_warehouse_agnostic_spark.operators.evolution import (
     new_fields,
@@ -64,6 +64,8 @@ from etl_warehouse_agnostic_spark.sources.changes import ChangeStreamSource
 # Change-envelope columns that are not table payload, with their types.
 CDC_TYPES = {"op": T.StringType(), "lsn": T.LongType(), "schema_ver": T.IntegerType()}
 CDC_COLS = set(CDC_TYPES)
+# File in a staging dir that records the bucket count it was staged with.
+_STAGED_LAYOUT = "_num_buckets"
 
 
 def _footer_offsets(staging_dir: str, lsn_col: str = "lsn") -> dict:
@@ -99,16 +101,6 @@ def _footer_offsets(staging_dir: str, lsn_col: str = "lsn") -> dict:
                     max_lsn = m if max_lsn is None else max(max_lsn, m)
         offsets[bucket] = {"max_lsn": max_lsn or 0, "rows": rows}
     return offsets
-
-
-def _observed(obs: Observation, df: DataFrame, metrics: list) -> dict:
-    """``obs``'s metrics, or the same aggregates recomputed over ``df``
-    when Catalyst folded the CollectMetrics node away (seen with empty
-    local-relation inputs)."""
-    try:
-        return obs.get
-    except Exception:
-        return df.agg(*metrics).first().asDict()
 
 
 def _utc_now() -> str:
@@ -431,10 +423,14 @@ class CdcEngine:
             from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
 
             staging_dir = self._staging_dir(epoch)
+            num_buckets = sink.num_buckets
             sink.write_bucketed(
-                projected.withColumn("_bucket", bucket_of(self.key_cols[0], sink.num_buckets)),
+                projected.withColumn("_bucket", bucket_of(self.key_cols[0], num_buckets)),
                 staging_dir, compression="snappy",
             )
+            # the modulus of the staged buckets, for a replay's census
+            with open(os.path.join(staging_dir, _STAGED_LAYOUT), "w") as f:
+                f.write(str(num_buckets))
             staged_schema = T.StructType(
                 list(schema.fields)
                 + [T.StructField(c, CDC_TYPES[c], True) for c in envelope]
@@ -443,11 +439,11 @@ class CdcEngine:
         else:
             delta = projected.localCheckpoint()
 
-        slice_stats = _observed(obs_slice, changes, slice_metrics)
-        census = _observed(obs_delta, delta, delta_metrics)
+        slice_stats = observed(obs_slice, changes, slice_metrics)
+        delta_stats = observed(obs_delta, delta, delta_metrics)
         rows_read = int(slice_stats.get("rows_read") or 0)
-        n_rows = int(census.get("rows") or 0)
-        n_del = int(census.get("n_del") or 0)
+        n_rows = int(delta_stats.get("rows") or 0)
+        n_del = int(delta_stats.get("n_del") or 0)
         if lsn_range is None:
             lsn_range = (
                 int(slice_stats.get("min_lsn") or 0),
@@ -463,12 +459,13 @@ class CdcEngine:
             added_columns=[f.name for f in added],
         )
         # The lake table's commit carries the manifest (recover heals
-        # from it) and prunes by the staged census; the exact delta size
-        # lets it broadcast the changed-key set into the anti-join. A
-        # warehouse ledgers the lsn range instead.
+        # from it) and prunes by the epoch census — the staged buckets
+        # and the exact delta size, which also lets it broadcast the
+        # changed-key set into the anti-join. Every model merge reuses
+        # the same census. A warehouse ledgers the lsn range instead.
+        census = self._census(staging_dir, staged_schema, n_rows) if staging_dir else None
         merge_kw = (
-            {"extra_summary": {"manifest": manifest}, "changed_rows": n_rows,
-             "affected_buckets": sink.staged_buckets(staging_dir)}
+            {"extra_summary": {"manifest": manifest}, "census": census}
             if staging_dir else {"lsn_range": lsn_range}
         )
         upserts, deletes = split_ops(delta)
@@ -497,7 +494,7 @@ class CdcEngine:
         model_walls = {} if staging_dir else self._apply_silver(delta, epoch)
         self.checkpoints.finalize(epoch, manifest)
         if staging_dir:
-            model_walls = self._apply_silver(delta, epoch)
+            model_walls = self._apply_silver(delta, epoch, census=census)
             shutil.rmtree(staging_dir, ignore_errors=True)
         rng = tuple(manifest["lineage"]["lsn_range"])
         if res.skipped:
@@ -588,6 +585,19 @@ class CdcEngine:
         manifest["metrics"]["healed"] = True
         return manifest
 
+    def _census(self, staging_dir: str, schema: T.StructType, rows: int) -> EpochCensus | None:
+        """The epoch census of a staged delta of ``schema``: its bucket
+        dirs, in the layout recorded next to them when it was staged
+        (None without that record)."""
+        try:
+            with open(os.path.join(staging_dir, _STAGED_LAYOUT)) as f:
+                num_buckets = int(f.read())
+        except (OSError, ValueError):
+            return None
+        key = self.key_cols[0]
+        buckets = tuple(self.table.staged_buckets(staging_dir))
+        return EpochCensus(key, schema[key].dataType, num_buckets, buckets, rows)
+
     def _staging_dir(self, epoch: int) -> str:
         return os.path.join(self.table.path, "_staging", f"e{epoch:08d}")
 
@@ -624,13 +634,17 @@ class CdcEngine:
         fields += [T.StructField(c, t, True) for c, t in CDC_TYPES.items() if c in names]
         return T.StructType(fields)
 
-    def _apply_silver(self, staged: DataFrame, epoch: int) -> dict[str, int]:
+    def _apply_silver(self, staged: DataFrame, epoch: int,
+                      census: EpochCensus | None = None) -> dict[str, int]:
         """Walk the model DAG (already topo-ordered): root models feed
         on the bronze staged delta; a chained model feeds on its
         parent's ``epoch_delta`` — a pure function of the parent's own
         input, so recovery replays the WHOLE chain from the one
         retained bronze delta (already-committed ancestors just skip
-        their merge while their delta is still recomputable).
+        their merge while their delta is still recomputable). Every
+        model gets the bronze epoch ``census`` unchanged (None on a
+        warehouse, which retains no staged delta): model keys propagate
+        from the bronze delta, so it names their buckets too.
 
         Returns per-model wall (ms) so callers can attribute epoch time
         between the bronze apply and each model's maintenance.
@@ -671,7 +685,7 @@ class CdcEngine:
                 parent = getattr(model, "parent", None)
                 inp = staged if parent is None else deltas[id(parent)]
                 t0 = time.monotonic()
-                model.apply_epoch(inp, epoch)
+                model.apply_epoch(inp, epoch, census=census)
                 walls[model.name] = int((time.monotonic() - t0) * 1000)
                 if id(model) in needed:
                     deltas[id(model)] = model.epoch_delta(inp, epoch)
@@ -763,7 +777,10 @@ class CdcEngine:
                 schema = self._staged_schema(staging_dir)
                 if schema is None:
                     continue
-                self._apply_silver(self.table.read_bucketed(staging_dir, schema), epoch)
+                # the census _epoch passed, rebuilt from the staging dir
+                rows = sum(o["rows"] for o in _footer_offsets(staging_dir).values())
+                self._apply_silver(self.table.read_bucketed(staging_dir, schema), epoch,
+                                   census=self._census(staging_dir, schema, rows))
             shutil.rmtree(staging_dir, ignore_errors=True)
 
 

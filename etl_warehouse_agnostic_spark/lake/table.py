@@ -38,6 +38,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -73,6 +74,54 @@ class CommitConflict(RuntimeError):
     def __init__(self, path: str, written_dir: str | None = None):
         super().__init__(path)
         self.written_dir = written_dir
+
+
+@dataclass(frozen=True)
+class EpochCensus:
+    """What one epoch's delta touches, in one table's hash layout:
+    ``buckets`` are the ``bucket_of(key, num_buckets)`` values of the
+    delta's rows, ``rows`` its row count (both known once the delta is
+    staged, from the staging dirs and the write's Observation; ``rows``
+    is None where it does not count the merge's changed keys).
+
+    A table bucketed on the same key into ``m`` buckets with ``m``
+    dividing ``num_buckets`` is a coarsening of that layout —
+    ``pmod(h, m) == pmod(pmod(h, n), m)`` when ``m | n`` — so the same
+    keys land in ``{b % m}`` there, with no pass over the data (cf.
+    *Hyper Dimension Shuffle*, VLDB 2019: compose partition functions
+    instead of re-partitioning). xxhash64 hashes a value by its type
+    (an INT 5 and a BIGINT 5 hash apart), and a table hashes keys in its
+    own schema's type, so the key must also have ``key_type`` there.
+    Models pass the bronze census down the DAG: their key values
+    propagate unchanged from the bronze delta, so it covers every key
+    they change."""
+
+    key: str
+    key_type: T.DataType
+    num_buckets: int
+    buckets: tuple[int, ...]
+    rows: int | None
+
+    def buckets_for(self, snap: dict) -> list[int] | None:
+        """The census's buckets in the layout of snapshot ``snap``, or
+        None when that layout is not a coarsening of this one."""
+        m = int(snap["num_buckets"])
+        if snap["key_cols"][0] != self.key or self.num_buckets % m:
+            return None
+        field = next(f for f in snap["schema"]["fields"] if f["name"] == self.key)
+        if field["type"] != self.key_type.jsonValue():
+            return None
+        return sorted({b % m for b in self.buckets})
+
+
+def observed(obs: Observation, df: DataFrame, metrics: list) -> dict:
+    """``obs``'s metrics, or the same aggregates recomputed over ``df``
+    when Catalyst folded the CollectMetrics node away (seen with empty
+    local-relation inputs)."""
+    try:
+        return obs.get
+    except Exception:
+        return df.agg(*metrics).first().asDict()
 
 
 @dataclass
@@ -117,14 +166,19 @@ class LakeTable:
         # in rarely-touched buckets).
         self.max_records_per_file: int | None = None
         # MERGE anti-join build side: when the caller KNOWS the changed
-        # key count (the engine reads it off the staging write's
-        # Observation) and it is under this bound, the key set is
+        # row count (an EpochCensus of the merge's own changes: the
+        # bronze staging write's Observation, or the day rollup's; a
+        # model forwarding the bronze census passes no count, since a
+        # transform may fan out) and it is under this bound, the key set is
         # broadcast so the survivors scan is never shuffled by key —
         # the guide-§3.1 "broadcast the side you know is small" call
-        # the planner cannot make from size estimates alone. ~4M keys
-        # ≈ low hundreds of MB built, fine for executors with tens of
-        # GB; larger deltas fall back to the shuffled plan (AQE may
-        # still localize it).
+        # the planner cannot make from size estimates alone. The
+        # broadcast side is the changed KEY columns only
+        # (``changed_keys.select(*keys)``), never payload, so a row
+        # bound is already a key-width bound: ~4M keys ≈ low hundreds
+        # of MB built, fine for executors with tens of GB; larger
+        # deltas fall back to the shuffled plan (AQE may still
+        # localize it).
         self.broadcast_changed_keys_max_rows: int = 4_000_000
 
     # ---------------- snapshot bookkeeping ----------------
@@ -589,8 +643,6 @@ class LakeTable:
         candidates from the fresh snapshot instead of stranding them
         until the orphan-GC grace window.
         """
-        import shutil as _shutil
-
         last_exc: Exception | None = None
         for _attempt in range(max_retries + 1):
             try:
@@ -598,7 +650,7 @@ class LakeTable:
             except CommitConflict as e:
                 last_exc = e
                 if e.written_dir:
-                    _shutil.rmtree(e.written_dir, ignore_errors=True)
+                    shutil.rmtree(e.written_dir, ignore_errors=True)
                 continue
         raise last_exc  # type: ignore[misc]
 
@@ -660,8 +712,6 @@ class LakeTable:
         """
         if new_num_buckets < 1:
             raise ValueError("new_num_buckets must be >= 1")
-        import shutil as _shutil
-
         last_exc: Exception | None = None
         for _attempt in range(max_retries + 1):
             try:
@@ -669,7 +719,7 @@ class LakeTable:
             except CommitConflict as e:
                 last_exc = e
                 if e.written_dir:
-                    _shutil.rmtree(e.written_dir, ignore_errors=True)
+                    shutil.rmtree(e.written_dir, ignore_errors=True)
                 continue
         raise last_exc  # type: ignore[misc]
 
@@ -701,8 +751,8 @@ class LakeTable:
         delete_keys: DataFrame | None = None,
         epoch_id: int | None = None,
         extra_summary: dict | None = None,
-        affected_buckets: list[int] | None = None,
-        changed_rows: int | None = None,
+        *,
+        census: EpochCensus | None = None,
         max_retries: int = 3,
     ) -> MergeResult:
         """Copy-on-write MERGE: last-writer-wins upsert + tombstone
@@ -722,6 +772,20 @@ class LakeTable:
         are read and rewritten; unaffected buckets' files carry over
         into the new snapshot untouched.
 
+        ``census`` is the epoch's :class:`EpochCensus`: the engine
+        passes the bronze one to bronze and to every model merge, the
+        day rollup its own. When it resolves against the snapshot being
+        merged into (same first key and key type, a dividing bucket
+        count), the affected buckets come from it instead of a
+        distinct-bucket collect; a known row count lets the changed-key
+        set be broadcast into the anti-join. Resolution is per attempt,
+        against that attempt's snapshot, so a concurrent ``rebucket``
+        never pairs a census with the wrong modulus; an unresolvable
+        census falls back to the collect. It must cover every changed
+        key (a superset only rewrites a bucket as it was); an attempt
+        that writes an upsert into a bucket outside it is discarded and
+        redone with the collect.
+
         Concurrency: optimistic. An attempt reads the current snapshot,
         writes its rewritten buckets, and publishes the next version via
         hard link; if ANOTHER writer won that version (CommitConflict),
@@ -730,19 +794,16 @@ class LakeTable:
         re-derive survivors from the new snapshot, so two writers
         touching different keys both land.
         """
-        import shutil as _shutil
-
         last_exc: Exception | None = None
         for _attempt in range(max_retries + 1):
             try:
                 return self._merge_attempt(
-                    upserts, delete_keys, epoch_id, extra_summary,
-                    affected_buckets, changed_rows,
+                    upserts, delete_keys, epoch_id, extra_summary, census
                 )
             except CommitConflict as e:
                 last_exc = e
                 if e.written_dir:
-                    _shutil.rmtree(e.written_dir, ignore_errors=True)
+                    shutil.rmtree(e.written_dir, ignore_errors=True)
                 continue
         raise last_exc  # type: ignore[misc]
 
@@ -752,8 +813,7 @@ class LakeTable:
         delete_keys: DataFrame | None,
         epoch_id: int | None,
         extra_summary: dict | None,
-        affected_buckets: list[int] | None,
-        changed_rows: int | None = None,
+        census: EpochCensus | None,
     ) -> MergeResult:
         cur = self.snapshot()
         if epoch_id is not None and epoch_id in cur.get("committed_epochs", []):
@@ -767,15 +827,17 @@ class LakeTable:
         # was one whole extra Exchange of the key set per epoch.
         changed_keys = up.select(*keys, _BUCKET)
         if delete_keys is not None:
-            dk = self._with_bucket(delete_keys).select(*keys, _BUCKET)
+            # hashed in the table's key types, like the aligned upserts
+            dk = self._with_bucket(
+                delete_keys.select(*[F.col(k).cast(schema[k].dataType).alias(k) for k in keys])
+            )
             changed_keys = changed_keys.unionByName(dk)
 
-        # Affected-bucket census — tiny (≤ num_buckets rows) collect,
-        # or precomputed by the caller (the engine folds it into its
-        # metrics aggregation to save a job).
-        if affected_buckets is not None:
-            affected = list(affected_buckets)
-        else:
+        # Affected buckets: from the caller's census when this layout
+        # coarsens it, else a tiny (≤ num_buckets rows) collect.
+        affected = census.buckets_for(cur) if census is not None else None
+        from_census = affected is not None
+        if not from_census:
             affected = [r[0] for r in changed_keys.select(_BUCKET).distinct().collect()]
         if not affected:
             # Nothing to change; still record the epoch for idempotence.
@@ -795,18 +857,25 @@ class LakeTable:
             current = self._read_files(cur, buckets=affected)
             # Survivors: existing rows in affected buckets whose key was
             # not touched this epoch (anti = NOT EXISTS). When the
-            # caller knows the delta is small (changed_rows from the
-            # staging write's Observation), broadcast the key set so the
-            # survivors scan is never shuffled; otherwise leave the
-            # strategy to AQE.
+            # caller knows the delta is small (its census), broadcast
+            # the key set so the survivors scan is never shuffled;
+            # otherwise leave the strategy to AQE.
             anti_keys = changed_keys.select(*keys)
-            if changed_rows is not None and changed_rows <= self.broadcast_changed_keys_max_rows:
+            census_rows = census.rows if census is not None else None
+            if census_rows is not None and census_rows <= self.broadcast_changed_keys_max_rows:
                 anti_keys = F.broadcast(anti_keys)
             survivors = current.join(anti_keys, on=keys, how="left_anti")
             new_data = survivors.unionByName(up)
 
         tag = f"e{cur['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
         files, rows, nbytes = self._write_epoch_files(new_data, tag)
+        if from_census and not set(files) <= {str(b) for b in affected}:
+            # An upsert key the census does not cover (a model transform
+            # that rewrote key values): committing would replace that
+            # bucket's files without its existing rows. Redo the attempt
+            # with the collected census.
+            shutil.rmtree(os.path.join(self.data_dir, tag), ignore_errors=True)
+            return self._merge_attempt(upserts, delete_keys, epoch_id, extra_summary, None)
 
         snap = self._next_snapshot(cur, "merge")
         for b in affected:

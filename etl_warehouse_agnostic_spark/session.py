@@ -146,6 +146,12 @@ def get_spark(
                 "-Djava.net.preferIPv4Stack=true -Dsun.net.inetaddr.ttl=-1 "
                 "-Dsun.net.inetaddr.negative.ttl=-1",
             )
+            # An explicit list of more than 32 parquet paths (a bucket-
+            # pruned table read) otherwise lists its files with a Spark
+            # job; with driver and executors in one JVM that job only
+            # adds scheduling, so list on the driver. Cluster masters
+            # keep Spark's parallel listing.
+            .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
         )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

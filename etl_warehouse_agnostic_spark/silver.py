@@ -20,6 +20,19 @@ on the merge key); the silver MERGE is the same copy-on-write
 affected-buckets-only merge bronze uses. Cost per cycle is
 O(delta + affected silver buckets), independent of bronze size.
 
+Census threading: the engine hands every model the bronze epoch's
+:class:`~etl_warehouse_agnostic_spark.lake.table.EpochCensus` (staged
+buckets, delta rows). Model key values propagate unchanged from the
+bronze delta, so on any table bucketed on the same key, of the same
+type, into a divisor of bronze's bucket count the census names the
+touched buckets exactly: the models' pruned source reads and their
+merges take them from it instead of each collecting the census again
+(``_delta_buckets`` is the fallback for other layouts). Model merges
+drop the census's row count — a transform may fan out, so the bronze
+count does not bound their changed keys. The day rollup's merge keys
+are its own groups, so it observes its gold census (buckets and group
+count) on the checkpoint it already takes.
+
 Crash contract: bronze merge + manifest finalize happen first; the
 staging delta is deleted only after EVERY attached model has committed
 the epoch. A crash anywhere in between retains the staged files, and
@@ -29,12 +42,53 @@ epoch-idempotent merge — same write-ahead ordering as the bronze path.
 
 from __future__ import annotations
 
+import dataclasses
+import uuid
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from etl_warehouse_agnostic_spark.lake.table import LakeTable, MergeResult
+from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
+from etl_warehouse_agnostic_spark.lake.table import (
+    EpochCensus,
+    LakeTable,
+    MergeResult,
+    observed,
+)
 from etl_warehouse_agnostic_spark.operators.dedup import split_ops
+
+
+def _delta_buckets(staged: DataFrame, snap: dict) -> list[int]:
+    """Buckets of source snapshot ``snap`` that the delta's keys hash
+    to — the no-census fallback, a collect of ≤ num_buckets rows.
+    Delete rows carry their keys, so every touched bucket is visible.
+    Keys hash in the snapshot's key type, as the table hashed them."""
+    key = snap["key_cols"][0]
+    key_type = T.StructType.fromJson(snap["schema"])[key].dataType
+    b = bucket_of(F.col(key).cast(key_type), int(snap["num_buckets"]))
+    return sorted(r[0] for r in staged.select(b.alias("_b")).distinct().collect())
+
+
+def _source_buckets(staged: DataFrame, snap: dict, census: EpochCensus | None) -> list[int]:
+    """The delta's buckets in ``snap``'s layout: from the epoch census
+    when that layout coarsens it, else collected."""
+    buckets = census.buckets_for(snap) if census is not None else None
+    return _delta_buckets(staged, snap) if buckets is None else buckets
+
+
+def _merge(table, upserts: DataFrame, delete_keys: DataFrame, epoch: int,
+           census: EpochCensus | None, *, own: bool = False) -> MergeResult:
+    """A model's MERGE under the bronze epoch id; the census reaches a
+    lake table only (a warehouse backend has no bucket layout). Its row
+    count decides the anti-join broadcast only when the census counts
+    this merge's ``own`` changes: the bronze delta's count does not
+    bound a model's changed keys (a transform may fan out)."""
+    if census is not None and not own:
+        census = dataclasses.replace(census, rows=None)
+    kw = {"census": census} if isinstance(table, LakeTable) else {}
+    return table.merge(upserts, delete_keys=delete_keys, epoch_id=epoch, **kw)
 
 
 def model_dag_order(models: list) -> list:
@@ -201,7 +255,7 @@ class AggregateModel:
         self.row_groups = row_groups or (lambda df: df)
         self.day_of = day_of
         self.require_pruned = require_pruned
-        self._bucketed_source = bucketed_source
+        self._bucket_key = bucket_key  # None unless the source is bucketed
         self.last_scan: dict | None = None  # {mode, buckets, day_range} — observability
         self._warned_full_scan = False
 
@@ -221,22 +275,8 @@ class AggregateModel:
             self.aggregate(self.row_groups(self.bronze.read())), epoch_id=epoch_id
         )
 
-    def _delta_buckets(self, staged: DataFrame) -> list[int]:
-        """Buckets the staged delta touches (≤ num_buckets rows
-        collected — same census the engine itself does). Delete rows
-        carry their keys, so every touched bucket is visible."""
-        from pyspark.sql import functions as F
-
-        from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
-
-        b = (
-            F.col("_bucket")
-            if "_bucket" in staged.columns
-            else bucket_of(self.bronze.key_cols[0], self.bronze.num_buckets)
-        )
-        return sorted(r[0] for r in staged.select(b.alias("_b")).distinct().collect())
-
-    def _touched_groups(self, staged: DataFrame, epoch: int) -> DataFrame:
+    def _touched_groups(self, staged: DataFrame, epoch: int,
+                        census: EpochCensus | None) -> DataFrame:
         """Distinct group values this epoch touches.
 
         Key-grouped: the delta itself names them (keys are immutable
@@ -244,8 +284,6 @@ class AggregateModel:
         the pre-epoch snapshot's rows for the delta's keys (bucket-
         pruned time-travel read), covering updates that move a row
         between groups and deletes whose payload is NULL."""
-        from pyspark.sql import functions as F
-
         if self.key_grouped:
             return (
                 self.row_groups(staged)
@@ -262,7 +300,7 @@ class AggregateModel:
             )
         keys = list(self.bronze.key_cols)
         pre = self.bronze.read(
-            version=snap["parent"], buckets=self._delta_buckets(staged)
+            version=snap["parent"], buckets=_source_buckets(staged, snap, census)
         )
         old_rows = pre.join(staged.select(*keys).dropDuplicates(keys), keys, "left_semi")
         return (
@@ -270,21 +308,17 @@ class AggregateModel:
             .dropDuplicates(self.group_cols)
         )
 
-    def _recompute_scan(self, staged: DataFrame, touched: DataFrame) -> DataFrame:
+    def _recompute_scan(self, staged: DataFrame, touched: DataFrame,
+                        census: EpochCensus | None) -> DataFrame:
         """Post-epoch source rows to re-aggregate, pruned when possible
         (see class docstring for the strategy order); records what it
         did in ``self.last_scan``."""
-        from pyspark.sql import functions as F
-
-        if (
-            self._bucketed_source
-            and self.key_grouped
-            and self.group_cols[0] == self.bronze.key_cols[0]
-        ):
+        if self.key_grouped and self.group_cols[0] == self._bucket_key:
             # a group lives entirely inside one bucket
-            buckets = self._delta_buckets(staged)
+            snap = self.bronze.snapshot()
+            buckets = _source_buckets(staged, snap, census)
             self.last_scan = {"mode": "bucket", "buckets": buckets, "day_range": None}
-            return self.bronze.read(buckets=buckets)
+            return self.bronze.read(version=snap["version"], buckets=buckets)
         if self.day_of is not None:
             rng = touched.agg(
                 F.min(self.day_of).alias("lo"), F.max(self.day_of).alias("hi")
@@ -316,11 +350,12 @@ class AggregateModel:
         self.last_scan = {"mode": "full", "buckets": None, "day_range": None}
         return self.bronze.read()
 
-    def apply_epoch(self, staged: DataFrame, epoch: int) -> MergeResult:
+    def apply_epoch(self, staged: DataFrame, epoch: int,
+                    census: EpochCensus | None = None) -> MergeResult:
         if self.table.epoch_committed(epoch):
             return MergeResult(0, epoch, 0, 0, 0, skipped=True)
-        touched = self._touched_groups(staged, epoch)
-        cur = self.row_groups(self._recompute_scan(staged, touched)).join(
+        touched = self._touched_groups(staged, epoch, census)
+        cur = self.row_groups(self._recompute_scan(staged, touched, census)).join(
             touched, self.group_cols, "left_semi"
         )
         out = self.aggregate(cur)
@@ -330,7 +365,7 @@ class AggregateModel:
                 f"gold model {self.name!r}: aggregate dropped group column(s) {missing}"
             )
         gone = touched.join(out.select(*self.group_cols), self.group_cols, "left_anti")
-        return self.table.merge(out, delete_keys=gone, epoch_id=epoch)
+        return _merge(self.table, out, gone, epoch, census)
 
 
 class DeltaAggregateModel:
@@ -398,7 +433,7 @@ class DeltaAggregateModel:
         parent: "SilverModel | None" = None,
         row_groups: Callable[[DataFrame], DataFrame] | None = None,
     ):
-        from pyspark.sql import Column, functions as F
+        from pyspark.sql import Column
 
         if parent is not None:
             if not isinstance(parent, SilverModel):
@@ -465,8 +500,6 @@ class DeltaAggregateModel:
         """The full-rebuild equivalent of the maintained table (used by
         ``bootstrap`` and by equivalence tests): count + sums + the
         hidden per-sum non-null counts, grouped by ``group_cols``."""
-        from pyspark.sql import functions as F
-
         aggs = [F.count(F.lit(1)).cast("long").alias(self.count_col)]
         for out, expr in self.sums.items():
             aggs.append(F.sum(expr).alias(out))
@@ -481,23 +514,8 @@ class DeltaAggregateModel:
             self.aggregate(self.bronze.read()), epoch_id=epoch_id
         )
 
-    def _delta_buckets(self, staged: DataFrame) -> list[int]:
-        from pyspark.sql import functions as F
-
-        from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
-
-        b = (
-            F.col("_bucket")
-            if "_bucket" in staged.columns
-            else bucket_of(self.bronze.key_cols[0], self.bronze.num_buckets)
-        )
-        return sorted(r[0] for r in staged.select(b.alias("_b")).distinct().collect())
-
-    def apply_epoch(self, staged: DataFrame, epoch: int) -> MergeResult:
-        from pyspark.sql import functions as F
-
-        from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
-
+    def apply_epoch(self, staged: DataFrame, epoch: int,
+                    census: EpochCensus | None = None) -> MergeResult:
         if self.table.epoch_committed(epoch):
             return MergeResult(0, epoch, 0, 0, 0, skipped=True)
         snap = self.bronze.epoch_snapshot(epoch)
@@ -509,7 +527,7 @@ class DeltaAggregateModel:
         keys = list(self.bronze.key_cols)
         upserts, _ = split_ops(staged)
         delta_keys = staged.select(*keys).dropDuplicates(keys)
-        src_buckets = self._delta_buckets(staged)
+        src_buckets = _source_buckets(staged, snap, census)
         # pre-epoch values of exactly the changed keys (pinned snapshot,
         # bucket-pruned) — the subtract side of the maintenance identity
         old_rows = self.bronze.read(version=snap["parent"], buckets=src_buckets).join(
@@ -527,22 +545,30 @@ class DeltaAggregateModel:
             d_aggs.append(
                 F.sum(F.col(f"_nn_{out}") * F.col("_sign")).cast("long").alias(f"_nn_{out}")
             )
-        # one row per touched group, tiny — checkpoint so the census
-        # collect and the two joins below don't recompute the plan
+        # one row per touched group, tiny — checkpoint so the two joins
+        # below don't recompute the plan; the gold census (touched gold
+        # buckets, group count) rides the checkpoint job as an
+        # Observation and prunes both the old-row read and the merge
+        # (hashed in the gold key type, as the gold table hashes it)
+        gsnap = self.table.snapshot()
+        m = int(gsnap["num_buckets"])
+        types = {f.name: f.dataType for f in T.StructType.fromJson(gsnap["schema"]).fields}
+        g0 = self.group_cols[0]
+        gold_metrics = [
+            F.collect_set(bucket_of(F.col(g0).cast(types[g0]), m)).alias("buckets"),
+            F.count(F.lit(1)).alias("rows"),
+        ]
+        obs = Observation(f"{self.name}-e{epoch}-{uuid.uuid4().hex[:6]}")
         d = (
             pos.unionByName(neg)
             .groupBy(*self.group_cols)
             .agg(*d_aggs)
+            .observe(obs, *gold_metrics)
             .localCheckpoint()
         )
-        gold_buckets = sorted(
-            r[0]
-            for r in d.select(
-                bucket_of(self.group_cols[0], self.table.num_buckets).alias("_b")
-            )
-            .distinct()
-            .collect()
-        )
+        stats = observed(obs, d, gold_metrics)
+        gold_buckets = sorted(stats["buckets"])
+        gold = EpochCensus(g0, types[g0], m, tuple(gold_buckets), int(stats["rows"]))
         self.last_scan = {
             "mode": "delta",
             "src_buckets": src_buckets,
@@ -554,7 +580,6 @@ class DeltaAggregateModel:
         # every touched group is in d; old ⊆ d's groups, so a left join
         # covers both brand-new groups (old side NULL) and updates
         j = d.alias("d").join(old.alias("o"), self.group_cols, "left")
-        types = {f.name: f.dataType for f in self.table.schema.fields}
         new_n = (
             F.coalesce(F.col(f"o.{self.count_col}"), F.lit(0))
             + F.col(f"d.{self.count_col}")
@@ -572,7 +597,7 @@ class DeltaAggregateModel:
         new = j.select(*cols).localCheckpoint()
         out_rows = new.where(F.col(self.count_col) > 0)
         gone = new.where(F.col(self.count_col) <= 0).select(*self.group_cols)
-        return self.table.merge(out_rows, delete_keys=gone, epoch_id=epoch)
+        return _merge(self.table, out_rows, gone, epoch, gold, own=True)
 
 
 class SilverModel:
@@ -580,8 +605,10 @@ class SilverModel:
 
     ``transform(upserts, epoch) -> DataFrame`` maps the epoch's net
     upserts (bronze payload columns + the ``op``/``lsn`` envelope) to
-    silver rows; it MUST preserve the silver table's key columns and
-    may stamp per-cycle lineage from ``epoch``. Deletes propagate by
+    silver rows; it MUST carry the silver table's key columns with their
+    input VALUES unchanged (the bronze epoch census names their buckets;
+    a merge that finds a key outside it redoes itself with a collect)
+    and may stamp per-cycle lineage from ``epoch``. Deletes propagate by
     key: a bronze key deleted in the epoch is deleted from silver.
 
     The transform must be row-wise deterministic (each output row a
@@ -644,8 +671,6 @@ class SilverModel:
         maintenance resumes from the next cycle. Bronze rows carry a
         synthetic envelope (op='I', lsn=NULL) — a transform that
         derives columns from ``lsn`` must tolerate NULL there."""
-        from pyspark.sql import functions as F
-
         rows = (
             bronze.read()
             .withColumn("op", F.lit("I"))
@@ -661,8 +686,6 @@ class SilverModel:
         (chained) model consumes — a pure, lazily-recomputable function
         of the input delta, so chains add no staged storage and replay
         from the bronze delta alone."""
-        from pyspark.sql import functions as F
-
         upserts, deletes = split_ops(staged)
         out = self.transform(upserts, epoch)
         missing = [k for k in self.table.key_cols if k not in out.columns]
@@ -683,7 +706,8 @@ class SilverModel:
             dels, allowMissingColumns=True
         )
 
-    def apply_epoch(self, staged: DataFrame, epoch: int) -> MergeResult:
+    def apply_epoch(self, staged: DataFrame, epoch: int,
+                    census: EpochCensus | None = None) -> MergeResult:
         """Apply one bronze epoch's staged delta to the silver table —
         epoch-idempotent (a replayed epoch id is a skipped no-op before
         any mutation, same contract as every other sink)."""
@@ -691,8 +715,4 @@ class SilverModel:
             return MergeResult(0, epoch, 0, 0, 0, skipped=True)
         delta = self.epoch_delta(staged, epoch)
         upserts, deletes = split_ops(delta)
-        return self.table.merge(
-            upserts,
-            delete_keys=deletes.select(*self.table.key_cols),
-            epoch_id=epoch,
-        )
+        return _merge(self.table, upserts, deletes.select(*self.table.key_cols), epoch, census)

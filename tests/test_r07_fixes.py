@@ -14,6 +14,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -21,7 +22,7 @@ from etl_warehouse_agnostic_spark.engine import CdcEngine
 from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
 from etl_warehouse_agnostic_spark.lake.table import LakeTable
 from etl_warehouse_agnostic_spark.schemas import KEY_COLS, TRANSCRIPTS_SCHEMA_V1
-from etl_warehouse_agnostic_spark.silver import DeltaAggregateModel, SilverModel
+from etl_warehouse_agnostic_spark.silver import DeltaAggregateModel, SilverModel, _delta_buckets
 from etl_warehouse_agnostic_spark.sources.changes import ChangeStreamSource
 from etl_warehouse_agnostic_spark.sources.generator import generate_changes
 
@@ -142,29 +143,46 @@ def test_epoch_delta_drops_source_bucket_metadata(spark, tmpdir_path):
     gold = DeltaAggregateModel(
         gold_t, None, ["conv_id"], {"chars": F.lit(1)}, parent=model, name="rollup"
     )
-    buckets = gold._delta_buckets(delta)
+    buckets = _delta_buckets(delta, gold.bronze.snapshot())
     assert buckets == sorted(set(buckets)) and all(0 <= b < 2 for b in buckets)
 
 
-def test_concurrent_model_chains_match_sequential_truth(spark, tmpdir_path):
+@pytest.mark.parametrize("model_buckets", [2, 3])
+def test_concurrent_model_chains_match_sequential_truth(
+    spark, tmpdir_path, monkeypatch, model_buckets
+):
     """_apply_silver runs independent model chains concurrently (a
     chained silver→gold chain plus a bronze-fed delta rollup). The
     grouping must keep intra-chain order (child after parent) while
     inter-chain order stops mattering — every table must equal its
     from-scratch rebuild, and per-model walls must be reported for
-    every model."""
+    every model. Model tables at 2 buckets coarsen the 4-bucket
+    bronze, so the bronze epoch census names their buckets; at 3 it
+    does not, and every census lookup falls back to a collect."""
+    import etl_warehouse_agnostic_spark.silver as silver_mod
+
+    fallbacks = []
+
+    def counted(staged, snap):
+        fallbacks.append(snap["num_buckets"])
+        return _delta_buckets(staged, snap)
+
+    monkeypatch.setattr(silver_mod, "_delta_buckets", counted)
     chg = generate_changes(spark, 4000, n_convs=50, turns_per_conv=8, seed=48).localCheckpoint()
     bronze = LakeTable.create(
         spark, os.path.join(tmpdir_path, "bronze"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
     )
     silver_t = LakeTable.create(
-        spark, os.path.join(tmpdir_path, "silver"), SILVER_SCHEMA, KEY_COLS, num_buckets=4
+        spark, os.path.join(tmpdir_path, "silver"), SILVER_SCHEMA, KEY_COLS,
+        num_buckets=model_buckets,
     )
     gold_t = LakeTable.create(
-        spark, os.path.join(tmpdir_path, "gold"), GOLD_SCHEMA, ["conv_id"], num_buckets=4
+        spark, os.path.join(tmpdir_path, "gold"), GOLD_SCHEMA, ["conv_id"],
+        num_buckets=model_buckets,
     )
     roll_t = LakeTable.create(
-        spark, os.path.join(tmpdir_path, "roll"), GOLD_SCHEMA, ["conv_id"], num_buckets=4
+        spark, os.path.join(tmpdir_path, "roll"), GOLD_SCHEMA, ["conv_id"],
+        num_buckets=model_buckets,
     )
     silver = SilverModel(
         silver_t,
@@ -184,6 +202,8 @@ def test_concurrent_model_chains_match_sequential_truth(spark, tmpdir_path):
     )
     results = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
     assert all(set(r.model_wall_ms) == {"lens", "gold", "roll"} for r in results if not r.skipped)
+    # only the chained gold's read of the 3-bucket silver table falls back
+    assert fallbacks == ([] if model_buckets == 2 else [3] * len(results))
     # every table equals its from-scratch truth
     assert _rows(roll_t) == sorted(tuple(r) for r in roll.aggregate(bronze.read()).collect())
     want_gold = sorted(
