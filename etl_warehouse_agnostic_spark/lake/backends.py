@@ -18,6 +18,12 @@ implementations, and a config-driven factory.
   engine behind a DB-API connection (the Postgres/JDBC class): same
   contract, bulk transfer through a bounded-batch loader.
 
+The two SQL warehouses share one body (``_SqlWarehouse``): the
+``_epochs`` ledger, schema evolution, the spill lifecycle and the
+merge/overwrite transaction skeleton. Each engine supplies only its
+column types, how it begins and rolls back a transaction, how it
+applies the exported files, and ``read()``.
+
 Scale design — the Spark→warehouse transfer never rides the driver:
 Spark writes the deduped, epoch-bounded delta as PARQUET
 (executor-parallel, to what would be shared/object storage on a
@@ -26,7 +32,7 @@ transaction — DuckDB via ``read_parquet`` directly; a real Postgres
 via ``COPY`` of the same files. ``read()`` is the mirror image: the
 warehouse exports parquet, Spark scans it in parallel. No
 ``toPandas``/``collect`` on any warehouse data path (enforced by
-pytest). SQLite alone cannot ingest parquet natively, so its loader
+pytest). SQLite cannot ingest parquet natively, so its one load path
 streams Arrow record batches of bounded size through ``executemany``
 — memory O(batch), never O(delta); on Postgres that loop IS the COPY.
 
@@ -55,7 +61,8 @@ from etl_warehouse_agnostic_spark.lake.table import LakeTable, MergeResult
 
 
 class WarehouseBackend(Protocol):
-    """The sink contract every warehouse must honor (J2/J3 + T2/T3)."""
+    """The sink contract every warehouse must honor: exactly what the
+    engine and the models call on a sink (J2/J3 + T2/T3)."""
 
     def merge(
         self,
@@ -74,9 +81,17 @@ class WarehouseBackend(Protocol):
 
     def read(self) -> DataFrame: ...
 
+    @property
+    def schema(self) -> T.StructType: ...
+
+    @property
+    def key_cols(self) -> list[str]: ...
+
+    def evolve_schema(self, new_columns) -> T.StructType: ...
+
     def committed_epochs(self) -> list[int]: ...
 
-    def epoch_lsn_range(self, epoch_id: int) -> tuple[int, int] | None: ...
+    def epoch_committed(self, epoch_id: int) -> bool: ...
 
     def epoch_info(self, epoch_id: int) -> dict | None: ...
 
@@ -137,29 +152,23 @@ class LakeBackend:
     def key_cols(self) -> list[str]:
         return self.table.key_cols
 
-    def epoch_lsn_range(self, epoch_id: int) -> tuple[int, int] | None:
-        snap = self.table.epoch_snapshot(epoch_id)
-        if snap is None:
-            return None
-        rng = snap["summary"].get("lsn_range")
-        if rng is None:
-            # merge committed via the lake tail loop: the manifest rides
-            # in the snapshot summary and carries lineage.lsn_range
-            manifest = snap["summary"].get("manifest")
-            rng = manifest and manifest.get("lineage", {}).get("lsn_range")
-        return (int(rng[0]), int(rng[1])) if rng else None
-
     def epoch_info(self, epoch_id: int) -> dict | None:
         """{rows_written, lsn_lo, lsn_hi} from the commit that carried
         this epoch, or None if unknown (crash-recovery backfill)."""
         snap = self.table.epoch_snapshot(epoch_id)
         if snap is None:
             return None
-        rng = self.epoch_lsn_range(epoch_id)
+        summary = snap["summary"]
+        rng = summary.get("lsn_range")
+        if rng is None:
+            # merge committed via the lake tail loop: the manifest rides
+            # in the snapshot summary and carries lineage.lsn_range
+            manifest = summary.get("manifest")
+            rng = manifest and manifest.get("lineage", {}).get("lsn_range")
         return {
-            "rows_written": int(snap["summary"].get("rows_written") or 0),
-            "lsn_lo": rng[0] if rng else None,
-            "lsn_hi": rng[1] if rng else None,
+            "rows_written": int(summary.get("rows_written") or 0),
+            "lsn_lo": int(rng[0]) if rng else None,
+            "lsn_hi": int(rng[1]) if rng else None,
         }
 
     def evolve_schema(self, new_columns) -> T.StructType:
@@ -170,23 +179,9 @@ class LakeBackend:
         return self.table.schema
 
 
-_SPARK_TO_DUCK = {
-    "string": "VARCHAR",
-    "int": "INTEGER",
-    "bigint": "BIGINT",
-    "double": "DOUBLE",
-    "float": "FLOAT",
-    "boolean": "BOOLEAN",
-    "timestamp": "TIMESTAMP",
-    "timestamp_ntz": "TIMESTAMP",
-    "date": "DATE",
-}
-
-_EPOCHS_DDL = (
-    "CREATE TABLE IF NOT EXISTS _epochs (epoch_id BIGINT PRIMARY KEY, "
-    "rows_written BIGINT, lsn_lo BIGINT, lsn_hi BIGINT)"
-)
-
+# Rows per Arrow batch on SQLite's load and read-back loops: the
+# driver holds at most this many rows at a time.
+_BATCH_ROWS = 65536
 
 
 def _sweep_stale_spill(spill_dir: str) -> None:
@@ -202,37 +197,32 @@ def _sweep_stale_spill(spill_dir: str) -> None:
             shutil.rmtree(os.path.join(spill_dir, d), ignore_errors=True)
 
 
-def _duck_files_literal(files: list[str]) -> str:
-    """SQL list literal for read_parquet (CREATE VIEW cannot be a
-    prepared statement); paths are repo-generated but quoted anyway."""
-    quoted = ", ".join("'" + f.replace("'", "''") + "'" for f in files)
-    return f"[{quoted}]"
-
-
-class DuckBackend:
-    """Embedded-SQL warehouse backend (ClickHouse/Snowflake stand-in).
+class _SqlWarehouse:
+    """The body both SQL warehouses share.
 
     MERGE semantics: within ONE transaction, delete the target rows
     whose key appears in the delta (upserts ∪ deletes), insert the
-    upsert rows, record the epoch + its applied lsn range. A replayed
-    epoch id short-circuits to a skipped no-op BEFORE any mutation —
-    the same exactly-once contract LakeTable implements with snapshot
-    summaries.
+    upsert rows, record the epoch + its applied lsn range in the
+    ``_epochs`` ledger. A replayed epoch id short-circuits to a skipped
+    no-op BEFORE any export or mutation — the same exactly-once
+    contract LakeTable implements with snapshot summaries. The delta
+    reaches the warehouse as parquet exported by Spark (executor-
+    parallel) into ``spill_dir``, removed once the transaction ends.
 
-    Bulk transfer is file-based both ways: Spark exports the delta as
-    parquet (executor-parallel) and DuckDB ingests it with
-    ``read_parquet`` inside the transaction; ``read()`` has DuckDB
-    ``COPY`` the table to parquet and Spark scan it in parallel. The
-    delta/export never touches the driver as rows.
+    A subclass supplies ``_TYPES`` (Spark type → column type),
+    ``_connect``, ``_BEGIN``/``_rollback``, ``_columns``, how the
+    exported files are applied (``_apply_merge``/``_apply_overwrite``,
+    returning the rows inserted) and ``read()``.
     """
 
-    def __init__(self, db_path: str, table_name: str = "target"):
-        import duckdb
+    _TYPES: dict[str, str]
+    _BEGIN: str
 
+    def __init__(self, db_path: str, table_name: str = "target"):
         self.db_path = db_path
         self.table_name = table_name
         self.spill_dir = db_path + ".spill"
-        self._con = duckdb.connect(db_path)
+        self._con = self._connect(db_path)
         self._spark: SparkSession | None = None
         self._schema: T.StructType | None = None
         self._keys: list[str] = []
@@ -245,30 +235,46 @@ class DuckBackend:
         path: str,
         schema: T.StructType,
         key_cols: list[str],
-        **_: Any,
-    ) -> "DuckBackend":
+    ) -> "_SqlWarehouse":
         os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
         b = cls(path)
         b._spark = spark
         b._schema = schema
         b._keys = list(key_cols)
         _sweep_stale_spill(b.spill_dir)
-        cols = ", ".join(
-            f'"{f.name}" {_SPARK_TO_DUCK[f.dataType.simpleString()]}' for f in schema.fields
+        b._create_target()
+        n = b._TYPES["bigint"]
+        b._con.execute(
+            f"CREATE TABLE IF NOT EXISTS _epochs (epoch_id {n} PRIMARY KEY, "
+            f"rows_written {n}, lsn_lo {n}, lsn_hi {n})"
         )
-        b._con.execute(f"CREATE TABLE IF NOT EXISTS {b.table_name} ({cols})")
-        b._con.execute(_EPOCHS_DDL)
         # Opening a warehouse created before the lsn-range ledger: the
         # IF NOT EXISTS above keeps the old table, so add the columns.
-        have = {r[0] for r in b._con.execute("DESCRIBE _epochs").fetchall()}
+        have = set(b._columns("_epochs"))
         for col in ("lsn_lo", "lsn_hi"):
             if col not in have:
-                b._con.execute(f"ALTER TABLE _epochs ADD COLUMN {col} BIGINT")
+                b._con.execute(f"ALTER TABLE _epochs ADD COLUMN {col} {n}")
         return b
+
+    def _sql_type(self, dt: T.DataType) -> str:
+        try:
+            return self._TYPES[dt.simpleString()]
+        except KeyError:
+            raise ValueError(
+                f"unsupported {type(self).__name__} column type: {dt.simpleString()}"
+            ) from None
+
+    def _create_target(self) -> None:
+        cols = ", ".join(f'"{f.name}" {self._sql_type(f.dataType)}' for f in self._schema.fields)
+        self._con.execute(f"CREATE TABLE IF NOT EXISTS {self.table_name} ({cols})")
 
     @property
     def schema(self) -> T.StructType:
         return self._schema
+
+    @property
+    def key_cols(self) -> list[str]:
+        return list(self._keys)
 
     def evolve_schema(self, new_columns) -> T.StructType:
         """Add-only evolution, executed by the warehouse itself:
@@ -283,11 +289,13 @@ class DuckBackend:
         for f in added:
             self._con.execute(
                 f'ALTER TABLE {self.table_name} ADD COLUMN '
-                f'"{f.name}" {_SPARK_TO_DUCK[f.dataType.simpleString()]}'
+                f'"{f.name}" {self._sql_type(f.dataType)}'
             )
         if added:
             self._schema = T.StructType(list(self._schema.fields) + added)
         return self._schema
+
+    # -- the epoch ledger ----------------------------------------------
 
     def epoch_committed(self, epoch_id: int) -> bool:
         r = self._con.execute(
@@ -295,20 +303,8 @@ class DuckBackend:
         ).fetchone()
         return bool(r[0])
 
-    @property
-    def key_cols(self) -> list[str]:
-        return list(self._keys)
-
     def committed_epochs(self) -> list[int]:
         return [r[0] for r in self._con.execute("SELECT epoch_id FROM _epochs ORDER BY 1").fetchall()]
-
-    def epoch_lsn_range(self, epoch_id: int) -> tuple[int, int] | None:
-        r = self._con.execute(
-            "SELECT lsn_lo, lsn_hi FROM _epochs WHERE epoch_id = ?", [epoch_id]
-        ).fetchone()
-        if r is None or r[1] is None:
-            return None
-        return (int(r[0] or 0), int(r[1]))
 
     def epoch_info(self, epoch_id: int) -> dict | None:
         r = self._con.execute(
@@ -323,121 +319,162 @@ class DuckBackend:
 
     # -- contract -----------------------------------------------------
 
+    def merge(self, upserts, delete_keys=None, epoch_id=None, lsn_range=None) -> MergeResult:
+        exports = [("up", upserts, self._schema)]
+        if delete_keys is not None:
+            exports.append(("dk", delete_keys.select(*self._keys),
+                            T.StructType([self._schema[k] for k in self._keys])))
+        return self._commit_epoch(epoch_id, lsn_range, exports, self._apply_merge)
+
+    def overwrite(self, df, epoch_id=None, lsn_range=None) -> MergeResult:
+        return self._commit_epoch(
+            epoch_id, lsn_range, [("full", df, self._schema)], self._apply_overwrite
+        )
+
+    def _commit_epoch(self, epoch_id, lsn_range, exports, apply) -> MergeResult:
+        """Replay check → export each (tag, df, schema) → ONE
+        transaction: ``apply(*file_lists)`` + the ledger row → commit
+        (rollback on error) → spill cleanup."""
+        # The guard runs BEFORE any export or mutation, so a replayed
+        # epoch is a clean skipped no-op, not a PK-conflict rollback.
+        if epoch_id is not None and self.epoch_committed(epoch_id):
+            return MergeResult(0, epoch_id, 0, 0, 0, skipped=True)
+        dirs = [self._spill(tag) for tag, _, _ in exports]
+        try:
+            files = [_export_delta(df, schema, d) for (_, df, schema), d in zip(exports, dirs)]
+            self._con.execute(self._BEGIN)
+            try:
+                rows = apply(*files)
+                if epoch_id is not None:
+                    lo, hi = lsn_range if lsn_range is not None else (None, None)
+                    self._con.execute(
+                        "INSERT INTO _epochs (epoch_id, rows_written, lsn_lo, lsn_hi) "
+                        "VALUES (?, ?, ?, ?)",
+                        [epoch_id, rows, lo, hi],
+                    )
+                self._con.execute("COMMIT")
+            except Exception:
+                self._rollback()
+                raise
+            return MergeResult(0, epoch_id, rows, 0, 0)
+        finally:
+            for d in dirs:
+                shutil.rmtree(d, ignore_errors=True)
+
+    # -- spill lifecycle ------------------------------------------------
+
     def _spill(self, tag: str) -> str:
         return os.path.join(self.spill_dir, f"{tag}-{uuid.uuid4().hex[:8]}")
 
-    def merge(self, upserts, delete_keys=None, epoch_id=None, lsn_range=None) -> MergeResult:
-        if epoch_id is not None and self.epoch_committed(epoch_id):
-            return MergeResult(0, epoch_id, 0, 0, 0, skipped=True)
-        up_dir = self._spill("up")
-        dk_dir = self._spill("dk") if delete_keys is not None else None
-        try:
-            up_files = _export_delta(upserts, self._schema, up_dir)
-            dk_files = (
-                _export_delta(delete_keys.select(*self._keys),
-                              T.StructType([self._schema[k] for k in self._keys]),
-                              dk_dir)
-                if dk_dir is not None else []
-            )
-            t = self.table_name
-            key_eq = " AND ".join(f'{t}."{k}" = d."{k}"' for k in self._keys)
-            self._con.execute("BEGIN TRANSACTION")
-            try:
-                rows = 0
-                # Delete keys and upsert keys are removed in ONE pass
-                # over the target (UNION ALL of both key sets — DELETE
-                # USING has semi-join semantics, so duplicate matches
-                # are harmless). All deletes land BEFORE the insert, so
-                # a key present in both nets to the upsert surviving —
-                # the same resolution LakeTable._merge_attempt gives
-                # (the engine's split_ops never overlaps keys; direct
-                # callers may). Two separate DELETEs were two full
-                # target scans per epoch.
-                if dk_files:
-                    self._con.execute(
-                        "CREATE OR REPLACE TEMP VIEW _dkeys AS SELECT * "
-                        f"FROM read_parquet({_duck_files_literal(dk_files)})"
-                    )
-                if up_files:
-                    self._con.execute(
-                        "CREATE OR REPLACE TEMP VIEW _delta AS SELECT * "
-                        f"FROM read_parquet({_duck_files_literal(up_files)})"
-                    )
-                keys_sel = ", ".join(f'"{k}"' for k in self._keys)
-                del_parts = (
-                    [f"SELECT {keys_sel} FROM _delta"] if up_files else []
-                ) + ([f"SELECT {keys_sel} FROM _dkeys"] if dk_files else [])
-                if del_parts:
-                    self._con.execute(
-                        f"DELETE FROM {t} USING ({' UNION ALL '.join(del_parts)}) d "
-                        f"WHERE {key_eq}"
-                    )
-                if up_files:
-                    cols = [
-                        r[0] for r in
-                        self._con.execute("DESCRIBE _delta").fetchall()
-                    ]
-                    insert_cols = ", ".join(f'"{c}"' for c in cols)
-                    rows = self._con.execute(
-                        f"INSERT INTO {t} ({insert_cols}) SELECT {insert_cols} FROM _delta"
-                    ).fetchone()[0]
-                if epoch_id is not None:
-                    lo, hi = lsn_range if lsn_range is not None else (None, None)
-                    self._con.execute(
-                        "INSERT INTO _epochs (epoch_id, rows_written, lsn_lo, lsn_hi) "
-                        "VALUES (?, ?, ?, ?)",
-                        [epoch_id, rows, lo, hi],
-                    )
-                self._con.execute("COMMIT")
-            except Exception:
-                self._con.execute("ROLLBACK")
-                raise
-            return MergeResult(0, epoch_id, rows, 0, 0)
-        finally:
-            shutil.rmtree(up_dir, ignore_errors=True)
-            if dk_dir is not None:
-                shutil.rmtree(dk_dir, ignore_errors=True)
+    def _read_dir(self) -> str:
+        """A fresh export dir for ``read()``. The export must outlive
+        the call (the returned DataFrame scans lazily), but not
+        forever: each read() prunes all but the most recent previous
+        export, so a long-lived process holds at most TWO exports at a
+        time. The two-deep window is deliberate — a caller holding the
+        previous read() alongside this one (self-join, before/after
+        diff) stays valid; any OLDER DataFrame is invalidated and will
+        fail loudly at action time with missing input files. close()
+        removes whatever is left."""
+        for d in self._read_dirs[:-1]:
+            shutil.rmtree(d, ignore_errors=True)
+        out_dir = self._spill("read")
+        self._read_dirs = self._read_dirs[-1:] + [out_dir]
+        return out_dir
 
-    def overwrite(self, df, epoch_id=None, lsn_range=None) -> MergeResult:
-        # Same epoch idempotence as merge: the guard runs BEFORE any
-        # mutation so a replayed overwrite is a clean skipped no-op, not
-        # a delete-then-PK-conflict rollback.
-        if epoch_id is not None and self.epoch_committed(epoch_id):
-            return MergeResult(0, epoch_id, 0, 0, 0, skipped=True)
-        full_dir = self._spill("full")
-        try:
-            files = _export_delta(df, self._schema, full_dir)
-            t = self.table_name
-            self._con.execute("BEGIN TRANSACTION")
-            try:
-                self._con.execute(f"DELETE FROM {t}")
-                rows = 0
-                if files:
-                    self._con.execute(
-                        "CREATE OR REPLACE TEMP VIEW _full AS SELECT * "
-                        f"FROM read_parquet({_duck_files_literal(files)})"
-                    )
-                    cols = [
-                        r[0] for r in self._con.execute("DESCRIBE _full").fetchall()
-                    ]
-                    insert_cols = ", ".join(f'"{c}"' for c in cols)
-                    rows = self._con.execute(
-                        f"INSERT INTO {t} ({insert_cols}) SELECT {insert_cols} FROM _full"
-                    ).fetchone()[0]
-                if epoch_id is not None:
-                    lo, hi = lsn_range if lsn_range is not None else (None, None)
-                    self._con.execute(
-                        "INSERT INTO _epochs (epoch_id, rows_written, lsn_lo, lsn_hi) "
-                        "VALUES (?, ?, ?, ?)",
-                        [epoch_id, rows, lo, hi],
-                    )
-                self._con.execute("COMMIT")
-            except Exception:
-                self._con.execute("ROLLBACK")
-                raise
-            return MergeResult(0, epoch_id, rows, 0, 0)
-        finally:
-            shutil.rmtree(full_dir, ignore_errors=True)
+    def close(self) -> None:
+        self._con.close()
+        shutil.rmtree(self.spill_dir, ignore_errors=True)
+
+
+_SPARK_TO_DUCK = {
+    "string": "VARCHAR",
+    "int": "INTEGER",
+    "bigint": "BIGINT",
+    "double": "DOUBLE",
+    "float": "FLOAT",
+    "boolean": "BOOLEAN",
+    "timestamp": "TIMESTAMP",
+    "timestamp_ntz": "TIMESTAMP",
+    "date": "DATE",
+}
+
+
+def _duck_files_literal(files: list[str]) -> str:
+    """SQL list literal for read_parquet (CREATE VIEW cannot be a
+    prepared statement); paths are repo-generated but quoted anyway."""
+    quoted = ", ".join("'" + f.replace("'", "''") + "'" for f in files)
+    return f"[{quoted}]"
+
+
+class DuckBackend(_SqlWarehouse):
+    """Embedded-SQL warehouse backend (ClickHouse/Snowflake stand-in).
+
+    Bulk transfer is file-based both ways: DuckDB ingests the exported
+    delta with ``read_parquet`` inside the transaction; ``read()`` has
+    DuckDB ``COPY`` the table to parquet and Spark scan it in parallel.
+    The delta/export never touches the driver as rows.
+    """
+
+    _TYPES = _SPARK_TO_DUCK
+    _BEGIN = "BEGIN TRANSACTION"
+
+    @staticmethod
+    def _connect(db_path: str):
+        import duckdb
+
+        return duckdb.connect(db_path)
+
+    def _rollback(self) -> None:
+        self._con.execute("ROLLBACK")
+
+    def _columns(self, relation: str) -> list[str]:
+        return [r[0] for r in self._con.execute(f"DESCRIBE {relation}").fetchall()]
+
+    def _view(self, name: str, files: list[str]) -> None:
+        self._con.execute(
+            f"CREATE OR REPLACE TEMP VIEW {name} AS SELECT * "
+            f"FROM read_parquet({_duck_files_literal(files)})"
+        )
+
+    def _insert_from(self, view: str) -> int:
+        insert_cols = ", ".join(f'"{c}"' for c in self._columns(view))
+        return self._con.execute(
+            f"INSERT INTO {self.table_name} ({insert_cols}) SELECT {insert_cols} FROM {view}"
+        ).fetchone()[0]
+
+    def _apply_merge(self, up_files: list[str], dk_files: list[str] = ()) -> int:
+        # Delete keys and upsert keys are removed in ONE pass over the
+        # target (UNION ALL of both key sets — DELETE USING has
+        # semi-join semantics, so duplicate matches are harmless). All
+        # deletes land BEFORE the insert, so a key present in both nets
+        # to the upsert surviving — the same resolution
+        # LakeTable._merge_attempt gives (the engine's split_ops never
+        # overlaps keys; direct callers may). Two separate DELETEs were
+        # two full target scans per epoch.
+        t = self.table_name
+        if dk_files:
+            self._view("_dkeys", dk_files)
+        if up_files:
+            self._view("_delta", up_files)
+        keys_sel = ", ".join(f'"{k}"' for k in self._keys)
+        del_parts = (
+            [f"SELECT {keys_sel} FROM _delta"] if up_files else []
+        ) + ([f"SELECT {keys_sel} FROM _dkeys"] if dk_files else [])
+        if del_parts:
+            key_eq = " AND ".join(f'{t}."{k}" = d."{k}"' for k in self._keys)
+            self._con.execute(
+                f"DELETE FROM {t} USING ({' UNION ALL '.join(del_parts)}) d "
+                f"WHERE {key_eq}"
+            )
+        return self._insert_from("_delta") if up_files else 0
+
+    def _apply_overwrite(self, files: list[str]) -> int:
+        self._con.execute(f"DELETE FROM {self.table_name}")
+        if not files:
+            return 0
+        self._view("_full", files)
+        return self._insert_from("_full")
 
     def read(self) -> DataFrame:
         """Parallel read-back: the warehouse exports the table as
@@ -445,17 +482,7 @@ class DuckBackend:
         ingest path (on a real warehouse: ``COPY ... TO`` object
         storage, or ``spark.read.jdbc`` with ``partitionColumn``). The
         driver never holds rows."""
-        # The export must outlive this call (the returned DataFrame
-        # scans lazily), but not forever: each read() prunes all but
-        # the most recent previous export, so a long-lived process
-        # holds at most TWO exports at a time. The two-deep window is
-        # deliberate — a caller holding the previous read() alongside
-        # this one (self-join, before/after diff) stays valid; any
-        # OLDER DataFrame is invalidated and will fail loudly at action
-        # time with missing input files. close() removes whatever is
-        # left.
-        self._prune_read_dirs(keep=1)
-        out_dir = self._spill("read")
+        out_dir = self._read_dir()
         os.makedirs(self.spill_dir, exist_ok=True)
         # PER_THREAD_OUTPUT: the warehouse writes one file per thread
         # (parallel export), Spark scans them in parallel (and splits
@@ -464,31 +491,7 @@ class DuckBackend:
             f"COPY (SELECT * FROM {self.table_name}) TO '{out_dir}' "
             "(FORMAT PARQUET, PER_THREAD_OUTPUT TRUE)"
         )
-        self._read_dirs.append(out_dir)
         return self._spark.read.schema(self._schema).parquet(out_dir)
-
-    def _prune_read_dirs(self, keep: int = 0) -> None:
-        drop = self._read_dirs[: len(self._read_dirs) - keep] if keep else self._read_dirs
-        for d in drop:
-            shutil.rmtree(d, ignore_errors=True)
-        self._read_dirs = self._read_dirs[len(self._read_dirs) - keep :] if keep else []
-
-    def close(self) -> None:
-        self._con.close()
-        shutil.rmtree(self.spill_dir, ignore_errors=True)
-
-
-def _sqlite_rollback_quietly(cur) -> None:
-    """ROLLBACK if a transaction is active. BEGIN itself may have
-    failed (e.g. ``BEGIN IMMEDIATE`` busy beyond the timeout) — a bare
-    ROLLBACK then raises 'cannot rollback - no transaction is active'
-    and masks the original error, so swallow exactly that case."""
-    import sqlite3
-
-    try:
-        cur.execute("ROLLBACK")
-    except sqlite3.OperationalError:
-        pass
 
 
 def _pa_to_py(column, spark_type: T.DataType):
@@ -506,177 +509,70 @@ def _pa_to_py(column, spark_type: T.DataType):
     return column.to_pylist()
 
 
-class SqliteBackend:
+class SqliteBackend(_SqlWarehouse):
     """DB-API warehouse backend over a second, genuinely different
     embedded engine (stdlib ``sqlite3``) — the stand-in for the
     reference's Postgres target (config/warehouse_config.py:25-45):
     every statement flows through a DB-API connection exactly as it
     would through psycopg/JDBC.
 
-    Two load paths:
-
-    - **Bounded driver loop** (default; the sqlite-only fallback): the
-      loader streams Arrow record batches of ≤ ``batch_rows`` rows from
-      the exported parquet through ``executemany`` — memory O(batch),
-      never O(delta), but driver CPU O(delta).
-    - **Executor-parallel staging load** (``parallel_load=True``; the
-      scale path for any target that accepts concurrent connections —
-      i.e. the real Postgres/JDBC idiom): every Spark partition opens
-      its OWN DB-API connection and bulk-inserts its Arrow batches into
-      a per-epoch STAGING table (on Postgres: per-partition ``COPY``);
-      the driver then swaps staging into the target inside ONE
-      transaction (delete matched keys → insert → epoch ledger).
-      Exactly-once survives Spark's at-least-once task retries because
-      a retried task re-commits an identical row set and the swap
-      inserts ``SELECT DISTINCT``; a crash before the swap leaves only
-      an orphan staging table (dropped on the next open), never a
-      half-applied target — the ledger row is written inside the swap
-      transaction only.
+    One load path: the loader streams Arrow record batches of at most
+    ``_BATCH_ROWS`` rows from the exported parquet through
+    ``executemany`` — memory O(batch), never O(delta), driver CPU
+    O(delta). On Postgres that loop is a ``COPY`` of the same files.
 
     Timestamps are stored as epoch-microsecond INTEGERs (SQLite has no
     timestamp type) and restored on ``read()``.
     """
 
-    def __init__(self, db_path: str, table_name: str = "target",
-                 batch_rows: int = 65536, parallel_load: bool = False):
-        import sqlite3
-
-        self.db_path = db_path
-        self.table_name = table_name
-        self.batch_rows = batch_rows
-        self.parallel_load = parallel_load
-        self.spill_dir = db_path + ".spill"
-        # autocommit mode: transactions are managed explicitly with
-        # BEGIN/COMMIT (python sqlite3's implicit transaction start
-        # would collide with our explicit BEGIN)
-        self._con = sqlite3.connect(db_path, isolation_level=None)
-        self._last_load_pids: list[int] = []
-        if parallel_load:
-            # WAL lets the executor connections interleave with the
-            # driver connection without "database is locked" storms
-            # (writers still serialize on the file lock, as they would
-            # NOT on a real server target — that is sqlite's limit,
-            # not the load path's).
-            self._con.execute("PRAGMA journal_mode=WAL")
-            self._con.execute("PRAGMA busy_timeout=120000")
-        self._spark: SparkSession | None = None
-        self._schema: T.StructType | None = None
-        self._keys: list[str] = []
-        self._read_dirs: list[str] = []
+    _TYPES = {
+        "string": "TEXT", "date": "TEXT",
+        "int": "INTEGER", "bigint": "INTEGER", "boolean": "INTEGER",
+        "timestamp": "INTEGER", "timestamp_ntz": "INTEGER",
+        "double": "REAL", "float": "REAL",
+    }
+    # autocommit connection: transactions are managed explicitly
+    # (python sqlite3's implicit transaction start would collide with
+    # an explicit BEGIN)
+    _BEGIN = "BEGIN"
 
     @staticmethod
-    def _sql_type(dt: T.DataType) -> str:
-        s = dt.simpleString()
-        if s in ("string", "date"):
-            return "TEXT"
-        if s in ("int", "bigint", "boolean", "timestamp", "timestamp_ntz"):
-            return "INTEGER"
-        if s in ("double", "float"):
-            return "REAL"
-        raise ValueError(f"unsupported sqlite column type: {s}")
+    def _connect(db_path: str):
+        import sqlite3
 
-    @classmethod
-    def create(
-        cls,
-        spark: SparkSession,
-        path: str,
-        schema: T.StructType,
-        key_cols: list[str],
-        **kw: Any,
-    ) -> "SqliteBackend":
-        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-        b = cls(path, **kw)
-        b._spark = spark
-        _sweep_stale_spill(b.spill_dir)
-        # Orphan staging tables (crash between executor load and swap)
-        # are garbage by construction — the epoch ledger row is only
-        # written inside the swap transaction — so reclaim them here.
-        for (name,) in b._con.execute(
-            "SELECT name FROM sqlite_master WHERE type='table' "
-            "AND name LIKE '~_stage~_%' ESCAPE '~'"
-        ).fetchall():
-            b._con.execute(f'DROP TABLE "{name}"')
-        b._schema = schema
-        b._keys = list(key_cols)
-        cols = ", ".join(f'"{f.name}" {cls._sql_type(f.dataType)}' for f in schema.fields)
-        b._con.execute(f"CREATE TABLE IF NOT EXISTS {b.table_name} ({cols})")
+        return sqlite3.connect(db_path, isolation_level=None)
+
+    def _rollback(self) -> None:
+        """ROLLBACK if a transaction is active. SQLite ends the
+        transaction itself on some errors — a bare ROLLBACK then raises
+        'cannot rollback - no transaction is active' and masks the
+        original error, so swallow exactly that case."""
+        import sqlite3
+
+        try:
+            self._con.execute("ROLLBACK")
+        except sqlite3.OperationalError:
+            pass
+
+    def _columns(self, relation: str) -> list[str]:
+        return [r[1] for r in self._con.execute(f"PRAGMA table_info({relation})").fetchall()]
+
+    def _create_target(self) -> None:
+        super()._create_target()
         # The key index is what a real warehouse target's PRIMARY KEY
         # provides: without it every per-row DELETE in the MERGE is a
         # full table scan — O(table × delta) per epoch.
-        key_list = ", ".join(f'"{k}"' for k in key_cols)
-        b._con.execute(
-            f"CREATE UNIQUE INDEX IF NOT EXISTS {b.table_name}_key "
-            f"ON {b.table_name} ({key_list})"
-        )
-        b._con.execute(
-            "CREATE TABLE IF NOT EXISTS _epochs (epoch_id INTEGER PRIMARY KEY, "
-            "rows_written INTEGER, lsn_lo INTEGER, lsn_hi INTEGER)"
-        )
-        have = {r[1] for r in b._con.execute("PRAGMA table_info(_epochs)").fetchall()}
-        for col in ("lsn_lo", "lsn_hi"):
-            if col not in have:
-                b._con.execute(f"ALTER TABLE _epochs ADD COLUMN {col} INTEGER")
-        return b
-
-    @property
-    def schema(self) -> T.StructType:
-        return self._schema
-
-    def evolve_schema(self, new_columns) -> T.StructType:
-        fields = new_columns.fields if isinstance(new_columns, T.StructType) else list(new_columns)
-        cur_names = set(self._schema.names)
-        added = [f for f in fields if f.name not in cur_names]
-        for f in added:
-            self._con.execute(
-                f'ALTER TABLE {self.table_name} ADD COLUMN '
-                f'"{f.name}" {self._sql_type(f.dataType)}'
-            )
-        if added:
-            self._schema = T.StructType(list(self._schema.fields) + added)
-        return self._schema
-
-    def epoch_committed(self, epoch_id: int) -> bool:
-        r = self._con.execute(
-            "SELECT count(*) FROM _epochs WHERE epoch_id = ?", [epoch_id]
-        ).fetchone()
-        return bool(r[0])
-
-    @property
-    def key_cols(self) -> list[str]:
-        return list(self._keys)
-
-    def committed_epochs(self) -> list[int]:
-        return [r[0] for r in self._con.execute("SELECT epoch_id FROM _epochs ORDER BY 1")]
-
-    def epoch_lsn_range(self, epoch_id: int) -> tuple[int, int] | None:
-        r = self._con.execute(
-            "SELECT lsn_lo, lsn_hi FROM _epochs WHERE epoch_id = ?", [epoch_id]
-        ).fetchone()
-        if r is None or r[1] is None:
-            return None
-        return (int(r[0] or 0), int(r[1]))
-
-    def epoch_info(self, epoch_id: int) -> dict | None:
-        r = self._con.execute(
-            "SELECT rows_written, lsn_lo, lsn_hi FROM _epochs WHERE epoch_id = ?",
-            [epoch_id],
-        ).fetchone()
-        if r is None:
-            return None
-        return {"rows_written": int(r[0] or 0),
-                "lsn_lo": None if r[1] is None else int(r[1]),
-                "lsn_hi": None if r[2] is None else int(r[2])}
-
-    # -- bounded-batch loader ----------------------------------------
+        t = self.table_name
+        key_list = ", ".join(f'"{k}"' for k in self._keys)
+        self._con.execute(f"CREATE UNIQUE INDEX IF NOT EXISTS {t}_key ON {t} ({key_list})")
 
     def _iter_batches(self, files: list[str]) -> Iterator[tuple[list[str], list[tuple]]]:
         """Stream (columns, rows) from exported parquet in bounded
-        Arrow batches — the driver holds ≤ batch_rows rows at a time."""
+        Arrow batches — the driver holds ≤ _BATCH_ROWS rows at a time."""
         import pyarrow.parquet as pq
 
         for path in files:
-            pf = pq.ParquetFile(path)
-            for batch in pf.iter_batches(batch_size=self.batch_rows):
+            for batch in pq.ParquetFile(path).iter_batches(batch_size=_BATCH_ROWS):
                 cols = batch.schema.names
                 series = [
                     _pa_to_py(batch.column(i), self._schema[c].dataType)
@@ -684,243 +580,34 @@ class SqliteBackend:
                 ]
                 yield cols, list(zip(*series))
 
-    def _spill(self, tag: str) -> str:
-        return os.path.join(self.spill_dir, f"{tag}-{uuid.uuid4().hex[:8]}")
-
-    # -- executor-parallel staging load (the Postgres/JDBC idiom) ------
-
-    def _load_files_to_staging(
-        self, files: list[str], schema: T.StructType, stage_table: str
-    ) -> list[int]:
-        """Load exported parquet into a staging table with ONE DB-API
-        connection PER SPARK PARTITION (``mapInArrow`` keeps the
-        transfer Arrow-batched end to end; on Postgres each partition's
-        insert loop is a ``COPY``). Each partition commits its complete
-        batch set or nothing (connection close without commit rolls
-        back), so a retried task re-commits an identical row set — the
-        swap's DISTINCT makes that harmless. Returns the distinct
-        python-worker PIDs that did the loading (driver-side proof the
-        work ran on executors)."""
-        if not files:
-            return []
-        db_path = self.db_path
-        dtypes = [f.dataType for f in schema.fields]
-        names = [f.name for f in schema.fields]
-        collist = ", ".join(f'"{c}"' for c in names)
-        ph = ", ".join("?" for _ in names)
-        ins = f'INSERT INTO "{stage_table}" ({collist}) VALUES ({ph})'
-
-        def load(batches):
-            import os as _os
-            import sqlite3 as _sq
-
-            import pyarrow as pa
-
-            con = _sq.connect(db_path, timeout=120, isolation_level=None)
-            try:
-                con.execute("PRAGMA busy_timeout=120000")
-                cur = con.cursor()
-                cur.execute("BEGIN")
-                n = 0
-                for batch in batches:
-                    series = [
-                        _pa_to_py(batch.column(i), dtypes[i])
-                        for i in range(batch.num_columns)
-                    ]
-                    cur.executemany(ins, list(zip(*series)))
-                    n += batch.num_rows
-                cur.execute("COMMIT")
-            finally:
-                con.close()
-            yield pa.RecordBatch.from_pydict({"rows": [n], "pid": [_os.getpid()]})
-
-        from pyspark.sql import functions as F
-
-        out = (
-            self._spark.read.schema(schema)
-            .parquet(*files)
-            .mapInArrow(load, "rows long, pid long")
+    def _delete_keys(self, cols: list[str], batch: list[tuple]) -> None:
+        key_pred = " AND ".join(f'"{k}" = ?' for k in self._keys)
+        key_idx = [cols.index(k) for k in self._keys]
+        self._con.executemany(
+            f"DELETE FROM {self.table_name} WHERE {key_pred}",
+            [tuple(r[i] for i in key_idx) for r in batch],
         )
-        pids = out.agg(F.collect_set("pid")).first()[0]
-        return sorted(pids)
 
-    def _merge_parallel(self, up_files, dk_files, epoch_id, lsn_range) -> int:
-        """Staging-table MERGE: executor-parallel loads, then ONE
-        driver transaction swaps staging into the target (delete
-        matched keys → insert DISTINCT → epoch ledger → drop staging).
-        The ledger write rides the swap, so exactly-once is unchanged;
-        an orphan staging table from a crash is reclaimed at the next
-        ``create``."""
-        t = self.table_name
-        sid = uuid.uuid4().hex[:8]
-        up_st, dk_st = f"_stage_up_{sid}", f"_stage_dk_{sid}"
-        key_struct = T.StructType([self._schema[k] for k in self._keys])
-        self._con.execute(
-            f'CREATE TABLE "{up_st}" ('
-            + ", ".join(f'"{f.name}" {self._sql_type(f.dataType)}' for f in self._schema.fields)
-            + ")"
-        )
-        self._con.execute(
-            f'CREATE TABLE "{dk_st}" ('
-            + ", ".join(f'"{f.name}" {self._sql_type(f.dataType)}' for f in key_struct.fields)
-            + ")"
-        )
-        self._last_load_pids = self._load_files_to_staging(up_files, self._schema, up_st)
-        self._last_load_pids += self._load_files_to_staging(dk_files, key_struct, dk_st)
-        keys_sql = ", ".join(f'"{k}"' for k in self._keys)
-        collist = ", ".join(f'"{f.name}"' for f in self._schema.fields)
-        cur = self._con.cursor()
-        try:
-            cur.execute("BEGIN IMMEDIATE")
-            # delete_keys first — upsert-wins netting, same as every
-            # other backend's merge
-            cur.execute(
-                f'DELETE FROM {t} WHERE ({keys_sql}) IN (SELECT {keys_sql} FROM "{dk_st}")'
-            )
-            cur.execute(
-                f'DELETE FROM {t} WHERE ({keys_sql}) IN (SELECT {keys_sql} FROM "{up_st}")'
-            )
-            cur.execute(
-                f'INSERT INTO {t} ({collist}) SELECT DISTINCT {collist} FROM "{up_st}"'
-            )
-            rows = cur.execute("SELECT changes()").fetchone()[0]
-            if epoch_id is not None:
-                lo, hi = lsn_range if lsn_range is not None else (None, None)
-                cur.execute(
-                    "INSERT INTO _epochs (epoch_id, rows_written, lsn_lo, lsn_hi) "
-                    "VALUES (?, ?, ?, ?)",
-                    [epoch_id, rows, lo, hi],
-                )
-            cur.execute(f'DROP TABLE "{up_st}"')
-            cur.execute(f'DROP TABLE "{dk_st}"')
-            cur.execute("COMMIT")
-        except Exception:
-            _sqlite_rollback_quietly(cur)
-            raise
+    def _insert(self, cols: list[str], batch: list[tuple]) -> int:
+        collist = ", ".join(f'"{c}"' for c in cols)
+        ph = ", ".join("?" for _ in cols)
+        self._con.executemany(f"INSERT INTO {self.table_name} ({collist}) VALUES ({ph})", batch)
+        return len(batch)
+
+    def _apply_merge(self, up_files: list[str], dk_files: list[str] = ()) -> int:
+        # delete_keys first (same upsert-wins netting as
+        # LakeTable._merge_attempt when a key is in both)
+        for cols, batch in self._iter_batches(dk_files):
+            self._delete_keys(cols, batch)
+        rows = 0
+        for cols, batch in self._iter_batches(up_files):
+            self._delete_keys(cols, batch)
+            rows += self._insert(cols, batch)
         return rows
 
-    def merge(self, upserts, delete_keys=None, epoch_id=None, lsn_range=None) -> MergeResult:
-        if epoch_id is not None and self.epoch_committed(epoch_id):
-            return MergeResult(0, epoch_id, 0, 0, 0, skipped=True)
-        up_dir = self._spill("up")
-        dk_dir = self._spill("dk") if delete_keys is not None else None
-        try:
-            up_files = _export_delta(upserts, self._schema, up_dir)
-            dk_files = (
-                _export_delta(delete_keys.select(*self._keys),
-                              T.StructType([self._schema[k] for k in self._keys]),
-                              dk_dir)
-                if dk_dir is not None else []
-            )
-            if self.parallel_load:
-                rows = self._merge_parallel(up_files, dk_files, epoch_id, lsn_range)
-                return MergeResult(0, epoch_id, rows, 0, 0)
-            t = self.table_name
-            key_pred = " AND ".join(f'"{k}" = ?' for k in self._keys)
-            cur = self._con.cursor()
-            try:
-                cur.execute("BEGIN")
-                rows = 0
-                # delete_keys first (same upsert-wins netting as
-                # LakeTable._merge_attempt when a key is in both)
-                for cols, batch in self._iter_batches(dk_files):
-                    key_idx = [cols.index(k) for k in self._keys]
-                    cur.executemany(
-                        f"DELETE FROM {t} WHERE {key_pred}",
-                        [tuple(r[i] for i in key_idx) for r in batch],
-                    )
-                for cols, batch in self._iter_batches(up_files):
-                    key_idx = [cols.index(k) for k in self._keys]
-                    cur.executemany(
-                        f"DELETE FROM {t} WHERE {key_pred}",
-                        [tuple(r[i] for i in key_idx) for r in batch],
-                    )
-                    collist = ", ".join(f'"{c}"' for c in cols)
-                    ph = ", ".join("?" for _ in cols)
-                    cur.executemany(f"INSERT INTO {t} ({collist}) VALUES ({ph})", batch)
-                    rows += len(batch)
-                if epoch_id is not None:
-                    lo, hi = lsn_range if lsn_range is not None else (None, None)
-                    cur.execute(
-                        "INSERT INTO _epochs (epoch_id, rows_written, lsn_lo, lsn_hi) "
-                        "VALUES (?, ?, ?, ?)",
-                        [epoch_id, rows, lo, hi],
-                    )
-                cur.execute("COMMIT")
-            except Exception:
-                _sqlite_rollback_quietly(cur)
-                raise
-            return MergeResult(0, epoch_id, rows, 0, 0)
-        finally:
-            shutil.rmtree(up_dir, ignore_errors=True)
-            if dk_dir is not None:
-                shutil.rmtree(dk_dir, ignore_errors=True)
-
-    def overwrite(self, df, epoch_id=None, lsn_range=None) -> MergeResult:
-        if epoch_id is not None and self.epoch_committed(epoch_id):
-            return MergeResult(0, epoch_id, 0, 0, 0, skipped=True)
-        full_dir = self._spill("full")
-        try:
-            files = _export_delta(df, self._schema, full_dir)
-            t = self.table_name
-            if self.parallel_load:
-                sid = uuid.uuid4().hex[:8]
-                st = f"_stage_full_{sid}"
-                self._con.execute(
-                    f'CREATE TABLE "{st}" ('
-                    + ", ".join(
-                        f'"{f.name}" {self._sql_type(f.dataType)}'
-                        for f in self._schema.fields
-                    )
-                    + ")"
-                )
-                self._last_load_pids = self._load_files_to_staging(files, self._schema, st)
-                collist = ", ".join(f'"{f.name}"' for f in self._schema.fields)
-                cur = self._con.cursor()
-                try:
-                    cur.execute("BEGIN IMMEDIATE")
-                    cur.execute(f"DELETE FROM {t}")
-                    cur.execute(
-                        f'INSERT INTO {t} ({collist}) SELECT DISTINCT {collist} FROM "{st}"'
-                    )
-                    rows = cur.execute("SELECT changes()").fetchone()[0]
-                    if epoch_id is not None:
-                        lo, hi = lsn_range if lsn_range is not None else (None, None)
-                        cur.execute(
-                            "INSERT INTO _epochs (epoch_id, rows_written, lsn_lo, lsn_hi) "
-                            "VALUES (?, ?, ?, ?)",
-                            [epoch_id, rows, lo, hi],
-                        )
-                    cur.execute(f'DROP TABLE "{st}"')
-                    cur.execute("COMMIT")
-                except Exception:
-                    _sqlite_rollback_quietly(cur)
-                    raise
-                return MergeResult(0, epoch_id, rows, 0, 0)
-            cur = self._con.cursor()
-            try:
-                cur.execute("BEGIN")
-                cur.execute(f"DELETE FROM {t}")
-                rows = 0
-                for cols, batch in self._iter_batches(files):
-                    collist = ", ".join(f'"{c}"' for c in cols)
-                    ph = ", ".join("?" for _ in cols)
-                    cur.executemany(f"INSERT INTO {t} ({collist}) VALUES ({ph})", batch)
-                    rows += len(batch)
-                if epoch_id is not None:
-                    lo, hi = lsn_range if lsn_range is not None else (None, None)
-                    cur.execute(
-                        "INSERT INTO _epochs (epoch_id, rows_written, lsn_lo, lsn_hi) "
-                        "VALUES (?, ?, ?, ?)",
-                        [epoch_id, rows, lo, hi],
-                    )
-                cur.execute("COMMIT")
-            except Exception:
-                _sqlite_rollback_quietly(cur)
-                raise
-            return MergeResult(0, epoch_id, rows, 0, 0)
-        finally:
-            shutil.rmtree(full_dir, ignore_errors=True)
+    def _apply_overwrite(self, files: list[str]) -> int:
+        self._con.execute(f"DELETE FROM {self.table_name}")
+        return sum(self._insert(cols, batch) for cols, batch in self._iter_batches(files))
 
     def read(self) -> DataFrame:
         """Export the table to parquet in bounded batches (cursor →
@@ -930,16 +617,7 @@ class SqliteBackend:
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        # Same export-lifetime rule as DuckBackend.read(): keep the
-        # most recent previous export (so a caller holding two reads —
-        # self-join, before/after diff — stays valid), prune anything
-        # older, bounding disk at two exports.
-        drop = self._read_dirs[:-1]
-        for d in drop:
-            shutil.rmtree(d, ignore_errors=True)
-        self._read_dirs = self._read_dirs[-1:]
-        out_dir = self._spill("read")
-        self._read_dirs.append(out_dir)
+        out_dir = self._read_dir()
         os.makedirs(out_dir, exist_ok=True)
         out = os.path.join(out_dir, "table.parquet")
         arrow_schema = to_arrow_schema(self._schema)
@@ -948,7 +626,7 @@ class SqliteBackend:
         cur = self._con.execute(f"SELECT {collist} FROM {self.table_name}")
         with pq.ParquetWriter(out, arrow_schema) as w:
             while True:
-                rows = cur.fetchmany(self.batch_rows)
+                rows = cur.fetchmany(_BATCH_ROWS)
                 if not rows:
                     break
                 cols = list(zip(*rows))
@@ -967,9 +645,8 @@ class SqliteBackend:
                 w.write_table(pa.Table.from_arrays(arrays, schema=arrow_schema))
         return self._spark.read.schema(self._schema).parquet(out)
 
-    def close(self) -> None:
-        self._con.close()
-        shutil.rmtree(self.spill_dir, ignore_errors=True)
+
+_SQL_WAREHOUSES = {"duckdb": DuckBackend, "sqlite": SqliteBackend}
 
 
 def make_warehouse(
@@ -981,15 +658,16 @@ def make_warehouse(
     """Config-driven backend switch — the reference's
     ``get_connection_string``/``switch_warehouse.sh`` analog (three
     engines behind one flag, scripts/switch_warehouse.sh:1-66). Config:
-    ``{"type": "lake"|"duckdb"|"sqlite", "path": ..., **backend kwargs}``."""
+    ``{"type": "lake"|"duckdb"|"sqlite", "path": ..., **kwargs}``; only
+    the lake type takes kwargs (``LakeTable.create``'s), a SQL
+    warehouse rejects any other key."""
     wtype = config.get("type", "lake")
     path = config["path"]
+    kw = {k: v for k, v in config.items() if k not in ("type", "path")}
     if wtype == "lake":
-        kw = {k: v for k, v in config.items() if k not in ("type", "path")}
         return LakeBackend.create(spark, path, schema, key_cols, **kw)
-    if wtype == "duckdb":
-        return DuckBackend.create(spark, path, schema, key_cols)
-    if wtype == "sqlite":
-        kw = {k: v for k, v in config.items() if k not in ("type", "path")}
-        return SqliteBackend.create(spark, path, schema, key_cols, **kw)
-    raise ValueError(f"unsupported warehouse type: {wtype!r}")
+    if wtype not in _SQL_WAREHOUSES:
+        raise ValueError(f"unsupported warehouse type: {wtype!r}")
+    if kw:
+        raise ValueError(f"unknown {wtype} warehouse config keys: {sorted(kw)}")
+    return _SQL_WAREHOUSES[wtype].create(spark, path, schema, key_cols)

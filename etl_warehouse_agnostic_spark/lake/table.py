@@ -76,6 +76,25 @@ class CommitConflict(RuntimeError):
         self.written_dir = written_dir
 
 
+# Attempts after the first that a writer makes before giving up.
+_COMMIT_RETRIES = 3
+
+
+def _retry_commit(attempt, *args):
+    """Run ``attempt(*args)`` until one commits: a losing attempt
+    (CommitConflict: another writer published that version first)
+    deletes the data it wrote and the next re-reads the fresh snapshot
+    — Iceberg's commit-retry semantics."""
+    for _attempt in range(_COMMIT_RETRIES + 1):
+        try:
+            return attempt(*args)
+        except CommitConflict as e:
+            last_exc = e
+            if e.written_dir:
+                shutil.rmtree(e.written_dir, ignore_errors=True)
+    raise last_exc
+
+
 @dataclass(frozen=True)
 class EpochCensus:
     """What one epoch's delta touches, in one table's hash layout:
@@ -349,13 +368,12 @@ class LakeTable:
         self,
         df: DataFrame,
         out_dir: str,
-        extra_metrics: dict[str, F.Column] | None = None,
         compression: str | None = None,
     ) -> tuple[dict[str, list[str]], dict[str, int], int]:
         """Write df (must carry _bucket) under out_dir, one file set per
-        bucket via partitionBy; returns (bucket->relpaths, observed
-        metrics incl. 'rows', bytes). Metrics come from an Observation
-        attached to the write — no extra pass over the data.
+        bucket via partitionBy; returns (bucket->relpaths, {"rows": n},
+        bytes). The row count comes from an Observation attached to the
+        write — no extra pass over the data.
 
         ``compression`` overrides the session parquet codec for THIS
         write only (used for ephemeral staging deltas, which are
@@ -363,9 +381,6 @@ class LakeTable:
         codec there is pure CPU savings; table-at-rest files keep the
         session default zstd)."""
         obs = Observation(f"write-{os.path.basename(out_dir)}-{uuid.uuid4().hex[:6]}")
-        metrics = {"rows": F.count(F.lit(1)).alias("rows")}
-        for k, v in (extra_metrics or {}).items():
-            metrics[k] = v.alias(k)
         spec = self.partition_spec
         staged = df.withColumn(_PB, F.col(_BUCKET))
         part_cols = [_PB]
@@ -377,7 +392,7 @@ class LakeTable:
             )
             part_cols.append(_PD)
         writer = (
-            staged.observe(obs, *metrics.values())
+            staged.observe(obs, F.count(F.lit(1)).alias("rows"))
             .repartition(F.col(_BUCKET))
             # partition cols lead the sort so FileFormatWriter's
             # required ordering is already satisfied and the key sort
@@ -396,7 +411,7 @@ class LakeTable:
         except Exception:
             # Catalyst can fold tiny local-relation inputs so the
             # CollectMetrics node never fires (seen with createDataFrame
-            # sources in tests). Recompute from what was written.
+            # sources in tests). Count from the written footers.
             observed = {"rows": None}
         files: dict[str, list[str]] = {}
         nbytes = 0
@@ -415,15 +430,10 @@ class LakeTable:
         if observed.get("rows") is None:
             import pyarrow.parquet as pq
 
-            rows = sum(
+            observed = {"rows": sum(
                 pq.ParquetFile(os.path.join(self.path, p)).metadata.num_rows
                 for ps in files.values() for p in ps
-            )
-            observed = {"rows": rows}
-            if extra_metrics:
-                written = self.read_bucketed(out_dir, df.drop(_BUCKET).schema)
-                agg = written.agg(*[v.alias(k) for k, v in extra_metrics.items()]).first()
-                observed.update({k: int(agg[k] or 0) for k in extra_metrics})
+            )}
         return files, observed, nbytes
 
     def _write_epoch_files(
@@ -622,7 +632,6 @@ class LakeTable:
         self,
         target_file_bytes: int = 128 * 1024 * 1024,
         min_files: int = 2,
-        max_retries: int = 3,
     ) -> dict:
         """Compaction (Iceberg rewrite_data_files / MergeTree background
         merge analog): bin-pack each bucket whose file set is fragmented
@@ -643,16 +652,7 @@ class LakeTable:
         candidates from the fresh snapshot instead of stranding them
         until the orphan-GC grace window.
         """
-        last_exc: Exception | None = None
-        for _attempt in range(max_retries + 1):
-            try:
-                return self._rewrite_small_files_attempt(target_file_bytes, min_files)
-            except CommitConflict as e:
-                last_exc = e
-                if e.written_dir:
-                    shutil.rmtree(e.written_dir, ignore_errors=True)
-                continue
-        raise last_exc  # type: ignore[misc]
+        return _retry_commit(self._rewrite_small_files_attempt, target_file_bytes, min_files)
 
     def _rewrite_small_files_attempt(
         self, target_file_bytes: int, min_files: int
@@ -698,7 +698,7 @@ class LakeTable:
             "version": v,
         }
 
-    def rebucket(self, new_num_buckets: int, max_retries: int = 3) -> dict:
+    def rebucket(self, new_num_buckets: int) -> dict:
         """Bucket-count evolution: full rewrite of the table into
         ``new_num_buckets`` hash buckets, committed as one atomic
         snapshot. The escape hatch for a table created small that grew
@@ -712,16 +712,7 @@ class LakeTable:
         """
         if new_num_buckets < 1:
             raise ValueError("new_num_buckets must be >= 1")
-        last_exc: Exception | None = None
-        for _attempt in range(max_retries + 1):
-            try:
-                return self._rebucket_attempt(new_num_buckets)
-            except CommitConflict as e:
-                last_exc = e
-                if e.written_dir:
-                    shutil.rmtree(e.written_dir, ignore_errors=True)
-                continue
-        raise last_exc  # type: ignore[misc]
+        return _retry_commit(self._rebucket_attempt, new_num_buckets)
 
     def _rebucket_attempt(self, new_num_buckets: int) -> dict:
         cur = self.snapshot()
@@ -753,7 +744,6 @@ class LakeTable:
         extra_summary: dict | None = None,
         *,
         census: EpochCensus | None = None,
-        max_retries: int = 3,
     ) -> MergeResult:
         """Copy-on-write MERGE: last-writer-wins upsert + tombstone
         delete keyed on ``key_cols``.
@@ -794,18 +784,9 @@ class LakeTable:
         re-derive survivors from the new snapshot, so two writers
         touching different keys both land.
         """
-        last_exc: Exception | None = None
-        for _attempt in range(max_retries + 1):
-            try:
-                return self._merge_attempt(
-                    upserts, delete_keys, epoch_id, extra_summary, census
-                )
-            except CommitConflict as e:
-                last_exc = e
-                if e.written_dir:
-                    shutil.rmtree(e.written_dir, ignore_errors=True)
-                continue
-        raise last_exc  # type: ignore[misc]
+        return _retry_commit(
+            self._merge_attempt, upserts, delete_keys, epoch_id, extra_summary, census
+        )
 
     def _merge_attempt(
         self,

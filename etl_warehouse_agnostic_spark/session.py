@@ -9,72 +9,8 @@ you would set on a 1000-executor cluster; only ``master`` changes for
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import SparkSession
-
-# Sessions already prewarmed (by JVM identity) — getOrCreate can hand
-# the same session back to many get_spark calls.
-_PREWARMED: set[int] = set()
-
-
-def _prewarm(spark: SparkSession, parallelism: int) -> None:
-    """One-time pipeline prewarm for a fresh session (opt-out via
-    SPARK_GRAFT_PREWARM=0).
-
-    The first heavy query of a session pays JVM/infra warm-up — C2
-    compilation of shuffle writers/sorters, parquet+codec encoder
-    init, broadcast machinery — measured at 15-20 s of a first
-    4M-event CDC loop on this host while an identical second loop ran
-    in ~8 s (round-7 profile; guide §1 steady-state measurement).
-    This runs a tiny synthetic job through the same physical operators
-    (window top-1 over a struct ordering, hash repartition, sorted
-    partitionBy parquet write in both staging and at-rest codecs,
-    broadcast anti-join) so later REAL queries start steady-state.
-    Nothing here reads user data or caches any reusable result — the
-    input is ``spark.range``, the output is discarded.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    # enough per-core iterations to JIT; SPARK_GRAFT_PREWARM_ROWS
-    # overrides the per-core row count for slower/faster hosts
-    n = int(os.environ.get("SPARK_GRAFT_PREWARM_ROWS", "25000")) * max(4, parallelism)
-    df = spark.range(n).select(
-        F.concat(F.lit("k"), F.pmod("id", n // 8).cast("string")).alias("k"),
-        (F.col("id") % 16).cast("int").alias("i"),
-        F.col("id").alias("v"),
-        F.concat(F.lit("p"), F.col("id").cast("string")).alias("payload"),
-    )
-    w = Window.partitionBy("k", "i").orderBy(
-        F.struct(F.col("v"), F.xxhash64("payload")).desc()
-    )
-    d = (
-        df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
-        .withColumn("_pb", F.pmod(F.xxhash64("k"), F.lit(64)).cast("int"))
-    )
-    root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    tmp = os.path.join(root, f"spark-prewarm-{os.getpid()}")
-    try:
-        (
-            d.repartition(F.col("_pb"))
-            .sortWithinPartitions("_pb", "k", "i")
-            .write.partitionBy("_pb").mode("overwrite")
-            .option("compression", "snappy").parquet(tmp)
-        )
-        back = spark.read.parquet(tmp)
-        (
-            back.join(F.broadcast(back.select("k", "i").limit(n // 4)),
-                      ["k", "i"], "left_anti")
-            .write.mode("overwrite").option("compression", "zstd")
-            .parquet(tmp + "-m")
-        )
-        # and the zstd DECODE path (table reads)
-        spark.read.parquet(tmp + "-m").write.mode("overwrite").format("noop").save()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(tmp + "-m", ignore_errors=True)
 
 
 def default_parallelism() -> int:
@@ -160,7 +96,4 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_PREWARM", "1") != "0" and id(spark) not in _PREWARMED:
-        _PREWARMED.add(id(spark))
-        _prewarm(spark, cores_n)
     return spark

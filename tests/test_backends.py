@@ -318,7 +318,8 @@ def test_warehouse_heal_of_truncated_epoch_does_not_lose_new_lsns(spark, tmpdir_
     # epoch 1: (0,1000]; epoch 2: (1000,1200] — truncated by source max
     tail(target, ck, old)
     assert ck.high_water_lsn() == 1200
-    assert ledger.epoch_lsn_range(2) == (1000, 1200)
+    info = ledger.epoch_info(2)
+    assert (info["lsn_lo"], info["lsn_hi"]) == (1000, 1200)
 
     # crash window: epoch 2 merged (ledger) but its manifest was lost
     os.unlink(os.path.join(ck.path, "epoch=00000002.json"))
@@ -426,22 +427,23 @@ def test_merge_key_in_both_upserts_and_deletes_nets_to_upsert(spark, tmpdir_path
         assert state == [("c1", 0, "user", "new")], wtype
 
 
-def test_recover_warehouse_skips_null_lsn_lo_ledger_rows(spark, tmpdir_path):
+@pytest.mark.parametrize("wtype", ["duckdb", "sqlite"])
+def test_recover_warehouse_skips_null_lsn_lo_ledger_rows(spark, tmpdir_path, wtype):
     """ADVICE r4: a legacy ledger row with NULL lsn_lo must NOT be
     healed with a coerced lo=0 (false gap/overlap in pipeline_health);
     it heals inline at replay with the loop's computed lo instead."""
     schema = TRANSCRIPTS_SCHEMA_V1
-    duck = DuckBackend.create(
-        spark, os.path.join(tmpdir_path, "wh.duckdb"), schema, KEY_COLS
+    wh = make_warehouse(
+        spark, {"type": wtype, "path": os.path.join(tmpdir_path, f"wh-{wtype}")}, schema, KEY_COLS
     )
     cols = [f.name for f in schema.fields]
     df = spark.createDataFrame([("c1", 0, "user", "t", None)], schema).select(*cols)
-    duck.merge(df, epoch_id=1, lsn_range=None)  # ledger row with NULL lo/hi
-    duck._con.execute("UPDATE _epochs SET lsn_hi = 500 WHERE epoch_id = 1")
+    wh.merge(df, epoch_id=1, lsn_range=None)  # ledger row with NULL lo/hi
+    wh._con.execute("UPDATE _epochs SET lsn_hi = 500 WHERE epoch_id = 1")
 
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
     eng = CdcEngine(spark, None, ck, num_salts=4)
-    assert eng.recover_warehouse(duck) == []  # NULL lsn_lo → not healed upfront
+    assert eng.recover_warehouse(wh) == []  # NULL lsn_lo → not healed upfront
     assert not ck.is_finalized(1)
 
     # inline replay heal: the loop's computed lo survives, recorded hi wins
@@ -450,101 +452,57 @@ def test_recover_warehouse_skips_null_lsn_lo_ledger_rows(spark, tmpdir_path):
         "lsn long, op string, conv_id string, turn_idx int, "
         "role string, text string, ts timestamp",
     )
-    res = eng.apply_epoch_warehouse(duck, empty_changes, epoch=1, lsn_range=(0, 900))
+    res = eng.apply_epoch_warehouse(wh, empty_changes, epoch=1, lsn_range=(0, 900))
     assert res.skipped
     m = ck.get(1)
     assert m["lineage"]["lsn_range"] == [0, 500]
 
 
-def test_sqlite_parallel_load_matches_serial_and_runs_on_executors(spark, tmpdir_path):
-    """The executor-parallel staging load (the real Postgres/JDBC
-    idiom: one DB-API connection per partition, single-transaction
-    swap) must produce EXACTLY the serial bounded-loop state, and the
-    loading must happen in python workers, not the driver."""
-    chg = generate_changes(spark, 4000, n_convs=40, turns_per_conv=8, seed=31).localCheckpoint()
-    schema = TRANSCRIPTS_SCHEMA_V1
+@pytest.mark.parametrize("wtype", ["duckdb", "sqlite"])
+def test_legacy_epochs_ledger_gains_lsn_columns_on_open(spark, tmpdir_path, wtype):
+    """A warehouse whose ``_epochs`` ledger predates the applied lsn
+    range opens with ``lsn_lo``/``lsn_hi`` added; its old rows read them
+    as NULL (never a made-up range), and new epochs record theirs."""
+    path = os.path.join(tmpdir_path, f"old-{wtype}.db")
+    if wtype == "duckdb":
+        import duckdb
 
-    serial = make_warehouse(
-        spark, {"type": "sqlite", "path": os.path.join(tmpdir_path, "serial.db")},
-        schema, KEY_COLS,
-    )
-    par = make_warehouse(
-        spark,
-        {"type": "sqlite", "path": os.path.join(tmpdir_path, "par.db"),
-         "parallel_load": True},
-        schema, KEY_COLS,
-    )
-    assert par.parallel_load and not serial.parallel_load
+        con = duckdb.connect(path)
+    else:
+        import sqlite3
 
-    _apply_epochs(serial, chg)
-    _apply_epochs(par, chg)
+        con = sqlite3.connect(path, isolation_level=None)
+    con.execute("CREATE TABLE _epochs (epoch_id BIGINT PRIMARY KEY, rows_written BIGINT)")
+    con.execute("INSERT INTO _epochs VALUES (1, 7)")
+    con.close()
 
-    assert _final_state(par.read()) == _final_state(serial.read())
-    assert par.committed_epochs() == serial.committed_epochs() == [1, 2, 3]
+    config = {"type": wtype, "path": path}
+    wh = make_warehouse(spark, config, TRANSCRIPTS_SCHEMA_V1, KEY_COLS)
+    assert wh._con.execute(
+        "SELECT lsn_lo, lsn_hi FROM _epochs WHERE epoch_id = 1"
+    ).fetchone() == (None, None)
+    assert wh.epoch_info(1) == {"rows_written": 7, "lsn_lo": None, "lsn_hi": None}
+    df = spark.createDataFrame([("c1", 0, "user", "t", None)], TRANSCRIPTS_SCHEMA_V1)
+    wh.merge(df, epoch_id=2, lsn_range=(10, 20))
+    wh._con.close()
 
-    # executor evidence: the staging inserts ran in python workers
-    import os as _os
-
-    assert par._last_load_pids, "parallel load never recorded worker pids"
-    assert _os.getpid() not in par._last_load_pids
-
-    # replay is still a skipped no-op (ledger rides the swap txn)
-    ups, dels = split_ops(lww_dedup_window(chg, KEY_COLS, ["ts", "lsn"], num_salts=4))
-    assert par.merge(ups, delete_keys=dels, epoch_id=3).skipped
-
-    # orphan staging tables are reclaimed on the next open
-    par._con.execute('CREATE TABLE "_stage_up_dead" (x INTEGER)')
-    par._con.close()
-    from etl_warehouse_agnostic_spark.lake.backends import SqliteBackend
-
-    re = SqliteBackend.create(
-        spark, os.path.join(tmpdir_path, "par.db"), schema, KEY_COLS, parallel_load=True
-    )
-    names = {
-        r[0]
-        for r in re._con.execute(
-            "SELECT name FROM sqlite_master WHERE type='table'"
-        ).fetchall()
-    }
-    assert "_stage_up_dead" not in names
+    # a second open finds the columns already there
+    re = make_warehouse(spark, config, TRANSCRIPTS_SCHEMA_V1, KEY_COLS)
+    assert re.committed_epochs() == [1, 2]
+    assert re.epoch_info(2) == {"rows_written": 1, "lsn_lo": 10, "lsn_hi": 20}
+    re.close()
 
 
-def test_sqlite_parallel_engine_tail_loop_and_overwrite(spark, tmpdir_path):
-    """Full engine tail loop against the parallel-load backend (same
-    path warehouse_parity drives), plus the parallel full-refresh."""
-    from etl_warehouse_agnostic_spark.sources.changes import ChangeStreamSource
-
-    chg = generate_changes(spark, 3000, n_convs=30, turns_per_conv=8, seed=32).localCheckpoint()
-    schema = TRANSCRIPTS_SCHEMA_V1
-    par = make_warehouse(
-        spark,
-        {"type": "sqlite", "path": os.path.join(tmpdir_path, "wh.db"),
-         "parallel_load": True},
-        schema, KEY_COLS,
-    )
-    ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, ck, num_salts=4)
-    src = ChangeStreamSource(spark, df=chg)
-    results = eng.run_warehouse(par, src, epoch_size=1000)
-    assert len(results) == 3 and not any(r.skipped for r in results)
-    assert eng.run_warehouse(par, src, epoch_size=1000) == []  # replay no-op
-
-    want = _final_state(
-        split_ops(lww_dedup_window(chg, KEY_COLS, ["lsn", "ts"], num_salts=4))[0]
-    )
-    assert _final_state(par.read()) == want
-
-    # parallel overwrite (full refresh): same state from scratch
-    par2 = make_warehouse(
-        spark,
-        {"type": "sqlite", "path": os.path.join(tmpdir_path, "wh2.db"),
-         "parallel_load": True},
-        schema, KEY_COLS,
-    )
-    ups, _ = split_ops(lww_dedup_window(chg, KEY_COLS, ["lsn", "ts"], num_salts=4))
-    par2.overwrite(ups, epoch_id=1)
-    assert _final_state(par2.read()) == want
-    assert par2.overwrite(ups, epoch_id=1).skipped
+def test_make_warehouse_rejects_unknown_sql_config_keys(spark, tmpdir_path):
+    """A SQL warehouse takes no config key besides type and path: a
+    stale or misspelled one raises instead of being silently ignored,
+    before anything is created."""
+    for wtype in ("duckdb", "sqlite"):
+        path = os.path.join(tmpdir_path, f"wh-{wtype}")
+        with pytest.raises(ValueError, match="parallel_load"):
+            make_warehouse(spark, {"type": wtype, "path": path, "parallel_load": True},
+                           TRANSCRIPTS_SCHEMA_V1, KEY_COLS)
+        assert not os.path.exists(path), wtype
 
 
 def test_stale_spill_dirs_reclaimed_on_open(spark, tmpdir_path):
