@@ -79,6 +79,20 @@ class CommitConflict(RuntimeError):
 # Attempts after the first that a writer makes before giving up.
 _COMMIT_RETRIES = 3
 
+# MERGE anti-join build side: when the caller KNOWS the changed row
+# count (an EpochCensus of the merge's own changes: the bronze staging
+# write's Observation, or the day rollup's; the engine strips the count
+# from the bronze census it hands the models, since a transform may fan
+# out) and it is under this bound, the key set is broadcast so the
+# survivors scan is never shuffled by key — the guide-§3.1 "broadcast
+# the side you know is small" call the planner cannot make from size
+# estimates alone. The broadcast side is the changed KEY columns only
+# (``changed_keys.select(*keys)``), never payload, so a row bound is
+# already a key-width bound: ~4M keys ≈ low hundreds of MB built, fine
+# for executors with tens of GB; larger deltas fall back to the
+# shuffled plan (AQE may still localize it).
+_BROADCAST_CHANGED_KEYS_MAX_ROWS = 4_000_000
+
 
 def _retry_commit(attempt, *args):
     """Run ``attempt(*args)`` until one commits: a losing attempt
@@ -184,21 +198,6 @@ class LakeTable:
         # inverse (bin-packs the fragments the splitting leaves behind
         # in rarely-touched buckets).
         self.max_records_per_file: int | None = None
-        # MERGE anti-join build side: when the caller KNOWS the changed
-        # row count (an EpochCensus of the merge's own changes: the
-        # bronze staging write's Observation, or the day rollup's; a
-        # model forwarding the bronze census passes no count, since a
-        # transform may fan out) and it is under this bound, the key set is
-        # broadcast so the survivors scan is never shuffled by key —
-        # the guide-§3.1 "broadcast the side you know is small" call
-        # the planner cannot make from size estimates alone. The
-        # broadcast side is the changed KEY columns only
-        # (``changed_keys.select(*keys)``), never payload, so a row
-        # bound is already a key-width bound: ~4M keys ≈ low hundreds
-        # of MB built, fine for executors with tens of GB; larger
-        # deltas fall back to the shuffled plan (AQE may still
-        # localize it).
-        self.broadcast_changed_keys_max_rows: int = 4_000_000
 
     # ---------------- snapshot bookkeeping ----------------
 
@@ -843,7 +842,7 @@ class LakeTable:
             # otherwise leave the strategy to AQE.
             anti_keys = changed_keys.select(*keys)
             census_rows = census.rows if census is not None else None
-            if census_rows is not None and census_rows <= self.broadcast_changed_keys_max_rows:
+            if census_rows is not None and census_rows <= _BROADCAST_CHANGED_KEYS_MAX_ROWS:
                 anti_keys = F.broadcast(anti_keys)
             survivors = current.join(anti_keys, on=keys, how="left_anti")
             new_data = survivors.unionByName(up)

@@ -71,18 +71,17 @@ def lww_dedup_window(
     keys: list[str],
     order_by: list[ColumnOrName],
     num_salts: int = 16,
-    shuffle_partitions: int | None = None,
     nulls_last: bool = False,
 ) -> DataFrame:
     """Window-based LWW: row_number()==1 per key, one Exchange.
 
-    ``num_salts`` / ``shuffle_partitions`` are accepted for API
-    compatibility (results never depended on them — tested: salted ==
-    unsalted); skew safety comes from the Partial WindowGroupLimit
-    that collapses every key to ≤1 row per upstream partition before
-    the single key Exchange.
+    ``num_salts`` is accepted so :func:`lww_dedup` can pass it to either
+    strategy, and ignored here (results never depended on it — tested:
+    salted == unsalted); skew safety comes from the Partial
+    WindowGroupLimit that collapses every key to ≤1 row per upstream
+    partition before the single key Exchange.
     """
-    del num_salts, shuffle_partitions  # see docstring
+    del num_salts  # see docstring
     w = Window.partitionBy(*keys).orderBy(_order_struct(df, order_by, nulls_last).desc())
     return (
         df.withColumn("_rn", F.row_number().over(w))

@@ -27,11 +27,13 @@ bronze delta, so on any table bucketed on the same key, of the same
 type, into a divisor of bronze's bucket count the census names the
 touched buckets exactly: the models' pruned source reads and their
 merges take them from it instead of each collecting the census again
-(``_delta_buckets`` is the fallback for other layouts). Model merges
-drop the census's row count — a transform may fan out, so the bronze
-count does not bound their changed keys. The day rollup's merge keys
-are its own groups, so it observes its gold census (buckets and group
-count) on the checkpoint it already takes.
+(``_delta_buckets`` is the fallback for other layouts). The census
+reaches the models without its row count: ``CdcEngine._apply_silver``
+drops it once, where the census enters the DAG, because a transform may
+fan out, so the bronze count does not bound a model's changed keys.
+The day rollup's merge keys are its own groups, so it observes its gold
+census (buckets and group count) on the checkpoint it already takes,
+and that census keeps its count.
 
 Crash contract: bronze merge + manifest finalize happen first; the
 staging delta is deleted only after EVERY attached model has committed
@@ -42,7 +44,6 @@ epoch-idempotent merge — same write-ahead ordering as the bronze path.
 
 from __future__ import annotations
 
-import dataclasses
 import uuid
 from typing import Callable
 
@@ -79,56 +80,91 @@ def _source_buckets(staged: DataFrame, snap: dict, census: EpochCensus | None) -
 
 
 def _merge(table, upserts: DataFrame, delete_keys: DataFrame, epoch: int,
-           census: EpochCensus | None, *, own: bool = False) -> MergeResult:
+           census: EpochCensus | None) -> MergeResult:
     """A model's MERGE under the bronze epoch id; the census reaches a
-    lake table only (a warehouse backend has no bucket layout). Its row
-    count decides the anti-join broadcast only when the census counts
-    this merge's ``own`` changes: the bronze delta's count does not
-    bound a model's changed keys (a transform may fan out)."""
-    if census is not None and not own:
-        census = dataclasses.replace(census, rows=None)
+    lake table only (a warehouse backend has no bucket layout)."""
     kw = {"census": census} if isinstance(table, LakeTable) else {}
     return table.merge(upserts, delete_keys=delete_keys, epoch_id=epoch, **kw)
 
 
-def model_dag_order(models: list) -> list:
-    """Topological order of a model DAG (every parent before its
-    children) — the engine applies models in this order so a chained
-    model always reads its parent's POST-epoch table state.
+def model_dag_order(models: list) -> list[list]:
+    """The model DAG's chains: the connected components of the parent
+    forest, in the order their roots were attached, each ordered
+    parent-first (a parent's children in attach order) — so a chained
+    model always reads its parent's POST-epoch table state, and
+    separate chains share nothing.
 
     A parent that is not itself attached raises: its table would never
     be maintained, so the chain would silently aggregate stale data —
     the same loud-failure policy as the late-attach guard."""
-    models = list(models)
     ids = {id(m) for m in models}
+    children: dict[int, list] = {}
     for m in models:
-        p = getattr(m, "parent", None)
-        if p is not None and id(p) not in ids:
+        if m.parent is None:
+            continue
+        if id(m.parent) not in ids:
             raise ValueError(
-                f"model {m.name!r} chains off {p.name!r}, which is not "
+                f"model {m.name!r} chains off {m.parent.name!r}, which is not "
                 "attached to the engine — attach the parent too, ahead of "
                 "or alongside its children"
             )
-    order: list = []
-    placed: set[int] = set()
-    pending = list(models)
-    while pending:
-        progressed = False
-        for m in list(pending):
-            p = getattr(m, "parent", None)
-            if p is None or id(p) in placed:
-                order.append(m)
-                placed.add(id(m))
-                pending.remove(m)
-                progressed = True
-        if not progressed:
+        children.setdefault(id(m.parent), []).append(m)
+    chains = []
+    for root in (m for m in models if m.parent is None):
+        chain = [root]
+        for m in chain:  # grows as it walks: breadth-first from the root
+            chain += children.get(id(m), [])
+        chains.append(chain)
+    return chains
+
+
+class _Model:
+    """What every model shares: its own ``table`` and ``name``, the
+    optional ``parent`` whose :meth:`SilverModel.epoch_delta` feeds it
+    instead of bronze, and the table's epoch ledger."""
+
+    def __init__(self, table, name: str, parent: "SilverModel | None"):
+        if parent is not None and not isinstance(parent, SilverModel):
             raise ValueError(
-                f"model DAG cycle among {[m.name for m in pending]!r}"
+                f"model {name!r}: parent must be a SilverModel (a row-wise "
+                "model whose per-epoch output delta is recomputable); "
+                f"got {type(parent).__name__}"
             )
-    return order
+        self.table = table
+        self.name = name
+        self.parent = parent
+
+    def epoch_committed(self, epoch: int) -> bool:
+        return self.table.epoch_committed(epoch)
+
+    def last_epoch(self) -> int:
+        es = self.table.committed_epochs()
+        return max(es) if es else 0
 
 
-class AggregateModel:
+def _aggregate_source(table, bronze, group_cols: list[str], name: str,
+                      parent: "SilverModel | None"):
+    """An aggregate's source table — its parent's when chained — after
+    checking that the gold table is keyed by exactly ``group_cols``."""
+    if parent is not None:
+        if bronze is None:
+            bronze = parent.table
+        elif bronze is not parent.table:
+            raise ValueError(
+                f"gold model {name!r}: chained aggregate must read its "
+                f"parent's table (bronze is {bronze.path!r}, parent table "
+                f"is {parent.table.path!r})"
+            )
+    if bronze is None:
+        raise ValueError(f"gold model {name!r}: needs a source table or a parent")
+    if list(table.key_cols) != list(group_cols):
+        raise ValueError(
+            f"gold table keys {table.key_cols} must equal group_cols {group_cols}"
+        )
+    return bronze
+
+
+class AggregateModel(_Model):
     """Incrementally-maintained AGGREGATE table — the gold layer
     (dbt's incremental-aggregate / rollup shape, the per-cycle analog
     of the reference's curated aggregation models).
@@ -183,26 +219,8 @@ class AggregateModel:
         day_of: str | None = None,
         require_pruned: bool = False,
     ):
-        if parent is not None:
-            if not isinstance(parent, SilverModel):
-                raise ValueError(
-                    f"gold model {name!r}: parent must be a SilverModel; "
-                    f"got {type(parent).__name__}"
-                )
-            if bronze is None:
-                bronze = parent.table
-            elif bronze is not parent.table:
-                raise ValueError(
-                    f"gold model {name!r}: chained aggregate must read its "
-                    f"parent's table (bronze is {bronze.path!r}, parent table "
-                    f"is {parent.table.path!r})"
-                )
-        if bronze is None:
-            raise ValueError(f"gold model {name!r}: needs a source table or a parent")
-        if list(table.key_cols) != list(group_cols):
-            raise ValueError(
-                f"gold table keys {table.key_cols} must equal group_cols {group_cols}"
-            )
+        super().__init__(table, name, parent)
+        bronze = _aggregate_source(table, bronze, group_cols, name, parent)
         src_keys = list(getattr(bronze, "key_cols", None) or [])
         key_grouped = bool(src_keys) and set(group_cols) <= set(src_keys)
         if not key_grouped:
@@ -241,12 +259,9 @@ class AggregateModel:
                 f"({bucket_key!r}) nor declares day_of — every cycle would "
                 "scan the full source"
             )
-        self.table = table
         self.bronze = bronze
         self.group_cols = list(group_cols)
         self.aggregate = aggregate
-        self.name = name
-        self.parent = parent
         self.key_grouped = key_grouped
         # row_groups AUGMENTS source-shaped rows with the grouping
         # columns when they are derived (e.g. day = date(ts)); identity
@@ -258,13 +273,6 @@ class AggregateModel:
         self._bucket_key = bucket_key  # None unless the source is bucketed
         self.last_scan: dict | None = None  # {mode, buckets, day_range} — observability
         self._warned_full_scan = False
-
-    def epoch_committed(self, epoch: int) -> bool:
-        return self.table.epoch_committed(epoch)
-
-    def last_epoch(self) -> int:
-        es = self.table.committed_epochs()
-        return max(es) if es else 0
 
     def bootstrap(self, epoch_id: int) -> MergeResult:
         """Full-refresh bootstrap for attaching to an already-populated
@@ -368,7 +376,7 @@ class AggregateModel:
         return _merge(self.table, out, gone, epoch, census)
 
 
-class DeltaAggregateModel:
+class DeltaAggregateModel(_Model):
     """Delta-MAINTAINED aggregate table (classic incremental view
     maintenance) for SUBTRACTABLE measures: a row count plus any number
     of SUMs (avg/rate derive from those downstream). The dbt-style
@@ -435,21 +443,8 @@ class DeltaAggregateModel:
     ):
         from pyspark.sql import Column
 
-        if parent is not None:
-            if not isinstance(parent, SilverModel):
-                raise ValueError(
-                    f"gold model {name!r}: parent must be a SilverModel; "
-                    f"got {type(parent).__name__}"
-                )
-            if bronze is None:
-                bronze = parent.table
-            elif bronze is not parent.table:
-                raise ValueError(
-                    f"gold model {name!r}: chained aggregate must read its "
-                    "parent's table"
-                )
-        if bronze is None:
-            raise ValueError(f"gold model {name!r}: needs a source table or a parent")
+        super().__init__(table, name, parent)
+        bronze = _aggregate_source(table, bronze, group_cols, name, parent)
         for attr in ("epoch_snapshot", "read", "num_buckets", "key_cols"):
             if not hasattr(bronze, attr):
                 raise ValueError(
@@ -458,10 +453,6 @@ class DeltaAggregateModel:
                     f"bucketed lake source — this source lacks {attr!r} (e.g. a "
                     "warehouse backend); use AggregateModel's recompute there"
                 )
-        if list(table.key_cols) != list(group_cols):
-            raise ValueError(
-                f"gold table keys {table.key_cols} must equal group_cols {group_cols}"
-            )
         table_cols = {f.name for f in table.schema.fields}
         need = [count_col] + [c for s in sums for c in (s, f"_nn_{s}")]
         missing = [c for c in need if c not in table_cols]
@@ -470,7 +461,6 @@ class DeltaAggregateModel:
                 f"gold model {name!r}: table schema is missing maintained "
                 f"column(s) {missing} — build it from aggregate(empty_df).schema"
             )
-        self.table = table
         self.bronze = bronze
         self.group_cols = list(group_cols)
         self.sums = {
@@ -484,17 +474,8 @@ class DeltaAggregateModel:
                     f"or a pyspark Column; got {type(expr).__name__}"
                 )
         self.count_col = count_col
-        self.name = name
-        self.parent = parent
         self.row_groups = row_groups or (lambda df: df)
         self.last_scan: dict | None = None  # {mode, src_buckets, gold_buckets}
-
-    def epoch_committed(self, epoch: int) -> bool:
-        return self.table.epoch_committed(epoch)
-
-    def last_epoch(self) -> int:
-        es = self.table.committed_epochs()
-        return max(es) if es else 0
 
     def aggregate(self, rows: DataFrame) -> DataFrame:
         """The full-rebuild equivalent of the maintained table (used by
@@ -597,10 +578,10 @@ class DeltaAggregateModel:
         new = j.select(*cols).localCheckpoint()
         out_rows = new.where(F.col(self.count_col) > 0)
         gone = new.where(F.col(self.count_col) <= 0).select(*self.group_cols)
-        return _merge(self.table, out_rows, gone, epoch, gold, own=True)
+        return _merge(self.table, out_rows, gone, epoch, gold)
 
 
-class SilverModel:
+class SilverModel(_Model):
     """One incrementally-maintained curated table.
 
     ``transform(upserts, epoch) -> DataFrame`` maps the epoch's net
@@ -637,13 +618,8 @@ class SilverModel:
         name: str = "silver",
         parent: "SilverModel | None" = None,
     ):
+        super().__init__(table, name, parent)
         if parent is not None:
-            if not isinstance(parent, SilverModel):
-                raise ValueError(
-                    f"model {name!r}: parent must be a SilverModel (a row-wise "
-                    "model whose per-epoch output delta is recomputable); "
-                    f"got {type(parent).__name__}"
-                )
             missing = [k for k in table.key_cols if k not in parent.table.key_cols]
             if missing:
                 raise ValueError(
@@ -651,17 +627,7 @@ class SilverModel:
                     f"keys of parent {parent.name!r} ({parent.table.key_cols}) — "
                     "deletes could not propagate down the chain"
                 )
-        self.table = table
         self.transform = transform
-        self.name = name
-        self.parent = parent
-
-    def epoch_committed(self, epoch: int) -> bool:
-        return self.table.epoch_committed(epoch)
-
-    def last_epoch(self) -> int:
-        es = self.table.committed_epochs()
-        return max(es) if es else 0
 
     def bootstrap(self, bronze: LakeTable, epoch_id: int) -> MergeResult:
         """Full-refresh bootstrap (dbt ``--full-refresh`` analog) for

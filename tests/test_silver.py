@@ -359,44 +359,94 @@ def test_chained_gold_from_silver_equals_full_rebuild(spark, tmpdir_path):
     assert (silver_t.latest_version(), gold_t.latest_version()) == (vs, vg)
 
 
+L2_SCHEMA = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("turn_idx", T.IntegerType(), False),
+        T.StructField("role_tag", T.StringType(), True),
+        T.StructField("len2", T.IntegerType(), True),
+    ]
+)
+
+
+def _l2_transform(upserts, epoch):
+    return upserts.select(
+        "conv_id", "turn_idx",
+        F.concat(F.lit("r:"), F.lower("role_u")).alias("role_tag"),
+        (F.col("text_len") * 2).cast("int").alias("len2"),
+    )
+
+
 def test_chained_silver_of_silver_row_wise(spark, tmpdir_path):
     """A row-wise SilverModel chained on another SilverModel: the
     level-2 state must equal the composed transform applied to the
     level-1 final state (deletes propagated down both levels)."""
     chg = generate_changes(spark, 3000, n_convs=40, turns_per_conv=8, seed=32).localCheckpoint()
     bronze, silver_t, silver, eng0 = _setup(spark, tmpdir_path)
-
-    l2_schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType(), False),
-            T.StructField("turn_idx", T.IntegerType(), False),
-            T.StructField("role_tag", T.StringType(), True),
-            T.StructField("len2", T.IntegerType(), True),
-        ]
-    )
     l2_t = LakeTable.create(
-        spark, os.path.join(tmpdir_path, "l2"), l2_schema, KEY_COLS, num_buckets=4
+        spark, os.path.join(tmpdir_path, "l2"), L2_SCHEMA, KEY_COLS, num_buckets=4
     )
-
-    def l2_transform(upserts, epoch):
-        return upserts.select(
-            "conv_id", "turn_idx",
-            F.concat(F.lit("r:"), F.lower("role_u")).alias("role_tag"),
-            (F.col("text_len") * 2).cast("int").alias("len2"),
-        )
-
-    l2 = SilverModel(l2_t, l2_transform, name="curated_l2", parent=silver)
+    l2 = SilverModel(l2_t, _l2_transform, name="curated_l2", parent=silver)
     eng = CdcEngine(
         spark, bronze, eng0.checkpoints, num_salts=4, silver_models=[silver, l2],
     )
     eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
 
     want = sorted(
-        tuple(r) for r in l2_transform(silver_t.read(), 0).collect()
+        tuple(r) for r in _l2_transform(silver_t.read(), 0).collect()
     )
     got = sorted(tuple(r) for r in l2_t.read().collect())
     assert got == want and len(want) > 0
     assert l2_t.committed_epochs() == silver_t.committed_epochs() == bronze.committed_epochs()
+
+
+def test_branched_chain_equals_full_rebuild(spark, tmpdir_path, monkeypatch):
+    """One SilverModel with two chained children, an AggregateModel and
+    a SilverModel, attached child-first: both children feed on the
+    parent's delta every epoch, each table equals its rebuild, and only
+    a model that has an epoch_delta is asked for one."""
+    from etl_warehouse_agnostic_spark.silver import AggregateModel
+
+    chg = generate_changes(spark, 2 * EPOCH_SIZE, n_convs=40, turns_per_conv=8,
+                           seed=34).localCheckpoint()
+    bronze, silver_t, silver, eng0 = _setup(spark, tmpdir_path)
+    gold_t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "gold2"), GOLD2_SCHEMA, ["conv_id"], num_buckets=4
+    )
+    gold = AggregateModel(
+        gold_t, None, ["conv_id"], _gold_from_silver_agg, name="gold_from_silver",
+        parent=silver,
+    )
+    l2_t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "l2"), L2_SCHEMA, KEY_COLS, num_buckets=4
+    )
+    l2 = SilverModel(l2_t, _l2_transform, name="curated_l2", parent=silver)
+    asked = []
+    real_epoch_delta = SilverModel.epoch_delta
+
+    def epoch_delta(self, staged, epoch):
+        asked.append(self.name)
+        return real_epoch_delta(self, staged, epoch)
+
+    monkeypatch.setattr(SilverModel, "epoch_delta", epoch_delta)
+    eng = CdcEngine(
+        spark, bronze, eng0.checkpoints, num_salts=4, silver_models=[gold, l2, silver],
+    )
+    assert [m.name for m in eng.silver_models] == [
+        "turns_silver", "gold_from_silver", "curated_l2"]
+    results = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
+    assert len(results) == 2 and not any(r.skipped for r in results)
+
+    assert not hasattr(gold, "epoch_delta")
+    assert set(asked) == {"turns_silver", "curated_l2"}
+    assert _silver_rows(silver_t) == _expected(chg)
+    want = sorted(tuple(r) for r in _gold_from_silver_agg(silver_t.read()).collect())
+    got = sorted((r.conv_id, r.n_turns, r.sum_text_len) for r in gold_t.read().collect())
+    assert got == want and len(want) > 0
+    want = sorted(tuple(r) for r in _l2_transform(silver_t.read(), 0).collect())
+    assert sorted(tuple(r) for r in l2_t.read().collect()) == want and len(want) > 0
+    assert (gold_t.committed_epochs() == l2_t.committed_epochs()
+            == silver_t.committed_epochs() == bronze.committed_epochs() == [1, 2])
 
 
 def test_chained_crash_level1_committed_level2_not(spark, tmpdir_path):
