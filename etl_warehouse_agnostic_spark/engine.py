@@ -16,17 +16,20 @@ recover (``_recover``) and ONE manifest builder (``_manifest``)
      schema evolution executed by the sink
   3. salted LWW dedup to one net op per (conv_id, turn_idx), projected
      onto the evolving schema (Arrow-vectorized when it evolves)
-  4. materialize the delta — the one sink-dependent step: a lake table
-     stages it as bucketed parquet (durable lineage, per-bucket footer
-     offsets); a warehouse takes a localCheckpoint (nothing retained)
+  4. stage the delta once, in a per-epoch dir under the checkpoint
+     store — the one sink-dependent step: a lake table stages it as
+     bucketed parquet (per-bucket footer offsets, the epoch census); a
+     warehouse as plain parquet with its ``op``/``lsn``/``schema_ver``
+     envelope, which it applies from the files (``merge_files``)
   5. MERGE into the sink under the epoch id (atomic, ledgered)
-  6. finalize the checkpoint manifest and apply the attached models.
+  6. finalize the checkpoint manifest, apply the attached models from
+     the staged delta, then sweep the staging dir.
 
-Ordering rule for 6: a durable staged delta finalizes first and the
-models run after (a crash mid-models replays them from the retained
-staging dir); with no retained delta the models run first and the
-manifest finalizes after (a crash mid-models leaves the epoch
-un-finalized, so the loop replays it).
+Ordering rule for 6, one for every sink: the manifest finalizes right
+after the merge and the models run after it. A crash mid-models leaves
+the staging dir behind, and ``recover`` replays the models from it —
+the exact delta the sink applied, even when the source has grown past
+the epoch's recorded lsn range since.
 
 Crash between 5 and 6: ``recover`` finds the epoch in the sink's
 ledger (the lake table's snapshot summaries, a warehouse's ``_epochs``
@@ -51,6 +54,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etl_warehouse_agnostic_spark.lake import backends
 from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
 from etl_warehouse_agnostic_spark.lake.table import EpochCensus, LakeTable, observed
 from etl_warehouse_agnostic_spark.operators.dedup import lww_dedup, split_ops
@@ -69,9 +73,21 @@ CDC_COLS = set(CDC_TYPES)
 _STAGED_LAYOUT = "_num_buckets"
 
 
+def _staged_files(staging_dir: str) -> list[str]:
+    """The data files of a staging dir, bucketed or not."""
+    return sorted(
+        os.path.join(root, fn)
+        for root, _, fns in os.walk(staging_dir)
+        for fn in fns
+        if fn.endswith(".parquet")
+    )
+
+
 def _footer_offsets(staging_dir: str, lsn_col: str = "lsn") -> dict:
-    """Per-bucket high-water offsets + row counts from the staged
-    parquet footers (driver-side metadata reads, no Spark job).
+    """Per-partition high-water offsets + row counts from the staged
+    parquet footers (driver-side metadata reads, no Spark job). A
+    bucketed stage has one partition per bucket dir; an unbucketed one
+    is the single partition ``"all"``.
 
     The bucket is the lineage partition unit (FIXTURES.md F4); the
     epoch's global lsn bounds live in lineage.lsn_range.
@@ -79,28 +95,22 @@ def _footer_offsets(staging_dir: str, lsn_col: str = "lsn") -> dict:
     import pyarrow.parquet as pq
 
     offsets: dict[str, dict[str, int]] = {}
-    for sub in sorted(os.listdir(staging_dir)):
-        if not sub.startswith("_pb="):
+    for path in _staged_files(staging_dir):
+        top = os.path.relpath(path, staging_dir).split(os.sep)[0]
+        part = offsets.setdefault(
+            top.split("=", 1)[1] if top.startswith("_pb=") else "all",
+            {"max_lsn": 0, "rows": 0},
+        )
+        md = pq.ParquetFile(path).metadata
+        part["rows"] += md.num_rows
+        try:
+            idx = md.schema.names.index(lsn_col)
+        except ValueError:
             continue
-        bucket = sub.split("=", 1)[1]
-        rows = 0
-        max_lsn = None
-        d = os.path.join(staging_dir, sub)
-        for fn in os.listdir(d):
-            if not fn.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(d, fn)).metadata
-            rows += md.num_rows
-            try:
-                idx = md.schema.names.index(lsn_col)
-            except ValueError:
-                continue
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is not None and st.has_min_max:
-                    m = int(st.max)
-                    max_lsn = m if max_lsn is None else max(max_lsn, m)
-        offsets[bucket] = {"max_lsn": max_lsn or 0, "rows": rows}
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx).statistics
+            if st is not None and st.has_min_max:
+                part["max_lsn"] = max(part["max_lsn"], int(st.max))
     return offsets
 
 
@@ -405,20 +415,22 @@ class CdcEngine:
         obs_delta = Observation(f"delta-e{epoch}-{uuid.uuid4().hex[:6]}")
         projected = project(deduped, schema, keep=envelope).observe(obs_delta, *delta_metrics)
 
-        # Materialize the delta once for the merge's two sides and every
-        # model — the one sink-dependent step. A lake table stages it as
-        # bucketed parquet: durable lineage for the epoch, per-bucket
-        # footer offsets, and the census (affected buckets) its merge
-        # prunes with. Staged files are written once and read back at
-        # most twice before deletion, so a light codec there trades
-        # ephemeral bytes for CPU. A warehouse retains nothing, so the
-        # delta is checkpointed (epoch-bounded); on a cluster a lost
-        # checkpoint partition fails the epoch, which simply replays.
-        staging_dir = None
+        # Stage the delta once for the sink's merge and every model —
+        # the one sink-dependent step. A lake table stages it as
+        # bucketed parquet: per-bucket footer offsets and the census
+        # (affected buckets) its merge prunes with. A warehouse stages
+        # plain parquet with the op envelope and applies those files.
+        # Either way the dir is the epoch's durable lineage until every
+        # model has committed the epoch. Staged files are written once
+        # and read back at most twice before deletion, so a light codec
+        # there trades ephemeral bytes for CPU.
+        staging_dir = self._staging_dir(epoch)
+        staged_schema = T.StructType(
+            list(schema.fields) + [T.StructField(c, CDC_TYPES[c], True) for c in envelope]
+        )
         if sink is self.table:
             from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
 
-            staging_dir = self._staging_dir(epoch)
             num_buckets = sink.num_buckets
             sink.write_bucketed(
                 projected.withColumn("_bucket", bucket_of(self.key_cols[0], num_buckets)),
@@ -427,13 +439,9 @@ class CdcEngine:
             # the modulus of the staged buckets, for a replay's census
             with open(os.path.join(staging_dir, _STAGED_LAYOUT), "w") as f:
                 f.write(str(num_buckets))
-            staged_schema = T.StructType(
-                list(schema.fields)
-                + [T.StructField(c, CDC_TYPES[c], True) for c in envelope]
-            )
-            delta = sink.read_bucketed(staging_dir, staged_schema)
         else:
-            delta = projected.localCheckpoint()
+            files = backends._export_delta(projected, staged_schema, staging_dir)
+        delta = self._read_staged(staging_dir, staged_schema)
 
         slice_stats = observed(obs_slice, changes, slice_metrics)
         delta_stats = observed(obs_delta, delta, delta_metrics)
@@ -445,10 +453,7 @@ class CdcEngine:
                 int(slice_stats.get("min_lsn") or 0),
                 int(slice_stats.get("max_lsn") or 0),
             )
-        offsets = (
-            _footer_offsets(staging_dir) if staging_dir
-            else {"all": {"max_lsn": lsn_range[1], "rows": n_rows}}
-        )
+        offsets = _footer_offsets(staging_dir)
         manifest = self._manifest(
             epoch, lsn_range, offsets, rows_read, n_rows - n_del, n_del,
             schema_ver_max=int(slice_stats.get("sv_max") or schema_ver_max),
@@ -459,16 +464,15 @@ class CdcEngine:
         # and the exact delta size, which also lets it broadcast the
         # changed-key set into the anti-join. Every model merge reuses
         # the same census. A warehouse ledgers the lsn range instead.
-        census = self._census(staging_dir, staged_schema, n_rows) if staging_dir else None
-        merge_kw = (
-            {"extra_summary": {"manifest": manifest}, "census": census}
-            if staging_dir else {"lsn_range": lsn_range}
-        )
-        upserts, deletes = split_ops(delta)
-        res = sink.merge(
-            upserts.drop("lsn", "schema_ver"), deletes.select(*self.key_cols),
-            epoch_id=epoch, **merge_kw,
-        )
+        census = self._census(staging_dir, staged_schema, offsets)
+        if sink is self.table:
+            upserts, deletes = split_ops(delta)
+            res = sink.merge(
+                upserts.drop("lsn", "schema_ver"), deletes.select(*self.key_cols),
+                epoch_id=epoch, extra_summary={"manifest": manifest}, census=census,
+            )
+        else:
+            res = sink.merge_files(files, epoch_id=epoch, lsn_range=lsn_range)
         wall_ms = int((time.monotonic() - t0) * 1000)
         if res.skipped:
             # Ledger hit: the epoch already committed (a crash before
@@ -483,15 +487,13 @@ class CdcEngine:
             manifest["metrics"].update(bytes_written=res.bytes_written, wall_ms=wall_ms)
             manifest.update(snapshot_version=res.version, committed_at=_utc_now())
 
-        # Models ride the same delta (no extra pass over the slice; the
-        # reference ran its dbt models against the warehouse,
-        # airflow/dags/repsly_dag.py:643-1040). See the module docstring
-        # for the finalize/models ordering rule.
-        model_walls = {} if staging_dir else self._apply_silver(delta, epoch)
+        # Finalize, then the models ride the staged delta (no extra pass
+        # over the slice; the reference ran its dbt models against the
+        # warehouse, airflow/dags/repsly_dag.py:643-1040), then sweep.
+        # See the module docstring for the ordering rule.
         self.checkpoints.finalize(epoch, manifest)
-        if staging_dir:
-            model_walls = self._apply_silver(delta, epoch, census=census)
-            shutil.rmtree(staging_dir, ignore_errors=True)
+        model_walls = self._apply_silver(delta, epoch, census=census)
+        shutil.rmtree(staging_dir, ignore_errors=True)
         rng = tuple(manifest["lineage"]["lsn_range"])
         if res.skipped:
             return EpochResult(epoch=epoch, skipped=True, model_wall_ms=model_walls, lsn_range=rng)
@@ -526,21 +528,13 @@ class CdcEngine:
         """Finalize manifests for epochs the sink's ledger committed but
         whose manifest write was lost (the crash window between merge
         and finalize), from what the ledger RECORDED, without
-        re-applying. Then make sure every model is current and, on the
-        lake table, replay retained staged deltas into the models and
-        sweep the staging dirs of finished epochs (a crash between
-        merge commit and cleanup leaves them behind otherwise)."""
-        lake = sink is self.table
+        re-applying. Then make sure every model is current, replay
+        retained staged deltas into the models and sweep the staging
+        dirs of finished epochs (a crash between merge commit and
+        cleanup leaves them behind otherwise)."""
         healed = []
         for epoch in sink.committed_epochs():
             if self.checkpoints.is_finalized(epoch):
-                continue
-            if not lake and not all(m.epoch_committed(epoch) for m in self.silver_models):
-                # No retained delta: finalizing here would advance the
-                # watermark past rows the models never saw. Leave the
-                # epoch un-finalized — the loop replays it, the merge
-                # skips via the ledger, and the models catch up from
-                # the recomputed slice before the late finalize.
                 continue
             manifest = self._ledger_manifest(sink, epoch)
             if manifest is not None:
@@ -549,10 +543,9 @@ class CdcEngine:
         # Check (and possibly auto-bootstrap) BEFORE replaying staged
         # deltas: a bootstrap stamped with the last finalized epoch
         # already covers any still-staged epoch's content from bronze.
-        staged = self._staged_epochs() if lake else {}
+        staged = self._staged_epochs()
         self._check_silver_current(sink, staged)
-        if lake:
-            self._recover_silver(staged)
+        self._recover_silver(sink, staged)
         return healed
 
     def _ledger_manifest(self, sink, epoch: int, lo: int | None = None) -> dict | None:
@@ -581,24 +574,27 @@ class CdcEngine:
         manifest["metrics"]["healed"] = True
         return manifest
 
-    def _census(self, staging_dir: str, schema: T.StructType, rows: int) -> EpochCensus | None:
-        """The epoch census of a staged delta of ``schema``: its bucket
-        dirs, in the layout recorded next to them when it was staged
-        (None without that record)."""
+    def _census(self, staging_dir: str, schema: T.StructType,
+                offsets: dict) -> EpochCensus | None:
+        """The epoch census of a staged delta of ``schema``: the bucket
+        dirs and row count of its footer ``offsets``, in the layout
+        recorded next to them when it was staged (None without that
+        record, e.g. an unbucketed warehouse stage)."""
         try:
             with open(os.path.join(staging_dir, _STAGED_LAYOUT)) as f:
                 num_buckets = int(f.read())
         except (OSError, ValueError):
             return None
         key = self.key_cols[0]
-        buckets = tuple(self.table.staged_buckets(staging_dir))
-        return EpochCensus(key, schema[key].dataType, num_buckets, buckets, rows)
+        return EpochCensus(key, schema[key].dataType, num_buckets,
+                           tuple(sorted(int(b) for b in offsets)),
+                           sum(o["rows"] for o in offsets.values()))
 
     def _staging_dir(self, epoch: int) -> str:
-        return os.path.join(self.table.path, "_staging", f"e{epoch:08d}")
+        return os.path.join(self.checkpoints.path, "_staging", f"e{epoch:08d}")
 
     def _staged_epochs(self) -> dict[int, str]:
-        """The lake table's retained staging dirs, by epoch id."""
+        """The retained staging dirs, by epoch id."""
         root = os.path.dirname(self._staging_dir(0))
         if not os.path.isdir(root):
             return {}
@@ -608,27 +604,28 @@ class CdcEngine:
             if d.startswith("e") and d[1:].isdigit()
         }
 
-    def _staged_schema(self, staging_dir: str) -> T.StructType | None:
+    def _staged_schema(self, sink, staging_dir: str) -> T.StructType | None:
         """Reconstruct the schema of a retained staging dir from one
-        parquet footer (driver-side metadata read): current table
+        parquet footer (driver-side metadata read): current sink
         columns that are present, plus whatever envelope columns the
         delta carried. Returns None if the dir holds no data files."""
         import pyarrow.parquet as pq
 
-        sample = None
-        for root, _, fns in os.walk(staging_dir):
-            for fn in fns:
-                if fn.endswith(".parquet"):
-                    sample = os.path.join(root, fn)
-                    break
-            if sample:
-                break
-        if sample is None:
+        files = _staged_files(staging_dir)
+        if not files:
             return None
-        names = set(pq.ParquetFile(sample).metadata.schema.names)
-        fields = [f for f in self.table.schema.fields if f.name in names]
+        names = set(pq.ParquetFile(files[0]).metadata.schema.names)
+        fields = [f for f in sink.schema.fields if f.name in names]
         fields += [T.StructField(c, t, True) for c, t in CDC_TYPES.items() if c in names]
         return T.StructType(fields)
+
+    def _read_staged(self, staging_dir: str, schema: T.StructType) -> DataFrame:
+        """A staging dir's delta, read from its leaf files directly (no
+        partition inference)."""
+        files = _staged_files(staging_dir)
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*files)
 
     def _apply_silver(self, staged: DataFrame, epoch: int,
                       census: EpochCensus | None = None) -> dict[str, int]:
@@ -639,7 +636,7 @@ class CdcEngine:
         one retained bronze delta (already-committed ancestors just skip
         their merge while their delta is still recomputable). Every
         model gets the bronze epoch ``census`` (None on a warehouse,
-        which retains no staged delta): model keys propagate from the
+        whose stage is unbucketed): model keys propagate from the
         bronze delta, so it names their buckets too. Its row count is
         dropped here, where it enters the DAG: a transform may fan out,
         so the bronze count does not bound a model's changed keys.
@@ -654,10 +651,11 @@ class CdcEngine:
         delta), but e.g. a bronze-fed day rollup has no ordering
         relation to a silver→gold chain. Each model commits to its OWN
         table, so results are independent of inter-chain ordering, and
-        the crash contract is unchanged: the epoch finalizes only after
-        every chain returns, and a failure anywhere leaves it
-        un-finalized — recovery replays, already-committed models skip
-        via their ledgers exactly as in a sequential walk."""
+        the crash contract is unchanged: the epoch's staging dir is
+        swept only after every chain returns, and a failure anywhere
+        leaves it retained — recovery replays it, already-committed
+        models skip via their ledgers exactly as in a sequential
+        walk."""
         if census is not None:
             census = dataclasses.replace(census, rows=None)
         walls: dict[str, int] = {}
@@ -686,9 +684,9 @@ class CdcEngine:
 
     def _check_silver_current(self, sink, staged: dict[int, str]) -> None:
         """Refuse to tail forward past a model that is behind on
-        finalized epochs whose deltas are gone (swept or never staged —
-        a warehouse sink retains none, e.g. a model attached to an
-        already-populated sink): maintaining it forward would
+        finalized epochs whose deltas are gone (swept or never staged,
+        e.g. a model attached to an already-populated sink):
+        maintaining it forward would
         permanently miss those epochs' rows — a silent divergence.
         Un-finalized epochs are fine: the loop replays them. The fix is
         explicit: ``model.bootstrap(...)`` (full refresh stamped with
@@ -745,23 +743,23 @@ class CdcEngine:
         )
 
 
-    def _recover_silver(self, staged: dict[int, str]) -> None:
+    def _recover_silver(self, sink, staged: dict[int, str]) -> None:
         """Catch models up from retained staging dirs — the crash window
-        between bronze manifest-finalize and the model applies (or
+        between the manifest finalize and the model applies (or
         between two models) — then sweep each finalized epoch's dir.
         Epoch-idempotent merges make the replay safe; a dir is only
         swept once every model has committed its epoch."""
         for epoch, staging_dir in sorted(staged.items()):
             if not self.checkpoints.is_finalized(epoch):
-                continue  # bronze itself will replay this epoch
+                continue  # the sink itself will replay this epoch
             if not all(m.epoch_committed(epoch) for m in self.silver_models):
-                schema = self._staged_schema(staging_dir)
+                schema = self._staged_schema(sink, staging_dir)
                 if schema is None:
                     continue
                 # the census _epoch passed, rebuilt from the staging dir
-                rows = sum(o["rows"] for o in _footer_offsets(staging_dir).values())
-                self._apply_silver(self.table.read_bucketed(staging_dir, schema), epoch,
-                                   census=self._census(staging_dir, schema, rows))
+                census = self._census(staging_dir, schema, _footer_offsets(staging_dir))
+                self._apply_silver(self._read_staged(staging_dir, schema), epoch,
+                                   census=census)
             shutil.rmtree(staging_dir, ignore_errors=True)
 
 

@@ -5,8 +5,8 @@ Snowflake through a config file + connection-string factory
 (config/warehouse_config.py:25-66, scripts/switch_warehouse.sh:1-66);
 every extractor talks to ``get_connection_string()`` instead of a
 concrete engine. This module is the Spark-native analog: one
-``WarehouseBackend`` contract (merge / overwrite / read / epoch
-idempotence + an applied-lsn-range ledger), THREE real
+``WarehouseBackend`` contract (merge / merge_files / overwrite / read /
+epoch idempotence + an applied-lsn-range ledger), THREE real
 implementations, and a config-driven factory.
 
 - :class:`LakeBackend` — the repo's snapshot-committed bucketed
@@ -22,15 +22,17 @@ The two SQL warehouses share one body (``_SqlWarehouse``): the
 ``_epochs`` ledger, schema evolution, the spill lifecycle and the
 merge/overwrite transaction skeleton. Each engine supplies only its
 column types, how it begins and rolls back a transaction, how it
-applies the exported files, and ``read()``.
+applies a parquet file set, and ``read()``.
 
 Scale design — the Spark→warehouse transfer never rides the driver:
-Spark writes the deduped, epoch-bounded delta as PARQUET
-(executor-parallel, to what would be shared/object storage on a
-cluster) and the warehouse bulk-ingests those files inside the same
+Spark writes the deduped, epoch-bounded delta once as op-tagged
+parquet (executor-parallel, to what would be shared/object storage on
+a cluster) and ``merge_files`` bulk-ingests those files in one
 transaction — DuckDB via ``read_parquet`` directly; a real Postgres
-via ``COPY`` of the same files. ``read()`` is the mirror image: the
-warehouse exports parquet, Spark scans it in parallel. No
+via ``COPY`` of the same files. The engine hands over the delta it
+staged for the epoch; a DataFrame ``merge`` (the models' path) writes
+one export. ``read()`` is the mirror image: the warehouse exports
+parquet, Spark scans it in parallel. No
 ``toPandas``/``collect`` on any warehouse data path (enforced by
 pytest). SQLite cannot ingest parquet natively, so its one load path
 streams Arrow record batches of bounded size through ``executemany``
@@ -55,9 +57,14 @@ import uuid
 from typing import Any, Iterator, Protocol
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.lake.table import LakeTable, MergeResult
+from etl_warehouse_agnostic_spark.operators.dedup import split_ops
+
+# a merge file set's op column: 'D' marks a delete key, else an upsert
+_OP = "op"
 
 
 class WarehouseBackend(Protocol):
@@ -68,6 +75,13 @@ class WarehouseBackend(Protocol):
         self,
         upserts: DataFrame,
         delete_keys: DataFrame | None = None,
+        epoch_id: int | None = None,
+        lsn_range: tuple[int, int] | None = None,
+    ) -> MergeResult: ...
+
+    def merge_files(
+        self,
+        files: list[str],
         epoch_id: int | None = None,
         lsn_range: tuple[int, int] | None = None,
     ) -> MergeResult: ...
@@ -136,6 +150,11 @@ class LakeBackend:
             upserts, delete_keys=delete_keys, epoch_id=epoch_id, extra_summary=extra
         )
 
+    def merge_files(self, files, epoch_id=None, lsn_range=None) -> MergeResult:
+        schema = T.StructType(list(self.schema.fields) + [T.StructField(_OP, T.StringType())])
+        upserts, deletes = split_ops(self.table.spark.read.schema(schema).parquet(*files), _OP)
+        return self.merge(upserts, deletes.select(*self.key_cols), epoch_id, lsn_range)
+
     def overwrite(self, df, epoch_id=None, lsn_range=None) -> MergeResult:
         return self.table.overwrite(df, epoch_id=epoch_id)
 
@@ -186,33 +205,37 @@ _BATCH_ROWS = 65536
 
 def _sweep_stale_spill(spill_dir: str) -> None:
     """Reclaim spill subdirs left by a crashed process (merge/overwrite
-    exports are removed in-line on the happy path; a hard kill strands
-    them). Safe at open: the backend contract is single-process
-    ownership, so nothing can be reading an old export when a fresh
-    backend is created over the file."""
+    exports are removed in-line on the happy path, read exports on the
+    next read or close; a hard kill strands them). Safe at open: the
+    backend contract is single-process ownership, so nothing can be
+    reading an old export when a fresh backend is created over the
+    file."""
     if not os.path.isdir(spill_dir):
         return
     for d in os.listdir(spill_dir):
-        if d.split("-", 1)[0] in ("up", "dk", "full", "read"):
+        if d.split("-", 1)[0] in ("up", "full", "read"):
             shutil.rmtree(os.path.join(spill_dir, d), ignore_errors=True)
 
 
 class _SqlWarehouse:
     """The body both SQL warehouses share.
 
-    MERGE semantics: within ONE transaction, delete the target rows
-    whose key appears in the delta (upserts ∪ deletes), insert the
-    upsert rows, record the epoch + its applied lsn range in the
-    ``_epochs`` ledger. A replayed epoch id short-circuits to a skipped
-    no-op BEFORE any export or mutation — the same exactly-once
-    contract LakeTable implements with snapshot summaries. The delta
-    reaches the warehouse as parquet exported by Spark (executor-
-    parallel) into ``spill_dir``, removed once the transaction ends.
+    MERGE semantics (``merge_files``): within ONE transaction, delete
+    the target rows whose key appears in the op-tagged file set, insert
+    its rows with ``op <> 'D'``, record the epoch + its applied lsn
+    range in the ``_epochs`` ledger. Every delete lands before any
+    insert, so a key both upserted and deleted nets to the upsert, as
+    in ``LakeTable._merge_attempt``. A replayed epoch id short-circuits
+    to a skipped no-op BEFORE any export or mutation — the same
+    exactly-once contract LakeTable implements with snapshot summaries.
+    A DataFrame ``merge`` or ``overwrite`` reaches the warehouse as one
+    parquet export by Spark into ``spill_dir``, removed once the
+    transaction ends.
 
     A subclass supplies ``_TYPES`` (Spark type → column type),
-    ``_connect``, ``_BEGIN``/``_rollback``, ``_columns``, how the
-    exported files are applied (``_apply_merge``/``_apply_overwrite``,
-    returning the rows inserted) and ``read()``.
+    ``_connect``, ``_BEGIN``/``_rollback``, ``_columns``, how a file
+    set is applied (``_apply_merge``/``_apply_overwrite``, returning
+    the rows inserted) and ``read()``.
     """
 
     _TYPES: dict[str, str]
@@ -320,31 +343,36 @@ class _SqlWarehouse:
     # -- contract -----------------------------------------------------
 
     def merge(self, upserts, delete_keys=None, epoch_id=None, lsn_range=None) -> MergeResult:
-        exports = [("up", upserts, self._schema)]
+        delta = upserts.withColumn(_OP, F.lit("U"))
         if delete_keys is not None:
-            exports.append(("dk", delete_keys.select(*self._keys),
-                            T.StructType([self._schema[k] for k in self._keys])))
-        return self._commit_epoch(epoch_id, lsn_range, exports, self._apply_merge)
+            dk = delete_keys.select(*self._keys).withColumn(_OP, F.lit("D"))
+            delta = delta.unionByName(dk, allowMissingColumns=True)
+        schema = T.StructType(list(self._schema.fields) + [T.StructField(_OP, T.StringType())])
+        return self._commit_epoch(epoch_id, lsn_range, self._apply_merge,
+                                  export=("up", delta, schema))
+
+    def merge_files(self, files, epoch_id=None, lsn_range=None) -> MergeResult:
+        return self._commit_epoch(epoch_id, lsn_range, self._apply_merge, files=files)
 
     def overwrite(self, df, epoch_id=None, lsn_range=None) -> MergeResult:
-        return self._commit_epoch(
-            epoch_id, lsn_range, [("full", df, self._schema)], self._apply_overwrite
-        )
+        return self._commit_epoch(epoch_id, lsn_range, self._apply_overwrite,
+                                  export=("full", df, self._schema))
 
-    def _commit_epoch(self, epoch_id, lsn_range, exports, apply) -> MergeResult:
-        """Replay check → export each (tag, df, schema) → ONE
-        transaction: ``apply(*file_lists)`` + the ledger row → commit
-        (rollback on error) → spill cleanup."""
+    def _commit_epoch(self, epoch_id, lsn_range, apply, files=(), export=None) -> MergeResult:
+        """Replay check → ``files``, or the (tag, df, schema) ``export``
+        Spark writes into a spill dir → ONE transaction: ``apply(files)``
+        + the ledger row → commit (rollback on error) → spill cleanup."""
         # The guard runs BEFORE any export or mutation, so a replayed
         # epoch is a clean skipped no-op, not a PK-conflict rollback.
         if epoch_id is not None and self.epoch_committed(epoch_id):
             return MergeResult(0, epoch_id, 0, 0, 0, skipped=True)
-        dirs = [self._spill(tag) for tag, _, _ in exports]
+        spill = export and self._spill(export[0])
         try:
-            files = [_export_delta(df, schema, d) for (_, df, schema), d in zip(exports, dirs)]
+            if export:
+                files = _export_delta(export[1], export[2], spill)
             self._con.execute(self._BEGIN)
             try:
-                rows = apply(*files)
+                rows = apply(files)
                 if epoch_id is not None:
                     lo, hi = lsn_range if lsn_range is not None else (None, None)
                     self._con.execute(
@@ -358,8 +386,8 @@ class _SqlWarehouse:
                 raise
             return MergeResult(0, epoch_id, rows, 0, 0)
         finally:
-            for d in dirs:
-                shutil.rmtree(d, ignore_errors=True)
+            if spill:
+                shutil.rmtree(spill, ignore_errors=True)
 
     # -- spill lifecycle ------------------------------------------------
 
@@ -437,37 +465,25 @@ class DuckBackend(_SqlWarehouse):
             f"FROM read_parquet({_duck_files_literal(files)})"
         )
 
-    def _insert_from(self, view: str) -> int:
-        insert_cols = ", ".join(f'"{c}"' for c in self._columns(view))
+    def _insert_from(self, view: str, where: str = "") -> int:
+        cols = [c for c in self._columns(view) if c in self._schema.names]
+        insert_cols = ", ".join(f'"{c}"' for c in cols)
         return self._con.execute(
-            f"INSERT INTO {self.table_name} ({insert_cols}) SELECT {insert_cols} FROM {view}"
+            f"INSERT INTO {self.table_name} ({insert_cols}) "
+            f"SELECT {insert_cols} FROM {view} {where}"
         ).fetchone()[0]
 
-    def _apply_merge(self, up_files: list[str], dk_files: list[str] = ()) -> int:
-        # Delete keys and upsert keys are removed in ONE pass over the
-        # target (UNION ALL of both key sets — DELETE USING has
-        # semi-join semantics, so duplicate matches are harmless). All
-        # deletes land BEFORE the insert, so a key present in both nets
-        # to the upsert surviving — the same resolution
-        # LakeTable._merge_attempt gives (the engine's split_ops never
-        # overlaps keys; direct callers may). Two separate DELETEs were
-        # two full target scans per epoch.
+    def _apply_merge(self, files: list[str]) -> int:
+        # Every key of the file set is removed in ONE pass over the
+        # target (DELETE USING has semi-join semantics, so duplicate
+        # matches are harmless), before the insert.
+        if not files:
+            return 0
         t = self.table_name
-        if dk_files:
-            self._view("_dkeys", dk_files)
-        if up_files:
-            self._view("_delta", up_files)
-        keys_sel = ", ".join(f'"{k}"' for k in self._keys)
-        del_parts = (
-            [f"SELECT {keys_sel} FROM _delta"] if up_files else []
-        ) + ([f"SELECT {keys_sel} FROM _dkeys"] if dk_files else [])
-        if del_parts:
-            key_eq = " AND ".join(f'{t}."{k}" = d."{k}"' for k in self._keys)
-            self._con.execute(
-                f"DELETE FROM {t} USING ({' UNION ALL '.join(del_parts)}) d "
-                f"WHERE {key_eq}"
-            )
-        return self._insert_from("_delta") if up_files else 0
+        self._view("_delta", files)
+        key_eq = " AND ".join(f'{t}."{k}" = d."{k}"' for k in self._keys)
+        self._con.execute(f"DELETE FROM {t} USING _delta d WHERE {key_eq}")
+        return self._insert_from("_delta", where=f"WHERE \"{_OP}\" <> 'D'")
 
     def _apply_overwrite(self, files: list[str]) -> int:
         self._con.execute(f"DELETE FROM {self.table_name}")
@@ -566,27 +582,26 @@ class SqliteBackend(_SqlWarehouse):
         key_list = ", ".join(f'"{k}"' for k in self._keys)
         self._con.execute(f"CREATE UNIQUE INDEX IF NOT EXISTS {t}_key ON {t} ({key_list})")
 
-    def _iter_batches(self, files: list[str]) -> Iterator[tuple[list[str], list[tuple]]]:
-        """Stream (columns, rows) from exported parquet in bounded
-        Arrow batches — the driver holds ≤ _BATCH_ROWS rows at a time."""
+    def _iter_batches(self, files: list[str], keys_only: bool = False
+                      ) -> Iterator[tuple[list[str], list[tuple]]]:
+        """Stream (columns, rows) of the target's columns from parquet
+        in bounded Arrow batches — the driver holds ≤ _BATCH_ROWS rows
+        at a time. An op-tagged file yields its upsert rows, or with
+        ``keys_only`` the keys of every row."""
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         for path in files:
-            for batch in pq.ParquetFile(path).iter_batches(batch_size=_BATCH_ROWS):
-                cols = batch.schema.names
-                series = [
-                    _pa_to_py(batch.column(i), self._schema[c].dataType)
-                    for i, c in enumerate(cols)
-                ]
+            pf = pq.ParquetFile(path)
+            names = pf.schema_arrow.names
+            cols = self._keys if keys_only else [c for c in names if c in self._schema.names]
+            tagged = _OP in names and not keys_only
+            for batch in pf.iter_batches(batch_size=_BATCH_ROWS,
+                                         columns=cols + ([_OP] if tagged else [])):
+                if tagged:
+                    batch = batch.filter(pc.not_equal(batch.column(_OP), "D"))
+                series = [_pa_to_py(batch.column(c), self._schema[c].dataType) for c in cols]
                 yield cols, list(zip(*series))
-
-    def _delete_keys(self, cols: list[str], batch: list[tuple]) -> None:
-        key_pred = " AND ".join(f'"{k}" = ?' for k in self._keys)
-        key_idx = [cols.index(k) for k in self._keys]
-        self._con.executemany(
-            f"DELETE FROM {self.table_name} WHERE {key_pred}",
-            [tuple(r[i] for i in key_idx) for r in batch],
-        )
 
     def _insert(self, cols: list[str], batch: list[tuple]) -> int:
         collist = ", ".join(f'"{c}"' for c in cols)
@@ -594,16 +609,14 @@ class SqliteBackend(_SqlWarehouse):
         self._con.executemany(f"INSERT INTO {self.table_name} ({collist}) VALUES ({ph})", batch)
         return len(batch)
 
-    def _apply_merge(self, up_files: list[str], dk_files: list[str] = ()) -> int:
-        # delete_keys first (same upsert-wins netting as
-        # LakeTable._merge_attempt when a key is in both)
-        for cols, batch in self._iter_batches(dk_files):
-            self._delete_keys(cols, batch)
-        rows = 0
-        for cols, batch in self._iter_batches(up_files):
-            self._delete_keys(cols, batch)
-            rows += self._insert(cols, batch)
-        return rows
+    def _apply_merge(self, files: list[str]) -> int:
+        # every key of every batch goes before any row comes in (the
+        # same upsert-wins netting as LakeTable._merge_attempt when a
+        # key is both upserted and deleted)
+        key_pred = " AND ".join(f'"{k}" = ?' for k in self._keys)
+        for _, keys in self._iter_batches(files, keys_only=True):
+            self._con.executemany(f"DELETE FROM {self.table_name} WHERE {key_pred}", keys)
+        return sum(self._insert(cols, batch) for cols, batch in self._iter_batches(files))
 
     def _apply_overwrite(self, files: list[str]) -> int:
         self._con.execute(f"DELETE FROM {self.table_name}")

@@ -441,26 +441,6 @@ class LakeTable:
         files, observed, nbytes = self.write_bucketed(df, os.path.join(self.data_dir, tag))
         return files, observed["rows"], nbytes
 
-    def read_bucketed(self, dir_path: str, schema: T.StructType) -> DataFrame:
-        """Read a write_bucketed() directory back (leaf files directly,
-        no partition inference; _bucket travels as a data column)."""
-        files = []
-        for sub in os.listdir(dir_path):
-            if sub.startswith(f"{_PB}="):
-                for root, _, fns in os.walk(os.path.join(dir_path, sub)):
-                    files.extend(os.path.join(root, f) for f in fns if f.endswith(".parquet"))
-        full = schema.add(_BUCKET, T.IntegerType()) if _BUCKET not in schema.names else schema
-        if not files:
-            return self.spark.createDataFrame([], full)
-        return self.spark.read.schema(full).parquet(*files)
-
-    def staged_buckets(self, dir_path: str) -> list[int]:
-        return sorted(
-            int(sub.split("=", 1)[1])
-            for sub in os.listdir(dir_path)
-            if sub.startswith(f"{_PB}=")
-        )
-
     def _commit(self, snap: dict) -> int:
         v = snap["version"]
         _atomic_write_json(snap, os.path.join(self.meta_dir, f"v{v:08d}.json"))

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.engine import CdcEngine
+from etl_warehouse_agnostic_spark.lake import backends
 from etl_warehouse_agnostic_spark.lake.backends import DuckBackend
 from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
 from etl_warehouse_agnostic_spark.lake.table import LakeTable
@@ -46,6 +47,7 @@ def test_bench_hooks_trace_one_span_per_epoch(spark, tmpdir_path):
     try:
         wrapped = {(owner, attr) for owner, attr, _ in tracer._patches}
         assert all((CdcEngine, attr) in wrapped for attr in ENGINE_HOOKS)
+        assert (backends, "_export_delta") in wrapped
 
         table = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
                                  TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4)
@@ -78,6 +80,14 @@ def test_bench_hooks_trace_one_span_per_epoch(spark, tmpdir_path):
     assert [s.attrs["engine_epoch"] for s in epochs] == [1, 2, 1, 2]
     assert all(s.attrs["slice_events"] == EPOCH_SIZE for s in epochs)
     assert sum(s.name == "engine.recover" for s in tracer.spans) == 2
+
+    # a warehouse epoch stages its delta in exactly one export, whose
+    # rows are the denominator of the benchmark's dedup survival there
+    exports = [s for s in tracer.spans if s.name == "lake.backends.export"]
+    assert [s.parent for s in exports] == [s.id for s in epochs[2:]]
+    assert [s.attrs["rows"] for s in exports] == [
+        r.rows_upserted + r.rows_deleted for r in wh_results
+    ]
 
 
 def _model_table(spark, root, name, fields, keys):

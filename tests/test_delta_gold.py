@@ -214,7 +214,7 @@ def test_delta_gold_crash_recovery_exactly_once(spark, tmpdir_path):
         pass
     assert eng.checkpoints.is_finalized(1)
     assert gold_t.committed_epochs() == []
-    staging = os.path.join(bronze.path, "_staging")
+    staging = os.path.join(eng.checkpoints.path, "_staging")
     assert os.path.isdir(staging) and os.listdir(staging)
 
     boom["armed"] = False

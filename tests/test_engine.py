@@ -120,7 +120,7 @@ def test_crash_between_commit_and_manifest(spark, tmpdir_path, changes_path):
     os.unlink(eng.checkpoints._file(2))
     assert not eng.checkpoints.is_finalized(2)
     # leak a staged delta for the "crashed" epoch (normal path removes it)
-    staging = os.path.join(eng.table.path, "_staging", "e00000002")
+    staging = os.path.join(eng.checkpoints.path, "_staging", "e00000002")
     os.makedirs(os.path.join(staging, "_pb=0"), exist_ok=True)
     healed = eng.recover()
     assert healed == [2]

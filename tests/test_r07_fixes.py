@@ -84,7 +84,7 @@ def test_bootstrap_stamps_retained_staged_epochs(spark, tmpdir_path, monkeypatch
     with monkeypatch.context() as mp:
         mp.setattr(engine_mod.shutil, "rmtree", lambda *a, **kw: None)
         eng2.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
-    staging_root = os.path.join(bronze.path, "_staging")
+    staging_root = os.path.join(ck.path, "_staging")
     assert sorted(os.listdir(staging_root)) == ["e00000002", "e00000003"]
 
     # Attach a NEW delta-maintained gold with auto-bootstrap. Its

@@ -83,7 +83,7 @@ def test_silver_incremental_equals_full_rebuild(spark, tmpdir_path):
     assert _silver_rows(silver) == _expected(chg)
     # every bronze epoch committed to silver too, staging fully swept
     assert silver.committed_epochs() == bronze.committed_epochs()
-    staging = os.path.join(bronze.path, "_staging")
+    staging = os.path.join(eng.checkpoints.path, "_staging")
     assert not os.path.isdir(staging) or not os.listdir(staging)
 
 
@@ -122,7 +122,7 @@ def test_silver_crash_between_finalize_and_apply_recovers(spark, tmpdir_path):
     # bronze epoch 3 is finalized, silver stopped at 2, staging retained
     assert eng.checkpoints.is_finalized(3)
     assert silver.committed_epochs() == [1, 2]
-    staging = os.path.join(bronze.path, "_staging")
+    staging = os.path.join(eng.checkpoints.path, "_staging")
     assert os.path.isdir(os.path.join(staging, "e00000003"))
 
     boom["armed"] = False
@@ -264,7 +264,7 @@ def test_silver_and_gold_together_with_gold_crash_recovery(spark, tmpdir_path):
     assert silver_t.committed_epochs() == gold_t.committed_epochs() == bronze.committed_epochs()
     assert _silver_rows(silver_t) == _expected(chg)
     assert _gold_rows(gold_t) == sorted(tuple(r) for r in _gold_agg(bronze.read()).collect())
-    staging = os.path.join(bronze.path, "_staging")
+    staging = os.path.join(eng.checkpoints.path, "_staging")
     assert not os.path.isdir(staging) or not os.listdir(staging)
 
 
@@ -482,7 +482,7 @@ def test_chained_crash_level1_committed_level2_not(spark, tmpdir_path):
         pass
     assert silver_t.committed_epochs() == [1]  # level-1 applied epoch 1
     assert gold_t.committed_epochs() == []     # level-2 crashed
-    staging = os.path.join(bronze.path, "_staging")
+    staging = os.path.join(eng.checkpoints.path, "_staging")
     assert os.path.isdir(staging) and os.listdir(staging)  # delta retained
 
     boom["armed"] = False
