@@ -19,7 +19,6 @@ __version__ = "0.1.0"
 from etl_warehouse_agnostic_spark.session import get_spark  # noqa: F401
 from etl_warehouse_agnostic_spark.lake.backends import (  # noqa: E402,F401
     DuckBackend,
-    LakeBackend,
     make_warehouse,
 )
 from etl_warehouse_agnostic_spark.orchestrate import (  # noqa: E402,F401

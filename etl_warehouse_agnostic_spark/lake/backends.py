@@ -4,13 +4,17 @@ The reference switches one pipeline between ClickHouse / Postgres /
 Snowflake through a config file + connection-string factory
 (config/warehouse_config.py:25-66, scripts/switch_warehouse.sh:1-66);
 every extractor talks to ``get_connection_string()`` instead of a
-concrete engine. This module is the Spark-native analog: one
-``WarehouseBackend`` contract (merge / merge_files / overwrite / read /
-epoch idempotence + an applied-lsn-range ledger), THREE real
-implementations, and a config-driven factory.
+concrete engine. This module is the Spark-native analog: a
+config-driven factory over THREE real sinks.
 
-- :class:`LakeBackend` — the repo's snapshot-committed bucketed
-  ``LakeTable`` (Iceberg-shaped copy-on-write parquet).
+The lake sink is :class:`~etl_warehouse_agnostic_spark.lake.table.LakeTable`
+itself (Iceberg-shaped copy-on-write parquet): ``make_warehouse``
+returns the table, and the engine takes its one lake path for it —
+bucketed stage, epoch census, the whole manifest in the snapshot
+summary. The two SQL warehouses honour the ``WarehouseBackend``
+contract (merge / merge_files / overwrite / read / epoch idempotence +
+an applied-lsn-range ledger):
+
 - :class:`DuckBackend` — an embedded SQL warehouse (DuckDB file),
   standing in for the reference's ClickHouse/Snowflake targets: the
   MERGE is executed *by the warehouse* in one transaction.
@@ -38,8 +42,9 @@ pytest). SQLite cannot ingest parquet natively, so its one load path
 streams Arrow record batches of bounded size through ``executemany``
 — memory O(batch), never O(delta); on Postgres that loop IS the COPY.
 
-Exactly-once: every backend keeps an ``_epochs`` ledger
-(epoch id → rows, applied lsn range). A replayed epoch id
+Exactly-once: every SQL warehouse keeps an ``_epochs`` ledger
+(epoch id → rows, applied lsn range, recorded by ``merge_files``; the
+lake table's ledger is its snapshot summaries). A replayed epoch id
 short-circuits to a skipped no-op BEFORE any mutation, and the
 recorded lsn range lets the engine heal a crash between merge and
 manifest-finalize without ever advancing the watermark past rows that
@@ -61,22 +66,23 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.lake.table import LakeTable, MergeResult
-from etl_warehouse_agnostic_spark.operators.dedup import split_ops
 
 # a merge file set's op column: 'D' marks a delete key, else an upsert
 _OP = "op"
 
 
 class WarehouseBackend(Protocol):
-    """The sink contract every warehouse must honor: exactly what the
-    engine and the models call on a sink (J2/J3 + T2/T3)."""
+    """The contract of a non-lake sink: exactly what the engine and the
+    models call on a warehouse (J2/J3 + T2/T3). A ``LakeTable`` sink is
+    told apart by its type and takes the engine's lake path instead.
+    The engine records an applied lsn range only through
+    ``merge_files``."""
 
     def merge(
         self,
         upserts: DataFrame,
         delete_keys: DataFrame | None = None,
         epoch_id: int | None = None,
-        lsn_range: tuple[int, int] | None = None,
     ) -> MergeResult: ...
 
     def merge_files(
@@ -86,12 +92,7 @@ class WarehouseBackend(Protocol):
         lsn_range: tuple[int, int] | None = None,
     ) -> MergeResult: ...
 
-    def overwrite(
-        self,
-        df: DataFrame,
-        epoch_id: int | None = None,
-        lsn_range: tuple[int, int] | None = None,
-    ) -> MergeResult: ...
+    def overwrite(self, df: DataFrame, epoch_id: int | None = None) -> MergeResult: ...
 
     def read(self) -> DataFrame: ...
 
@@ -125,77 +126,6 @@ def _export_delta(df: DataFrame, schema: T.StructType, out_dir: str) -> list[str
         for f in os.listdir(out_dir)
         if f.endswith(".parquet")
     )
-
-
-class LakeBackend:
-    """The default backend: snapshot-committed bucketed LakeTable."""
-
-    def __init__(self, table: LakeTable):
-        self.table = table
-
-    @classmethod
-    def create(
-        cls,
-        spark: SparkSession,
-        path: str,
-        schema: T.StructType,
-        key_cols: list[str],
-        **kw: Any,
-    ) -> "LakeBackend":
-        return cls(LakeTable.create(spark, path, schema, key_cols, **kw))
-
-    def merge(self, upserts, delete_keys=None, epoch_id=None, lsn_range=None) -> MergeResult:
-        extra = {"lsn_range": list(lsn_range)} if lsn_range is not None else None
-        return self.table.merge(
-            upserts, delete_keys=delete_keys, epoch_id=epoch_id, extra_summary=extra
-        )
-
-    def merge_files(self, files, epoch_id=None, lsn_range=None) -> MergeResult:
-        schema = T.StructType(list(self.schema.fields) + [T.StructField(_OP, T.StringType())])
-        upserts, deletes = split_ops(self.table.spark.read.schema(schema).parquet(*files), _OP)
-        return self.merge(upserts, deletes.select(*self.key_cols), epoch_id, lsn_range)
-
-    def overwrite(self, df, epoch_id=None, lsn_range=None) -> MergeResult:
-        return self.table.overwrite(df, epoch_id=epoch_id)
-
-    def read(self) -> DataFrame:
-        return self.table.read()
-
-    def committed_epochs(self) -> list[int]:
-        return self.table.committed_epochs()
-
-    def epoch_committed(self, epoch_id: int) -> bool:
-        return self.table.epoch_committed(epoch_id)
-
-    @property
-    def key_cols(self) -> list[str]:
-        return self.table.key_cols
-
-    def epoch_info(self, epoch_id: int) -> dict | None:
-        """{rows_written, lsn_lo, lsn_hi} from the commit that carried
-        this epoch, or None if unknown (crash-recovery backfill)."""
-        snap = self.table.epoch_snapshot(epoch_id)
-        if snap is None:
-            return None
-        summary = snap["summary"]
-        rng = summary.get("lsn_range")
-        if rng is None:
-            # merge committed via the lake tail loop: the manifest rides
-            # in the snapshot summary and carries lineage.lsn_range
-            manifest = summary.get("manifest")
-            rng = manifest and manifest.get("lineage", {}).get("lsn_range")
-        return {
-            "rows_written": int(summary.get("rows_written") or 0),
-            "lsn_lo": int(rng[0]) if rng else None,
-            "lsn_hi": int(rng[1]) if rng else None,
-        }
-
-    def evolve_schema(self, new_columns) -> T.StructType:
-        return self.table.evolve_schema(new_columns)
-
-    @property
-    def schema(self) -> T.StructType:
-        return self.table.schema
 
 
 # Rows per Arrow batch on SQLite's load and read-back loops: the
@@ -342,26 +272,27 @@ class _SqlWarehouse:
 
     # -- contract -----------------------------------------------------
 
-    def merge(self, upserts, delete_keys=None, epoch_id=None, lsn_range=None) -> MergeResult:
+    def merge(self, upserts, delete_keys=None, epoch_id=None) -> MergeResult:
         delta = upserts.withColumn(_OP, F.lit("U"))
         if delete_keys is not None:
             dk = delete_keys.select(*self._keys).withColumn(_OP, F.lit("D"))
             delta = delta.unionByName(dk, allowMissingColumns=True)
         schema = T.StructType(list(self._schema.fields) + [T.StructField(_OP, T.StringType())])
-        return self._commit_epoch(epoch_id, lsn_range, self._apply_merge,
-                                  export=("up", delta, schema))
+        return self._commit_epoch(epoch_id, self._apply_merge, export=("up", delta, schema))
 
     def merge_files(self, files, epoch_id=None, lsn_range=None) -> MergeResult:
-        return self._commit_epoch(epoch_id, lsn_range, self._apply_merge, files=files)
+        return self._commit_epoch(epoch_id, self._apply_merge, files=files, lsn_range=lsn_range)
 
-    def overwrite(self, df, epoch_id=None, lsn_range=None) -> MergeResult:
-        return self._commit_epoch(epoch_id, lsn_range, self._apply_overwrite,
+    def overwrite(self, df, epoch_id=None) -> MergeResult:
+        return self._commit_epoch(epoch_id, self._apply_overwrite,
                                   export=("full", df, self._schema))
 
-    def _commit_epoch(self, epoch_id, lsn_range, apply, files=(), export=None) -> MergeResult:
+    def _commit_epoch(self, epoch_id, apply, files=(), export=None,
+                      lsn_range=None) -> MergeResult:
         """Replay check → ``files``, or the (tag, df, schema) ``export``
         Spark writes into a spill dir → ONE transaction: ``apply(files)``
-        + the ledger row → commit (rollback on error) → spill cleanup."""
+        + the ledger row (with ``lsn_range`` when ``merge_files`` has
+        one) → commit (rollback on error) → spill cleanup."""
         # The guard runs BEFORE any export or mutation, so a replayed
         # epoch is a clean skipped no-op, not a PK-conflict rollback.
         if epoch_id is not None and self.epoch_committed(epoch_id):
@@ -672,13 +603,13 @@ def make_warehouse(
     ``get_connection_string``/``switch_warehouse.sh`` analog (three
     engines behind one flag, scripts/switch_warehouse.sh:1-66). Config:
     ``{"type": "lake"|"duckdb"|"sqlite", "path": ..., **kwargs}``; only
-    the lake type takes kwargs (``LakeTable.create``'s), a SQL
-    warehouse rejects any other key."""
+    the lake type takes kwargs (``LakeTable.create``'s) and returns the
+    ``LakeTable`` itself, a SQL warehouse rejects any other key."""
     wtype = config.get("type", "lake")
     path = config["path"]
     kw = {k: v for k, v in config.items() if k not in ("type", "path")}
     if wtype == "lake":
-        return LakeBackend.create(spark, path, schema, key_cols, **kw)
+        return LakeTable.create(spark, path, schema, key_cols, **kw)
     if wtype not in _SQL_WAREHOUSES:
         raise ValueError(f"unsupported warehouse type: {wtype!r}")
     if kw:

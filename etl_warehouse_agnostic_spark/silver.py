@@ -221,15 +221,16 @@ class AggregateModel(_Model):
     ):
         super().__init__(table, name, parent)
         bronze = _aggregate_source(table, bronze, group_cols, name, parent)
-        src_keys = list(getattr(bronze, "key_cols", None) or [])
-        key_grouped = bool(src_keys) and set(group_cols) <= set(src_keys)
+        lake_source = isinstance(bronze, LakeTable)
+        src_keys = list(bronze.key_cols)
+        key_grouped = set(group_cols) <= set(src_keys)
         if not key_grouped:
             # ADVICE r5 (medium): without old-group tracking, an update
             # that changes a payload grouping value (or any delete, its
             # payload being NULL) would leave the row's OLD group stale
             # — silent divergence. Old groups need the pre-epoch bronze
             # snapshot, so a versioned (lake) source is mandatory here.
-            if not (hasattr(bronze, "epoch_snapshot") and hasattr(bronze, "read")):
+            if not lake_source:
                 raise ValueError(
                     f"gold model {name!r}: group_cols {group_cols} are not all "
                     f"key columns of the source ({src_keys}); correct "
@@ -243,16 +244,14 @@ class AggregateModel(_Model):
                     f"gold model {name!r}: day_of={day_of!r} must be one of "
                     f"group_cols {group_cols}"
                 )
-            spec = getattr(bronze, "partition_spec", None)
-            if spec is None:
+            if not lake_source or bronze.partition_spec is None:
                 raise ValueError(
                     f"gold model {name!r}: day_of requires a time-partitioned "
                     "source table (partition_spec), which this source lacks — "
                     "day-range pruning would silently scan nothing"
                 )
-        bucketed_source = hasattr(bronze, "num_buckets")
-        bucket_key = src_keys[0] if (src_keys and bucketed_source) else None
-        if require_pruned and (list(group_cols)[0] != bucket_key or not bucketed_source) and day_of is None:
+        bucket_key = src_keys[0] if lake_source else None
+        if require_pruned and list(group_cols)[0] != bucket_key and day_of is None:
             raise ValueError(
                 f"gold model {name!r}: require_pruned=True but grouping neither "
                 f"leads with the bucket key of a bucketed lake source "
@@ -445,14 +444,13 @@ class DeltaAggregateModel(_Model):
 
         super().__init__(table, name, parent)
         bronze = _aggregate_source(table, bronze, group_cols, name, parent)
-        for attr in ("epoch_snapshot", "read", "num_buckets", "key_cols"):
-            if not hasattr(bronze, attr):
-                raise ValueError(
-                    f"gold model {name!r}: delta maintenance subtracts the "
-                    "pre-epoch values of changed keys, which needs a versioned "
-                    f"bucketed lake source — this source lacks {attr!r} (e.g. a "
-                    "warehouse backend); use AggregateModel's recompute there"
-                )
+        if not isinstance(bronze, LakeTable):
+            raise ValueError(
+                f"gold model {name!r}: delta maintenance subtracts the "
+                "pre-epoch values of changed keys, which needs a versioned "
+                f"bucketed lake source — this source is a {type(bronze).__name__} "
+                "(a warehouse backend); use AggregateModel's recompute there"
+            )
         table_cols = {f.name for f in table.schema.fields}
         need = [count_col] + [c for s in sums for c in (s, f"_nn_{s}")]
         missing = [c for c in need if c not in table_cols]

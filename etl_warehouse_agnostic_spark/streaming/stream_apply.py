@@ -10,9 +10,15 @@ push-based variant: ``readStream`` over the change-log directory →
 Design notes (scale):
 - ``foreachBatch`` is the idiomatic Spark pattern for MERGE-style
   sinks (Structured Streaming has no native upsert sink); each
-  micro-batch becomes one engine epoch, so exactly-once holds even
-  though foreachBatch itself is at-least-once: a replayed batch id is
+  micro-batch becomes one engine epoch, applied to one sink — the
+  ``warehouse`` given, else the engine's table — through
+  ``apply_epoch_warehouse``, so exactly-once holds even though
+  foreachBatch itself is at-least-once: a replayed batch id is
   detected via the epoch-id idempotence check and skipped.
+- ``start`` recovers the sink before the query starts, like the batch
+  tail loop: a replayed batch whose manifest already finalized is
+  skipped, so an epoch whose models did not all commit before a crash
+  is caught up from its retained staging dir first.
 - ``trigger(availableNow=True)`` drains the backlog in bounded
   batches then stops — the streaming analog of the batch tail loop;
   drop it for a continuous tail.
@@ -55,10 +61,9 @@ class StreamingCdcApply:
         self.changes_path = changes_path
         self.checkpoint_location = checkpoint_location
         self.max_files_per_trigger = max_files_per_trigger
-        # When set, micro-batches apply through the warehouse-agnostic
-        # backend contract (engine.apply_epoch_warehouse) instead of the
-        # lake table — same epoch-id exactly-once either way.
-        self.warehouse = warehouse
+        # The one sink every micro-batch applies to: the warehouse (or
+        # lake table) given, else the engine's table.
+        self.sink = warehouse if warehouse is not None else engine.table
         # Offset epoch ids past whatever the batch path already applied.
         # The base is PINNED on first start (persisted beside the
         # streaming checkpoint): re-deriving it from last_epoch() after a
@@ -94,10 +99,7 @@ class StreamingCdcApply:
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         epoch = self.epoch_base + batch_id + 1
-        if self.warehouse is not None:
-            self.engine.apply_epoch_warehouse(self.warehouse, batch_df, epoch)
-        else:
-            self.engine.apply_epoch(batch_df, epoch=epoch)
+        self.engine.apply_epoch_warehouse(self.sink, batch_df, epoch)
 
     def start(
         self,
@@ -113,7 +115,9 @@ class StreamingCdcApply:
         picked up each interval, and a kill at ANY point — mid-batch
         included — resumes exactly-once on restart, because a replayed
         batch id maps to the same epoch id and the epoch ledger makes
-        it a no-op (proven by tests/test_streaming.py kill-restart)."""
+        it a no-op (proven by tests/test_streaming.py kill-restart).
+        Recovery runs first, before any batch is planned."""
+        self.engine.recover_warehouse(self.sink)
         reader = self.engine.spark.readStream
         if schema is not None:
             reader = reader.schema(schema)

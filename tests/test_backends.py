@@ -6,9 +6,11 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.engine import CdcEngine
-from etl_warehouse_agnostic_spark.lake.backends import DuckBackend, LakeBackend, make_warehouse
+from etl_warehouse_agnostic_spark.lake import backends
+from etl_warehouse_agnostic_spark.lake.backends import DuckBackend, make_warehouse
 from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
 from etl_warehouse_agnostic_spark.lake.table import LakeTable
 from etl_warehouse_agnostic_spark.operators.dedup import lww_dedup_window, split_ops
@@ -44,7 +46,7 @@ def test_backends_converge_to_identical_state(spark, tmpdir_path):
         spark, {"type": "duckdb", "path": os.path.join(tmpdir_path, "wh.duckdb")},
         schema, KEY_COLS,
     )
-    assert isinstance(lake, LakeBackend) and isinstance(duck, DuckBackend)
+    assert isinstance(lake, LakeTable) and isinstance(duck, DuckBackend)
 
     _apply_epochs(lake, chg)
     _apply_epochs(duck, chg)
@@ -73,8 +75,9 @@ def test_backends_schema_evolution_mid_stream_parity(spark, tmpdir_path):
         v2_schema,
     )
 
-    lake = LakeBackend.create(
-        spark, os.path.join(tmpdir_path, "lake"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=2
+    lake = make_warehouse(
+        spark, {"type": "lake", "path": os.path.join(tmpdir_path, "lake"), "num_buckets": 2},
+        TRANSCRIPTS_SCHEMA_V1, KEY_COLS,
     )
     duck = DuckBackend.create(
         spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
@@ -161,6 +164,49 @@ def test_engine_tail_loop_drives_warehouse_backend(spark, tmpdir_path):
     again = eng.run_warehouse(duck, src(), epoch_size=1500)
     assert again == []
     assert state(duck.read()) == state(lake_t.read())
+
+
+def test_run_warehouse_on_lake_table_equals_run(spark, tmpdir_path):
+    """One lake path: the lake table ``make_warehouse`` returns, driven
+    through ``run_warehouse``, takes exactly the ``run`` path — bucketed
+    stage, census, the whole manifest in every snapshot summary — so it
+    reaches ``run``'s state with per-bucket manifest offsets, and a lost
+    manifest heals from the summary with per-bucket offsets too."""
+    from etl_warehouse_agnostic_spark.sources.changes import ChangeStreamSource
+
+    chg = generate_changes(spark, 3000, n_convs=30, turns_per_conv=8, seed=19).localCheckpoint()
+    src = lambda: ChangeStreamSource(spark, df=chg)  # noqa: E731
+    buckets = {"0", "1", "2", "3"}
+
+    t1 = make_warehouse(
+        spark, {"type": "lake", "path": os.path.join(tmpdir_path, "wh-lake"), "num_buckets": 4},
+        TRANSCRIPTS_SCHEMA_V1, KEY_COLS,
+    )
+    assert isinstance(t1, LakeTable)
+    ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
+    eng = CdcEngine(spark, None, ck, num_salts=4)
+    assert len(eng.run_warehouse(t1, src(), epoch_size=1000)) == 3
+
+    t2 = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "lake"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
+    )
+    ck2 = ManifestStore(os.path.join(tmpdir_path, "ck2"))
+    CdcEngine(spark, t2, ck2, num_salts=4).run(src(), epoch_size=1000)
+
+    assert _final_state(t1.read()) == _final_state(t2.read())
+    for store, table in ((ck, t1), (ck2, t2)):
+        assert store.epochs() == table.committed_epochs() == [1, 2, 3]
+        for e in store.epochs():
+            assert set(store.get(e)["offsets"]) <= buckets
+            assert "manifest" in table.epoch_snapshot(e)["summary"]
+
+    # crash window: the last epoch committed but its manifest was lost
+    os.unlink(os.path.join(ck.path, "epoch=00000003.json"))
+    assert eng.run_warehouse(t1, src(), epoch_size=1000) == []
+    healed = ck.get(3)
+    assert healed["metrics"].get("healed") is True
+    assert healed["offsets"] and set(healed["offsets"]) <= buckets
+    assert healed["offsets"] == ck2.get(3)["offsets"]
 
 
 def test_warehouse_loop_heals_crash_between_merge_and_manifest(spark, tmpdir_path):
@@ -313,13 +359,16 @@ def test_warehouse_heal_of_truncated_epoch_does_not_lose_new_lsns(spark, tmpdir_
         return CdcEngine(spark, target, ck, num_salts=4).run(src, epoch_size=1000)
 
     target = make("sink")
-    ledger = target if sink == "duckdb" else LakeBackend(target)
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
     # epoch 1: (0,1000]; epoch 2: (1000,1200] — truncated by source max
     tail(target, ck, old)
     assert ck.high_water_lsn() == 1200
-    info = ledger.epoch_info(2)
-    assert (info["lsn_lo"], info["lsn_hi"]) == (1000, 1200)
+    if sink == "duckdb":
+        info = target.epoch_info(2)
+        recorded = (info["lsn_lo"], info["lsn_hi"])
+    else:
+        recorded = tuple(target.epoch_snapshot(2)["summary"]["manifest"]["lineage"]["lsn_range"])
+    assert recorded == (1000, 1200)
 
     # crash window: epoch 2 merged (ledger) but its manifest was lost
     os.unlink(os.path.join(ck.path, "epoch=00000002.json"))
@@ -438,7 +487,7 @@ def test_recover_warehouse_skips_null_lsn_lo_ledger_rows(spark, tmpdir_path, wty
     )
     cols = [f.name for f in schema.fields]
     df = spark.createDataFrame([("c1", 0, "user", "t", None)], schema).select(*cols)
-    wh.merge(df, epoch_id=1, lsn_range=None)  # ledger row with NULL lo/hi
+    wh.merge(df, epoch_id=1)  # ledger row with NULL lo/hi
     wh._con.execute("UPDATE _epochs SET lsn_hi = 500 WHERE epoch_id = 1")
 
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
@@ -483,7 +532,12 @@ def test_legacy_epochs_ledger_gains_lsn_columns_on_open(spark, tmpdir_path, wtyp
     ).fetchone() == (None, None)
     assert wh.epoch_info(1) == {"rows_written": 7, "lsn_lo": None, "lsn_hi": None}
     df = spark.createDataFrame([("c1", 0, "user", "t", None)], TRANSCRIPTS_SCHEMA_V1)
-    wh.merge(df, epoch_id=2, lsn_range=(10, 20))
+    files = backends._export_delta(
+        df.withColumn("op", F.lit("U")),
+        T.StructType(list(TRANSCRIPTS_SCHEMA_V1.fields) + [T.StructField("op", T.StringType())]),
+        os.path.join(tmpdir_path, f"delta-{wtype}"),
+    )
+    wh.merge_files(files, epoch_id=2, lsn_range=(10, 20))
     wh._con.close()
 
     # a second open finds the columns already there

@@ -362,3 +362,66 @@ def test_tail_loop_auto_compaction_covers_model_tables(spark, tmpdir_path):
     assert _content_hash(maint_t.read()) == _content_hash(plain_t.read())
     assert _content_hash(maint_s.read()) == _content_hash(plain_s.read())
     assert maint_s.committed_epochs() == plain_s.committed_epochs()
+
+
+def test_warehouse_path_auto_compaction_covers_lake_model_tables(spark, tmpdir_path):
+    """The maintenance hook compacts every lake table the engine writes,
+    whatever the sink: a DuckDB bronze with a lake-table silver model
+    still gets its silver compacted, with content identical to an
+    unmaintained twin run."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from etl_warehouse_agnostic_spark.engine import CdcEngine
+    from etl_warehouse_agnostic_spark.lake.backends import DuckBackend
+    from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
+    from etl_warehouse_agnostic_spark.silver import SilverModel
+    from etl_warehouse_agnostic_spark.sources.changes import ChangeStreamSource
+    from etl_warehouse_agnostic_spark.sources.generator import generate_changes
+
+    chg = generate_changes(spark, 5000, n_convs=300, turns_per_conv=16, seed=43).localCheckpoint()
+    silver_schema = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType(), False),
+            T.StructField("turn_idx", T.IntegerType(), False),
+            T.StructField("text_len", T.IntegerType(), True),
+        ]
+    )
+
+    def transform(upserts, epoch):
+        return upserts.select(
+            "conv_id", "turn_idx", F.length("text").cast("int").alias("text_len")
+        )
+
+    def run(name, maintenance_every):
+        duck = DuckBackend.create(
+            spark, os.path.join(tmpdir_path, name + ".duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
+        )
+        s = LakeTable.create(
+            spark, os.path.join(tmpdir_path, name + "-silver"), silver_schema,
+            KEY_COLS, num_buckets=4,
+        )
+        s.max_records_per_file = 64
+        eng = CdcEngine(
+            spark, None, ManifestStore(os.path.join(tmpdir_path, f"ck-{name}")),
+            num_salts=4, maintenance_every=maintenance_every,
+            silver_models=[SilverModel(s, transform, name="turns_silver")],
+        )
+        res = eng.run_warehouse(duck, ChangeStreamSource(spark, df=chg), epoch_size=500)
+        assert len(res) == 10
+        duck.close()
+        return s, eng
+
+    plain_s, _ = run("plain", None)
+    maint_s, eng = run("maint", 5)
+
+    silver_entries = [r for r in eng.maintenance_log if r["table"] == "turns_silver"]
+    assert silver_entries and any(r["buckets_compacted"] > 0 for r in silver_entries)
+    assert all(r["table"] != "bronze" for r in eng.maintenance_log)  # DuckDB compacts itself
+
+    def live_files(t):
+        return sum(len(v) for v in t.snapshot()["files"].values())
+
+    assert live_files(maint_s) < live_files(plain_s)
+    assert _content_hash(maint_s.read()) == _content_hash(plain_s.read())
+    assert maint_s.committed_epochs() == plain_s.committed_epochs()

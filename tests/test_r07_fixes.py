@@ -260,5 +260,5 @@ def test_maintenance_does_not_refire_without_new_epochs(spark, tmpdir_path):
     assert fired >= 1
     # a replayed (skipped) epoch leaves the non-skipped count at the
     # same multiple — the hook must not fire again
-    eng._maybe_maintain(2)
+    eng._maybe_maintain(bronze, 2)
     assert len(eng.maintenance_log) == fired

@@ -91,6 +91,66 @@ def test_streaming_restart_is_noop(spark, tmpdir_path, stream_dir):
     assert table.latest_version() == v1
 
 
+def test_streaming_restart_catches_models_up_before_next_batch(
+    spark, tmpdir_path, stream_dir, monkeypatch
+):
+    """A crash in a model's apply stops the query after its epoch's
+    manifest finalized. On restart Spark replays that batch, which the
+    finalized manifest skips, so the front end must recover BEFORE the
+    first batch, as the tail loop does: the model catches up from the
+    retained staging dir, in epoch order, and the dir is swept."""
+    from pyspark.sql import types as T
+
+    from etl_warehouse_agnostic_spark.silver import SilverModel
+
+    table = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "t"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
+    )
+    silver_t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "silver"),
+        T.StructType([
+            T.StructField("conv_id", T.StringType(), False),
+            T.StructField("turn_idx", T.IntegerType(), False),
+            T.StructField("text_len", T.IntegerType(), True),
+        ]),
+        KEY_COLS, num_buckets=4,
+    )
+
+    def transform(upserts, epoch):
+        return upserts.select("conv_id", "turn_idx",
+                              F.length("text").cast("int").alias("text_len"))
+
+    silver = SilverModel(silver_t, transform, name="turns_silver")
+    store = ManifestStore(os.path.join(tmpdir_path, "ck"))
+    eng = CdcEngine(spark, table, store, num_salts=4, silver_models=[silver])
+    ckpt = os.path.join(tmpdir_path, "stream_ckpt")
+    apply_silver = silver.apply_epoch
+
+    def crash_at_2(staged, epoch, **kw):
+        if epoch == 2:
+            raise RuntimeError("injected crash in the silver apply")
+        return apply_silver(staged, epoch, **kw)
+
+    monkeypatch.setattr(silver, "apply_epoch", crash_at_2)
+    with pytest.raises(Exception):
+        StreamingCdcApply(eng, stream_dir, ckpt, max_files_per_trigger=1).run_available()
+    assert store.epochs() == [1, 2] and silver_t.committed_epochs() == [1]
+    monkeypatch.undo()
+
+    StreamingCdcApply(eng, stream_dir, ckpt, max_files_per_trigger=1).run_available()
+    assert silver_t.committed_epochs() == store.epochs()
+    assert len(store.epochs()) > 2
+    staging_root = os.path.join(store.path, "_staging")
+    assert not os.path.isdir(staging_root) or os.listdir(staging_root) == []
+
+    eng.recover()
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("conv_id", "turn_idx", "text_len").collect())
+
+    assert rows(silver_t.read()) == rows(transform(table.read(), 0))
+
+
 def test_epoch_base_pinned_not_rederived(spark, tmpdir_path, stream_dir):
     """Regression: a restarted wrapper must keep the first-start
     epoch_base even though last_epoch() has grown — otherwise a
