@@ -727,8 +727,7 @@ class CdcEngine:
             )
 
     def _bootstrap_model(
-        self, m, default_source, behind: list[int],
-        staged_finalized: list[int] | None = None,
+        self, m, default_source, behind: list[int], staged_finalized: list[int],
     ) -> None:
         """Auto-bootstrap a behind model (opt-in): full refresh from its
         actual input — its parent's table when chained, else the bronze
@@ -749,11 +748,8 @@ class CdcEngine:
             m.bootstrap(src, epoch_id)
         else:  # an aggregate reads its own source
             m.bootstrap(epoch_id)
-        covered_staged = [
-            e for e in (staged_finalized or []) if e <= epoch_id
-        ]
-        if covered_staged and isinstance(m.table, LakeTable):
-            m.table.record_epochs(covered_staged)
+        covered_staged = [e for e in staged_finalized if e <= epoch_id]
+        m.table.record_epochs(covered_staged)
         self.bootstrap_log.append(
             {"model": m.name, "epoch_id": epoch_id, "covered": list(behind),
              "stamped_staged": covered_staged}

@@ -110,6 +110,8 @@ class WarehouseBackend(Protocol):
 
     def epoch_info(self, epoch_id: int) -> dict | None: ...
 
+    def record_epochs(self, epoch_ids: list[int]) -> int | None: ...
+
 
 def _export_delta(df: DataFrame, schema: T.StructType, out_dir: str) -> list[str]:
     """Executor-parallel hand-off: Spark writes the epoch-bounded delta
@@ -155,7 +157,7 @@ class _SqlWarehouse:
     its rows with ``op <> 'D'``, record the epoch + its applied lsn
     range in the ``_epochs`` ledger. Every delete lands before any
     insert, so a key both upserted and deleted nets to the upsert, as
-    in ``LakeTable._merge_attempt``. A replayed epoch id short-circuits
+    in ``LakeTable.merge``. A replayed epoch id short-circuits
     to a skipped no-op BEFORE any export or mutation — the same
     exactly-once contract LakeTable implements with snapshot summaries.
     A DataFrame ``merge`` or ``overwrite`` reaches the warehouse as one
@@ -269,6 +271,15 @@ class _SqlWarehouse:
         return {"rows_written": int(r[0] or 0),
                 "lsn_lo": None if r[1] is None else int(r[1]),
                 "lsn_hi": None if r[2] is None else int(r[2])}
+
+    def record_epochs(self, epoch_ids: list[int]) -> None:
+        """``LakeTable.record_epochs`` for the ledger: the ids not yet
+        committed, with no data change and no lsn range, in ONE insert
+        (its own transaction on the autocommit connection)."""
+        new = sorted(set(epoch_ids) - set(self.committed_epochs()))
+        if new:
+            self._con.execute("INSERT INTO _epochs (epoch_id, rows_written) VALUES "
+                              + ", ".join(["(?, 0)"] * len(new)), new)
 
     # -- contract -----------------------------------------------------
 
@@ -542,7 +553,7 @@ class SqliteBackend(_SqlWarehouse):
 
     def _apply_merge(self, files: list[str]) -> int:
         # every key of every batch goes before any row comes in (the
-        # same upsert-wins netting as LakeTable._merge_attempt when a
+        # same upsert-wins netting as LakeTable.merge when a
         # key is both upserted and deleted)
         key_pred = " AND ".join(f'"{k}" = ?' for k in self._keys)
         for _, keys in self._iter_batches(files, keys_only=True):

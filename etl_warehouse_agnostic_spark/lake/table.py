@@ -7,7 +7,14 @@ The semantics mirror Iceberg v2 copy-on-write:
 - **Atomic commits**: a snapshot is a JSON file ``_meta/v<N>.json``
   created with ``os.link`` (fails if the version exists → optimistic
   concurrency, like Iceberg's metadata swap). Readers always see a
-  complete snapshot or the previous one, never a torn state.
+  complete snapshot or the previous one, never a torn state. Every
+  table change (merge, overwrite, schema evolution, epoch stamp,
+  compaction, rebucket) is one attempt that reads one snapshot, takes
+  every decision from it and publishes the next version. An attempt
+  that loses the version race deletes the data it wrote, and the change
+  is re-decided against the winner's snapshot (Iceberg's commit retry):
+  two merges of different keys both land, a retried overwrite is a
+  later full refresh, a retried schema or epoch stamp re-diffs.
 - **Bucketed layout**: data files are grouped by
   ``bucket = pmod(xxhash64(conv_id), num_buckets)`` (Iceberg's
   ``bucket(N, conv_id)`` transform). A MERGE rewrites only the buckets
@@ -35,6 +42,7 @@ engine above it (dedup, epoch loop, manifests) is unchanged.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -65,15 +73,18 @@ def _file_day(relpath: str) -> str | None:
     return None
 
 
+def _with_bucket(df: DataFrame, snap: dict) -> DataFrame:
+    """df plus its ``_bucket`` in snapshot ``snap``'s layout."""
+    return df.withColumn(_BUCKET, bucket_of(snap["key_cols"][0], int(snap["num_buckets"])))
+
+
 class CommitConflict(RuntimeError):
     """Another writer committed this version first (optimistic lock).
 
     ``written_dir`` carries the losing attempt's data directory so the
     retry loop can reclaim it before re-trying."""
 
-    def __init__(self, path: str, written_dir: str | None = None):
-        super().__init__(path)
-        self.written_dir = written_dir
+    written_dir: str | None = None
 
 
 # Attempts after the first that a writer makes before giving up.
@@ -94,19 +105,23 @@ _COMMIT_RETRIES = 3
 _BROADCAST_CHANGED_KEYS_MAX_ROWS = 4_000_000
 
 
-def _retry_commit(attempt, *args):
-    """Run ``attempt(*args)`` until one commits: a losing attempt
-    (CommitConflict: another writer published that version first)
-    deletes the data it wrote and the next re-reads the fresh snapshot
-    — Iceberg's commit-retry semantics."""
-    for _attempt in range(_COMMIT_RETRIES + 1):
-        try:
-            return attempt(*args)
-        except CommitConflict as e:
-            last_exc = e
-            if e.written_dir:
-                shutil.rmtree(e.written_dir, ignore_errors=True)
-    raise last_exc
+def _retried(attempt):
+    """The one commit loop every table change runs under (the rule in
+    the module docstring): call the method until an attempt commits,
+    deleting each losing attempt's data dir."""
+
+    @functools.wraps(attempt)
+    def retried(self, *args, **kwargs):
+        for _ in range(_COMMIT_RETRIES + 1):
+            try:
+                return attempt(self, *args, **kwargs)
+            except CommitConflict as e:
+                last_exc = e
+                if e.written_dir:
+                    shutil.rmtree(e.written_dir, ignore_errors=True)
+        raise last_exc
+
+    return retried
 
 
 @dataclass(frozen=True)
@@ -379,8 +394,21 @@ class LakeTable:
         written once, read back once or twice and deleted — a cheap
         codec there is pure CPU savings; table-at-rest files keep the
         session default zstd)."""
+        return self._write(self.snapshot(), df, out_dir, compression, self.max_records_per_file)
+
+    def _write(
+        self,
+        snap: dict,
+        df: DataFrame,
+        out_dir: str,
+        compression: str | None = None,
+        max_records: int | None = None,
+    ) -> tuple[dict[str, list[str]], dict[str, int], int]:
+        """``write_bucketed`` in the layout of snapshot ``snap``, with
+        at most ``max_records`` rows per file (None: one file set per
+        bucket)."""
         obs = Observation(f"write-{os.path.basename(out_dir)}-{uuid.uuid4().hex[:6]}")
-        spec = self.partition_spec
+        spec = snap.get("partition_spec")
         staged = df.withColumn(_PB, F.col(_BUCKET))
         part_cols = [_PB]
         if spec and spec["col"] in df.columns:
@@ -396,12 +424,12 @@ class LakeTable:
             # partition cols lead the sort so FileFormatWriter's
             # required ordering is already satisfied and the key sort
             # survives into the files (min/max stats friendly).
-            .sortWithinPartitions(*part_cols, *self.key_cols)
+            .sortWithinPartitions(*part_cols, *snap["key_cols"])
             .write.partitionBy(*part_cols)
             .mode("overwrite")
         )
-        if self.max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", self.max_records_per_file)
+        if max_records:
+            writer = writer.option("maxRecordsPerFile", max_records)
         if compression:
             writer = writer.option("compression", compression)
         writer.parquet(out_dir)
@@ -435,33 +463,58 @@ class LakeTable:
             )}
         return files, observed, nbytes
 
-    def _write_epoch_files(
-        self, df: DataFrame, tag: str
-    ) -> tuple[dict[str, list[str]], int, int]:
-        files, observed, nbytes = self.write_bucketed(df, os.path.join(self.data_dir, tag))
-        return files, observed["rows"], nbytes
+    def _write_attempt(
+        self, cur: dict, kind: str, df: DataFrame, max_records: int | None
+    ) -> tuple[str, dict[str, list[str]], int, int]:
+        """Write an attempt's data (df carries _bucket) in ``cur``'s
+        layout into a fresh ``<kind><next version>-<uuid>`` data dir;
+        returns (that dir, bucket->relpaths, rows, bytes)."""
+        out_dir = os.path.join(
+            self.data_dir, f"{kind}{cur['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
+        )
+        files, observed, nbytes = self._write(cur, df, out_dir, max_records=max_records)
+        return out_dir, files, observed["rows"], nbytes
 
-    def _commit(self, snap: dict) -> int:
-        v = snap["version"]
-        _atomic_write_json(snap, os.path.join(self.meta_dir, f"v{v:08d}.json"))
-        return v
-
-    def _next_snapshot(self, parent: dict, operation: str) -> dict:
-        return {
-            "version": parent["version"] + 1,
-            "parent": parent["version"],
-            "schema": parent["schema"],
-            "key_cols": parent["key_cols"],
-            "num_buckets": parent["num_buckets"],
-            "partition_spec": parent.get("partition_spec"),
-            "files": dict(parent["files"]),
-            "committed_epochs": list(parent.get("committed_epochs", [])),
-            "summary": {"operation": operation},
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+    def _publish(
+        self,
+        cur: dict,
+        summary: dict,
+        files: dict[str, list[str]] | None = None,
+        rewritten: list[int] | None = (),
+        epochs: list[int | None] = (),
+        written_dir: str | None = None,
+        **layout: Any,
+    ) -> int:
+        """Commit the version after ``cur`` and return it: ``cur`` with
+        its ``layout`` fields (schema, num_buckets) replaced, the
+        ``rewritten`` buckets' files (all, when None) replaced by
+        ``files``, the non-None ``epochs`` stamped and ``summary``. A
+        lost version race raises CommitConflict carrying ``written_dir``,
+        the attempt's data dir, for the retry loop to reclaim."""
+        kept = {} if rewritten is None else {
+            b: paths for b, paths in cur["files"].items() if int(b) not in rewritten
         }
-
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(_BUCKET, bucket_of(self.key_cols[0], self.num_buckets))
+        v = cur["version"] + 1
+        snap = {
+            "version": v,
+            "parent": cur["version"],
+            "schema": cur["schema"],
+            "key_cols": cur["key_cols"],
+            "num_buckets": cur["num_buckets"],
+            "partition_spec": cur.get("partition_spec"),
+            "files": {**kept, **(files or {})},
+            "committed_epochs": cur.get("committed_epochs", [])
+            + [e for e in epochs if e is not None],
+            "summary": summary,
+            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            **layout,
+        }
+        try:
+            _atomic_write_json(snap, os.path.join(self.meta_dir, f"v{v:08d}.json"))
+        except CommitConflict as e:
+            e.written_dir = written_dir
+            raise
+        return v
 
     def _align(self, df: DataFrame, schema: T.StructType) -> DataFrame:
         """Project df onto the table schema: missing columns → NULL,
@@ -475,24 +528,24 @@ class LakeTable:
         extra = [c for c in df.columns if c == _BUCKET]
         return df.select(*cols, *extra)
 
+    @_retried
     def evolve_schema(self, new_columns: T.StructType | list[T.StructField]) -> T.StructType:
         """Add-only column evolution; returns the (possibly updated)
         schema. Commits a metadata-only snapshot when columns are new."""
         fields = new_columns.fields if isinstance(new_columns, T.StructType) else new_columns
         cur = self.snapshot()
-        cur_names = {f["name"] for f in cur["schema"]["fields"]}
-        added = [f for f in fields if f.name not in cur_names]
+        schema = T.StructType.fromJson(cur["schema"])
+        added = [f for f in fields if f.name not in schema.names]
         if not added:
-            return T.StructType.fromJson(cur["schema"])
-        snap = self._next_snapshot(cur, "evolve-schema")
-        snap["schema"] = {
-            "type": "struct",
-            "fields": cur["schema"]["fields"] + [f.jsonValue() for f in added],
-        }
-        snap["summary"]["added_columns"] = [f.name for f in added]
-        self._commit(snap)
-        return T.StructType.fromJson(snap["schema"])
+            return schema
+        schema = T.StructType(schema.fields + added)
+        self._publish(
+            cur, {"operation": "evolve-schema", "added_columns": [f.name for f in added]},
+            schema=schema.jsonValue(),
+        )
+        return schema
 
+    @_retried
     def record_epochs(self, epoch_ids: list[int]) -> int | None:
         """Metadata-only commit marking epochs as committed WITHOUT any
         data change — for a bootstrap that already covers their content
@@ -505,11 +558,11 @@ class LakeTable:
         new = sorted(e for e in set(epoch_ids) if e not in have)
         if not new:
             return None
-        snap = self._next_snapshot(cur, "record-epochs")
-        snap["committed_epochs"].extend(new)
-        snap["summary"].update({"recorded_epochs": new})
-        return self._commit(snap)
+        return self._publish(
+            cur, {"operation": "record-epochs", "recorded_epochs": new}, epochs=new
+        )
 
+    @_retried
     def overwrite(self, df: DataFrame, epoch_id: int | None = None) -> MergeResult:
         """Full snapshot replace (bootstrap / full refresh — reference
         analog extractors/google_sheets/extractor.py:370-377). Same
@@ -518,16 +571,14 @@ class LakeTable:
         cur = self.snapshot()
         if epoch_id is not None and epoch_id in cur.get("committed_epochs", []):
             return MergeResult(cur["version"], epoch_id, 0, 0, 0, skipped=True)
-        schema = T.StructType.fromJson(cur["schema"])
-        data = self._with_bucket(self._align(df, schema))
-        tag = f"e{cur['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
-        files, rows, nbytes = self._write_epoch_files(data, tag)
-        snap = self._next_snapshot(cur, "overwrite")
-        snap["files"] = files
-        snap["summary"].update({"epoch_id": epoch_id, "rows_written": rows, "bytes_written": nbytes})
-        if epoch_id is not None:
-            snap["committed_epochs"].append(epoch_id)
-        v = self._commit(snap)
+        data = _with_bucket(self._align(df, T.StructType.fromJson(cur["schema"])), cur)
+        out, files, rows, nbytes = self._write_attempt(cur, "e", data, self.max_records_per_file)
+        v = self._publish(
+            cur,
+            {"operation": "overwrite", "epoch_id": epoch_id, "rows_written": rows,
+             "bytes_written": nbytes},
+            files, rewritten=None, epochs=[epoch_id], written_dir=out,
+        )
         return MergeResult(v, epoch_id, rows, nbytes, len(files))
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
@@ -607,6 +658,7 @@ class LakeTable:
             if not dirs and not files and root != self.data_dir:
                 os.rmdir(root)
 
+    @_retried
     def rewrite_small_files(
         self,
         target_file_bytes: int = 128 * 1024 * 1024,
@@ -624,18 +676,9 @@ class LakeTable:
         per epoch per touched bucket: at 10^10 rows × thousands of
         epochs the scan cost becomes file-count-bound without this.
         Candidate selection is driver-side metadata only; the rewrite
-        reads and writes ONLY the fragmented buckets.
-
-        Concurrency: same optimistic retry as ``merge`` — a losing
-        attempt deletes its freshly written file set and re-derives
-        candidates from the fresh snapshot instead of stranding them
-        until the orphan-GC grace window.
+        reads and writes ONLY the fragmented buckets. A retried attempt
+        re-derives the candidates from the winner's snapshot.
         """
-        return _retry_commit(self._rewrite_small_files_attempt, target_file_bytes, min_files)
-
-    def _rewrite_small_files_attempt(
-        self, target_file_bytes: int, min_files: int
-    ) -> dict:
         cur = self.snapshot()
         candidates: list[int] = []
         for b, paths in cur["files"].items():
@@ -646,37 +689,19 @@ class LakeTable:
                 candidates.append(int(b))
         if not candidates:
             return {"buckets_compacted": 0, "files_before": 0, "files_after": 0, "version": cur["version"]}
-        files_before = sum(len(cur["files"][str(b)]) for b in candidates)
         data = self._read_files(cur, buckets=candidates)  # carries _bucket
-        tag = f"c{cur['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
-        saved_mrpf = self.max_records_per_file
-        self.max_records_per_file = None  # bin-pack: fewest files per bucket
-        try:
-            files, observed, nbytes = self.write_bucketed(data, os.path.join(self.data_dir, tag))
-        finally:
-            self.max_records_per_file = saved_mrpf
-        snap = self._next_snapshot(cur, "compact")
-        for b in candidates:
-            snap["files"].pop(str(b), None)
-        snap["files"].update(files)
-        files_after = sum(len(v) for v in files.values())
-        snap["summary"].update(
-            {"rows_written": observed["rows"], "bytes_written": nbytes,
-             "buckets_compacted": len(candidates),
-             "files_before": files_before, "files_after": files_after}
+        # bin-pack: fewest files per bucket, whatever max_records_per_file says
+        out, files, rows, nbytes = self._write_attempt(cur, "c", data, None)
+        stats = {"buckets_compacted": len(candidates),
+                 "files_before": sum(len(cur["files"][str(b)]) for b in candidates),
+                 "files_after": sum(len(v) for v in files.values())}
+        v = self._publish(
+            cur, {"operation": "compact", "rows_written": rows, "bytes_written": nbytes, **stats},
+            files, rewritten=candidates, written_dir=out,
         )
-        try:
-            v = self._commit(snap)
-        except CommitConflict as e:
-            e.written_dir = os.path.join(self.data_dir, tag)
-            raise
-        return {
-            "buckets_compacted": len(candidates),
-            "files_before": files_before,
-            "files_after": files_after,
-            "version": v,
-        }
+        return {**stats, "version": v}
 
+    @_retried
     def rebucket(self, new_num_buckets: int) -> dict:
         """Bucket-count evolution: full rewrite of the table into
         ``new_num_buckets`` hash buckets, committed as one atomic
@@ -686,35 +711,22 @@ class LakeTable:
         layout, so this is necessarily a full-table job — run it like
         Iceberg's ``rewrite_data_files`` with a partition-spec change.
         Readers see old or new layout atomically; committed epochs and
-        schema carry forward unchanged. Commit conflicts retry with
-        cleanup, same as ``merge``.
+        schema carry forward unchanged.
         """
         if new_num_buckets < 1:
             raise ValueError("new_num_buckets must be >= 1")
-        return _retry_commit(self._rebucket_attempt, new_num_buckets)
-
-    def _rebucket_attempt(self, new_num_buckets: int) -> dict:
         cur = self.snapshot()
-        data = self._read_files(cur).drop(_BUCKET)
-        data = data.withColumn(
-            _BUCKET, bucket_of(cur["key_cols"][0], new_num_buckets)
+        data = _with_bucket(self._read_files(cur), {**cur, "num_buckets": new_num_buckets})
+        out, files, rows, nbytes = self._write_attempt(cur, "r", data, self.max_records_per_file)
+        v = self._publish(
+            cur,
+            {"operation": "rebucket", "rows_written": rows, "bytes_written": nbytes,
+             "old_num_buckets": cur["num_buckets"], "new_num_buckets": new_num_buckets},
+            files, rewritten=None, written_dir=out, num_buckets=new_num_buckets,
         )
-        tag = f"r{cur['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
-        files, observed, nbytes = self.write_bucketed(data, os.path.join(self.data_dir, tag))
-        snap = self._next_snapshot(cur, "rebucket")
-        snap["num_buckets"] = new_num_buckets
-        snap["files"] = files
-        snap["summary"].update(
-            {"rows_written": observed["rows"], "bytes_written": nbytes,
-             "old_num_buckets": cur["num_buckets"], "new_num_buckets": new_num_buckets}
-        )
-        try:
-            v = self._commit(snap)
-        except CommitConflict as e:
-            e.written_dir = os.path.join(self.data_dir, tag)
-            raise
-        return {"version": v, "num_buckets": new_num_buckets, "rows": observed["rows"]}
+        return {"version": v, "num_buckets": new_num_buckets, "rows": rows}
 
+    @_retried
     def merge(
         self,
         upserts: DataFrame,
@@ -752,107 +764,84 @@ class LakeTable:
         never pairs a census with the wrong modulus; an unresolvable
         census falls back to the collect. It must cover every changed
         key (a superset only rewrites a bucket as it was); an attempt
-        that writes an upsert into a bucket outside it is discarded and
-        redone with the collect.
+        that writes an upsert into a bucket outside it discards that
+        write and redoes it with the collect.
 
-        Concurrency: optimistic. An attempt reads the current snapshot,
-        writes its rewritten buckets, and publishes the next version via
-        hard link; if ANOTHER writer won that version (CommitConflict),
-        the loser deletes its attempt's files and retries against the
-        fresh snapshot — Iceberg's commit-retry semantics. Retries
-        re-derive survivors from the new snapshot, so two writers
-        touching different keys both land.
+        Concurrency: the table's one commit rule (module docstring). A
+        losing attempt deletes its rewritten buckets and re-derives the
+        survivors from the winner's snapshot, so two writers touching
+        different keys both land.
         """
-        return _retry_commit(
-            self._merge_attempt, upserts, delete_keys, epoch_id, extra_summary, census
-        )
-
-    def _merge_attempt(
-        self,
-        upserts: DataFrame,
-        delete_keys: DataFrame | None,
-        epoch_id: int | None,
-        extra_summary: dict | None,
-        census: EpochCensus | None,
-    ) -> MergeResult:
         cur = self.snapshot()
         if epoch_id is not None and epoch_id in cur.get("committed_epochs", []):
             return MergeResult(cur["version"], epoch_id, 0, 0, 0, skipped=True)
         schema = T.StructType.fromJson(cur["schema"])
         keys = cur["key_cols"]
 
-        up = self._with_bucket(self._align(upserts, schema))
+        up = _with_bucket(self._align(upserts, schema), cur)
         # No dropDuplicates: LEFT ANTI ignores right-side duplicates,
         # and the census below distincts for itself — the dedup here
         # was one whole extra Exchange of the key set per epoch.
         changed_keys = up.select(*keys, _BUCKET)
         if delete_keys is not None:
             # hashed in the table's key types, like the aligned upserts
-            dk = self._with_bucket(
-                delete_keys.select(*[F.col(k).cast(schema[k].dataType).alias(k) for k in keys])
+            dk = _with_bucket(
+                delete_keys.select(*[F.col(k).cast(schema[k].dataType).alias(k) for k in keys]),
+                cur,
             )
             changed_keys = changed_keys.unionByName(dk)
+        summary = {"operation": "merge", "epoch_id": epoch_id}
 
         # Affected buckets: from the caller's census when this layout
         # coarsens it, else a tiny (≤ num_buckets rows) collect.
         affected = census.buckets_for(cur) if census is not None else None
-        from_census = affected is not None
-        if not from_census:
-            affected = [r[0] for r in changed_keys.select(_BUCKET).distinct().collect()]
-        if not affected:
-            # Nothing to change; still record the epoch for idempotence.
-            snap = self._next_snapshot(cur, "merge")
-            snap["summary"].update({"epoch_id": epoch_id, "rows_written": 0, "bytes_written": 0})
-            if epoch_id is not None:
-                snap["committed_epochs"].append(epoch_id)
-            v = self._commit(snap)
-            return MergeResult(v, epoch_id, 0, 0, 0)
+        census_rows = census.rows if census is not None else None
+        while True:
+            from_census = affected is not None
+            if not from_census:
+                affected = [r[0] for r in changed_keys.select(_BUCKET).distinct().collect()]
+            if not affected:
+                # Nothing to change; still record the epoch for idempotence.
+                v = self._publish(
+                    cur, {**summary, "rows_written": 0, "bytes_written": 0}, epochs=[epoch_id]
+                )
+                return MergeResult(v, epoch_id, 0, 0, 0)
 
-        if not any(cur["files"].get(str(b)) for b in affected):
-            # Initial load / all-new buckets: no existing rows to
-            # survive, so skip the anti-join (and its changed-key
-            # broadcast build) entirely.
-            new_data = up
-        else:
-            current = self._read_files(cur, buckets=affected)
-            # Survivors: existing rows in affected buckets whose key was
-            # not touched this epoch (anti = NOT EXISTS). When the
-            # caller knows the delta is small (its census), broadcast
-            # the key set so the survivors scan is never shuffled;
-            # otherwise leave the strategy to AQE.
-            anti_keys = changed_keys.select(*keys)
-            census_rows = census.rows if census is not None else None
-            if census_rows is not None and census_rows <= _BROADCAST_CHANGED_KEYS_MAX_ROWS:
-                anti_keys = F.broadcast(anti_keys)
-            survivors = current.join(anti_keys, on=keys, how="left_anti")
-            new_data = survivors.unionByName(up)
+            if not any(cur["files"].get(str(b)) for b in affected):
+                # Initial load / all-new buckets: no existing rows to
+                # survive, so skip the anti-join (and its changed-key
+                # broadcast build) entirely.
+                new_data = up
+            else:
+                current = self._read_files(cur, buckets=affected)
+                # Survivors: existing rows in affected buckets whose key
+                # was not touched this epoch (anti = NOT EXISTS). When
+                # the caller knows the delta is small (its census),
+                # broadcast the key set so the survivors scan is never
+                # shuffled; otherwise leave the strategy to AQE.
+                anti_keys = changed_keys.select(*keys)
+                if census_rows is not None and census_rows <= _BROADCAST_CHANGED_KEYS_MAX_ROWS:
+                    anti_keys = F.broadcast(anti_keys)
+                survivors = current.join(anti_keys, on=keys, how="left_anti")
+                new_data = survivors.unionByName(up)
 
-        tag = f"e{cur['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
-        files, rows, nbytes = self._write_epoch_files(new_data, tag)
-        if from_census and not set(files) <= {str(b) for b in affected}:
+            out, files, rows, nbytes = self._write_attempt(
+                cur, "e", new_data, self.max_records_per_file
+            )
+            if not from_census or set(files) <= {str(b) for b in affected}:
+                break
             # An upsert key the census does not cover (a model transform
             # that rewrote key values): committing would replace that
-            # bucket's files without its existing rows. Redo the attempt
-            # with the collected census.
-            shutil.rmtree(os.path.join(self.data_dir, tag), ignore_errors=True)
-            return self._merge_attempt(upserts, delete_keys, epoch_id, extra_summary, None)
+            # bucket's files without its existing rows. Redo the write
+            # with the collected buckets, as a merge with no census.
+            shutil.rmtree(out, ignore_errors=True)
+            affected = census_rows = None
 
-        snap = self._next_snapshot(cur, "merge")
-        for b in affected:
-            snap["files"].pop(str(b), None)
         # Buckets can become empty after deletes; only written ones return.
-        snap["files"].update(files)
-        snap["summary"].update(
-            {"epoch_id": epoch_id, "rows_written": rows, "bytes_written": nbytes,
-             "buckets_rewritten": len(affected)}
+        v = self._publish(
+            cur,
+            {**summary, "rows_written": rows, "bytes_written": nbytes,
+             "buckets_rewritten": len(affected), **(extra_summary or {})},
+            files, rewritten=affected, epochs=[epoch_id], written_dir=out,
         )
-        if extra_summary:
-            snap["summary"].update(extra_summary)
-        if epoch_id is not None:
-            snap["committed_epochs"].append(epoch_id)
-        try:
-            v = self._commit(snap)
-        except CommitConflict as e:
-            e.written_dir = os.path.join(self.data_dir, tag)  # loser cleans up
-            raise
         return MergeResult(v, epoch_id, rows, nbytes, len(affected))

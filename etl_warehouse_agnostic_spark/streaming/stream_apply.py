@@ -79,10 +79,12 @@ class StreamingCdcApply:
         if os.path.exists(pin):
             with open(pin) as f:
                 return int(json.load(f)["epoch_base"])
-        base = (
-            explicit if explicit is not None
-            else (self.engine.checkpoints.last_epoch() or 0)
-        )
+        base = explicit
+        if base is None:
+            # Recover first, so an epoch recovery heals is counted in the
+            # base and the first batch does not reuse (and skip) its id.
+            self.engine.recover_warehouse(self.sink)
+            base = self.engine.checkpoints.last_epoch() or 0
         tmp = os.path.join(self.checkpoint_location, f"_tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
             json.dump({"epoch_base": base}, f)

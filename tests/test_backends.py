@@ -455,7 +455,7 @@ def test_bounded_warehouse_loop_converges_and_heals(spark, tmpdir_path):
 def test_merge_key_in_both_upserts_and_deletes_nets_to_upsert(spark, tmpdir_path):
     """ADVICE r4: a key present in BOTH upserts and delete_keys must
     net to the upsert surviving — on every backend, matching
-    LakeTable._merge_attempt (the engine's split_ops never overlaps
+    LakeTable.merge (the engine's split_ops never overlaps
     keys, but the WarehouseBackend contract is for direct callers too)."""
     schema = TRANSCRIPTS_SCHEMA_V1
     for wtype in ("lake", "duckdb", "sqlite"):

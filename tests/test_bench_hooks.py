@@ -81,6 +81,15 @@ def test_bench_hooks_trace_one_span_per_epoch(spark, tmpdir_path):
     assert all(s.attrs["slice_events"] == EPOCH_SIZE for s in epochs)
     assert sum(s.name == "engine.recover" for s in tracer.spans) == 2
 
+    # a lake epoch stages its delta in exactly one table stage span,
+    # whose rows are the stage's share of the benchmark's dedup
+    # survival (its stage.* counts are read from the same spans)
+    stages = [s for s in tracer.spans if s.name == "lake.table.stage"]
+    assert [s.parent for s in stages] == [s.id for s in epochs[:2]]
+    assert [s.attrs["rows"] for s in stages] == [
+        r.rows_upserted + r.rows_deleted for r in lake_results
+    ]
+
     # a warehouse epoch stages its delta in exactly one export, whose
     # rows are the denominator of the benchmark's dedup survival there
     exports = [s for s in tracer.spans if s.name == "lake.backends.export"]

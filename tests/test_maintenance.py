@@ -2,7 +2,12 @@
 bucket-count evolution — content and exactly-once must survive all of
 them."""
 
+import json
 import os
+import shutil
+
+import pytest
+from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.lake.table import LakeTable
 from etl_warehouse_agnostic_spark.schemas import KEY_COLS, TRANSCRIPTS_SCHEMA_V1
@@ -164,54 +169,89 @@ def test_rebucket_evolution(spark, tmpdir_path):
     assert t.read().where("conv_id='conv_00000001' and turn_idx=0").first().text == "v2"
 
 
-def test_maintenance_commit_conflict_retries_and_cleans_up(spark, tmpdir_path):
-    """A maintenance commit losing the version race must delete its
-    written file set and retry against the fresh snapshot (same
-    contract merge has) — not strand files until orphan GC."""
-    import json
-    import shutil
+def _upsert_conv1(spark):
+    return spark.createDataFrame(
+        [("conv_00000001", 0, "user", "raced", None), ("conv_00000001", 9, "user", "new", None)],
+        "conv_id string, turn_idx int, role string, text string, ts timestamp",
+    )
 
+
+# Every table change, as one call on a table handle.
+TABLE_CHANGES = {
+    "merge": lambda spark, t: t.merge(_upsert_conv1(spark), epoch_id=5),
+    "overwrite": lambda spark, t: t.overwrite(
+        generate_base_transcripts(spark, n_convs=6, turns_per_conv=3), epoch_id=6
+    ),
+    "evolve_schema": lambda spark, t: t.evolve_schema([T.StructField("tool", T.StringType())]),
+    "record_epochs": lambda spark, t: t.record_epochs([7, 8]),
+    "rewrite_small_files": lambda spark, t: t.rewrite_small_files(
+        target_file_bytes=1 << 30, min_files=2
+    ),
+    "rebucket": lambda spark, t: t.rebucket(4),
+}
+
+
+@pytest.mark.parametrize("change", list(TABLE_CHANGES))
+def test_maintenance_commit_conflict_retries_and_cleans_up(spark, tmpdir_path, monkeypatch,
+                                                           change):
+    """A table change whose snapshot goes stale (a rival writer commits
+    the next version after the change read it) must lose the version
+    race cleanly: delete the files it wrote, retry against the rival's
+    snapshot and commit past it — ending exactly where the serial order
+    rival → change ends (an overwrite is the later full replace), with
+    the rival's change kept and no data file stranded."""
     t = LakeTable.create(
         spark, os.path.join(tmpdir_path, "t"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=2
     )
-    t.max_records_per_file = 10
+    t.max_records_per_file = 10  # fragmented buckets: compaction candidates
     t.overwrite(generate_base_transcripts(spark, n_convs=20, turns_per_conv=4))
     t.max_records_per_file = None
-    before = _content_hash(t.read())
 
-    # Plant a competing commit at the NEXT version: a valid metadata-only
-    # snapshot (as a racing writer's no-op merge would produce).
+    # The rival: a valid commit at the NEXT version that deletes every
+    # row of bucket 0 and stamps epoch 77 (as a racing merge would).
     cur = t.snapshot()
-    rival = dict(cur)
-    rival["version"] = cur["version"] + 1
-    rival["parent"] = cur["version"]
-    rival["summary"] = {"operation": "merge", "epoch_id": None}
-    with open(os.path.join(t.meta_dir, f"v{rival['version']:08d}.json"), "w") as f:
-        json.dump(rival, f)
+    rival = {**cur, "version": cur["version"] + 1, "parent": cur["version"],
+             "files": {b: ps for b, ps in cur["files"].items() if b != "0"},
+             "committed_epochs": cur["committed_epochs"] + [77],
+             "summary": {"operation": "merge", "epoch_id": 77}}
+    rival_name = f"v{rival['version']:08d}.json"
 
+    def plant(meta_dir):
+        with open(os.path.join(meta_dir, rival_name), "w") as f:
+            json.dump(rival, f)
+
+    # The serial order, on a copy of the table: the rival, then the change.
+    serial = LakeTable(spark, os.path.join(tmpdir_path, "serial"))
+    shutil.copytree(t.path, serial.path)
+    plant(serial.meta_dir)
+    TABLE_CHANGES[change](spark, serial)
+
+    # The race: the rival lands right after the change's first read of
+    # the current snapshot.
+    read_snapshot = t.snapshot
+
+    def stale_read(version=None):
+        snap = read_snapshot(version)
+        if version is None and not os.path.exists(os.path.join(t.meta_dir, rival_name)):
+            plant(t.meta_dir)
+        return snap
+
+    monkeypatch.setattr(t, "snapshot", stale_read)
     files_before_attempt = set(_all_parquet(t.data_dir))
-    res = t.rewrite_small_files(target_file_bytes=1 << 30, min_files=2)
-    assert res["buckets_compacted"] >= 1
+    TABLE_CHANGES[change](spark, t)
+    monkeypatch.undo()
+
     assert t.latest_version() == rival["version"] + 1  # retried past rival
-    assert _content_hash(t.read()) == before
+    got, want = t.snapshot(), serial.snapshot()
+    assert 77 in got["committed_epochs"]
+    for field in ("schema", "key_cols", "num_buckets", "committed_epochs"):
+        assert got[field] == want[field], field
+    assert _content_hash(t.read()) == _content_hash(serial.read())
     # the losing attempt's files were reclaimed: every on-disk file is
     # either pre-existing or referenced by the latest snapshot
-    referenced = {
-        os.path.join(t.path, p) for ps in t.snapshot()["files"].values() for p in ps
-    }
+    referenced = {os.path.join(t.path, p) for ps in got["files"].values() for p in ps}
     for f in _all_parquet(t.data_dir):
         assert f in referenced or f in files_before_attempt, f"stranded {f}"
-
-    # same for rebucket
-    cur = t.snapshot()
-    rival2 = dict(cur)
-    rival2["version"] = cur["version"] + 1
-    rival2["parent"] = cur["version"]
-    with open(os.path.join(t.meta_dir, f"v{rival2['version']:08d}.json"), "w") as f:
-        json.dump(rival2, f)
-    res2 = t.rebucket(4)
-    assert res2["num_buckets"] == 4
-    assert _content_hash(t.read()) == before
 
 
 def test_concurrent_merges_retry_and_both_land(spark, tmpdir_path):

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.engine import CdcEngine
+from etl_warehouse_agnostic_spark.lake.backends import make_warehouse
 from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
 from etl_warehouse_agnostic_spark.lake.table import LakeTable
 from etl_warehouse_agnostic_spark.schemas import KEY_COLS, TRANSCRIPTS_SCHEMA_V1
@@ -50,6 +51,31 @@ def _rows(t):
     return sorted(tuple(r) for r in t.read().collect())
 
 
+def _bronze_with_retained_e2_e3(spark, tmpdir_path, monkeypatch, models=()):
+    """Bronze after three epochs: epoch 1 applied with ``models``
+    attached, then epochs 2-3 run detached from them with staging-dir
+    cleanup suppressed — the crash-window state where finalized epochs
+    retain their staged deltas while a model is behind."""
+    import etl_warehouse_agnostic_spark.engine as engine_mod
+
+    chg = generate_changes(spark, 3000, n_convs=40, turns_per_conv=8, seed=45).localCheckpoint()
+    bronze = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "bronze"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
+    )
+    ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
+    CdcEngine(spark, bronze, ck, num_salts=4, silver_models=list(models)).run(
+        ChangeStreamSource(spark, df=chg.where(F.col("lsn") <= 1000)), epoch_size=EPOCH_SIZE
+    )
+    with monkeypatch.context() as mp:
+        mp.setattr(engine_mod.shutil, "rmtree", lambda *a, **kw: None)
+        CdcEngine(spark, bronze, ck, num_salts=4).run(
+            ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE
+        )
+    staging_root = os.path.join(ck.path, "_staging")
+    assert sorted(os.listdir(staging_root)) == ["e00000002", "e00000003"]
+    return bronze, ck, staging_root
+
+
 def test_bootstrap_stamps_retained_staged_epochs(spark, tmpdir_path, monkeypatch):
     """A model attached with bootstrap_if_behind=True while retained
     staged finalized epochs exist must not replay a staged epoch
@@ -57,12 +83,6 @@ def test_bootstrap_stamps_retained_staged_epochs(spark, tmpdir_path, monkeypatch
     bootstrap's overwrite stamps only the LAST finalized epoch id —
     epoch 3 here — so without the fix the retained e2 delta
     double-applies into the delta-maintained gold)."""
-    import etl_warehouse_agnostic_spark.engine as engine_mod
-
-    chg = generate_changes(spark, 3000, n_convs=40, turns_per_conv=8, seed=45).localCheckpoint()
-    bronze = LakeTable.create(
-        spark, os.path.join(tmpdir_path, "bronze"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
-    )
     silver_t = LakeTable.create(
         spark, os.path.join(tmpdir_path, "silver"), SILVER_SCHEMA, KEY_COLS, num_buckets=4
     )
@@ -73,19 +93,10 @@ def test_bootstrap_stamps_retained_staged_epochs(spark, tmpdir_path, monkeypatch
         ),
         name="lens",
     )
-    ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng1 = CdcEngine(spark, bronze, ck, num_salts=4, silver_models=[silver])
-    # epoch 1 applies cleanly with the silver model attached…
-    eng1.run(ChangeStreamSource(spark, df=chg.where(F.col("lsn") <= 1000)), epoch_size=EPOCH_SIZE)
-    # …then epochs 2-3 run detached from the model with staging-dir
-    # cleanup suppressed — the crash-window state where finalized
-    # epochs retain their staged deltas while a model is behind.
-    eng2 = CdcEngine(spark, bronze, ck, num_salts=4)
-    with monkeypatch.context() as mp:
-        mp.setattr(engine_mod.shutil, "rmtree", lambda *a, **kw: None)
-        eng2.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
-    staging_root = os.path.join(ck.path, "_staging")
-    assert sorted(os.listdir(staging_root)) == ["e00000002", "e00000003"]
+    # the silver model applies epoch 1, then falls behind on 2-3
+    bronze, ck, staging_root = _bronze_with_retained_e2_e3(
+        spark, tmpdir_path, monkeypatch, models=[silver]
+    )
 
     # Attach a NEW delta-maintained gold with auto-bootstrap. Its
     # bootstrap is stamped with the last finalized epoch (3); the
@@ -113,6 +124,39 @@ def test_bootstrap_stamps_retained_staged_epochs(spark, tmpdir_path, monkeypatch
     )
     assert _rows(silver_t) == want_silver
     # staged dirs swept once every model has the epochs
+    assert os.listdir(staging_root) == []
+
+
+@pytest.mark.parametrize("model_sink", ["lake", "duckdb"])
+def test_bootstrap_stamps_retained_staged_epochs_on_every_model_table(
+    spark, tmpdir_path, monkeypatch, model_sink
+):
+    """The bootstrap stamp reaches every model table, SQL warehouses
+    included: a late model bootstrapped at epoch 3 while e2 and e3 are
+    retained must not have e2 replayed on top of its bootstrap (which
+    would regress its rows to e2's ``_ingest_epoch``)."""
+    bronze, ck, staging_root = _bronze_with_retained_e2_e3(spark, tmpdir_path, monkeypatch)
+    schema = T.StructType(list(SILVER_SCHEMA.fields) + [T.StructField("_ingest_epoch", T.LongType())])
+    late_t = make_warehouse(
+        spark, {"type": model_sink, "path": os.path.join(tmpdir_path, f"late.{model_sink}")},
+        schema, KEY_COLS,
+    )
+    late = SilverModel(
+        late_t,
+        lambda ups, e: ups.select(
+            "conv_id", "turn_idx", F.length("text").cast("int").alias("text_len"),
+            F.lit(e).cast("long").alias("_ingest_epoch"),
+        ),
+        name="late",
+    )
+    eng = CdcEngine(spark, bronze, ck, num_salts=4, silver_models=[late],
+                    bootstrap_if_behind=True)
+    eng.recover()
+
+    assert eng.bootstrap_log[0]["stamped_staged"] == [2, 3]
+    assert sorted(late_t.committed_epochs()) == [2, 3]
+    want = sorted(tuple(r) for r in late.transform(bronze.read(), 3).collect())
+    assert _rows(late_t) == want and len(want) > 0
     assert os.listdir(staging_root) == []
 
 

@@ -11,6 +11,7 @@ from etl_warehouse_agnostic_spark.engine import CdcEngine
 from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
 from etl_warehouse_agnostic_spark.lake.table import LakeTable
 from etl_warehouse_agnostic_spark.schemas import KEY_COLS, TRANSCRIPTS_SCHEMA_V1
+from etl_warehouse_agnostic_spark.sources.changes import ChangeStreamSource
 from etl_warehouse_agnostic_spark.sources.generator import generate_changes
 from etl_warehouse_agnostic_spark.streaming.stream_apply import StreamingCdcApply
 
@@ -168,6 +169,41 @@ def test_epoch_base_pinned_not_rederived(spark, tmpdir_path, stream_dir):
     assert (store.last_epoch() or 0) > 0  # streaming advanced the manifests
     s2 = StreamingCdcApply(eng, stream_dir, ckpt)
     assert s2.epoch_base == 0  # pinned, NOT last_epoch()
+
+
+def test_first_start_base_counts_the_epoch_recovery_heals(spark, tmpdir_path):
+    """A first start derives its epoch base after recovering the sink:
+    a batch epoch committed to the table but never finalized (its
+    manifest lost in a crash) is healed first, so the stream's first
+    micro-batch gets a fresh epoch id instead of reusing that one and
+    being skipped with its rows unapplied."""
+    full = os.path.join(tmpdir_path, "full")
+    tail = os.path.join(tmpdir_path, "tail")
+    generate_changes(spark, 3000, n_convs=50, turns_per_conv=8, seed=9) \
+        .coalesce(1).write.parquet(full)
+    chg = spark.read.parquet(full)
+    chg.where(F.col("lsn") > 1000).coalesce(1).write.parquet(tail)
+    table = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "t"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=8
+    )
+    store = ManifestStore(os.path.join(tmpdir_path, "ck"))
+    CdcEngine(spark, table, store).run(
+        ChangeStreamSource(spark, df=chg.where(F.col("lsn") <= 1000)), epoch_size=500
+    )
+    assert store.epochs() == [1, 2]
+    os.unlink(os.path.join(store.path, "epoch=00000002.json"))  # crash before finalize
+
+    eng = CdcEngine(spark, table, ManifestStore(store.path))
+    s = StreamingCdcApply(eng, tail, os.path.join(tmpdir_path, "stream_ckpt"))
+    assert s.epoch_base == 2
+    s.run_available()
+    assert max(store.epochs()) > 2
+    got = [
+        (r.conv_id, r.turn_idx, r.text)
+        for r in table.read().select("conv_id", "turn_idx", "text")
+        .orderBy("conv_id", "turn_idx").collect()
+    ]
+    assert got == oracle(full)
 
 
 def test_windowed_op_counts_stream_equals_batch(spark, tmpdir_path, stream_dir):
