@@ -355,7 +355,7 @@ def q_pipeline_health(spark, sf_dir):
     try:
         table = LakeTable.create(spark, os.path.join(root, "t"), schema, KEYS, num_buckets=8)
         ck = ManifestStore(os.path.join(root, "ck"))
-        eng = CdcEngine(spark, table, ck, num_salts=8)
+        eng = CdcEngine(spark, table, ck)
         eng.run(ChangeStreamSource(spark, df=chg), epoch_size=2000)
         health = pipeline_health(spark, ck, sla_hours=24.0)
         return health.select(
@@ -970,7 +970,7 @@ def q_warehouse_parity(spark, sf_dir):
                 schema, KEYS,
             )
             ck = ManifestStore(os.path.join(root, f"ck-{wtype}"))
-            eng = CdcEngine(spark, None, ck, num_salts=8)
+            eng = CdcEngine(spark, None, ck)
             src = ChangeStreamSource(spark, df=chg)
             results = eng.run_warehouse(wh, src, epoch_size=max(1000, n // 3))
             assert results and not any(r.skipped for r in results)
@@ -1180,7 +1180,7 @@ def q_silver_incremental(spark, sf_dir):
             ),
         ]
         ck = ManifestStore(os.path.join(root, "ck"))
-        eng = CdcEngine(spark, bronze, ck, num_salts=8, silver_models=models)
+        eng = CdcEngine(spark, bronze, ck, silver_models=models)
         src = ChangeStreamSource(spark, df=chg)
         results = eng.run(src, epoch_size=_SILVER_EPOCH_SIZE)
         assert len(results) >= 3, "need ≥3 epochs of genuine incremental maintenance"
@@ -1306,7 +1306,6 @@ def q_multi_source_converge(spark, sf_dir):
                     epoch_size=max(1000, n // 3),
                     # P8 gate on the reference-data-shaped source only
                     refresh_interval_hours=24.0 if name == "src_a" else None,
-                    engine_kwargs={"num_salts": 8},
                 )
             )
         out1 = MultiSourceRunner(spark, specs, os.path.join(root, "ck")).run_all()

@@ -24,6 +24,26 @@ import uuid
 from typing import Any
 
 
+def publish_json(payload: dict[str, Any], final_path: str) -> bool:
+    """Durably publish ``payload`` as the JSON file ``final_path``
+    unless that file exists: write a tmp file beside it, fsync it, then
+    hard-link it into place (a link never replaces a file, so exactly
+    one of several concurrent publishers wins). Returns whether this
+    call published; each caller decides what an existing file means."""
+    tmp = os.path.join(os.path.dirname(final_path), f"_tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump(payload, f, indent=1, default=str)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, final_path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
 class ManifestStore:
     def __init__(self, path: str):
         self.path = os.path.abspath(path)
@@ -62,17 +82,7 @@ class ManifestStore:
             return
         body = json.dumps(manifest, sort_keys=True, default=str)
         doc = {"manifest": manifest, "checksum": hashlib.md5(body.encode()).hexdigest()}
-        tmp = os.path.join(self.path, f"_tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(doc, f, indent=1, default=str)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            pass  # concurrent finalize of the same epoch: same content
-        finally:
-            os.unlink(tmp)
+        publish_json(doc, final)  # lost to a concurrent finalize: same content
 
     def last_offsets(self) -> dict[str, int]:
         """Per-source-partition max LSN as of the newest epoch."""

@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
+from etl_warehouse_agnostic_spark.lake.manifest import publish_json
 
 _BUCKET = "_bucket"  # physical layout column kept in data files
 _PB = "_pb"  # throwaway copy used only for partitionBy at write time
@@ -183,22 +184,13 @@ class MergeResult:
 
 
 def _atomic_write_json(payload: dict, final_path: str) -> None:
-    """tmp + fsync + hard-link publish (fails if final exists).
+    """Publish a snapshot file with :func:`publish_json`; an existing
+    one is a lost version race.
 
     Reference analog: watermark state atomic persistence — tmp write +
     fsync + md5 + rename (extractors/repsly/extractor.py:432-481)."""
-    d = os.path.dirname(final_path)
-    tmp = os.path.join(d, f"_tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(payload, f, indent=1, default=str)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, final_path)
-    except FileExistsError as e:
-        raise CommitConflict(final_path) from e
-    finally:
-        os.unlink(tmp)
+    if not publish_json(payload, final_path):
+        raise CommitConflict(final_path)
 
 
 class LakeTable:

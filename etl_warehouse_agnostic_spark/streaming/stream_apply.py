@@ -12,7 +12,7 @@ Design notes (scale):
   sinks (Structured Streaming has no native upsert sink); each
   micro-batch becomes one engine epoch, applied to one sink — the
   ``warehouse`` given, else the engine's table — through
-  ``apply_epoch_warehouse``, so exactly-once holds even though
+  ``apply_epoch(..., sink=)``, so exactly-once holds even though
   foreachBatch itself is at-least-once: a replayed batch id is
   detected via the epoch-id idempotence check and skipped.
 - ``start`` recovers the sink before the query starts, like the batch
@@ -40,11 +40,11 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 
 from etl_warehouse_agnostic_spark.engine import CdcEngine
+from etl_warehouse_agnostic_spark.lake.manifest import publish_json
 
 
 class StreamingCdcApply:
@@ -76,32 +76,23 @@ class StreamingCdcApply:
     def _pin_epoch_base(self, explicit: int | None) -> int:
         os.makedirs(self.checkpoint_location, exist_ok=True)
         pin = os.path.join(self.checkpoint_location, "epoch_base.json")
-        if os.path.exists(pin):
-            with open(pin) as f:
-                return int(json.load(f)["epoch_base"])
-        base = explicit
-        if base is None:
-            # Recover first, so an epoch recovery heals is counted in the
-            # base and the first batch does not reuse (and skip) its id.
-            self.engine.recover_warehouse(self.sink)
-            base = self.engine.checkpoints.last_epoch() or 0
-        tmp = os.path.join(self.checkpoint_location, f"_tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump({"epoch_base": base}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, pin)  # first starter wins; losers re-read
-        except FileExistsError:
-            with open(pin) as f:
-                base = int(json.load(f)["epoch_base"])
-        finally:
-            os.unlink(tmp)
-        return base
+        if not os.path.exists(pin):
+            base = explicit
+            if base is None:
+                # Recover first, so an epoch recovery heals is counted in
+                # the base and the first batch does not reuse (and skip)
+                # its id.
+                self.engine.recover(sink=self.sink)
+                base = self.engine.checkpoints.last_epoch() or 0
+            if publish_json({"epoch_base": base}, pin):
+                return base
+        # an earlier start's pin, or a concurrent first starter's that won
+        with open(pin) as f:
+            return int(json.load(f)["epoch_base"])
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         epoch = self.epoch_base + batch_id + 1
-        self.engine.apply_epoch_warehouse(self.sink, batch_df, epoch)
+        self.engine.apply_epoch(batch_df, epoch, sink=self.sink)
 
     def start(
         self,
@@ -119,7 +110,7 @@ class StreamingCdcApply:
         batch id maps to the same epoch id and the epoch ledger makes
         it a no-op (proven by tests/test_streaming.py kill-restart).
         Recovery runs first, before any batch is planned."""
-        self.engine.recover_warehouse(self.sink)
+        self.engine.recover(sink=self.sink)
         reader = self.engine.spark.readStream
         if schema is not None:
             reader = reader.schema(schema)

@@ -33,8 +33,6 @@ def main() -> int:
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--epochs", type=int, default=4)
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--num-salts", type=int, default=16)
-    ap.add_argument("--dedup", choices=["salted", "window"], default="window")
     ap.add_argument(
         "--partition-by-day", action="store_true",
         help="add the days(ts) time dimension to the table layout "
@@ -189,7 +187,6 @@ def main() -> int:
             ]
         eng = CdcEngine(
             spark, table, ManifestStore(ckpt_dir),
-            dedup_method=args.dedup, num_salts=args.num_salts,
             source_partitions=args.cores, silver_models=models,
         )
         src = ChangeStreamSource(spark, path=changes_path)
@@ -219,8 +216,6 @@ def main() -> int:
             "cores": args.cores,
             "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
             "buckets": args.buckets,
-            "num_salts": args.num_salts,
-            "dedup": args.dedup,
             "rows_upserted": sum(r.rows_upserted for r in results),
             "rows_deleted": sum(r.rows_deleted for r in results),
             "bytes_written": sum(r.bytes_written for r in results),

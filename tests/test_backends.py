@@ -138,7 +138,7 @@ def test_engine_tail_loop_drives_warehouse_backend(spark, tmpdir_path):
         spark, os.path.join(tmpdir_path, "lake"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
     )
     lake_eng = CdcEngine(
-        spark, lake_t, ManifestStore(os.path.join(tmpdir_path, "ck-lake")), num_salts=4
+        spark, lake_t, ManifestStore(os.path.join(tmpdir_path, "ck-lake"))
     )
     lake_eng.run(src(), epoch_size=1500)
 
@@ -147,8 +147,8 @@ def test_engine_tail_loop_drives_warehouse_backend(spark, tmpdir_path):
         spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck-duck"))
-    eng = CdcEngine(spark, None, ck, num_salts=4)
-    results = eng.run_warehouse(duck, src(), epoch_size=1500)
+    eng = CdcEngine(spark, None, ck)
+    results = eng.run(src(), epoch_size=1500, sink=duck)
     assert len(results) >= 2 and not any(r.skipped for r in results)
 
     cols = ["conv_id", "turn_idx", "role", "text", "tool"]
@@ -161,14 +161,14 @@ def test_engine_tail_loop_drives_warehouse_backend(spark, tmpdir_path):
     assert ck.high_water_lsn() == chg.agg(F.max("lsn")).first()[0]
 
     # resume: nothing new → no epochs; replaying a finalized range is a no-op
-    again = eng.run_warehouse(duck, src(), epoch_size=1500)
+    again = eng.run(src(), epoch_size=1500, sink=duck)
     assert again == []
     assert state(duck.read()) == state(lake_t.read())
 
 
 def test_run_warehouse_on_lake_table_equals_run(spark, tmpdir_path):
     """One lake path: the lake table ``make_warehouse`` returns, driven
-    through ``run_warehouse``, takes exactly the ``run`` path — bucketed
+    through ``run(..., sink=)``, takes exactly the ``run`` path — bucketed
     stage, census, the whole manifest in every snapshot summary — so it
     reaches ``run``'s state with per-bucket manifest offsets, and a lost
     manifest heals from the summary with per-bucket offsets too."""
@@ -184,14 +184,14 @@ def test_run_warehouse_on_lake_table_equals_run(spark, tmpdir_path):
     )
     assert isinstance(t1, LakeTable)
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, ck, num_salts=4)
-    assert len(eng.run_warehouse(t1, src(), epoch_size=1000)) == 3
+    eng = CdcEngine(spark, None, ck)
+    assert len(eng.run(src(), epoch_size=1000, sink=t1)) == 3
 
     t2 = LakeTable.create(
         spark, os.path.join(tmpdir_path, "lake"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
     )
     ck2 = ManifestStore(os.path.join(tmpdir_path, "ck2"))
-    CdcEngine(spark, t2, ck2, num_salts=4).run(src(), epoch_size=1000)
+    CdcEngine(spark, t2, ck2).run(src(), epoch_size=1000)
 
     assert _final_state(t1.read()) == _final_state(t2.read())
     for store, table in ((ck, t1), (ck2, t2)):
@@ -202,7 +202,7 @@ def test_run_warehouse_on_lake_table_equals_run(spark, tmpdir_path):
 
     # crash window: the last epoch committed but its manifest was lost
     os.unlink(os.path.join(ck.path, "epoch=00000003.json"))
-    assert eng.run_warehouse(t1, src(), epoch_size=1000) == []
+    assert eng.run(src(), epoch_size=1000, sink=t1) == []
     healed = ck.get(3)
     assert healed["metrics"].get("healed") is True
     assert healed["offsets"] and set(healed["offsets"]) <= buckets
@@ -221,8 +221,8 @@ def test_warehouse_loop_heals_crash_between_merge_and_manifest(spark, tmpdir_pat
         spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, ck, num_salts=4)
-    eng.run_warehouse(duck, ChangeStreamSource(spark, df=chg), epoch_size=800)
+    eng = CdcEngine(spark, None, ck)
+    eng.run(ChangeStreamSource(spark, df=chg), epoch_size=800, sink=duck)
     state_before = _final_state(duck.read())
     last = ck.last_epoch()
     assert last is not None and last >= 2
@@ -235,7 +235,7 @@ def test_warehouse_loop_heals_crash_between_merge_and_manifest(spark, tmpdir_pat
 
     # upfront recovery heals the manifest from the ledger BEFORE the
     # loop plans anything; with no new LSNs the loop then does nothing
-    results = eng.run_warehouse(duck, ChangeStreamSource(spark, df=chg), epoch_size=800)
+    results = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=800, sink=duck)
     assert results == []
     assert ck.is_finalized(last)
     assert ck.get(last)["metrics"].get("healed") is True
@@ -280,8 +280,8 @@ def test_sqlite_engine_tail_loop_with_evolution_and_replay(spark, tmpdir_path):
         spark, os.path.join(tmpdir_path, "wh.sqlite"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, ck, num_salts=4)
-    results = eng.run_warehouse(lite, ChangeStreamSource(spark, df=chg), epoch_size=1200)
+    eng = CdcEngine(spark, None, ck)
+    results = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=1200, sink=lite)
     assert len(results) >= 2 and not any(r.skipped for r in results)
     assert "tool" in lite.read().columns
 
@@ -289,15 +289,15 @@ def test_sqlite_engine_tail_loop_with_evolution_and_replay(spark, tmpdir_path):
     lake_t = LakeTable.create(
         spark, os.path.join(tmpdir_path, "lake"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
     )
-    CdcEngine(spark, lake_t, ManifestStore(os.path.join(tmpdir_path, "ck-lake")),
-              num_salts=4).run(ChangeStreamSource(spark, df=chg), epoch_size=1200)
+    CdcEngine(spark, lake_t, ManifestStore(os.path.join(tmpdir_path, "ck-lake"))).run(
+        ChangeStreamSource(spark, df=chg), epoch_size=1200)
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
     def state(df):
         return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
 
     assert state(lite.read()) == state(lake_t.read())
-    assert eng.run_warehouse(lite, ChangeStreamSource(spark, df=chg), epoch_size=1200) == []
+    assert eng.run(ChangeStreamSource(spark, df=chg), epoch_size=1200, sink=lite) == []
 
 
 def test_warehouse_path_never_materializes_rows_on_driver(spark, tmpdir_path, monkeypatch):
@@ -324,8 +324,8 @@ def test_warehouse_path_never_materializes_rows_on_driver(spark, tmpdir_path, mo
             TRANSCRIPTS_SCHEMA_V1, KEY_COLS,
         )
         ck = ManifestStore(os.path.join(tmpdir_path, f"ck-{t}"))
-        eng = CdcEngine(spark, None, ck, num_salts=4)
-        results = eng.run_warehouse(wh, ChangeStreamSource(spark, df=chg), epoch_size=900)
+        eng = CdcEngine(spark, None, ck)
+        results = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=900, sink=wh)
         assert len(results) >= 2
         assert wh.read().count() > 0  # read-back is also driver-free
 
@@ -355,8 +355,8 @@ def test_warehouse_heal_of_truncated_epoch_does_not_lose_new_lsns(spark, tmpdir_
         """A fresh engine (a restart) tailing ``df`` into ``target``."""
         src = ChangeStreamSource(spark, df=df)
         if sink == "duckdb":
-            return CdcEngine(spark, None, ck, num_salts=4).run_warehouse(target, src, epoch_size=1000)
-        return CdcEngine(spark, target, ck, num_salts=4).run(src, epoch_size=1000)
+            return CdcEngine(spark, None, ck).run(src, epoch_size=1000, sink=target)
+        return CdcEngine(spark, target, ck).run(src, epoch_size=1000)
 
     target = make("sink")
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
@@ -426,10 +426,9 @@ def test_bounded_warehouse_loop_converges_and_heals(spark, tmpdir_path):
         spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, ck, num_salts=4)
-    results = eng.run_warehouse_bounded(
-        duck, ChangeStreamSource(spark, df=old), max_rows_per_epoch=700, granules=64
-    )
+    eng = CdcEngine(spark, None, ck)
+    results = eng.run(ChangeStreamSource(spark, df=old), max_rows_per_epoch=700, granules=64,
+                      sink=duck)
     assert len(results) >= 2 and not any(r.skipped for r in results)
     # every planned epoch stayed under the row cap (modulo one dense granule)
     assert all(r.rows_upserted <= 700 for r in results)
@@ -437,9 +436,7 @@ def test_bounded_warehouse_loop_converges_and_heals(spark, tmpdir_path):
     # crash window on the newest epoch, then the source grows
     last = ck.last_epoch()
     os.unlink(os.path.join(ck.path, f"epoch={last:08d}.json"))
-    eng.run_warehouse_bounded(
-        duck, ChangeStreamSource(spark, df=chg), max_rows_per_epoch=700, granules=64
-    )
+    eng.run(ChangeStreamSource(spark, df=chg), max_rows_per_epoch=700, granules=64, sink=duck)
     assert ck.get(last)["metrics"].get("healed") is True
     assert ck.high_water_lsn() == 3000
 
@@ -447,8 +444,8 @@ def test_bounded_warehouse_loop_converges_and_heals(spark, tmpdir_path):
     duck2 = DuckBackend.create(
         spark, os.path.join(tmpdir_path, "wh2.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
-    CdcEngine(spark, None, ManifestStore(os.path.join(tmpdir_path, "ck2")),
-              num_salts=4).run_warehouse(duck2, ChangeStreamSource(spark, df=chg), epoch_size=900)
+    CdcEngine(spark, None, ManifestStore(os.path.join(tmpdir_path, "ck2"))).run(
+        ChangeStreamSource(spark, df=chg), epoch_size=900, sink=duck2)
     assert _final_state(duck.read()) == _final_state(duck2.read())
 
 
@@ -491,8 +488,8 @@ def test_recover_warehouse_skips_null_lsn_lo_ledger_rows(spark, tmpdir_path, wty
     wh._con.execute("UPDATE _epochs SET lsn_hi = 500 WHERE epoch_id = 1")
 
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, ck, num_salts=4)
-    assert eng.recover_warehouse(wh) == []  # NULL lsn_lo → not healed upfront
+    eng = CdcEngine(spark, None, ck)
+    assert eng.recover(sink=wh) == []  # NULL lsn_lo → not healed upfront
     assert not ck.is_finalized(1)
 
     # inline replay heal: the loop's computed lo survives, recorded hi wins
@@ -501,7 +498,7 @@ def test_recover_warehouse_skips_null_lsn_lo_ledger_rows(spark, tmpdir_path, wty
         "lsn long, op string, conv_id string, turn_idx int, "
         "role string, text string, ts timestamp",
     )
-    res = eng.apply_epoch_warehouse(wh, empty_changes, epoch=1, lsn_range=(0, 900))
+    res = eng.apply_epoch(empty_changes, epoch=1, lsn_range=(0, 900), sink=wh)
     assert res.skipped
     m = ck.get(1)
     assert m["lineage"]["lsn_range"] == [0, 500]

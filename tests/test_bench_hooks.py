@@ -1,10 +1,11 @@
 """The benchmark (perfbench/) times and traces the engine from outside,
 through attributes it looks up by name: its tracer wraps engine and
-layer methods on their classes, and its workloads time each epoch with
-an instance-level ``apply_epoch`` / ``apply_epoch_warehouse`` override
-that the tail loop must call through ``self``. A rename, or a tail loop
-that stops passing ``lsn_range`` by keyword, would silently stop the
-benchmark measuring; this guard fails first."""
+layer methods on their classes (the ``*_warehouse`` delegations too),
+and its workloads time each epoch with an instance-level
+``apply_epoch`` override that the tail loop must call through ``self``
+for every sink. A rename, or a tail loop that stops passing
+``lsn_range`` by keyword, would silently stop the benchmark measuring;
+this guard fails first."""
 
 import os
 
@@ -22,20 +23,21 @@ from etl_warehouse_agnostic_spark.sources.changes import ChangeStreamSource
 from etl_warehouse_agnostic_spark.sources.generator import generate_changes
 from perfbench.tracing import Tracer, instrument
 
+# every engine attribute perfbench wraps by name
 ENGINE_HOOKS = ("apply_epoch", "apply_epoch_warehouse", "recover", "recover_warehouse",
                 "_apply_silver")
 EPOCH_SIZE = 600
 
 
-def _time_epochs(eng, attr, calls):
+def _time_epochs(eng, calls):
     """The workloads' per-epoch timer: an instance attribute that calls
     the class method (so a class-level tracer wrapper still applies)."""
 
     def timed(*args, **kwargs):
         calls.append(args[-1])
-        return getattr(type(eng), attr)(eng, *args, **kwargs)
+        return type(eng).apply_epoch(eng, *args, **kwargs)
 
-    setattr(eng, attr, timed)
+    eng.apply_epoch = timed
 
 
 def test_bench_hooks_trace_one_span_per_epoch(spark, tmpdir_path):
@@ -51,18 +53,18 @@ def test_bench_hooks_trace_one_span_per_epoch(spark, tmpdir_path):
 
         table = LakeTable.create(spark, os.path.join(tmpdir_path, "t"),
                                  TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4)
-        lake = CdcEngine(spark, table, ManifestStore(os.path.join(tmpdir_path, "ck")),
-                         num_salts=4)
+        lake = CdcEngine(spark, table, ManifestStore(os.path.join(tmpdir_path, "ck")))
         lake_calls: list[int] = []
-        _time_epochs(lake, "apply_epoch", lake_calls)
+        _time_epochs(lake, lake_calls)
         lake_results = lake.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
 
         duck = DuckBackend.create(spark, os.path.join(tmpdir_path, "wh.duckdb"),
                                   TRANSCRIPTS_SCHEMA_V1, KEY_COLS)
-        wh = CdcEngine(spark, None, ManifestStore(os.path.join(tmpdir_path, "ck-wh")),
-                       num_salts=4)
+        wh = CdcEngine(spark, None, ManifestStore(os.path.join(tmpdir_path, "ck-wh")))
         wh_calls: list[int] = []
-        _time_epochs(wh, "apply_epoch_warehouse", wh_calls)
+        _time_epochs(wh, wh_calls)
+        # the warehouse workload's call: the delegation reaches the same
+        # apply_epoch override and the same recover span as run()
         wh_results = wh.run_warehouse(duck, ChangeStreamSource(spark, df=chg),
                                       epoch_size=EPOCH_SIZE)
     finally:
@@ -134,7 +136,7 @@ def test_bench_hooks_trace_each_model_once_per_epoch(spark, tmpdir_path):
         row_groups=lambda rows: rows.withColumn("day", F.date_format("ts", "yyyy-MM-dd")),
     )
     eng = CdcEngine(spark, table, ManifestStore(os.path.join(tmpdir_path, "ck")),
-                    num_salts=4, silver_models=[silver, gold, day])
+                    silver_models=[silver, gold, day])
     # each class defines its own, unwrapped apply_epoch: one inherited
     # from another model class would be wrapped twice, and a restore
     # would leave the inner wrapper behind on it

@@ -54,7 +54,7 @@ def _mk(spark, tmpdir_path, group_cols, gold_schema, sums, **kw):
     gold = DeltaAggregateModel(gold_t, bronze, group_cols, sums, name="delta_gold", **kw)
     eng = CdcEngine(
         spark, bronze, ManifestStore(os.path.join(tmpdir_path, "ck")),
-        num_salts=4, silver_models=[gold],
+        silver_models=[gold],
     )
     return bronze, gold_t, gold, eng
 
@@ -268,7 +268,7 @@ def test_delta_gold_chained_on_silver(spark, tmpdir_path):
     assert gold.bronze is silver_t
     eng = CdcEngine(
         spark, bronze, ManifestStore(os.path.join(tmpdir_path, "ck")),
-        num_salts=4, silver_models=[gold, silver],  # topo order fixes this
+        silver_models=[gold, silver],  # topo order fixes this
     )
     eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
     want = sorted(tuple(r) for r in gold.aggregate(silver_t.read()).collect())
@@ -325,14 +325,14 @@ def test_delta_gold_bootstrap_late_attach(spark, tmpdir_path):
         spark, os.path.join(tmpdir_path, "bronze"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng0 = CdcEngine(spark, bronze, ck, num_salts=4)
+    eng0 = CdcEngine(spark, bronze, ck)
     assert len(eng0.run(ChangeStreamSource(spark, df=half), epoch_size=EPOCH_SIZE)) == 2
 
     gold_t = LakeTable.create(
         spark, os.path.join(tmpdir_path, "gold"), CONV_GOLD_SCHEMA, ["conv_id"], num_buckets=4
     )
     gold = DeltaAggregateModel(gold_t, bronze, ["conv_id"], {"chars": F.length("text")})
-    eng = CdcEngine(spark, bronze, ck, num_salts=4, silver_models=[gold])
+    eng = CdcEngine(spark, bronze, ck, silver_models=[gold])
     with pytest.raises(ValueError, match="bootstrap"):
         eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
 

@@ -169,29 +169,30 @@ def test_manifest_offsets_and_metrics(spark, tmpdir_path, changes_path):
     assert results[-1].snapshot_version == eng.table.latest_version()
 
 
-def test_dedup_methods_agree_end_to_end(spark, tmpdir_path, changes_path):
-    roots = [os.path.join(tmpdir_path, "a"), os.path.join(tmpdir_path, "b")]
-    states = []
-    for root, method in zip(roots, ["window", "salted"]):
-        os.makedirs(root)
-        eng = mk_engine(spark, root, dedup_method=method)
-        eng.run(ChangeStreamSource(spark, path=changes_path), epoch_size=1500)
-        states.append(table_state(eng.table))
-    assert states[0] == states[1]
-
-
 def test_run_bounded_matches_oracle_and_caps_epochs(spark, tmpdir_path, changes_path):
-    """Row-bounded tail loop (S5-in-engine): every epoch reads ≤ the cap
-    and the final state equals the full-replay oracle."""
+    """Row-bounded tail loop (S5-in-engine): every epoch reads ≤ the cap,
+    ``max_epochs`` bounds a call as it does the LSN-span plan, and the
+    final state equals the full-replay oracle."""
     eng = mk_engine(spark, tmpdir_path)
     src = ChangeStreamSource(spark, path=changes_path)
-    results = eng.run_bounded(src, max_rows_per_epoch=900, granules=256)
+    results = eng.run(src, max_rows_per_epoch=900, granules=256, max_epochs=1)
+    assert len(results) == 1
+    results += eng.run(src, max_rows_per_epoch=900, granules=256)
     assert len(results) >= 4
     assert all(r.rows_read <= 900 for r in results)
     assert sum(r.rows_read for r in results) == N_EVENTS
     assert table_state(eng.table) == [tuple(r) for r in oracle_final_state(changes_path)]
     # resume is a no-op once drained
-    assert eng.run_bounded(src, max_rows_per_epoch=900) == []
+    assert eng.run(src, max_rows_per_epoch=900) == []
+
+
+def test_run_takes_exactly_one_epoch_bound(spark, tmpdir_path, changes_path):
+    eng = mk_engine(spark, tmpdir_path)
+    src = ChangeStreamSource(spark, path=changes_path)
+    for bounds in ({}, {"epoch_size": 1000, "max_rows_per_epoch": 900}):
+        with pytest.raises(ValueError, match="exactly one"):
+            eng.run(src, **bounds)
+    assert eng.checkpoints.last_epoch() is None
 
 
 def test_engine_on_day_partitioned_table_converges_and_prunes(spark, tmpdir_path, changes_path):
@@ -232,11 +233,11 @@ def test_warehouse_loop_respects_schema_registry(spark, tmpdir_path, changes_pat
         spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, ck, num_salts=4, schema_registry=REGISTRY)
+    eng = CdcEngine(spark, None, ck, schema_registry=REGISTRY)
     src = ChangeStreamSource(spark, path=changes_path)
-    eng.run_warehouse(duck, src, epoch_size=EVOLUTION_LSN, max_epochs=1)
+    eng.run(src, epoch_size=EVOLUTION_LSN, max_epochs=1, sink=duck)
     assert "tool" not in duck.schema.names  # no v2 writer seen yet
-    eng.run_warehouse(duck, src, epoch_size=N_EVENTS)
+    eng.run(src, epoch_size=N_EVENTS, sink=duck)
     assert "tool" in duck.schema.names  # ALTER fired once v2 arrived
     got = sorted(
         (r.conv_id, r.turn_idx, r.role, r.text)

@@ -76,7 +76,7 @@ def _dag(spark, tmpdir_path):
         row_groups=lambda rows: rows.withColumn("day", F.date_format("ts", "yyyy-MM-dd")),
     )
     eng = CdcEngine(spark, bronze, ManifestStore(os.path.join(tmpdir_path, "ck")),
-                    num_salts=4, silver_models=[silver, gold, day])
+                    silver_models=[silver, gold, day])
     return bronze, (silver, gold, day), eng
 
 

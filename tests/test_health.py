@@ -40,12 +40,12 @@ def test_health_frame_matches_engine_run(spark, tmpdir_path, sink):
         table = LakeTable.create(
             spark, os.path.join(tmpdir_path, "t"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
         )
-        results = CdcEngine(spark, table, ck, num_salts=4).run(src, epoch_size=800)
+        results = CdcEngine(spark, table, ck).run(src, epoch_size=800)
     else:
         duck = DuckBackend.create(
             spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
         )
-        results = CdcEngine(spark, None, ck, num_salts=4).run_warehouse(duck, src, epoch_size=800)
+        results = CdcEngine(spark, None, ck).run(src, epoch_size=800, sink=duck)
 
     rows = {r.epoch: r for r in pipeline_health(spark, ck).collect()}
     assert len(rows) == len(results)
@@ -92,7 +92,7 @@ def test_table_health_census_matches_snapshot_and_compaction_rule(spark, tmpdir_
     )
     table.max_records_per_file = 50  # force multi-file buckets
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    CdcEngine(spark, table, ck, num_salts=4).run(
+    CdcEngine(spark, table, ck).run(
         ChangeStreamSource(spark, df=chg), epoch_size=700
     )
 

@@ -317,7 +317,7 @@ def test_tail_loop_auto_compaction_bounds_file_count(spark, tmpdir_path):
         t.max_records_per_file = 64  # force many tiny files per epoch
         eng = CdcEngine(
             spark, t, ManifestStore(os.path.join(tmpdir_path, f"ck-{name}")),
-            num_salts=4, maintenance_every=maintenance_every,
+            maintenance_every=maintenance_every,
         )
         res = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=500)
         assert len(res) == 10
@@ -382,7 +382,7 @@ def test_tail_loop_auto_compaction_covers_model_tables(spark, tmpdir_path):
         s.max_records_per_file = 64
         eng = CdcEngine(
             spark, t, ManifestStore(os.path.join(tmpdir_path, f"ck-{name}")),
-            num_salts=4, maintenance_every=maintenance_every,
+            maintenance_every=maintenance_every,
             silver_models=[SilverModel(s, transform, name="turns_silver")],
         )
         assert len(eng.run(ChangeStreamSource(spark, df=chg), epoch_size=500)) == 10
@@ -444,10 +444,10 @@ def test_warehouse_path_auto_compaction_covers_lake_model_tables(spark, tmpdir_p
         s.max_records_per_file = 64
         eng = CdcEngine(
             spark, None, ManifestStore(os.path.join(tmpdir_path, f"ck-{name}")),
-            num_salts=4, maintenance_every=maintenance_every,
+            maintenance_every=maintenance_every,
             silver_models=[SilverModel(s, transform, name="turns_silver")],
         )
-        res = eng.run_warehouse(duck, ChangeStreamSource(spark, df=chg), epoch_size=500)
+        res = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=500, sink=duck)
         assert len(res) == 10
         duck.close()
         return s, eng

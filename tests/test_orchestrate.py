@@ -41,7 +41,7 @@ def _mk(spark, tmpdir_path, name, chg, deps=(), epoch_size=2000):
     return SourceSpec(
         name=name, source=ChangeStreamSource(spark, df=chg), table=t,
         depends_on=list(deps), epoch_size=epoch_size,
-        engine_kwargs={"num_salts": 4, "source_partitions": 8},
+        engine_kwargs={"source_partitions": 8},
     )
 
 
@@ -71,7 +71,7 @@ def test_two_source_run_converges_and_namespaces_are_isolated(spark, tmpdir_path
     ]
     for s in base:
         eng = CdcEngine(spark, s.table, ManifestStore(os.path.join(seq_root, "ck", s.name)),
-                        source_name=s.name, num_salts=4, source_partitions=8)
+                        source_name=s.name, source_partitions=8)
         eng.run(s.source, epoch_size=2000)
 
     def state(t):
@@ -104,7 +104,7 @@ def test_dependency_failure_gates_dependents(spark, tmpdir_path):
     )
     specs = [
         SourceSpec(name="bad", source=ExplodingSource(spark, df=chg), table=bad_table,
-                   epoch_size=1000, engine_kwargs={"num_salts": 2}),
+                   epoch_size=1000),
         _mk(spark, tmpdir_path, "child", chg, deps=["bad"]),
         _mk(spark, tmpdir_path, "indep", chg),
     ]

@@ -174,7 +174,7 @@ def test_asof_join_matches_python_model(spark, lefts, rights):
     epoch_size=st.integers(1, 31),
 )
 def test_warehouse_loop_random_epochs_converge(spark, tmp_path_factory, events, epoch_size):
-    """run_warehouse over arbitrary event interleavings and epoch sizes
+    """The warehouse tail loop over arbitrary event interleavings and epoch sizes
     must reach exactly the python-oracle state (same invariant the lake
     loop holds) — epoch boundaries may never change the answer."""
     from etl_warehouse_agnostic_spark.lake.backends import DuckBackend
@@ -190,8 +190,8 @@ def test_warehouse_loop_random_epochs_converge(spark, tmp_path_factory, events, 
     duck = DuckBackend.create(
         spark, os.path.join(root, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
-    eng = CdcEngine(spark, None, ManifestStore(os.path.join(root, "ck")), num_salts=2)
-    eng.run_warehouse(duck, ChangeStreamSource(spark, df=df), epoch_size=epoch_size)
+    eng = CdcEngine(spark, None, ManifestStore(os.path.join(root, "ck")))
+    eng.run(ChangeStreamSource(spark, df=df), epoch_size=epoch_size, sink=duck)
     got = {
         (r.conv_id, r.turn_idx): r.text
         for r in duck.read().select("conv_id", "turn_idx", "text").collect()
@@ -234,14 +234,14 @@ def test_warehouse_crash_heal_never_loses_events(
         spark, os.path.join(root, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
     store = ManifestStore(os.path.join(root, "ck"))
-    eng = CdcEngine(spark, None, store, num_salts=2)
-    eng.run_warehouse(duck, ChangeStreamSource(spark, df=prefix), epoch_size=epoch_size)
+    eng = CdcEngine(spark, None, store)
+    eng.run(ChangeStreamSource(spark, df=prefix), epoch_size=epoch_size, sink=duck)
 
     last = store.last_epoch()
     if last is not None:  # crash window on the newest epoch
         os.unlink(os.path.join(store.path, f"epoch={last:08d}.json"))
 
-    eng.run_warehouse(duck, ChangeStreamSource(spark, df=df), epoch_size=epoch_size)
+    eng.run(ChangeStreamSource(spark, df=df), epoch_size=epoch_size, sink=duck)
     got = {
         (r.conv_id, r.turn_idx): r.text
         for r in duck.read().select("conv_id", "turn_idx", "text").collect()

@@ -8,8 +8,9 @@
    layout column into a chained model's input (wrong modulus would
    silently mis-prune the child's snapshot reads; delete rows carry no
    bucket at all).
-3. ``_maybe_maintain`` must not re-fire compaction when the non-skipped
-   epoch count has not advanced past the last firing multiple.
+3. The maintenance cadence counts applied epochs over the engine's
+   life: it must not fire without a newly applied epoch, and must keep
+   counting across ``run`` calls.
 """
 
 import os
@@ -63,12 +64,12 @@ def _bronze_with_retained_e2_e3(spark, tmpdir_path, monkeypatch, models=()):
         spark, os.path.join(tmpdir_path, "bronze"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    CdcEngine(spark, bronze, ck, num_salts=4, silver_models=list(models)).run(
+    CdcEngine(spark, bronze, ck, silver_models=list(models)).run(
         ChangeStreamSource(spark, df=chg.where(F.col("lsn") <= 1000)), epoch_size=EPOCH_SIZE
     )
     with monkeypatch.context() as mp:
         mp.setattr(engine_mod.shutil, "rmtree", lambda *a, **kw: None)
-        CdcEngine(spark, bronze, ck, num_salts=4).run(
+        CdcEngine(spark, bronze, ck).run(
             ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE
         )
     staging_root = os.path.join(ck.path, "_staging")
@@ -108,7 +109,7 @@ def test_bootstrap_stamps_retained_staged_epochs(spark, tmpdir_path, monkeypatch
     )
     gold = DeltaAggregateModel(gold_t, bronze, ["conv_id"], {"chars": F.length("text")})
     eng3 = CdcEngine(
-        spark, bronze, ck, num_salts=4, silver_models=[silver, gold],
+        spark, bronze, ck, silver_models=[silver, gold],
         bootstrap_if_behind=True,
     )
     eng3.recover()
@@ -149,7 +150,7 @@ def test_bootstrap_stamps_retained_staged_epochs_on_every_model_table(
         ),
         name="late",
     )
-    eng = CdcEngine(spark, bronze, ck, num_salts=4, silver_models=[late],
+    eng = CdcEngine(spark, bronze, ck, silver_models=[late],
                     bootstrap_if_behind=True)
     eng.recover()
 
@@ -242,7 +243,7 @@ def test_concurrent_model_chains_match_sequential_truth(
     roll = DeltaAggregateModel(roll_t, bronze, ["conv_id"], {"chars": F.length("text")}, name="roll")
     eng = CdcEngine(
         spark, bronze, ManifestStore(os.path.join(tmpdir_path, "ck")),
-        num_salts=4, silver_models=[silver, gold, roll],
+        silver_models=[silver, gold, roll],
     )
     results = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
     assert all(set(r.model_wall_ms) == {"lens", "gold", "roll"} for r in results if not r.skipped)
@@ -296,13 +297,32 @@ def test_maintenance_does_not_refire_without_new_epochs(spark, tmpdir_path):
         spark, os.path.join(tmpdir_path, "bronze"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
     )
     eng = CdcEngine(
-        spark, bronze, ManifestStore(os.path.join(tmpdir_path, "ck")),
-        num_salts=4, maintenance_every=2,
+        spark, bronze, ManifestStore(os.path.join(tmpdir_path, "ck")), maintenance_every=2,
     )
-    eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
-    fired = len(eng.maintenance_log)
-    assert fired >= 1
-    # a replayed (skipped) epoch leaves the non-skipped count at the
-    # same multiple — the hook must not fire again
-    eng._maybe_maintain(bronze, 2)
-    assert len(eng.maintenance_log) == fired
+    src = ChangeStreamSource(spark, df=chg)
+    assert len(eng.run(src, epoch_size=EPOCH_SIZE)) == 2
+    assert [r["table"] for r in eng.maintenance_log] == ["bronze"]
+    # a rerun over the drained source applies no epoch, so the count
+    # stays at the multiple it fired on and nothing fires again
+    assert eng.run(src, epoch_size=EPOCH_SIZE) == []
+    assert len(eng.maintenance_log) == 1
+
+
+def test_maintenance_cadence_counts_across_run_calls(spark, tmpdir_path):
+    """A scheduled deployment drives one engine with one short ``run``
+    per cycle: the cadence counts applied epochs across the calls, so
+    four single-epoch calls at ``maintenance_every=2`` compact twice."""
+    chg = generate_changes(spark, 4 * EPOCH_SIZE, n_convs=20, turns_per_conv=8,
+                           seed=47).localCheckpoint()
+    bronze = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "bronze"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
+    )
+    eng = CdcEngine(
+        spark, bronze, ManifestStore(os.path.join(tmpdir_path, "ck")), maintenance_every=2,
+    )
+    src = ChangeStreamSource(spark, df=chg)
+    for _ in range(4):
+        assert len(eng.run(src, epoch_size=EPOCH_SIZE, max_epochs=1)) == 1
+    assert [(r["table"], r["after_epoch"]) for r in eng.maintenance_log] == [
+        ("bronze", 2), ("bronze", 4)
+    ]

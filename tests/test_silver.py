@@ -71,7 +71,7 @@ def _setup(spark, root, transform=_transform):
     )
     model = SilverModel(silver, transform, name="turns_silver")
     ck = ManifestStore(os.path.join(root, "ck"))
-    eng = CdcEngine(spark, bronze, ck, num_salts=4, silver_models=[model])
+    eng = CdcEngine(spark, bronze, ck, silver_models=[model])
     return bronze, silver, model, eng
 
 
@@ -172,7 +172,7 @@ def test_gold_aggregate_incremental_equals_full_recompute(spark, tmpdir_path):
     )
     gold = AggregateModel(gold_t, bronze, ["conv_id"], _gold_agg, name="conv_rollup")
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, bronze, ck, num_salts=4, silver_models=[gold])
+    eng = CdcEngine(spark, bronze, ck, silver_models=[gold])
     results = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
     assert len(results) == 4
 
@@ -215,7 +215,7 @@ def test_gold_group_vanish_deletes_rollup_row(spark, tmpdir_path):
     gold = AggregateModel(gold_t, bronze, ["conv_id"], _gold_agg)
     eng = CdcEngine(
         spark, bronze, ManifestStore(os.path.join(tmpdir_path, "ck")),
-        num_salts=2, silver_models=[gold],
+        silver_models=[gold],
     )
     eng.run(ChangeStreamSource(spark, df=chg), epoch_size=3)
     assert _gold_rows(gold_t) == [("B", 1, 0, 5)]  # A fully deleted, B updated
@@ -248,7 +248,7 @@ def test_silver_and_gold_together_with_gold_crash_recovery(spark, tmpdir_path):
     gold = AggregateModel(gold_t, bronze, ["conv_id"], flaky_agg)
     eng = CdcEngine(
         spark, bronze, ManifestStore(os.path.join(tmpdir_path, "ck")),
-        num_salts=4, silver_models=[silver, gold],
+        silver_models=[silver, gold],
     )
     src = ChangeStreamSource(spark, df=chg)
     try:
@@ -284,14 +284,14 @@ def test_late_attached_model_refuses_silent_divergence(spark, tmpdir_path):
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
     # phase 1: bronze runs TWO epochs with no models attached
-    eng0 = CdcEngine(spark, bronze, ck, num_salts=4)
+    eng0 = CdcEngine(spark, bronze, ck)
     assert len(eng0.run(ChangeStreamSource(spark, df=half), epoch_size=EPOCH_SIZE)) == 2
 
     gold_t = LakeTable.create(
         spark, os.path.join(tmpdir_path, "gold"), GOLD_SCHEMA, ["conv_id"], num_buckets=4
     )
     gold = AggregateModel(gold_t, bronze, ["conv_id"], _gold_agg)
-    eng = CdcEngine(spark, bronze, ck, num_salts=4, silver_models=[gold])
+    eng = CdcEngine(spark, bronze, ck, silver_models=[gold])
     with pytest.raises(ValueError, match="bootstrap"):
         eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
 
@@ -338,7 +338,7 @@ def test_chained_gold_from_silver_equals_full_rebuild(spark, tmpdir_path):
         parent=silver,
     )
     eng = CdcEngine(
-        spark, bronze, eng0.checkpoints, num_salts=4, silver_models=[gold, silver],
+        spark, bronze, eng0.checkpoints, silver_models=[gold, silver],
     )
     # topo order puts the parent first even when passed after the child
     assert [m.name for m in eng.silver_models] == ["turns_silver", "gold_from_silver"]
@@ -388,7 +388,7 @@ def test_chained_silver_of_silver_row_wise(spark, tmpdir_path):
     )
     l2 = SilverModel(l2_t, _l2_transform, name="curated_l2", parent=silver)
     eng = CdcEngine(
-        spark, bronze, eng0.checkpoints, num_salts=4, silver_models=[silver, l2],
+        spark, bronze, eng0.checkpoints, silver_models=[silver, l2],
     )
     eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
 
@@ -430,7 +430,7 @@ def test_branched_chain_equals_full_rebuild(spark, tmpdir_path, monkeypatch):
 
     monkeypatch.setattr(SilverModel, "epoch_delta", epoch_delta)
     eng = CdcEngine(
-        spark, bronze, eng0.checkpoints, num_salts=4, silver_models=[gold, l2, silver],
+        spark, bronze, eng0.checkpoints, silver_models=[gold, l2, silver],
     )
     assert [m.name for m in eng.silver_models] == [
         "turns_silver", "gold_from_silver", "curated_l2"]
@@ -472,7 +472,7 @@ def test_chained_crash_level1_committed_level2_not(spark, tmpdir_path):
         gold_t, None, ["conv_id"], flaky_agg, name="gold_from_silver", parent=silver
     )
     eng = CdcEngine(
-        spark, bronze, eng0.checkpoints, num_salts=4, silver_models=[silver, gold],
+        spark, bronze, eng0.checkpoints, silver_models=[silver, gold],
     )
     src = ChangeStreamSource(spark, df=chg)
     try:
@@ -595,7 +595,7 @@ def test_gold_day_rollup_old_group_tracking_and_day_pruning(spark, tmpdir_path):
     )
     eng = CdcEngine(
         spark, bronze, ManifestStore(os.path.join(tmpdir_path, "ck")),
-        num_salts=2, silver_models=[gold],
+        silver_models=[gold],
     )
     results = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=4)
     assert len(results) == 2
@@ -677,7 +677,7 @@ def test_gold_full_scan_fallback_warns_and_stays_correct(spark, tmpdir_path):
     gold = AggregateModel(gold_t, bronze, ["role"], role_agg, name="role_rollup")
     eng = CdcEngine(
         spark, bronze, ManifestStore(os.path.join(tmpdir_path, "ck")),
-        num_salts=4, silver_models=[gold],
+        silver_models=[gold],
     )
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
@@ -704,7 +704,7 @@ def test_bootstrap_if_behind_auto_bootstraps(spark, tmpdir_path):
         spark, os.path.join(tmpdir_path, "bronze"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=4
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng0 = CdcEngine(spark, bronze, ck, num_salts=4)
+    eng0 = CdcEngine(spark, bronze, ck)
     assert len(eng0.run(ChangeStreamSource(spark, df=half), epoch_size=EPOCH_SIZE)) == 2
 
     gold_t = LakeTable.create(
@@ -712,7 +712,7 @@ def test_bootstrap_if_behind_auto_bootstraps(spark, tmpdir_path):
     )
     gold = AggregateModel(gold_t, bronze, ["conv_id"], _gold_agg)
     eng = CdcEngine(
-        spark, bronze, ck, num_salts=4, silver_models=[gold], bootstrap_if_behind=True
+        spark, bronze, ck, silver_models=[gold], bootstrap_if_behind=True
     )
     eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)  # no raise
     assert eng.bootstrap_log and eng.bootstrap_log[0]["model"] == "gold"

@@ -123,7 +123,7 @@ def test_streaming_restart_catches_models_up_before_next_batch(
 
     silver = SilverModel(silver_t, transform, name="turns_silver")
     store = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, table, store, num_salts=4, silver_models=[silver])
+    eng = CdcEngine(spark, table, store, silver_models=[silver])
     ckpt = os.path.join(tmpdir_path, "stream_ckpt")
     apply_silver = silver.apply_epoch
 
@@ -316,7 +316,7 @@ def test_streaming_drains_into_warehouse_backend(spark, tmpdir_path, stream_dir)
         spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, ck, num_salts=4)
+    eng = CdcEngine(spark, None, ck)
     app = StreamingCdcApply(
         eng, stream_dir, os.path.join(tmpdir_path, "stream-ck"),
         max_files_per_trigger=2, warehouse=duck,
@@ -462,7 +462,7 @@ def test_continuous_trigger_warehouse_kill_restart(spark, tmpdir_path, stream_di
         spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
     store = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, store, num_salts=4)
+    eng = CdcEngine(spark, None, store)
     ckpt = os.path.join(tmpdir_path, "stream_ckpt")
     s1 = StreamingCdcApply(eng, stream_dir, ckpt, max_files_per_trigger=1, warehouse=duck)
     q = s1.run_continuous(processing_time="1 second")

@@ -1,7 +1,7 @@
 """Curated models on the WAREHOUSE path: the reference ran its dbt
 models against the warehouse (airflow/dags/repsly_dag.py:643-1040 →
 ClickHouse); here the same SilverModel/AggregateModel DAG is maintained
-by ``run_warehouse`` in the lake path's order — the warehouse applies
+by ``run(..., sink=warehouse)`` in the lake path's order — the warehouse applies
 the epoch's staged delta, the manifest finalizes, then the models feed
 on the same staged files. A crash mid-models leaves the staging dir
 behind, and recovery replays the models from exactly the delta the
@@ -79,7 +79,7 @@ def _mk(spark, tmpdir_path, kind, transform=_transform):
     )
     model = SilverModel(silver_wh, transform, name="turns_silver")
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, ck, num_salts=4, silver_models=[model])
+    eng = CdcEngine(spark, None, ck, silver_models=[model])
     return wh, silver_wh, model, ck, eng
 
 
@@ -88,14 +88,14 @@ def test_warehouse_silver_incremental_equals_full_rebuild(spark, tmpdir_path, ki
     chg = generate_changes(spark, 3000, n_convs=40, turns_per_conv=8, seed=41).localCheckpoint()
     wh, silver_wh, model, ck, eng = _mk(spark, tmpdir_path, kind)
     src = ChangeStreamSource(spark, df=chg)
-    results = eng.run_warehouse(wh, src, epoch_size=EPOCH_SIZE)
+    results = eng.run(src, epoch_size=EPOCH_SIZE, sink=wh)
     assert len(results) == 3 and not any(r.skipped for r in results)
 
     assert _silver_rows(silver_wh) == _expected(chg)
     assert silver_wh.committed_epochs() == wh.committed_epochs() == [1, 2, 3]
 
     # replay is a no-op on BOTH warehouses
-    assert eng.run_warehouse(wh, src, epoch_size=EPOCH_SIZE) == []
+    assert eng.run(src, epoch_size=EPOCH_SIZE, sink=wh) == []
     assert _silver_rows(silver_wh) == _expected(chg)
 
 
@@ -116,7 +116,7 @@ def test_warehouse_model_crash_replays_exactly_once(spark, tmpdir_path, kind):
     wh, silver_wh, model, ck, eng = _mk(spark, tmpdir_path, kind, transform=flaky)
     src = ChangeStreamSource(spark, df=chg)
     with pytest.raises(RuntimeError, match="injected"):
-        eng.run_warehouse(wh, src, epoch_size=EPOCH_SIZE)
+        eng.run(src, epoch_size=EPOCH_SIZE, sink=wh)
 
     # warehouse applied and finalized epoch 2; its staged delta waits
     # for the model
@@ -127,7 +127,7 @@ def test_warehouse_model_crash_replays_exactly_once(spark, tmpdir_path, kind):
     assert os.listdir(staging) == ["e00000002"]
 
     boom["armed"] = False
-    eng.run_warehouse(wh, src, epoch_size=EPOCH_SIZE)
+    eng.run(src, epoch_size=EPOCH_SIZE, sink=wh)
     assert silver_wh.committed_epochs() == wh.committed_epochs() == [1, 2, 3]
     assert ck.is_finalized(3)
     assert _silver_rows(silver_wh) == _expected(chg)
@@ -179,15 +179,15 @@ def test_truncated_warehouse_epoch_replays_staged_delta(spark, tmpdir_path, kind
 
     gold.apply_epoch = flaky_gold
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, ck, num_salts=4, silver_models=[silver, gold])
+    eng = CdcEngine(spark, None, ck, silver_models=[silver, gold])
     # epoch 1 is (0, 1000], epoch 2 (1000, 1500]: truncated by the source max
     with pytest.raises(RuntimeError, match="injected"):
-        eng.run_warehouse(wh, ChangeStreamSource(spark, df=chg.where(F.col("lsn") <= 1500)),
-                          epoch_size=EPOCH_SIZE)
+        eng.run(ChangeStreamSource(spark, df=chg.where(F.col("lsn") <= 1500)),
+                epoch_size=EPOCH_SIZE, sink=wh)
     assert silver_t.committed_epochs() == [1, 2] and gold_t.committed_epochs() == [1]
 
     boom["armed"] = False
-    eng.run_warehouse(wh, ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
+    eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE, sink=wh)
     assert ck.high_water_lsn() == 3000
 
     want_gold = sorted(tuple(r) for r in gold.aggregate(silver_t.read()).collect())
@@ -209,19 +209,19 @@ def test_warehouse_late_attach_raises_then_bootstrap(spark, tmpdir_path):
         spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng0 = CdcEngine(spark, None, ck, num_salts=4)
-    assert len(eng0.run_warehouse(wh, ChangeStreamSource(spark, df=half), epoch_size=EPOCH_SIZE)) == 2
+    eng0 = CdcEngine(spark, None, ck)
+    assert len(eng0.run(ChangeStreamSource(spark, df=half), epoch_size=EPOCH_SIZE, sink=wh)) == 2
 
     silver_wh = DuckBackend.create(
         spark, os.path.join(tmpdir_path, "silver.duckdb"), SILVER_SCHEMA, KEY_COLS
     )
     model = SilverModel(silver_wh, _transform, name="turns_silver")
-    eng = CdcEngine(spark, None, ck, num_salts=4, silver_models=[model])
+    eng = CdcEngine(spark, None, ck, silver_models=[model])
     with pytest.raises(ValueError, match="bootstrap"):
-        eng.run_warehouse(wh, ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
+        eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE, sink=wh)
 
     model.bootstrap(wh, epoch_id=ck.last_epoch())
-    eng.run_warehouse(wh, ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
+    eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE, sink=wh)
     # epochs 1-2 rows carry the bootstrap stamp (their per-epoch stamps
     # went with their swept staged deltas); epoch 3 is incremental
     got = _silver_rows(silver_wh)
@@ -258,11 +258,11 @@ def test_warehouse_gold_rollup(spark, tmpdir_path):
     gold = AggregateModel(gold_wh, wh, ["conv_id"], agg, name="conv_rollup")
     eng = CdcEngine(
         spark, None, ManifestStore(os.path.join(tmpdir_path, "ck")),
-        num_salts=4, silver_models=[gold],
+        silver_models=[gold],
     )
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        eng.run_warehouse(wh, ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
+        eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE, sink=wh)
         assert len([x for x in w if "FULL" in str(x.message)]) == 1
     got = sorted(tuple(r) for r in gold_wh.read().collect())
     want = sorted(tuple(r) for r in agg(wh.read()).collect())
@@ -278,17 +278,17 @@ def test_warehouse_bootstrap_if_behind(spark, tmpdir_path):
         spark, os.path.join(tmpdir_path, "wh.db"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
     )
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng0 = CdcEngine(spark, None, ck, num_salts=4)
-    assert len(eng0.run_warehouse(wh, ChangeStreamSource(spark, df=half), epoch_size=EPOCH_SIZE)) == 2
+    eng0 = CdcEngine(spark, None, ck)
+    assert len(eng0.run(ChangeStreamSource(spark, df=half), epoch_size=EPOCH_SIZE, sink=wh)) == 2
 
     silver_wh = SqliteBackend.create(
         spark, os.path.join(tmpdir_path, "silver.db"), SILVER_SCHEMA, KEY_COLS
     )
     model = SilverModel(silver_wh, _transform, name="turns_silver")
     eng = CdcEngine(
-        spark, None, ck, num_salts=4, silver_models=[model], bootstrap_if_behind=True
+        spark, None, ck, silver_models=[model], bootstrap_if_behind=True
     )
-    eng.run_warehouse(wh, ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
+    eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE, sink=wh)
     assert eng.bootstrap_log and eng.bootstrap_log[0]["covered"] == [1, 2]
     got = _silver_rows(silver_wh)
     want = [(c, t, r, l, e if e >= 3 else 2) for (c, t, r, l, e) in _expected(chg)]

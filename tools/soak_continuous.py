@@ -140,7 +140,7 @@ def run_soak(
             count_col="rows", name="day_rollup_delta", row_groups=_day_groups)
         models = [silver_m, gold_m, day_m]
 
-    eng = CdcEngine(spark, table, store, num_salts=8, silver_models=models)
+    eng = CdcEngine(spark, table, store, silver_models=models)
 
     # Pre-generate the whole soak's stream once (deterministic), then
     # feed it file-by-file in lsn order — an appended change log.
