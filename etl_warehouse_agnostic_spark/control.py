@@ -10,12 +10,9 @@ Spark job.
 
 from __future__ import annotations
 
-import calendar
 import time
 
-from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
-
-_TS_FMT = "%Y-%m-%dT%H:%M:%SZ"
+from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore, parse_utc
 
 
 def last_refresh_epoch_ts(manifests: ManifestStore) -> float | None:
@@ -26,10 +23,7 @@ def last_refresh_epoch_ts(manifests: ManifestStore) -> float | None:
     committed_at = manifests.get(last).get("committed_at")
     if not committed_at:
         return None
-    # committed_at is UTC; timegm converts the UTC struct_time directly.
-    # (mktime interprets it as LOCAL time and guesses DST — off by an
-    # hour on non-UTC hosts in summer.)
-    return float(calendar.timegm(time.strptime(str(committed_at), _TS_FMT)))
+    return parse_utc(committed_at)
 
 
 def should_skip_refresh(

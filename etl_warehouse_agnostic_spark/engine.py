@@ -23,10 +23,13 @@ sink's type alone picks the lake or the warehouse path:
      evolves)
   4. stage the delta once, in a per-epoch dir under the checkpoint
      store — the one sink-dependent step: a ``LakeTable`` sink stages
-     it as bucketed parquet (per-bucket footer offsets, the epoch
-     census); a warehouse as plain parquet with its
+     it as bucketed parquet, a warehouse as plain parquet with its
      ``op``/``lsn``/``schema_ver`` envelope, which it applies from the
-     files (``merge_files``)
+     files (``merge_files``). The dir's record, ``_staged.json``, holds
+     the staged schema, the bucket count (null for a plain stage) and
+     the data files by partition; it is published before the merge,
+     and ``_open_staged`` reads the delta, its footer offsets and the
+     epoch census from it
   5. MERGE into the sink under the epoch id (atomic, ledgered: a lake
      table's snapshot summary carries the whole manifest, a
      warehouse's ``_epochs`` row the applied lsn range)
@@ -35,9 +38,12 @@ sink's type alone picks the lake or the warehouse path:
 
 Ordering rule for 6, one for every sink: the manifest finalizes right
 after the merge and the models run after it. A crash mid-models leaves
-the staging dir behind, and ``recover`` replays the models from it —
-the exact delta the sink applied, even when the source has grown past
-the epoch's recorded lsn range since.
+the staging dir behind, and ``recover`` opens it through the same
+``_open_staged`` and replays the models from it — the exact delta the
+sink applied, even an empty one, and even when the source has grown
+past the epoch's recorded lsn range since. A finalized epoch's dir
+without a record (staged by an older engine) raises rather than being
+guessed at.
 
 Crash between 5 and 6: ``recover`` finds the epoch in the sink's
 ledger (the lake table's snapshot summaries, a warehouse's ``_epochs``
@@ -50,6 +56,7 @@ re-applying — the write-ahead ordering the reference implements as
 from __future__ import annotations
 
 import dataclasses
+import json
 import os
 import shutil
 import time
@@ -63,7 +70,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.lake import backends
-from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
+from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore, publish_json, utc_now
 from etl_warehouse_agnostic_spark.lake.table import EpochCensus, LakeTable, observed
 from etl_warehouse_agnostic_spark.operators.dedup import lww_dedup_window, split_ops
 from etl_warehouse_agnostic_spark.operators.evolution import (
@@ -78,53 +85,9 @@ from etl_warehouse_agnostic_spark.sources.changes import ChangeStreamSource
 # Change-envelope columns that are not table payload, with their types.
 CDC_TYPES = {"op": T.StringType(), "lsn": T.LongType(), "schema_ver": T.IntegerType()}
 CDC_COLS = set(CDC_TYPES)
-# File in a staging dir that records the bucket count it was staged with.
-_STAGED_LAYOUT = "_num_buckets"
-
-
-def _staged_files(staging_dir: str) -> list[str]:
-    """The data files of a staging dir, bucketed or not."""
-    return sorted(
-        os.path.join(root, fn)
-        for root, _, fns in os.walk(staging_dir)
-        for fn in fns
-        if fn.endswith(".parquet")
-    )
-
-
-def _footer_offsets(staging_dir: str, lsn_col: str = "lsn") -> dict:
-    """Per-partition high-water offsets + row counts from the staged
-    parquet footers (driver-side metadata reads, no Spark job). A
-    bucketed stage has one partition per bucket dir; an unbucketed one
-    is the single partition ``"all"``.
-
-    The bucket is the lineage partition unit (FIXTURES.md F4); the
-    epoch's global lsn bounds live in lineage.lsn_range.
-    """
-    import pyarrow.parquet as pq
-
-    offsets: dict[str, dict[str, int]] = {}
-    for path in _staged_files(staging_dir):
-        top = os.path.relpath(path, staging_dir).split(os.sep)[0]
-        part = offsets.setdefault(
-            top.split("=", 1)[1] if top.startswith("_pb=") else "all",
-            {"max_lsn": 0, "rows": 0},
-        )
-        md = pq.ParquetFile(path).metadata
-        part["rows"] += md.num_rows
-        try:
-            idx = md.schema.names.index(lsn_col)
-        except ValueError:
-            continue
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is not None and st.has_min_max:
-                part["max_lsn"] = max(part["max_lsn"], int(st.max))
-    return offsets
-
-
-def _utc_now() -> str:
-    return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+# The record of a staging dir: the staged schema, the bucket count
+# (null for an unbucketed stage) and the data files by partition.
+_STAGED_RECORD = "_staged.json"
 
 
 @dataclass
@@ -367,9 +330,11 @@ class CdcEngine:
         # (affected buckets) its merge prunes with. A warehouse stages
         # plain parquet with the op envelope and applies those files.
         # Either way the dir is the epoch's durable lineage until every
-        # model has committed the epoch. Staged files are written once
-        # and read back at most twice before deletion, so a light codec
-        # there trades ephemeral bytes for CPU.
+        # model has committed the epoch, and its record, published
+        # before the sink commits, is how the epoch and any replay of
+        # its models open it. Staged files are written once and read
+        # back at most twice before deletion, so a light codec there
+        # trades ephemeral bytes for CPU.
         staging_dir = self._staging_dir(epoch)
         staged_schema = T.StructType(
             list(schema.fields) + [T.StructField(c, CDC_TYPES[c], True) for c in envelope]
@@ -378,16 +343,20 @@ class CdcEngine:
             from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
 
             num_buckets = sink.num_buckets
-            sink.write_bucketed(
+            by_bucket, _, _ = sink.write_bucketed(
                 projected.withColumn("_bucket", bucket_of(self.key_cols[0], num_buckets)),
                 staging_dir, compression="snappy",
             )
-            # the modulus of the staged buckets, for a replay's census
-            with open(os.path.join(staging_dir, _STAGED_LAYOUT), "w") as f:
-                f.write(str(num_buckets))
+            files = {b: [os.path.relpath(os.path.join(sink.path, p), staging_dir) for p in ps]
+                     for b, ps in by_bucket.items()}
         else:
-            files = backends._export_delta(projected, staged_schema, staging_dir)
-        delta = self._read_staged(staging_dir, staged_schema)
+            num_buckets = None
+            exported = backends._export_delta(projected, staged_schema, staging_dir)
+            files = {"all": [os.path.relpath(p, staging_dir) for p in exported]}
+        record = {"schema": staged_schema.jsonValue(), "num_buckets": num_buckets, "files": files}
+        if not publish_json(record, os.path.join(staging_dir, _STAGED_RECORD)):
+            raise RuntimeError(f"{staging_dir} already holds a {_STAGED_RECORD}")
+        delta, offsets, census = self._open_staged(staging_dir)
 
         slice_stats = observed(obs_slice, changes, slice_metrics)
         delta_stats = observed(obs_delta, delta, delta_metrics)
@@ -399,7 +368,6 @@ class CdcEngine:
                 int(slice_stats.get("min_lsn") or 0),
                 int(slice_stats.get("max_lsn") or 0),
             )
-        offsets = _footer_offsets(staging_dir)
         manifest = self._manifest(
             epoch, lsn_range, offsets, rows_read, n_rows - n_del, n_del,
             schema_ver_max=int(slice_stats.get("sv_max") or schema_ver_max),
@@ -410,7 +378,6 @@ class CdcEngine:
         # and the exact delta size, which also lets it broadcast the
         # changed-key set into the anti-join. Every model merge reuses
         # the same census. A warehouse ledgers the lsn range instead.
-        census = self._census(staging_dir, staged_schema, offsets)
         if isinstance(sink, LakeTable):
             upserts, deletes = split_ops(delta)
             res = sink.merge(
@@ -418,7 +385,7 @@ class CdcEngine:
                 epoch_id=epoch, extra_summary={"manifest": manifest}, census=census,
             )
         else:
-            res = sink.merge_files(files, epoch_id=epoch, lsn_range=lsn_range)
+            res = sink.merge_files(exported, epoch_id=epoch, lsn_range=lsn_range)
         wall_ms = int((time.monotonic() - t0) * 1000)
         if res.skipped:
             # Ledger hit: the epoch already committed (a crash before
@@ -431,7 +398,7 @@ class CdcEngine:
             manifest = self._ledger_manifest(sink, epoch, lo=lsn_range[0]) or manifest
         else:
             manifest["metrics"].update(bytes_written=res.bytes_written, wall_ms=wall_ms)
-            manifest.update(snapshot_version=res.version, committed_at=_utc_now())
+            manifest.update(snapshot_version=res.version, committed_at=utc_now())
 
         # Finalize, then the models ride the staged delta (no extra pass
         # over the slice; the reference ran its dbt models against the
@@ -474,22 +441,17 @@ class CdcEngine:
         # already covers any still-staged epoch's content from bronze.
         staged = self._staged_epochs()
         self._check_silver_current(sink, staged)
-        self._recover_silver(sink, staged)
+        self._recover_silver(staged)
         return healed
 
     # One-line delegations to the entry points, kept for callers
-    # outside the package: bench.py and harness.py call
-    # ``run_warehouse`` / ``run_bounded``, and perfbench's tracer wraps
-    # the ``*_warehouse`` pair by name. Package code calls none of them.
+    # outside the package: bench.py and perfbench call ``run_warehouse``,
+    # and perfbench's tracer wraps the ``*_warehouse`` pair by name.
+    # Package code calls none of them.
 
     def run_warehouse(self, warehouse, source: ChangeStreamSource, epoch_size: int,
                       max_epochs: int | None = None, lookback: int = 0) -> list[EpochResult]:
         return self.run(source, epoch_size, max_epochs, lookback, sink=warehouse)
-
-    def run_bounded(self, source: ChangeStreamSource, max_rows_per_epoch: int,
-                    lookback: int = 0, granules: int = 1024) -> list[EpochResult]:
-        return self.run(source, lookback=lookback, max_rows_per_epoch=max_rows_per_epoch,
-                        granules=granules)
 
     def apply_epoch_warehouse(self, warehouse, changes: DataFrame, epoch: int,
                               lsn_range: tuple[int, int] | None = None) -> EpochResult:
@@ -514,7 +476,7 @@ class CdcEngine:
             "lineage": {"source": self.source_name, "lsn_range": list(lsn_range),
                         "schema_ver_max": schema_ver_max, "added_columns": list(added_columns)},
             "snapshot_version": None,
-            "committed_at": _utc_now(),
+            "committed_at": utc_now(),
         }
 
     def _ledger_manifest(self, sink, epoch: int, lo: int | None = None) -> dict | None:
@@ -543,22 +505,6 @@ class CdcEngine:
         manifest["metrics"]["healed"] = True
         return manifest
 
-    def _census(self, staging_dir: str, schema: T.StructType,
-                offsets: dict) -> EpochCensus | None:
-        """The epoch census of a staged delta of ``schema``: the bucket
-        dirs and row count of its footer ``offsets``, in the layout
-        recorded next to them when it was staged (None without that
-        record, e.g. an unbucketed warehouse stage)."""
-        try:
-            with open(os.path.join(staging_dir, _STAGED_LAYOUT)) as f:
-                num_buckets = int(f.read())
-        except (OSError, ValueError):
-            return None
-        key = self.key_cols[0]
-        return EpochCensus(key, schema[key].dataType, num_buckets,
-                           tuple(sorted(int(b) for b in offsets)),
-                           sum(o["rows"] for o in offsets.values()))
-
     def _staging_dir(self, epoch: int) -> str:
         return os.path.join(self.checkpoints.path, "_staging", f"e{epoch:08d}")
 
@@ -573,28 +519,55 @@ class CdcEngine:
             if d.startswith("e") and d[1:].isdigit()
         }
 
-    def _staged_schema(self, sink, staging_dir: str) -> T.StructType | None:
-        """Reconstruct the schema of a retained staging dir from one
-        parquet footer (driver-side metadata read): current sink
-        columns that are present, plus whatever envelope columns the
-        delta carried. Returns None if the dir holds no data files."""
+    def _open_staged(self, staging_dir: str) -> tuple[DataFrame, dict, EpochCensus | None]:
+        """The one read of a staging dir, for the live epoch and for a
+        replay of its models: the delta, its per-partition offsets and
+        its epoch census, from the dir's record and the footers of the
+        files it lists (driver-side metadata reads, no Spark job).
+
+        Offsets are each partition's high-water lsn and row count; a
+        bucketed stage has one partition per bucket, an unbucketed one
+        the single partition ``"all"`` (the bucket is the lineage
+        partition unit, FIXTURES.md F4; the epoch's global lsn bounds
+        live in lineage.lsn_range). The census names the staged buckets
+        in the modulus the delta was staged with (None when unbucketed).
+        An empty delta opens as an empty DataFrame of the staged
+        schema."""
         import pyarrow.parquet as pq
 
-        files = _staged_files(staging_dir)
-        if not files:
-            return None
-        names = set(pq.ParquetFile(files[0]).metadata.schema.names)
-        fields = [f for f in sink.schema.fields if f.name in names]
-        fields += [T.StructField(c, t, True) for c, t in CDC_TYPES.items() if c in names]
-        return T.StructType(fields)
-
-    def _read_staged(self, staging_dir: str, schema: T.StructType) -> DataFrame:
-        """A staging dir's delta, read from its leaf files directly (no
-        partition inference)."""
-        files = _staged_files(staging_dir)
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(*files)
+        record_path = os.path.join(staging_dir, _STAGED_RECORD)
+        if not os.path.exists(record_path):
+            raise RuntimeError(
+                f"staging dir {staging_dir} has no {_STAGED_RECORD}: it was not "
+                "staged by this engine version, so its delta cannot be replayed"
+            )
+        with open(record_path) as f:
+            record = json.load(f)
+        schema = T.StructType.fromJson(record["schema"])
+        files: list[str] = []
+        offsets: dict[str, dict[str, int]] = {}
+        for part, rels in sorted(record["files"].items()):
+            off = offsets[part] = {"max_lsn": 0, "rows": 0}
+            for rel in sorted(rels):
+                files.append(os.path.join(staging_dir, rel))
+                md = pq.ParquetFile(files[-1]).metadata
+                off["rows"] += md.num_rows
+                idx = md.schema.names.index("lsn")  # every slice carries lsn
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(idx).statistics
+                    if st is not None and st.has_min_max:
+                        off["max_lsn"] = max(off["max_lsn"], int(st.max))
+        census = None
+        if record["num_buckets"] is not None:
+            key = self.key_cols[0]
+            census = EpochCensus(key, schema[key].dataType, record["num_buckets"],
+                                 tuple(sorted(int(b) for b in offsets)),
+                                 sum(o["rows"] for o in offsets.values()))
+        if files:
+            delta = self.spark.read.schema(schema).parquet(*files)
+        else:
+            delta = self.spark.createDataFrame([], schema)
+        return delta, offsets, census
 
     def _apply_silver(self, staged: DataFrame, epoch: int,
                       census: EpochCensus | None = None) -> dict[str, int]:
@@ -708,23 +681,20 @@ class CdcEngine:
         )
 
 
-    def _recover_silver(self, sink, staged: dict[int, str]) -> None:
+    def _recover_silver(self, staged: dict[int, str]) -> None:
         """Catch models up from retained staging dirs — the crash window
         between the manifest finalize and the model applies (or
         between two models) — then sweep each finalized epoch's dir.
-        Epoch-idempotent merges make the replay safe; a dir is only
-        swept once every model has committed its epoch."""
+        A replay opens the dir as its epoch did (``_open_staged``), so
+        an empty delta replays too. Epoch-idempotent merges make the
+        replay safe; a dir is only swept once every model has committed
+        its epoch."""
         for epoch, staging_dir in sorted(staged.items()):
             if not self.checkpoints.is_finalized(epoch):
                 continue  # the sink itself will replay this epoch
             if not all(m.epoch_committed(epoch) for m in self.silver_models):
-                schema = self._staged_schema(sink, staging_dir)
-                if schema is None:
-                    continue
-                # the census apply_epoch passed, rebuilt from the staging dir
-                census = self._census(staging_dir, schema, _footer_offsets(staging_dir))
-                self._apply_silver(self._read_staged(staging_dir, schema), epoch,
-                                   census=census)
+                delta, _, census = self._open_staged(staging_dir)
+                self._apply_silver(delta, epoch, census=census)
             shutil.rmtree(staging_dir, ignore_errors=True)
 
 

@@ -930,7 +930,7 @@ def q_media_frame_sample(spark, sf_dir):
 
 def q_warehouse_parity(spark, sf_dir):
     """The warehouse-agnostic axis made real: the FULL engine tail loop
-    (``CdcEngine.run_warehouse`` — watermark slices, LWW dedup,
+    (``CdcEngine.run`` with a warehouse sink — watermark slices, LWW dedup,
     exactly-once manifests) driving BOTH config-switched SQL backends
     — the embedded warehouse (``DuckBackend``, ClickHouse/Snowflake
     stand-in) and the DB-API engine (``SqliteBackend``, the
@@ -972,10 +972,10 @@ def q_warehouse_parity(spark, sf_dir):
             ck = ManifestStore(os.path.join(root, f"ck-{wtype}"))
             eng = CdcEngine(spark, None, ck)
             src = ChangeStreamSource(spark, df=chg)
-            results = eng.run_warehouse(wh, src, epoch_size=max(1000, n // 3))
+            results = eng.run(src, epoch_size=max(1000, n // 3), sink=wh)
             assert results and not any(r.skipped for r in results)
             # resume from checkpoint with nothing new — exactly-once no-op
-            assert eng.run_warehouse(wh, src, epoch_size=max(1000, n // 3)) == []
+            assert eng.run(src, epoch_size=max(1000, n // 3), sink=wh) == []
             outs.append(
                 wh.read()
                 .select(F.lit(wtype).alias("backend"), "conv_id", "turn_idx", "role", "text")
@@ -1404,7 +1404,7 @@ def q_cdc_engine_e2e(spark, sf_dir):
             if mode == "epochs":
                 eng.run(src, epoch_size=max(1000, n // 4))
             else:
-                eng.run_bounded(src, max_rows_per_epoch=max(1000, n // 3), granules=256)
+                eng.run(src, max_rows_per_epoch=max(1000, n // 3), granules=256)
             outs.append(
                 table.read()
                 .select(F.lit(mode).alias("mode"), "conv_id", "turn_idx", "role", "text")

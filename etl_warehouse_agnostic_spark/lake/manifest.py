@@ -17,11 +17,28 @@ CdcEngine.recover).
 
 from __future__ import annotations
 
+import calendar
 import hashlib
 import json
 import os
+import time
 import uuid
 from typing import Any
+
+# The one format of every ``committed_at`` stamp (manifests, snapshots).
+_TS_FMT = "%Y-%m-%dT%H:%M:%SZ"
+
+
+def utc_now() -> str:
+    """Now, as a ``committed_at`` stamp (UTC, whole seconds)."""
+    return time.strftime(_TS_FMT, time.gmtime())
+
+
+def parse_utc(stamp: str) -> float:
+    """The unix time of a ``committed_at`` stamp. ``timegm`` reads the
+    struct_time as UTC; ``mktime`` would read it as local time and
+    guess DST, an hour off on non-UTC hosts in summer."""
+    return float(calendar.timegm(time.strptime(str(stamp), _TS_FMT)))
 
 
 def publish_json(payload: dict[str, Any], final_path: str) -> bool:

@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
-from etl_warehouse_agnostic_spark.lake.manifest import publish_json
+from etl_warehouse_agnostic_spark.lake.manifest import publish_json, utc_now
 
 _BUCKET = "_bucket"  # physical layout column kept in data files
 _PB = "_pb"  # throwaway copy used only for partitionBy at write time
@@ -245,7 +245,7 @@ class LakeTable:
             "files": {},  # bucket(str) -> [relpath, ...]
             "committed_epochs": [],
             "summary": {"operation": "create"},
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "committed_at": utc_now(),
         }
         _atomic_write_json(snap, os.path.join(t.meta_dir, "v00000001.json"))
         return t
@@ -498,7 +498,7 @@ class LakeTable:
             "committed_epochs": cur.get("committed_epochs", [])
             + [e for e in epochs if e is not None],
             "summary": summary,
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "committed_at": utc_now(),
             **layout,
         }
         try:

@@ -24,15 +24,12 @@ Emitted per epoch:
 
 from __future__ import annotations
 
-import calendar
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
-
-_TS_FMT = "%Y-%m-%dT%H:%M:%SZ"
+from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore, parse_utc
 
 HEALTH_SCHEMA = T.StructType(
     [
@@ -74,7 +71,7 @@ def pipeline_health(
         committed = m.get("committed_at")
         age_ok = True
         if committed:
-            age = now_ts - calendar.timegm(time.strptime(str(committed), _TS_FMT))
+            age = now_ts - parse_utc(committed)
             age_ok = age <= sla_hours * 3600.0
         rows_read = met.get("rows_read")
         n_up = met.get("rows_upserted")

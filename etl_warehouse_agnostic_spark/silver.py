@@ -79,6 +79,24 @@ def _source_buckets(staged: DataFrame, snap: dict, census: EpochCensus | None) -
     return _delta_buckets(staged, snap) if buckets is None else buckets
 
 
+def _pre_epoch_rows(source: LakeTable, staged: DataFrame, epoch: int,
+                    census: EpochCensus | None, name: str) -> tuple[DataFrame, list[int]]:
+    """The source's rows for exactly the delta's keys as of just before
+    ``epoch`` (the snapshot pinned as the epoch commit's parent, so a
+    replay reads the same rows), bucket-pruned to the delta's buckets;
+    returns them with those buckets."""
+    snap = source.epoch_snapshot(epoch)
+    if snap is None:
+        raise RuntimeError(
+            f"gold model {name!r}: source has no snapshot for epoch "
+            f"{epoch} — models must apply after their source commits it"
+        )
+    keys = list(source.key_cols)
+    buckets = _source_buckets(staged, snap, census)
+    pre = source.read(version=snap["parent"], buckets=buckets)
+    return pre.join(staged.select(*keys).dropDuplicates(keys), keys, "left_semi"), buckets
+
+
 def _merge(table, upserts: DataFrame, delete_keys: DataFrame, epoch: int,
            census: EpochCensus | None) -> MergeResult:
     """A model's MERGE under the bronze epoch id; the census reaches a
@@ -299,17 +317,7 @@ class AggregateModel(_Model):
             )
         ups = staged.where(F.col("op") != "D") if "op" in staged.columns else staged
         new_groups = self.row_groups(ups).select(*self.group_cols)
-        snap = self.bronze.epoch_snapshot(epoch)
-        if snap is None:
-            raise RuntimeError(
-                f"gold model {self.name!r}: source has no snapshot for epoch "
-                f"{epoch} — models must apply after their source commits it"
-            )
-        keys = list(self.bronze.key_cols)
-        pre = self.bronze.read(
-            version=snap["parent"], buckets=_source_buckets(staged, snap, census)
-        )
-        old_rows = pre.join(staged.select(*keys).dropDuplicates(keys), keys, "left_semi")
+        old_rows, _ = _pre_epoch_rows(self.bronze, staged, epoch, census, self.name)
         return (
             new_groups.unionByName(self.row_groups(old_rows).select(*self.group_cols))
             .dropDuplicates(self.group_cols)
@@ -497,21 +505,9 @@ class DeltaAggregateModel(_Model):
                     census: EpochCensus | None = None) -> MergeResult:
         if self.table.epoch_committed(epoch):
             return MergeResult(0, epoch, 0, 0, 0, skipped=True)
-        snap = self.bronze.epoch_snapshot(epoch)
-        if snap is None:
-            raise RuntimeError(
-                f"gold model {self.name!r}: source has no snapshot for epoch "
-                f"{epoch} — models must apply after their source commits it"
-            )
-        keys = list(self.bronze.key_cols)
         upserts, _ = split_ops(staged)
-        delta_keys = staged.select(*keys).dropDuplicates(keys)
-        src_buckets = _source_buckets(staged, snap, census)
-        # pre-epoch values of exactly the changed keys (pinned snapshot,
-        # bucket-pruned) — the subtract side of the maintenance identity
-        old_rows = self.bronze.read(version=snap["parent"], buckets=src_buckets).join(
-            delta_keys, keys, "left_semi"
-        )
+        # the subtract side of the maintenance identity
+        old_rows, src_buckets = _pre_epoch_rows(self.bronze, staged, epoch, census, self.name)
         pos = self.aggregate(upserts).withColumn("_sign", F.lit(1))
         neg = self.aggregate(old_rows).withColumn("_sign", F.lit(-1))
         d_aggs = [

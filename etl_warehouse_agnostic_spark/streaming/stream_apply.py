@@ -19,9 +19,9 @@ Design notes (scale):
   tail loop: a replayed batch whose manifest already finalized is
   skipped, so an epoch whose models did not all commit before a crash
   is caught up from its retained staging dir first.
-- ``trigger(availableNow=True)`` drains the backlog in bounded
-  batches then stops — the streaming analog of the batch tail loop;
-  drop it for a continuous tail.
+- ``start()`` drains the backlog in bounded batches then stops
+  (``trigger(availableNow=True)``) — the streaming analog of the batch
+  tail loop; ``start(processing_time)`` tails continuously.
 - The epoch id is ``batch_id + epoch_base + 1`` — monotone across
   restarts because Spark's own streaming checkpoint persists batch
   ids; our manifest store remains the source of truth for offsets.
@@ -94,14 +94,9 @@ class StreamingCdcApply:
         epoch = self.epoch_base + batch_id + 1
         self.engine.apply_epoch(batch_df, epoch, sink=self.sink)
 
-    def start(
-        self,
-        available_now: bool = True,
-        schema=None,
-        processing_time: str | None = None,
-    ):
-        """Start the stream. ``available_now=True`` (default) drains
-        the backlog and stops — the batch-equivalent replay.
+    def start(self, processing_time: str | None = None):
+        """Start the stream. Without ``processing_time`` it drains the
+        backlog and stops (availableNow) — the batch-equivalent replay.
         ``processing_time`` instead runs FOREVER on a micro-batch
         cadence (the reference's scheduled-DAG mode,
         airflow/dags/repsly_dag.py:309-343): new change-log files are
@@ -111,14 +106,10 @@ class StreamingCdcApply:
         it a no-op (proven by tests/test_streaming.py kill-restart).
         Recovery runs first, before any batch is planned."""
         self.engine.recover(sink=self.sink)
-        reader = self.engine.spark.readStream
-        if schema is not None:
-            reader = reader.schema(schema)
-        else:
-            # File streams need a fixed schema; default to the static dir's.
-            reader = reader.schema(
-                self.engine.spark.read.parquet(self.changes_path).schema
-            )
+        # File streams need a fixed schema: the static dir's.
+        reader = self.engine.spark.readStream.schema(
+            self.engine.spark.read.parquet(self.changes_path).schema
+        )
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
         stream = reader.parquet(self.changes_path)
@@ -128,18 +119,18 @@ class StreamingCdcApply:
             .option("checkpointLocation", self.checkpoint_location)
             .outputMode("update")
         )
-        if processing_time is not None:
-            writer = writer.trigger(processingTime=processing_time)
-        elif available_now:
+        if processing_time is None:
             writer = writer.trigger(availableNow=True)
+        else:
+            writer = writer.trigger(processingTime=processing_time)
         return writer.start()
 
     def run_available(self) -> None:
         """Drain the current backlog and return (availableNow)."""
-        q = self.start(available_now=True)
+        q = self.start()
         q.awaitTermination()
 
     def run_continuous(self, processing_time: str = "1 second"):
         """Tail the change log forever on a micro-batch cadence;
         returns the StreamingQuery (caller stops/monitors it)."""
-        return self.start(available_now=False, processing_time=processing_time)
+        return self.start(processing_time)

@@ -5,10 +5,12 @@ be a no-op on replay."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.engine import CdcEngine
+from etl_warehouse_agnostic_spark.lake.backends import DuckBackend
 from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
 from etl_warehouse_agnostic_spark.lake.table import LakeTable
 from etl_warehouse_agnostic_spark.operators.dedup import lww_dedup_window
@@ -130,6 +132,47 @@ def test_silver_crash_between_finalize_and_apply_recovers(spark, tmpdir_path):
     assert silver.committed_epochs() == bronze.committed_epochs() == [1, 2, 3, 4]
     assert _silver_rows(silver) == _expected(chg)
     assert not os.path.isdir(staging) or not os.listdir(staging)
+
+
+@pytest.mark.parametrize("sink", ["lake", "duckdb"])
+def test_empty_epoch_crash_replays_into_models(spark, tmpdir_path, sink):
+    """An epoch whose slice is empty leaves a staging dir with no rows
+    (on the lake, no data file at all). When its model crashes after
+    the manifest finalizes, recover must still replay it: the model
+    records the epoch and the staging dir is swept."""
+    chg = generate_changes(spark, 2000, n_convs=30, turns_per_conv=8, seed=24).localCheckpoint()
+    boom = {"armed": False}
+
+    def flaky_transform(upserts, epoch):
+        if boom["armed"]:
+            raise RuntimeError("injected crash before silver apply")
+        return _transform(upserts, epoch)
+
+    bronze, silver, model, eng = _setup(spark, tmpdir_path, transform=flaky_transform)
+    target = bronze
+    if sink == "duckdb":
+        target = DuckBackend.create(
+            spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
+        )
+    eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE, sink=target)
+    hi = eng.checkpoints.high_water_lsn()
+
+    boom["armed"] = True
+    with pytest.raises(RuntimeError, match="injected"):
+        eng.apply_epoch(chg.where(F.lit(False)), 3, lsn_range=(hi, hi + 10), sink=target)
+    assert eng.checkpoints.is_finalized(3) and not silver.epoch_committed(3)
+
+    # a dir without its record is refused, not guessed at
+    boom["armed"] = False
+    record = os.path.join(eng._staging_dir(3), "_staged.json")
+    os.rename(record, record + ".off")
+    with pytest.raises(RuntimeError, match="_staged.json"):
+        eng.recover(sink=target)
+    os.rename(record + ".off", record)
+    eng.recover(sink=target)
+    assert silver.committed_epochs() == [1, 2, 3]
+    assert os.listdir(os.path.join(eng.checkpoints.path, "_staging")) == []
+    assert _silver_rows(silver) == _expected(chg)
 
 
 GOLD_SCHEMA = T.StructType(
