@@ -30,22 +30,34 @@ sink's type alone picks the lake or the warehouse path:
      the data files by partition; it is published before the merge,
      and ``_open_staged`` reads the delta, its footer offsets and the
      epoch census from it
-  5. MERGE into the sink under the epoch id (atomic, ledgered: a lake
-     table's snapshot summary carries the whole manifest, a
-     warehouse's ``_epochs`` row the applied lsn range)
-  6. finalize the checkpoint manifest, apply the attached models from
-     the staged delta, then sweep the staging dir.
+  5. fan out: pin each model source's pre-epoch version, then start
+     every attached model on its own worker thread, fed from the
+     staged delta
+  6. MERGE into the sink under the epoch id, on the epoch's own thread
+     beside the models (atomic, ledgered: a lake table's snapshot
+     summary carries the whole manifest, a warehouse's ``_epochs`` row
+     the applied lsn range)
+  7. finalize the checkpoint manifest, let the models publish, wait
+     for every model, then sweep the staging dir.
 
-Ordering rule for 6, one for every sink: the manifest finalizes right
-after the merge and the models run after it. A crash mid-models leaves
-the staging dir behind, and ``recover`` opens it through the same
+Ordering rule for 6 and 7, one for every sink: the manifest finalizes
+right after the sink's merge, and no model commits the epoch before
+that. A model reads its source at the pinned pre-epoch version, so it
+needs no commit to read, and its merge writes beside the sink's; but
+it publishes only through a gate that opens once the manifest has
+finalized (``lake.table.gated_commits``), and if the sink's merge or
+the finalize fails, every model deletes what it wrote. A model whose
+table or source is a warehouse (nothing to gate, no time travel)
+starts only after its source commits. A crash mid-models leaves the
+staging dir behind, and ``recover`` opens it through the same
 ``_open_staged`` and replays the models from it — the exact delta the
 sink applied, even an empty one, and even when the source has grown
-past the epoch's recorded lsn range since. A finalized epoch's dir
-without a record (staged by an older engine) raises rather than being
-guessed at.
+past the epoch's recorded lsn range since — at the same pins (the
+parent of each source's epoch commit). A finalized epoch's dir without
+a record (staged by an older engine) raises rather than being guessed
+at.
 
-Crash between 5 and 6: ``recover`` finds the epoch in the sink's
+Crash between 6 and 7: ``recover`` finds the epoch in the sink's
 ledger (the lake table's snapshot summaries, a warehouse's ``_epochs``
 table) and finalizes the manifest from what was RECORDED, without
 re-applying — the write-ahead ordering the reference implements as
@@ -60,6 +72,7 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
 
@@ -71,7 +84,12 @@ from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.lake import backends
 from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore, publish_json, utc_now
-from etl_warehouse_agnostic_spark.lake.table import EpochCensus, LakeTable, observed
+from etl_warehouse_agnostic_spark.lake.table import (
+    EpochCensus,
+    LakeTable,
+    gated_commits,
+    observed,
+)
 from etl_warehouse_agnostic_spark.operators.dedup import lww_dedup_window, split_ops
 from etl_warehouse_agnostic_spark.operators.evolution import (
     new_fields,
@@ -102,8 +120,8 @@ class EpochResult:
     snapshot_version: int | None = None
     offsets: dict = field(default_factory=dict)
     # per-model maintenance wall (ms), keyed by model name — wall_ms
-    # above covers ONLY the bronze apply; the model DAG runs outside
-    # it, so scaling/soak harnesses need it separately to attribute
+    # above covers ONLY the bronze apply; the models run beside it and
+    # past it, so scaling/soak harnesses need it separately to attribute
     # non-scaling components (see tools/bench_scaling.py).
     model_wall_ms: dict = field(default_factory=dict)
     # the lsn range the epoch's manifest finalized — the tail loop's
@@ -146,14 +164,13 @@ class CdcEngine:
         # epoch's delta is transformed and merged into the model's own
         # table under the same epoch id (the dbt-per-cycle analog).
         # Models may CHAIN (model.parent) — the dbt raw → staging →
-        # curated graph. The DAG is planned once, here, into chains
-        # (connected components, each parent-first) so a chained model
-        # always reads its parent's post-epoch state; a chained model's
-        # input is its parent's epoch_delta, recomputed lazily from the
-        # one bronze delta (no extra staged storage anywhere in the
-        # DAG). silver_models lists every model, chain by chain.
-        self._model_chains = model_dag_order(list(silver_models or []))
-        self.silver_models = [m for chain in self._model_chains for m in chain]
+        # curated graph. The DAG is planned once, here, parent-first: a
+        # chained model's input is its parent's epoch_delta, recomputed
+        # lazily from the one bronze delta (no extra staged storage
+        # anywhere in the DAG). Every model reads its source pinned at
+        # the pre-epoch version, so each epoch applies to all of them
+        # at once, beside the sink's own merge (see _apply_silver).
+        self.silver_models = model_dag_order(list(silver_models or []))
         # Auto-maintenance (VERDICT r4 #4 — the reference's ClickHouse
         # gets background merges for free; a copy-on-write table does
         # not): every K applied epochs the tail loop compacts the
@@ -373,39 +390,54 @@ class CdcEngine:
             schema_ver_max=int(slice_stats.get("sv_max") or schema_ver_max),
             added_columns=[f.name for f in added],
         )
-        # The lake table's commit carries the manifest (recover heals
-        # from it) and prunes by the epoch census — the staged buckets
-        # and the exact delta size, which also lets it broadcast the
-        # changed-key set into the anti-join. Every model merge reuses
-        # the same census. A warehouse ledgers the lsn range instead.
-        if isinstance(sink, LakeTable):
-            upserts, deletes = split_ops(delta)
-            res = sink.merge(
-                upserts.drop("lsn", "schema_ver"), deletes.select(*self.key_cols),
-                epoch_id=epoch, extra_summary={"manifest": manifest}, census=census,
-            )
-        else:
-            res = sink.merge_files(exported, epoch_id=epoch, lsn_range=lsn_range)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        if res.skipped:
-            # Ledger hit: the epoch already committed (a crash before
-            # finalize), possibly under a NARROWER lsn range than this
-            # recomputed slice if the source gained LSNs before restart.
-            # Finalize what the sink RECORDED so the watermark never
-            # passes rows that were not applied; a legacy ledger row
-            # without lsn_lo keeps the loop's lo (0 would read as a
-            # false gap/overlap in pipeline_health).
-            manifest = self._ledger_manifest(sink, epoch, lo=lsn_range[0]) or manifest
-        else:
-            manifest["metrics"].update(bytes_written=res.bytes_written, wall_ms=wall_ms)
-            manifest.update(snapshot_version=res.version, committed_at=utc_now())
-
-        # Finalize, then the models ride the staged delta (no extra pass
-        # over the slice; the reference ran its dbt models against the
-        # warehouse, airflow/dags/repsly_dag.py:643-1040), then sweep.
-        # See the module docstring for the ordering rule.
-        self.checkpoints.finalize(epoch, manifest)
-        model_walls = self._apply_silver(delta, epoch, census=census)
+        # Fan out (module docstring, steps 5-7): the models ride the
+        # staged delta (no extra pass over the slice; the reference ran
+        # its dbt models against the warehouse,
+        # airflow/dags/repsly_dag.py:643-1040) on a thread of their own,
+        # reading their sources at the pins taken here before anything
+        # launches, while this thread merges into the sink and
+        # finalizes; then the models may publish, and the staging dir
+        # goes once every model has committed.
+        pins = self._pin_sources(epoch)
+        committed: Future = Future()
+        with ThreadPoolExecutor(max_workers=1) as dag:
+            models = dag.submit(self._apply_silver, delta, epoch, census=census,
+                                pins=pins, committed=committed)
+            try:
+                # The lake table's commit carries the manifest (recover
+                # heals from it) and prunes by the epoch census — the
+                # staged buckets and the exact delta size, which also
+                # lets it broadcast the changed-key set into the
+                # anti-join. Every model merge reuses the same census. A
+                # warehouse ledgers the lsn range instead.
+                if isinstance(sink, LakeTable):
+                    upserts, deletes = split_ops(delta)
+                    res = sink.merge(
+                        upserts.drop("lsn", "schema_ver"), deletes.select(*self.key_cols),
+                        epoch_id=epoch, extra_summary={"manifest": manifest}, census=census,
+                    )
+                else:
+                    res = sink.merge_files(exported, epoch_id=epoch, lsn_range=lsn_range)
+                wall_ms = int((time.monotonic() - t0) * 1000)
+                if res.skipped:
+                    # Ledger hit: the epoch already committed (a crash
+                    # before finalize), possibly under a NARROWER lsn
+                    # range than this recomputed slice if the source
+                    # gained LSNs before restart. Finalize what the sink
+                    # RECORDED so the watermark never passes rows that
+                    # were not applied; a legacy ledger row without
+                    # lsn_lo keeps the loop's lo (0 would read as a
+                    # false gap/overlap in pipeline_health).
+                    manifest = self._ledger_manifest(sink, epoch, lo=lsn_range[0]) or manifest
+                else:
+                    manifest["metrics"].update(bytes_written=res.bytes_written, wall_ms=wall_ms)
+                    manifest.update(snapshot_version=res.version, committed_at=utc_now())
+                self.checkpoints.finalize(epoch, manifest)
+            except BaseException as e:
+                committed.set_exception(e)  # every model discards its write
+                raise
+            committed.set_result(None)
+            model_walls = models.result()
         shutil.rmtree(staging_dir, ignore_errors=True)
         rng = tuple(manifest["lineage"]["lsn_range"])
         if res.skipped:
@@ -570,59 +602,79 @@ class CdcEngine:
         return delta, offsets, census
 
     def _apply_silver(self, staged: DataFrame, epoch: int,
-                      census: EpochCensus | None = None) -> dict[str, int]:
-        """Walk the model chains planned at attach: a root model feeds
-        on the bronze staged delta; a chained model feeds on its
-        parent's ``epoch_delta`` of the parent's own input — a pure
-        function of it, so recovery replays the WHOLE chain from the
-        one retained bronze delta (already-committed ancestors just skip
-        their merge while their delta is still recomputable). Every
-        model gets the bronze epoch ``census`` (None on a warehouse,
-        whose stage is unbucketed): model keys propagate from the
-        bronze delta, so it names their buckets too. Its row count is
-        dropped here, where it enters the DAG: a transform may fan out,
-        so the bronze count does not bound a model's changed keys.
+                      census: EpochCensus | None = None, *,
+                      pins: dict[int, int] | None = None,
+                      committed: Future | None = None) -> dict[str, int]:
+        """Apply the epoch to every attached model at once, each on a
+        worker thread of its own. A root model feeds on the bronze
+        staged delta; a chained model on its parent's ``epoch_delta`` of
+        the parent's own input — a pure function of it, so recovery
+        replays the WHOLE DAG from the one retained bronze delta
+        (already-committed models just skip their merge). Every model
+        gets the bronze epoch ``census`` (None on a warehouse, whose
+        stage is unbucketed): model keys propagate from the bronze
+        delta, so it names their buckets too. Its row count is dropped
+        here, where it enters the DAG: a transform may fan out, so the
+        bronze count does not bound a model's changed keys.
+
+        No model waits for another model's or the sink's merge to read:
+        each reads its lake source at ``pins`` (source table id →
+        pre-epoch version; pinned here when None, as on a replay), so a
+        chained model runs beside its parent. Commits do wait: every
+        model publishes only once ``committed`` (the sink's commit and
+        finalize of the epoch; None when that is done) has succeeded,
+        and discards what it wrote if it failed. A model whose table is
+        a warehouse (one transaction, nothing to hold back) starts after
+        ``committed``; one whose source is a warehouse (no time travel)
+        starts after that source commits — the sink, or its parent.
 
         Returns per-model wall (ms) so callers can attribute epoch time
-        between the bronze apply and each model's maintenance.
-
-        Independent chains run CONCURRENTLY (guide §2.6: Spark happily
-        schedules several jobs at once; a chain's tail tasks leave
-        cores idle that another chain's jobs back-fill). Models inside
-        a chain stay strictly ordered (a child needs its parent's
-        delta), but e.g. a bronze-fed day rollup has no ordering
-        relation to a silver→gold chain. Each model commits to its OWN
-        table, so results are independent of inter-chain ordering, and
-        the crash contract is unchanged: the epoch's staging dir is
-        swept only after every chain returns, and a failure anywhere
-        leaves it retained — recovery replays it, already-committed
-        models skip via their ledgers exactly as in a sequential
-        walk."""
+        between the bronze apply and each model's maintenance. Each
+        model commits to its OWN table, so results do not depend on the
+        order the models finish in, and the crash contract holds: the
+        staging dir is swept only after every model returns, and a
+        failure anywhere leaves it retained — recovery replays it,
+        already-committed models skip via their ledgers."""
         if census is not None:
             census = dataclasses.replace(census, rows=None)
+        if pins is None:
+            pins = self._pin_sources(epoch)
+        if committed is None:
+            committed = Future()
+            committed.set_result(None)
+        inputs: dict[int, DataFrame] = {}
+        for m in self.silver_models:  # parent-first
+            p = m.parent
+            inputs[id(m)] = staged if p is None else p.epoch_delta(inputs[id(p)], epoch)
         walls: dict[str, int] = {}
+        applied: dict[int, Future] = {}
 
-        def run_chain(models: list) -> None:
-            inputs: dict[int, DataFrame] = {}
-            for model in models:
-                p = model.parent
-                inp = staged if p is None else p.epoch_delta(inputs[id(p)], epoch)
-                inputs[id(model)] = inp
-                t0 = time.monotonic()
-                model.apply_epoch(inp, epoch, census=census)
-                walls[model.name] = int((time.monotonic() - t0) * 1000)
+        def apply(m) -> None:
+            src = m.bronze
+            if src is not None and not isinstance(src, LakeTable):
+                (committed if m.parent is None else applied[id(m.parent)]).result()
+            elif not isinstance(m.table, LakeTable):
+                committed.result()
+            pin = {"pinned": pins[id(src)]} if id(src) in pins else {}
+            t0 = time.monotonic()
+            with gated_commits(committed.result):
+                m.apply_epoch(inputs[id(m)], epoch, census=census, **pin)
+            walls[m.name] = int((time.monotonic() - t0) * 1000)
 
-        if len(self._model_chains) <= 1:
-            for chain in self._model_chains:
-                run_chain(chain)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(self._model_chains)) as pool:
-                futures = [pool.submit(run_chain, c) for c in self._model_chains]
-                for f in futures:
-                    f.result()
+        if self.silver_models:
+            with ThreadPoolExecutor(max_workers=len(self.silver_models)) as pool:
+                for m in self.silver_models:
+                    applied[id(m)] = pool.submit(apply, m)
+            for f in applied.values():
+                f.result()
         return walls
+
+    def _pin_sources(self, epoch: int) -> dict[int, int]:
+        """The pre-epoch version of every model's lake source, by table
+        id (``LakeTable.pre_epoch_version``: the current version, or on
+        a replay the parent of the source's commit of the epoch)."""
+        return {id(m.bronze): m.bronze.pre_epoch_version(epoch)
+                for m in self.silver_models if isinstance(m.bronze, LakeTable)}
 
     def _check_silver_current(self, sink, staged: dict[int, str]) -> None:
         """Refuse to tail forward past a model that is behind on

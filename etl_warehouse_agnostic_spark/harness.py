@@ -91,7 +91,7 @@ def q_lww_dedup_strategies(spark, sf_dir):
     proves each against the same SQL LWW oracle (and therefore against
     each other)."""
     chg = _changes(spark, sf_dir)
-    w = lww_dedup_window(chg, KEYS, ORDER, num_salts=8).select(
+    w = lww_dedup_window(chg, KEYS, ORDER).select(
         F.lit("window").alias("strategy"), "conv_id", "turn_idx", "op", "lsn"
     )
     s = lww_dedup_salted(chg, KEYS, ORDER, num_salts=8).select(

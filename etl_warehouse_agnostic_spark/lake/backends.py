@@ -498,7 +498,10 @@ class SqliteBackend(_SqlWarehouse):
     def _connect(db_path: str):
         import sqlite3
 
-        return sqlite3.connect(db_path, isolation_level=None)
+        # not bound to the opening thread: the engine applies a model's
+        # epoch on a worker thread (one thread at a time per backend,
+        # like DuckDB's connection)
+        return sqlite3.connect(db_path, isolation_level=None, check_same_thread=False)
 
     def _rollback(self) -> None:
         """ROLLBACK if a transaction is active. SQLite ends the

@@ -14,7 +14,9 @@ The semantics mirror Iceberg v2 copy-on-write:
   that loses the version race deletes the data it wrote, and the change
   is re-decided against the winner's snapshot (Iceberg's commit retry):
   two merges of different keys both land, a retried overwrite is a
-  later full refresh, a retried schema or epoch stamp re-diffs.
+  later full refresh, a retried schema or epoch stamp re-diffs. A
+  thread can hold its commits behind a gate (``gated_commits``): the
+  attempt writes, waits, and deletes its data if the gate refuses.
 - **Bucketed layout**: data files are grouped by
   ``bucket = pmod(xxhash64(conv_id), num_buckets)`` (Iceberg's
   ``bucket(N, conv_id)`` transform). A MERGE rewrites only the buckets
@@ -42,15 +44,17 @@ engine above it (dedup, epoch loop, manifests) is unchanged.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
 import os
 import re
 import shutil
+import threading
 import time
 import uuid
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -72,6 +76,27 @@ def _file_day(relpath: str) -> str | None:
         if seg.startswith(f"{_PD}="):
             return seg.split("=", 1)[1]
     return None
+
+
+def _check_day_range(snap: dict, day_range: tuple[str, str] | None) -> None:
+    """Raise unless ``day_range`` is None or spelled in snapshot
+    ``snap``'s time-partition granule (see :meth:`LakeTable.read`)."""
+    if day_range is None:
+        return
+    spec = snap.get("partition_spec")
+    if spec is None:
+        raise ValueError(
+            "day_range requires a time partition_spec; this table has none "
+            "— use a plain .where() filter instead"
+        )
+    pat = {"day": r"^\d{4}-\d{2}-\d{2}$", "month": r"^\d{4}-\d{2}$"}[spec["transform"]]
+    for bound in day_range:
+        if not re.match(pat, str(bound)):
+            raise ValueError(
+                f"day_range bound {bound!r} does not match the table's "
+                f"'{spec['transform']}' granule format "
+                f"({_GRANULE_FMT[spec['transform']]})"
+            )
 
 
 def _with_bucket(df: DataFrame, snap: dict) -> DataFrame:
@@ -104,6 +129,27 @@ _COMMIT_RETRIES = 3
 # for executors with tens of GB; larger deltas fall back to the
 # shuffled plan (AQE may still localize it).
 _BROADCAST_CHANGED_KEYS_MAX_ROWS = 4_000_000
+
+
+# The commit gate of the calling thread (see ``gated_commits``).
+_gate = threading.local()
+
+
+@contextlib.contextmanager
+def gated_commits(wait: Callable[[], Any]):
+    """Hold every table commit this thread makes inside the block until
+    ``wait()`` returns: an attempt writes its data, then calls ``wait``
+    just before it publishes. If ``wait`` raises, the attempt deletes
+    the data it wrote and the error propagates, so nothing commits.
+    The engine runs each model's merge under the sink's commit of the
+    epoch this way: a model writes beside the sink's merge and publishes
+    only once the sink has committed and finalized the epoch."""
+    prev = getattr(_gate, "wait", None)
+    _gate.wait = wait
+    try:
+        yield
+    finally:
+        _gate.wait = prev
 
 
 def _retried(attempt):
@@ -351,22 +397,46 @@ class LakeTable:
         range on an unpartitioned table would silently return the whole
         table — both are errors, not best-effort filters."""
         snap = self.snapshot(version)
-        if day_range is not None:
-            spec = snap.get("partition_spec")
-            if spec is None:
-                raise ValueError(
-                    "day_range requires a time partition_spec; this table has none "
-                    "— use a plain .where() filter instead"
-                )
-            pat = {"day": r"^\d{4}-\d{2}-\d{2}$", "month": r"^\d{4}-\d{2}$"}[spec["transform"]]
-            for bound in day_range:
-                if not re.match(pat, str(bound)):
-                    raise ValueError(
-                        f"day_range bound {bound!r} does not match the table's "
-                        f"'{spec['transform']}' granule format "
-                        f"({_GRANULE_FMT[spec['transform']]})"
-                    )
+        _check_day_range(snap, day_range)
         return self._read_files(snap, buckets, day_range).drop(_BUCKET)
+
+    def read_after(
+        self,
+        upserts: DataFrame,
+        delete_keys: DataFrame | None = None,
+        version: int | None = None,
+        buckets: list[int] | None = None,
+        day_range: tuple[str, str] | None = None,
+    ) -> DataFrame:
+        """Version ``version``'s rows, pruned as :meth:`read` prunes,
+        with a delta applied on top and nothing written: the rows minus
+        the delta's changed keys (upsert and delete keys), plus every
+        upsert — the same expression :meth:`merge` writes for the
+        buckets it rewrites. A model reads its source's post-epoch rows
+        this way, pinned at the pre-epoch version, while the source's
+        own merge of the epoch is still running."""
+        snap = self.snapshot(version)
+        _check_day_range(snap, day_range)
+        up, changed_keys = self._delta(snap, upserts, delete_keys)
+        return self._overlay(snap, buckets, up, changed_keys, day_range=day_range).drop(_BUCKET)
+
+    def pre_epoch_version(self, epoch_id: int) -> int:
+        """The version an epoch's readers pin: the parent of the
+        snapshot that committed ``epoch_id`` when the table has
+        committed it (a replay), else the current version. One snapshot
+        read decides, so the answer is the same whether or not the
+        epoch's own commit lands while it is asked."""
+        cur = self.snapshot()
+        if epoch_id not in cur.get("committed_epochs", []):
+            return cur["version"]
+        snap = self.epoch_snapshot(epoch_id)
+        if snap is None:
+            raise RuntimeError(
+                f"{self.path}: epoch {epoch_id} is committed, but no retained "
+                "snapshot carries its commit (expired, or stamped by a "
+                "bootstrap), so its pre-epoch state cannot be read"
+            )
+        return snap["parent"]
 
     # ---------------- write paths ----------------
 
@@ -482,7 +552,9 @@ class LakeTable:
         ``rewritten`` buckets' files (all, when None) replaced by
         ``files``, the non-None ``epochs`` stamped and ``summary``. A
         lost version race raises CommitConflict carrying ``written_dir``,
-        the attempt's data dir, for the retry loop to reclaim."""
+        the attempt's data dir, for the retry loop to reclaim. Under
+        :func:`gated_commits` it first waits for the gate, and a refused
+        gate deletes ``written_dir`` itself."""
         kept = {} if rewritten is None else {
             b: paths for b, paths in cur["files"].items() if int(b) not in rewritten
         }
@@ -501,12 +573,63 @@ class LakeTable:
             "committed_at": utc_now(),
             **layout,
         }
+        wait = getattr(_gate, "wait", None)
         try:
+            if wait is not None:
+                wait()
             _atomic_write_json(snap, os.path.join(self.meta_dir, f"v{v:08d}.json"))
         except CommitConflict as e:
             e.written_dir = written_dir
             raise
+        except BaseException:
+            if written_dir:  # the gate refused the commit
+                shutil.rmtree(written_dir, ignore_errors=True)
+            raise
         return v
+
+    def _delta(
+        self, snap: dict, upserts: DataFrame, delete_keys: DataFrame | None
+    ) -> tuple[DataFrame, DataFrame]:
+        """A delta in snapshot ``snap``'s layout: the upserts aligned to
+        its schema, and the changed keys (upsert keys plus delete keys,
+        cast to its key types), both carrying ``_bucket``."""
+        schema = T.StructType.fromJson(snap["schema"])
+        keys = snap["key_cols"]
+        up = _with_bucket(self._align(upserts, schema), snap)
+        # No dropDuplicates: LEFT ANTI ignores right-side duplicates,
+        # and a bucket census distincts for itself — the dedup here
+        # was one whole extra Exchange of the key set per epoch.
+        changed_keys = up.select(*keys, _BUCKET)
+        if delete_keys is not None:
+            dk = delete_keys.select(*[F.col(k).cast(schema[k].dataType).alias(k) for k in keys])
+            changed_keys = changed_keys.unionByName(_with_bucket(dk, snap))
+        return up, changed_keys
+
+    def _overlay(
+        self,
+        snap: dict,
+        buckets: list[int] | None,
+        up: DataFrame,
+        changed_keys: DataFrame,
+        broadcast_keys: bool = False,
+        day_range: tuple[str, str] | None = None,
+    ) -> DataFrame:
+        """The one post-delta expression, for :meth:`merge` and
+        :meth:`read_after`: ``snap``'s rows in ``buckets`` (and
+        ``day_range``) whose key the delta did not change (anti =
+        NOT EXISTS), plus the upserts; carries ``_bucket``.
+        ``broadcast_keys`` (the caller knows the delta is small)
+        broadcasts the key set so the rows are never shuffled by key;
+        otherwise AQE picks the join. Buckets that hold no files skip
+        the anti-join (an initial load, all-new buckets)."""
+        if not any(paths for b, paths in snap["files"].items()
+                   if buckets is None or int(b) in buckets):
+            return up
+        anti_keys = changed_keys.select(*snap["key_cols"])
+        if broadcast_keys:
+            anti_keys = F.broadcast(anti_keys)
+        rows = self._read_files(snap, buckets=buckets, day_range=day_range)
+        return rows.join(anti_keys, on=snap["key_cols"], how="left_anti").unionByName(up)
 
     def _align(self, df: DataFrame, schema: T.StructType) -> DataFrame:
         """Project df onto the table schema: missing columns → NULL,
@@ -767,21 +890,7 @@ class LakeTable:
         cur = self.snapshot()
         if epoch_id is not None and epoch_id in cur.get("committed_epochs", []):
             return MergeResult(cur["version"], epoch_id, 0, 0, 0, skipped=True)
-        schema = T.StructType.fromJson(cur["schema"])
-        keys = cur["key_cols"]
-
-        up = _with_bucket(self._align(upserts, schema), cur)
-        # No dropDuplicates: LEFT ANTI ignores right-side duplicates,
-        # and the census below distincts for itself — the dedup here
-        # was one whole extra Exchange of the key set per epoch.
-        changed_keys = up.select(*keys, _BUCKET)
-        if delete_keys is not None:
-            # hashed in the table's key types, like the aligned upserts
-            dk = _with_bucket(
-                delete_keys.select(*[F.col(k).cast(schema[k].dataType).alias(k) for k in keys]),
-                cur,
-            )
-            changed_keys = changed_keys.unionByName(dk)
+        up, changed_keys = self._delta(cur, upserts, delete_keys)
         summary = {"operation": "merge", "epoch_id": epoch_id}
 
         # Affected buckets: from the caller's census when this layout
@@ -799,24 +908,8 @@ class LakeTable:
                 )
                 return MergeResult(v, epoch_id, 0, 0, 0)
 
-            if not any(cur["files"].get(str(b)) for b in affected):
-                # Initial load / all-new buckets: no existing rows to
-                # survive, so skip the anti-join (and its changed-key
-                # broadcast build) entirely.
-                new_data = up
-            else:
-                current = self._read_files(cur, buckets=affected)
-                # Survivors: existing rows in affected buckets whose key
-                # was not touched this epoch (anti = NOT EXISTS). When
-                # the caller knows the delta is small (its census),
-                # broadcast the key set so the survivors scan is never
-                # shuffled; otherwise leave the strategy to AQE.
-                anti_keys = changed_keys.select(*keys)
-                if census_rows is not None and census_rows <= _BROADCAST_CHANGED_KEYS_MAX_ROWS:
-                    anti_keys = F.broadcast(anti_keys)
-                survivors = current.join(anti_keys, on=keys, how="left_anti")
-                new_data = survivors.unionByName(up)
-
+            small = census_rows is not None and census_rows <= _BROADCAST_CHANGED_KEYS_MAX_ROWS
+            new_data = self._overlay(cur, affected, up, changed_keys, broadcast_keys=small)
             out, files, rows, nbytes = self._write_attempt(
                 cur, "e", new_data, self.max_records_per_file
             )

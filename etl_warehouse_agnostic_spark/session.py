@@ -71,6 +71,13 @@ def get_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.hadoop.parquet.summary.metadata.level", "NONE")
         .config("spark.shuffle.file.buffer", "1m")
+        # Generated-class cache (static conf, keyed by source text).
+        # Spark's default holds 100 classes, fewer than one lake epoch
+        # with the silver/gold/day-rollup DAG uses: at 100 such an epoch
+        # compiled 127-130 classes, all but ~6 of them already compiled
+        # by the epoch before; at 1000 it compiles those ~6 (the
+        # epoch's inlined literals), with room for several such DAGs.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
     if master.startswith("local"):

@@ -6,12 +6,12 @@ orchestrated per-cycle at airflow/dags/repsly_dag.py:643-1040): each
 cycle transforms ONLY the rows that landed since the model's own
 watermark and MERGEs them into the curated table, keyed by the same
 unique key as the raw table. This module is the Spark-native analog,
-maintained by the CDC tail loop itself: after each bronze epoch
-commits, the model transforms that epoch's staged delta (the deduped
-net ops the engine already wrote for per-bucket lineage) and MERGEs
-the result into its own LakeTable under the SAME epoch id — so silver
-maintenance is exactly-once, resumable, and O(delta) per cycle, never
-a rescan of bronze.
+maintained by the CDC tail loop itself: for each bronze epoch the
+model transforms that epoch's staged delta (the deduped net ops the
+engine already wrote for per-bucket lineage) and MERGEs the result into
+its own LakeTable under the SAME epoch id — so silver maintenance is
+exactly-once, resumable, and O(delta) per cycle, never a rescan of
+bronze.
 
 Scale design (100 TB): the staged delta is already bucketed and tiny
 relative to the slice; the transform is a row-wise projection (one
@@ -35,11 +35,25 @@ The day rollup's merge keys are its own groups, so it observes its gold
 census (buckets and group count) on the checkpoint it already takes,
 and that census keeps its count.
 
-Crash contract: bronze merge + manifest finalize happen first; the
-staging delta is deleted only after EVERY attached model has committed
-the epoch. A crash anywhere in between retains the staged files, and
-``CdcEngine.recover()`` replays them through the model's
-epoch-idempotent merge — same write-ahead ordering as the bronze path.
+Pinned reads: a model that reads a table besides its delta (an
+aggregate's source, bronze or its parent's table) reads it at the
+source's pre-epoch version, ``LakeTable.pre_epoch_version``: the
+post-epoch rows are the pinned rows overlaid with the delta
+(``LakeTable.read_after``), the old rows are the pinned rows
+themselves. So no model waits for its source's merge, and a replay
+reads exactly what the live epoch read (the pin is then the parent of
+the source's epoch commit). That the overlay equals the source's
+post-epoch rows is a query-equivalence claim under bag semantics (cf.
+*SPES*, ICDE 2022); the full-rebuild tests check it. A warehouse source
+has no time travel; its models read it after it commits.
+
+Crash contract: every model merge writes beside the bronze merge but
+publishes only once bronze has committed and the manifest finalized
+(``lake.table.gated_commits``); the staging delta is deleted only after
+EVERY attached model has committed the epoch. A crash anywhere in
+between retains the staged files, and ``CdcEngine.recover()`` replays
+them through the model's epoch-idempotent merge — same write-ahead
+ordering as the bronze path.
 """
 
 from __future__ import annotations
@@ -79,22 +93,31 @@ def _source_buckets(staged: DataFrame, snap: dict, census: EpochCensus | None) -
     return _delta_buckets(staged, snap) if buckets is None else buckets
 
 
-def _pre_epoch_rows(source: LakeTable, staged: DataFrame, epoch: int,
-                    census: EpochCensus | None, name: str) -> tuple[DataFrame, list[int]]:
-    """The source's rows for exactly the delta's keys as of just before
-    ``epoch`` (the snapshot pinned as the epoch commit's parent, so a
-    replay reads the same rows), bucket-pruned to the delta's buckets;
-    returns them with those buckets."""
-    snap = source.epoch_snapshot(epoch)
-    if snap is None:
-        raise RuntimeError(
-            f"gold model {name!r}: source has no snapshot for epoch "
-            f"{epoch} — models must apply after their source commits it"
-        )
-    keys = list(source.key_cols)
+def _pre_epoch_rows(source: LakeTable, pinned: int, staged: DataFrame,
+                    census: EpochCensus | None) -> tuple[DataFrame, list[int]]:
+    """The source's rows for exactly the delta's keys at its pinned
+    pre-epoch version ``pinned`` (``LakeTable.pre_epoch_version``, so a
+    live epoch and its replay read the same rows), bucket-pruned to the
+    delta's buckets; returns them with those buckets."""
+    snap = source.snapshot(pinned)
+    keys = list(snap["key_cols"])
     buckets = _source_buckets(staged, snap, census)
-    pre = source.read(version=snap["parent"], buckets=buckets)
+    pre = source.read(version=pinned, buckets=buckets)
     return pre.join(staged.select(*keys).dropDuplicates(keys), keys, "left_semi"), buckets
+
+
+def _post_epoch_rows(source, pinned: int | None, staged: DataFrame, **prune) -> DataFrame:
+    """The source's rows once the epoch's delta ``staged`` is applied,
+    pruned as ``read`` prunes: a lake source's pinned pre-epoch rows
+    overlaid with the delta (``LakeTable.read_after``), readable while
+    the source's own merge of the epoch still runs. A warehouse source
+    has no time travel; it is read as it stands, which the engine makes
+    the post-epoch state by starting the model after the source
+    commits."""
+    if not isinstance(source, LakeTable):
+        return source.read()
+    upserts, deletes = split_ops(staged)
+    return source.read_after(upserts, deletes, version=pinned, **prune)
 
 
 def _merge(table, upserts: DataFrame, delete_keys: DataFrame, epoch: int,
@@ -105,12 +128,15 @@ def _merge(table, upserts: DataFrame, delete_keys: DataFrame, epoch: int,
     return table.merge(upserts, delete_keys=delete_keys, epoch_id=epoch, **kw)
 
 
-def model_dag_order(models: list) -> list[list]:
-    """The model DAG's chains: the connected components of the parent
-    forest, in the order their roots were attached, each ordered
-    parent-first (a parent's children in attach order) — so a chained
-    model always reads its parent's POST-epoch table state, and
-    separate chains share nothing.
+def model_dag_order(models: list) -> list:
+    """The attached models parent-first: the parent forest's connected
+    components in the order their roots were attached, each walked
+    breadth-first from its root (a parent's children in attach order).
+    A chained model's input, its parent's ``epoch_delta``, is derived
+    after the parent's own, and a bootstrap refreshes a parent before
+    its children. The order is not a commit order: every model reads
+    its source pinned at the pre-epoch version, so the engine applies
+    an epoch to all of them side by side.
 
     A parent that is not itself attached raises: its table would never
     be maintained, so the chain would silently aggregate stale data —
@@ -127,19 +153,23 @@ def model_dag_order(models: list) -> list[list]:
                 "or alongside its children"
             )
         children.setdefault(id(m.parent), []).append(m)
-    chains = []
+    order = []
     for root in (m for m in models if m.parent is None):
         chain = [root]
         for m in chain:  # grows as it walks: breadth-first from the root
             chain += children.get(id(m), [])
-        chains.append(chain)
-    return chains
+        order += chain
+    return order
 
 
 class _Model:
     """What every model shares: its own ``table`` and ``name``, the
     optional ``parent`` whose :meth:`SilverModel.epoch_delta` feeds it
     instead of bronze, and the table's epoch ledger."""
+
+    # The table the model reads besides its input delta (an aggregate's
+    # source); None when it reads only the delta.
+    bronze = None
 
     def __init__(self, table, name: str, parent: "SilverModel | None"):
         if parent is not None and not isinstance(parent, SilverModel):
@@ -192,8 +222,9 @@ class AggregateModel(_Model):
     RECOMPUTE: once updates/deletes exist, a delete cannot be folded
     associatively out of a running aggregate, so per cycle the groups
     touched by the epoch's staged delta are recomputed from the bronze
-    table's post-epoch state and MERGEd into the gold table; groups
-    whose last bronze row disappeared are deleted.
+    table's post-epoch state (its pinned pre-epoch rows with the delta
+    overlaid) and MERGEd into the gold table; groups whose last bronze
+    row disappeared are deleted.
 
     **Which groups does an epoch touch?** When ``group_cols`` are all
     bronze KEY columns (keys are immutable and present on delete rows),
@@ -221,8 +252,8 @@ class AggregateModel(_Model):
 
     Exactly-once and crash recovery ride the same contract as
     :class:`SilverModel`: the MERGE carries the bronze epoch id, and a
-    crash between bronze finalize and gold apply replays from the
-    retained staging delta via ``CdcEngine.recover()``.
+    crash after the bronze finalize but before the gold commit replays
+    from the retained staging delta via ``CdcEngine.recover()``.
     """
 
     def __init__(
@@ -300,7 +331,7 @@ class AggregateModel(_Model):
             self.aggregate(self.row_groups(self.bronze.read())), epoch_id=epoch_id
         )
 
-    def _touched_groups(self, staged: DataFrame, epoch: int,
+    def _touched_groups(self, staged: DataFrame, pinned: int | None,
                         census: EpochCensus | None) -> DataFrame:
         """Distinct group values this epoch touches.
 
@@ -308,7 +339,8 @@ class AggregateModel(_Model):
         and present on deletes). Otherwise union in the OLD groups —
         the pre-epoch snapshot's rows for the delta's keys (bucket-
         pruned time-travel read), covering updates that move a row
-        between groups and deletes whose payload is NULL."""
+        between groups and deletes whose payload is NULL (read at the
+        source's ``pinned`` pre-epoch version)."""
         if self.key_grouped:
             return (
                 self.row_groups(staged)
@@ -317,23 +349,23 @@ class AggregateModel(_Model):
             )
         ups = staged.where(F.col("op") != "D") if "op" in staged.columns else staged
         new_groups = self.row_groups(ups).select(*self.group_cols)
-        old_rows, _ = _pre_epoch_rows(self.bronze, staged, epoch, census, self.name)
+        old_rows, _ = _pre_epoch_rows(self.bronze, pinned, staged, census)
         return (
             new_groups.unionByName(self.row_groups(old_rows).select(*self.group_cols))
             .dropDuplicates(self.group_cols)
         )
 
-    def _recompute_scan(self, staged: DataFrame, touched: DataFrame,
+    def _recompute_scan(self, staged: DataFrame, touched: DataFrame, pinned: int | None,
                         census: EpochCensus | None) -> DataFrame:
-        """Post-epoch source rows to re-aggregate, pruned when possible
-        (see class docstring for the strategy order); records what it
-        did in ``self.last_scan``."""
+        """Post-epoch source rows to re-aggregate (the rows pinned at
+        the pre-epoch version with the delta overlaid), pruned when
+        possible (see class docstring for the strategy order); records
+        what it did in ``self.last_scan``."""
         if self.key_grouped and self.group_cols[0] == self._bucket_key:
             # a group lives entirely inside one bucket
-            snap = self.bronze.snapshot()
-            buckets = _source_buckets(staged, snap, census)
+            buckets = _source_buckets(staged, self.bronze.snapshot(pinned), census)
             self.last_scan = {"mode": "bucket", "buckets": buckets, "day_range": None}
-            return self.bronze.read(version=snap["version"], buckets=buckets)
+            return _post_epoch_rows(self.bronze, pinned, staged, buckets=buckets)
         if self.day_of is not None:
             rng = touched.agg(
                 F.min(self.day_of).alias("lo"), F.max(self.day_of).alias("hi")
@@ -343,7 +375,7 @@ class AggregateModel(_Model):
                 return self.bronze.read(buckets=[])
             day_range = (str(rng["lo"]), str(rng["hi"]))
             self.last_scan = {"mode": "day", "buckets": None, "day_range": day_range}
-            return self.bronze.read(day_range=day_range)
+            return _post_epoch_rows(self.bronze, pinned, staged, day_range=day_range)
         if self.require_pruned:
             raise RuntimeError(
                 f"gold model {self.name!r}: no pruning strategy applies "
@@ -363,14 +395,21 @@ class AggregateModel(_Model):
             )
             self._warned_full_scan = True
         self.last_scan = {"mode": "full", "buckets": None, "day_range": None}
-        return self.bronze.read()
+        return _post_epoch_rows(self.bronze, pinned, staged)
 
     def apply_epoch(self, staged: DataFrame, epoch: int,
-                    census: EpochCensus | None = None) -> MergeResult:
+                    census: EpochCensus | None = None, pinned: int | None = None) -> MergeResult:
+        """Apply one epoch's delta. ``pinned`` is a lake source's
+        pre-epoch version (the engine pins it before the epoch fans
+        out); None pins it here by the same rule. Every source read is
+        at that version, so the source's own merge of the epoch may run
+        concurrently, before or after this one."""
         if self.table.epoch_committed(epoch):
             return MergeResult(0, epoch, 0, 0, 0, skipped=True)
-        touched = self._touched_groups(staged, epoch, census)
-        cur = self.row_groups(self._recompute_scan(staged, touched, census)).join(
+        if pinned is None and isinstance(self.bronze, LakeTable):
+            pinned = self.bronze.pre_epoch_version(epoch)
+        touched = self._touched_groups(staged, pinned, census)
+        cur = self.row_groups(self._recompute_scan(staged, touched, pinned, census)).join(
             touched, self.group_cols, "left_semi"
         )
         out = self.aggregate(cur)
@@ -429,7 +468,7 @@ class DeltaAggregateModel(_Model):
     MERGE carries the bronze epoch id and replays skip before any
     mutation; the delta arithmetic is a deterministic function of the
     staged delta and the PINNED pre-epoch snapshot
-    (``epoch_snapshot(epoch)['parent']``), so a crash-replay computes
+    (``LakeTable.pre_epoch_version``), so a crash-replay computes
     bit-identical updates. Reference analog: the incremental-aggregate
     dbt models the reference runs per cycle
     (dbt/models/curated/repsly/client_notes.sql — ClickHouse
@@ -502,12 +541,16 @@ class DeltaAggregateModel(_Model):
         )
 
     def apply_epoch(self, staged: DataFrame, epoch: int,
-                    census: EpochCensus | None = None) -> MergeResult:
+                    census: EpochCensus | None = None, pinned: int | None = None) -> MergeResult:
+        """Apply one epoch's delta; ``pinned`` as in
+        :meth:`AggregateModel.apply_epoch`."""
         if self.table.epoch_committed(epoch):
             return MergeResult(0, epoch, 0, 0, 0, skipped=True)
+        if pinned is None:
+            pinned = self.bronze.pre_epoch_version(epoch)
         upserts, _ = split_ops(staged)
         # the subtract side of the maintenance identity
-        old_rows, src_buckets = _pre_epoch_rows(self.bronze, staged, epoch, census, self.name)
+        old_rows, src_buckets = _pre_epoch_rows(self.bronze, pinned, staged, census)
         pos = self.aggregate(upserts).withColumn("_sign", F.lit(1))
         neg = self.aggregate(old_rows).withColumn("_sign", F.lit(-1))
         d_aggs = [

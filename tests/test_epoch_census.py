@@ -165,13 +165,13 @@ def test_recovery_replays_under_the_epoch_census(spark, tmpdir_path, monkeypatch
     censuses = []
     real_apply_silver = eng._apply_silver
 
-    def apply_silver(staged, epoch, census=None):
+    def apply_silver(staged, epoch, census=None, **kw):
         censuses.append(census)
-        return real_apply_silver(staged, epoch, census=census)
+        return real_apply_silver(staged, epoch, census=census, **kw)
 
     eng._apply_silver = apply_silver
 
-    def crash(staged, epoch, census=None):
+    def crash(staged, epoch, census=None, **kw):
         raise RuntimeError("crash before the day rollup commits")
 
     day.apply_epoch = crash
@@ -202,19 +202,19 @@ def test_recovery_uses_the_staged_layout_after_a_concurrent_rebucket(
     real_apply_silver = eng._apply_silver
     real_day_apply = day.apply_epoch
 
-    def apply_silver(staged, epoch, census=None):
+    def apply_silver(staged, epoch, census=None, **kw):
         censuses.append(census)
-        return real_apply_silver(staged, epoch, census=census)
+        return real_apply_silver(staged, epoch, census=census, **kw)
 
     def rebucket_then_merge(*args, **kwargs):
         if kwargs.get("epoch_id") == 2:
             bronze.rebucket(6)
         return LakeTable.merge(bronze, *args, **kwargs)
 
-    def crash(staged, epoch, census=None):
+    def crash(staged, epoch, census=None, **kw):
         if epoch == 2:
             raise RuntimeError("crash before the day rollup commits")
-        return real_day_apply(staged, epoch, census=census)
+        return real_day_apply(staged, epoch, census=census, **kw)
 
     eng._apply_silver = apply_silver
     bronze.merge = rebucket_then_merge

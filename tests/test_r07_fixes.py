@@ -196,10 +196,10 @@ def test_epoch_delta_drops_source_bucket_metadata(spark, tmpdir_path):
 def test_concurrent_model_chains_match_sequential_truth(
     spark, tmpdir_path, monkeypatch, model_buckets
 ):
-    """_apply_silver runs independent model chains concurrently (a
-    chained silver→gold chain plus a bronze-fed delta rollup). The
-    grouping must keep intra-chain order (child after parent) while
-    inter-chain order stops mattering — every table must equal its
+    """_apply_silver runs every model concurrently (a chained
+    silver→gold chain plus a bronze-fed delta rollup), each reading its
+    source pinned at the pre-epoch version, so the order the models
+    finish in stops mattering — every table must equal its
     from-scratch rebuild, and per-model walls must be reported for
     every model. Model tables at 2 buckets coarsen the 4-bucket
     bronze, so the bronze epoch census names their buckets; at 3 it
