@@ -619,11 +619,11 @@ class CdcEngine:
 
         No model waits for another model's or the sink's merge to read:
         each reads its lake source at ``pins`` (source table id →
-        pre-epoch version; pinned here when None, as on a replay), so a
-        chained model runs beside its parent. Commits do wait: every
-        model publishes only once ``committed`` (the sink's commit and
-        finalize of the epoch; None when that is done) has succeeded,
-        and discards what it wrote if it failed. A model whose table is
+        pre-epoch version, from ``_pin_sources``, which a replay calls
+        here), so a chained model runs beside its parent. Commits do
+        wait: every model publishes only once ``committed`` (the sink's
+        commit and finalize of the epoch; None when that is done) has
+        succeeded, and discards what it wrote if it failed. A model whose table is
         a warehouse (one transaction, nothing to hold back) starts after
         ``committed``; one whose source is a warehouse (no time travel)
         starts after that source commits — the sink, or its parent.
@@ -655,7 +655,7 @@ class CdcEngine:
                 (committed if m.parent is None else applied[id(m.parent)]).result()
             elif not isinstance(m.table, LakeTable):
                 committed.result()
-            pin = {"pinned": pins[id(src)]} if id(src) in pins else {}
+            pin = {} if src is None else {"pinned": pins.get(id(src))}
             t0 = time.monotonic()
             with gated_commits(committed.result):
                 m.apply_epoch(inputs[id(m)], epoch, census=census, **pin)
@@ -669,12 +669,17 @@ class CdcEngine:
                 f.result()
         return walls
 
-    def _pin_sources(self, epoch: int) -> dict[int, int]:
-        """The pre-epoch version of every model's lake source, by table
-        id (``LakeTable.pre_epoch_version``: the current version, or on
-        a replay the parent of the source's commit of the epoch)."""
+    def _pin_sources(self, epoch: int) -> dict[int, int | None]:
+        """The pre-epoch version of the lake source of every model that
+        still needs the epoch, by table id (``LakeTable.pre_epoch_version``:
+        the current version, or on a replay the parent of the source's
+        commit of the epoch, None when that is not retained). A model
+        that has the epoch skips it, so its source is not asked: a
+        bootstrap may have stamped the epoch into that source without a
+        commit of its own. A source with no entry is read as it stands."""
         return {id(m.bronze): m.bronze.pre_epoch_version(epoch)
-                for m in self.silver_models if isinstance(m.bronze, LakeTable)}
+                for m in self.silver_models
+                if isinstance(m.bronze, LakeTable) and not m.epoch_committed(epoch)}
 
     def _check_silver_current(self, sink, staged: dict[int, str]) -> None:
         """Refuse to tail forward past a model that is behind on

@@ -402,9 +402,9 @@ class LakeTable:
 
     def read_after(
         self,
+        version: int,
         upserts: DataFrame,
-        delete_keys: DataFrame | None = None,
-        version: int | None = None,
+        delete_keys: DataFrame,
         buckets: list[int] | None = None,
         day_range: tuple[str, str] | None = None,
     ) -> DataFrame:
@@ -420,22 +420,24 @@ class LakeTable:
         up, changed_keys = self._delta(snap, upserts, delete_keys)
         return self._overlay(snap, buckets, up, changed_keys, day_range=day_range).drop(_BUCKET)
 
-    def pre_epoch_version(self, epoch_id: int) -> int:
-        """The version an epoch's readers pin: the parent of the
-        snapshot that committed ``epoch_id`` when the table has
-        committed it (a replay), else the current version. One snapshot
-        read decides, so the answer is the same whether or not the
-        epoch's own commit lands while it is asked."""
+    def pre_epoch_version(self, epoch_id: int) -> int | None:
+        """The version an epoch's readers pin: the current version when
+        the table has not committed ``epoch_id``, else (a replay) the
+        parent of the snapshot that committed it. None when the table
+        holds the epoch but no retained snapshot shows the state before
+        it (expired, or the epoch was stamped by a bootstrap): then only
+        the rows as they stand, which already hold the epoch, can be
+        read. One snapshot read decides whether the epoch is committed,
+        so the answer is the same whether or not the epoch's own commit
+        lands while it is asked."""
         cur = self.snapshot()
         if epoch_id not in cur.get("committed_epochs", []):
             return cur["version"]
         snap = self.epoch_snapshot(epoch_id)
-        if snap is None:
-            raise RuntimeError(
-                f"{self.path}: epoch {epoch_id} is committed, but no retained "
-                "snapshot carries its commit (expired, or stamped by a "
-                "bootstrap), so its pre-epoch state cannot be read"
-            )
+        if snap is None or not os.path.exists(
+            os.path.join(self.meta_dir, f"v{snap['parent']:08d}.json")
+        ):
+            return None
         return snap["parent"]
 
     # ---------------- write paths ----------------

@@ -44,8 +44,11 @@ themselves. So no model waits for its source's merge, and a replay
 reads exactly what the live epoch read (the pin is then the parent of
 the source's epoch commit). That the overlay equals the source's
 post-epoch rows is a query-equivalence claim under bag semantics (cf.
-*SPES*, ICDE 2022); the full-rebuild tests check it. A warehouse source
-has no time travel; its models read it after it commits.
+*SPES*, ICDE 2022); the full-rebuild tests check it. A source with no
+pin (None) is read as it stands, which already holds the epoch: a
+warehouse source, which has no time travel and whose models read it
+after it commits, or on a replay a lake source whose state before the
+epoch is no longer retained. The old rows need a pin.
 
 Crash contract: every model merge writes beside the bronze merge but
 publishes only once bronze has committed and the manifest finalized
@@ -93,12 +96,18 @@ def _source_buckets(staged: DataFrame, snap: dict, census: EpochCensus | None) -
     return _delta_buckets(staged, snap) if buckets is None else buckets
 
 
-def _pre_epoch_rows(source: LakeTable, pinned: int, staged: DataFrame,
-                    census: EpochCensus | None) -> tuple[DataFrame, list[int]]:
+def _pre_epoch_rows(source: LakeTable, pinned: int | None, staged: DataFrame,
+                    census: EpochCensus | None, name: str) -> tuple[DataFrame, list[int]]:
     """The source's rows for exactly the delta's keys at its pinned
     pre-epoch version ``pinned`` (``LakeTable.pre_epoch_version``, so a
     live epoch and its replay read the same rows), bucket-pruned to the
     delta's buckets; returns them with those buckets."""
+    if pinned is None:
+        raise RuntimeError(
+            f"gold model {name!r}: source {source.path} holds the epoch, but "
+            "no retained snapshot shows its state before it (expired, or "
+            "stamped by a bootstrap), so the epoch's old rows cannot be read"
+        )
     snap = source.snapshot(pinned)
     keys = list(snap["key_cols"])
     buckets = _source_buckets(staged, snap, census)
@@ -110,14 +119,17 @@ def _post_epoch_rows(source, pinned: int | None, staged: DataFrame, **prune) -> 
     """The source's rows once the epoch's delta ``staged`` is applied,
     pruned as ``read`` prunes: a lake source's pinned pre-epoch rows
     overlaid with the delta (``LakeTable.read_after``), readable while
-    the source's own merge of the epoch still runs. A warehouse source
-    has no time travel; it is read as it stands, which the engine makes
-    the post-epoch state by starting the model after the source
-    commits."""
+    the source's own merge of the epoch still runs. With no pin the
+    source already holds the epoch and is read as it stands (a
+    warehouse source, which has no time travel and which the engine
+    reads after it commits, or a replay's source whose pre-epoch state
+    is gone)."""
     if not isinstance(source, LakeTable):
         return source.read()
+    if pinned is None:
+        return source.read(**prune)
     upserts, deletes = split_ops(staged)
-    return source.read_after(upserts, deletes, version=pinned, **prune)
+    return source.read_after(pinned, upserts, deletes, **prune)
 
 
 def _merge(table, upserts: DataFrame, delete_keys: DataFrame, epoch: int,
@@ -349,7 +361,7 @@ class AggregateModel(_Model):
             )
         ups = staged.where(F.col("op") != "D") if "op" in staged.columns else staged
         new_groups = self.row_groups(ups).select(*self.group_cols)
-        old_rows, _ = _pre_epoch_rows(self.bronze, pinned, staged, census)
+        old_rows, _ = _pre_epoch_rows(self.bronze, pinned, staged, census, self.name)
         return (
             new_groups.unionByName(self.row_groups(old_rows).select(*self.group_cols))
             .dropDuplicates(self.group_cols)
@@ -398,16 +410,15 @@ class AggregateModel(_Model):
         return _post_epoch_rows(self.bronze, pinned, staged)
 
     def apply_epoch(self, staged: DataFrame, epoch: int,
-                    census: EpochCensus | None = None, pinned: int | None = None) -> MergeResult:
-        """Apply one epoch's delta. ``pinned`` is a lake source's
-        pre-epoch version (the engine pins it before the epoch fans
-        out); None pins it here by the same rule. Every source read is
-        at that version, so the source's own merge of the epoch may run
-        concurrently, before or after this one."""
+                    census: EpochCensus | None = None, *, pinned: int | None) -> MergeResult:
+        """Apply one epoch's delta. ``pinned`` is the source's pre-epoch
+        version, as the engine pinned it before the epoch fanned out
+        (``LakeTable.pre_epoch_version``); every source read is at that
+        version, so the source's own merge of the epoch may run
+        concurrently, before or after this one. None reads the source
+        as it stands (module docstring, pinned reads)."""
         if self.table.epoch_committed(epoch):
             return MergeResult(0, epoch, 0, 0, 0, skipped=True)
-        if pinned is None and isinstance(self.bronze, LakeTable):
-            pinned = self.bronze.pre_epoch_version(epoch)
         touched = self._touched_groups(staged, pinned, census)
         cur = self.row_groups(self._recompute_scan(staged, touched, pinned, census)).join(
             touched, self.group_cols, "left_semi"
@@ -541,16 +552,14 @@ class DeltaAggregateModel(_Model):
         )
 
     def apply_epoch(self, staged: DataFrame, epoch: int,
-                    census: EpochCensus | None = None, pinned: int | None = None) -> MergeResult:
+                    census: EpochCensus | None = None, *, pinned: int | None) -> MergeResult:
         """Apply one epoch's delta; ``pinned`` as in
         :meth:`AggregateModel.apply_epoch`."""
         if self.table.epoch_committed(epoch):
             return MergeResult(0, epoch, 0, 0, 0, skipped=True)
-        if pinned is None:
-            pinned = self.bronze.pre_epoch_version(epoch)
         upserts, _ = split_ops(staged)
         # the subtract side of the maintenance identity
-        old_rows, src_buckets = _pre_epoch_rows(self.bronze, pinned, staged, census)
+        old_rows, src_buckets = _pre_epoch_rows(self.bronze, pinned, staged, census, self.name)
         pos = self.aggregate(upserts).withColumn("_sign", F.lit(1))
         neg = self.aggregate(old_rows).withColumn("_sign", F.lit(-1))
         d_aggs = [

@@ -13,6 +13,9 @@ publishes only once the sink has committed and finalized the epoch.
   model with the epoch recorded and no written file behind, and a
   restart converges to the LWW oracle and to every model's full
   rebuild.
+- A replay whose source no longer retains its state before the epoch
+  reads the source as it stands where the post-epoch rows suffice,
+  and refuses where the epoch's old rows are needed.
 """
 
 import os
@@ -262,3 +265,49 @@ def test_sink_failure_after_models_wrote_commits_no_model(spark, tmpdir_path, ki
     assert all(m.table.committed_epochs() == [1, 2, 3] for m in models)
     assert os.listdir(os.path.join(restarted.checkpoints.path, "_staging")) == []
     _assert_converged(chg, sink, models)
+
+
+@pytest.mark.parametrize("kind", ["bucket", "delta"])
+def test_replay_after_source_history_expired(spark, tmpdir_path, monkeypatch, kind):
+    """A model is behind on retained epochs 2-3 and the sink's snapshots
+    before them have expired. A bucket-pruned recompute needs only the
+    post-epoch rows: it replays from the sink as it stands and equals
+    its rebuild. A delta rollup needs the epoch's old rows: it
+    refuses."""
+    import etl_warehouse_agnostic_spark.engine as engine_mod
+
+    chg = generate_changes(spark, 3 * EPOCH_SIZE, n_convs=30, turns_per_conv=6,
+                           seed=65).localCheckpoint()
+    bronze = _sink(spark, tmpdir_path, "lake")
+    if kind == "bucket":
+        model = AggregateModel(
+            _lake(spark, tmpdir_path, "gold", [("conv_id", S), ("turns", L)], ["conv_id"], 2),
+            bronze, ["conv_id"],
+            lambda rows: rows.groupBy("conv_id").agg(F.count(F.lit(1)).alias("turns")),
+            name="gold")
+    else:
+        model = DeltaAggregateModel(
+            _lake(spark, tmpdir_path, "day", [("day", S), ("rows", L), ("chars", L),
+                                              ("_nn_chars", L)], ["day"], 2),
+            bronze, ["day"], {"chars": F.length("text")}, count_col="rows", name="day",
+            row_groups=_day_groups)
+    ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
+    source = ChangeStreamSource(spark, df=chg)
+    CdcEngine(spark, bronze, ck, silver_models=[model]).run(
+        source, epoch_size=EPOCH_SIZE, max_epochs=1)
+    with monkeypatch.context() as mp:  # epochs 2-3 without the model, dirs retained
+        mp.setattr(engine_mod.shutil, "rmtree", lambda *a, **kw: None)
+        CdcEngine(spark, bronze, ck).run(source, epoch_size=EPOCH_SIZE)
+    bronze.expire_snapshots(keep_last=1)
+    assert bronze.pre_epoch_version(2) is None
+
+    eng = CdcEngine(spark, bronze, ck, silver_models=[model])
+    if kind == "delta":
+        with pytest.raises(RuntimeError, match="old rows cannot be read"):
+            eng.recover()
+        assert model.table.committed_epochs() == [1]
+        return
+    eng.recover()
+    assert model.table.committed_epochs() == [1, 2, 3]
+    assert _rows(model.table.read()) == _rows(model.aggregate(bronze.read()))
+    assert os.listdir(os.path.join(ck.path, "_staging")) == []

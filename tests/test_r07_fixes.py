@@ -128,6 +128,54 @@ def test_bootstrap_stamps_retained_staged_epochs(spark, tmpdir_path, monkeypatch
     assert os.listdir(staging_root) == []
 
 
+def test_bootstrap_stamps_retained_staged_epochs_of_a_chain(spark, tmpdir_path, monkeypatch):
+    """The same with a late CHAIN: a silver model and a gold chained off
+    it are both bootstrapped while e2-e3 are retained for the behind
+    ``lens`` model. The late silver table holds e2 as a bootstrap stamp,
+    with no commit of its own, so nothing before e2 can be pinned
+    there; the replay of e2 for ``lens`` must not ask, because the
+    chained gold has e2 and skips it."""
+    lens = SilverModel(
+        LakeTable.create(
+            spark, os.path.join(tmpdir_path, "silver"), SILVER_SCHEMA, KEY_COLS, num_buckets=4
+        ),
+        lambda ups, e: ups.select(
+            "conv_id", "turn_idx", F.length("text").cast("int").alias("text_len")
+        ),
+        name="lens",
+    )
+    bronze, ck, staging_root = _bronze_with_retained_e2_e3(
+        spark, tmpdir_path, monkeypatch, models=[lens]
+    )
+    late = SilverModel(
+        LakeTable.create(
+            spark, os.path.join(tmpdir_path, "late"), SILVER_SCHEMA, KEY_COLS, num_buckets=4
+        ),
+        lens.transform,
+        name="late",
+    )
+    gold_t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "gold"), GOLD_SCHEMA, ["conv_id"], num_buckets=4
+    )
+    gold = DeltaAggregateModel(
+        gold_t, None, ["conv_id"], {"chars": F.col("text_len")}, parent=late, name="late_gold"
+    )
+    eng = CdcEngine(
+        spark, bronze, ck, silver_models=[lens, late, gold], bootstrap_if_behind=True
+    )
+    eng.recover()
+
+    assert [e["model"] for e in eng.bootstrap_log] == ["late", "late_gold"]
+    assert all(e["stamped_staged"] == [2, 3] for e in eng.bootstrap_log)
+    want_silver = sorted(
+        tuple(r) for r in lens.transform(bronze.read().withColumn("op", F.lit("I")), 0).collect()
+    )
+    assert _rows(lens.table) == want_silver and _rows(late.table) == want_silver
+    want = sorted(tuple(r) for r in gold.aggregate(late.table.read()).collect())
+    assert _rows(gold_t) == want and len(want) > 0
+    assert os.listdir(staging_root) == []
+
+
 @pytest.mark.parametrize("model_sink", ["lake", "duckdb"])
 def test_bootstrap_stamps_retained_staged_epochs_on_every_model_table(
     spark, tmpdir_path, monkeypatch, model_sink
