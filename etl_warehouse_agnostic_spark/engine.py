@@ -34,9 +34,9 @@ sink's type alone picks the lake or the warehouse path:
      every attached model on its own worker thread, fed from the
      staged delta
   6. MERGE into the sink under the epoch id, on the epoch's own thread
-     beside the models (atomic, ledgered: a lake table's snapshot
-     summary carries the whole manifest, a warehouse's ``_epochs`` row
-     the applied lsn range)
+     beside the models (atomic, ledgered: the commit records the
+     epoch's manifest, in a lake table's snapshot summary or a
+     warehouse's ``_epochs`` row)
   7. finalize the checkpoint manifest, let the models publish, wait
      for every model, then sweep the staging dir.
 
@@ -57,12 +57,16 @@ parent of each source's epoch commit). A finalized epoch's dir without
 a record (staged by an older engine) raises rather than being guessed
 at.
 
-Crash between 6 and 7: ``recover`` finds the epoch in the sink's
-ledger (the lake table's snapshot summaries, a warehouse's ``_epochs``
-table) and finalizes the manifest from what was RECORDED, without
-re-applying — the write-ahead ordering the reference implements as
-"advance watermark only after verified load"
-(extractors/repsly/extractor.py:1441-1475).
+Crash between 6 and 7: ``recover`` reads the manifest the sink's
+commit recorded (``epoch_manifest``, the same call on every sink) and
+finalizes it, without re-applying — the write-ahead ordering the
+reference implements as "advance watermark only after verified load"
+(extractors/repsly/extractor.py:1441-1475). The live epoch and the heal
+complete the manifest's post-commit fields in one helper
+(``_committed``), so a healed manifest is the one the epoch would have
+finalized, but for its ``healed`` mark, its wall time (0: the heal did
+not time the epoch) and its commit stamp (the sink's own, where it
+records one).
 """
 
 from __future__ import annotations
@@ -87,6 +91,7 @@ from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore, publish_js
 from etl_warehouse_agnostic_spark.lake.table import (
     EpochCensus,
     LakeTable,
+    MergeResult,
     gated_commits,
     observed,
 )
@@ -175,7 +180,7 @@ class CdcEngine:
         # gets background merges for free; a copy-on-write table does
         # not): every K applied epochs the tail loop compacts the
         # buckets ``table_health`` flags as fragmented — the SAME
-        # ≥min_files & small-average rule, so table_health IS the
+        # ``LakeTable.file_census`` rule, so table_health IS the
         # compaction plan this hook executes. A cycle with nothing
         # fragmented costs one driver-side metadata census, no Spark
         # job. None disables the hook. The cadence counts the epochs
@@ -404,34 +409,31 @@ class CdcEngine:
             models = dag.submit(self._apply_silver, delta, epoch, census=census,
                                 pins=pins, committed=committed)
             try:
-                # The lake table's commit carries the manifest (recover
-                # heals from it) and prunes by the epoch census — the
-                # staged buckets and the exact delta size, which also
-                # lets it broadcast the changed-key set into the
-                # anti-join. Every model merge reuses the same census. A
-                # warehouse ledgers the lsn range instead.
+                # Every sink's commit records the manifest in its ledger
+                # (recover heals from it). The lake table's merge prunes
+                # by the epoch census — the staged buckets and the exact
+                # delta size, which also lets it broadcast the
+                # changed-key set into the anti-join; every model merge
+                # reuses the same census.
                 if isinstance(sink, LakeTable):
                     upserts, deletes = split_ops(delta)
                     res = sink.merge(
                         upserts.drop("lsn", "schema_ver"), deletes.select(*self.key_cols),
-                        epoch_id=epoch, extra_summary={"manifest": manifest}, census=census,
+                        epoch_id=epoch, manifest=manifest, census=census,
                     )
                 else:
-                    res = sink.merge_files(exported, epoch_id=epoch, lsn_range=lsn_range)
+                    res = sink.merge_files(exported, epoch_id=epoch, manifest=manifest)
                 wall_ms = int((time.monotonic() - t0) * 1000)
-                if res.skipped:
-                    # Ledger hit: the epoch already committed (a crash
-                    # before finalize), possibly under a NARROWER lsn
-                    # range than this recomputed slice if the source
-                    # gained LSNs before restart. Finalize what the sink
-                    # RECORDED so the watermark never passes rows that
-                    # were not applied; a legacy ledger row without
-                    # lsn_lo keeps the loop's lo (0 would read as a
-                    # false gap/overlap in pipeline_health).
-                    manifest = self._ledger_manifest(sink, epoch, lo=lsn_range[0]) or manifest
+                # Ledger hit: the epoch already committed (a crash
+                # before finalize), possibly under a NARROWER lsn range
+                # than this recomputed slice if the source gained LSNs
+                # before restart. Finalize what the sink RECORDED so the
+                # watermark never passes rows that were not applied.
+                recorded = sink.epoch_manifest(epoch) if res.skipped else None
+                if recorded is not None:
+                    manifest = self._committed(*recorded, healed=True)
                 else:
-                    manifest["metrics"].update(bytes_written=res.bytes_written, wall_ms=wall_ms)
-                    manifest.update(snapshot_version=res.version, committed_at=utc_now())
+                    manifest = self._committed(manifest, res, wall_ms=wall_ms)
                 self.checkpoints.finalize(epoch, manifest)
             except BaseException as e:
                 committed.set_exception(e)  # every model discards its write
@@ -464,9 +466,9 @@ class CdcEngine:
         for epoch in sink.committed_epochs():
             if self.checkpoints.is_finalized(epoch):
                 continue
-            manifest = self._ledger_manifest(sink, epoch)
-            if manifest is not None:
-                self.checkpoints.finalize(epoch, manifest)
+            recorded = sink.epoch_manifest(epoch)
+            if recorded is not None:
+                self.checkpoints.finalize(epoch, self._committed(*recorded, healed=True))
                 healed.append(epoch)
         # Check (and possibly auto-bootstrap) BEFORE replaying staged
         # deltas: a bootstrap stamped with the last finalized epoch
@@ -495,47 +497,28 @@ class CdcEngine:
     # ---------------- helpers ----------------
 
     def _manifest(self, epoch: int, lsn_range: tuple[int, int], offsets: dict,
-                  rows_read: int | None, rows_upserted: int, rows_deleted: int | None,
-                  schema_ver_max: int | None = None, added_columns: tuple = ()) -> dict:
-        """The one checkpoint-manifest shape, for every sink and for
-        ledger heals. ``None`` marks a count a ledger did not record;
-        bytes_written, wall_ms and snapshot_version are post-commit."""
+                  rows_read: int, rows_upserted: int, rows_deleted: int,
+                  schema_ver_max: int, added_columns: list[str]) -> dict:
+        """The one checkpoint-manifest shape, as the sink's commit
+        records it; ``_committed`` adds the post-commit fields."""
         return {
             "epoch": epoch,
             "offsets": offsets,
             "metrics": {"rows_read": rows_read, "rows_upserted": rows_upserted,
                         "rows_deleted": rows_deleted, "bytes_written": 0, "wall_ms": 0},
             "lineage": {"source": self.source_name, "lsn_range": list(lsn_range),
-                        "schema_ver_max": schema_ver_max, "added_columns": list(added_columns)},
-            "snapshot_version": None,
-            "committed_at": utc_now(),
+                        "schema_ver_max": schema_ver_max, "added_columns": added_columns},
         }
 
-    def _ledger_manifest(self, sink, epoch: int, lo: int | None = None) -> dict | None:
-        """The manifest of a committed epoch, rebuilt from the sink's
-        ledger and marked ``healed``; None when the ledger does not say
-        which lsn range was applied (``lo`` stands in for a missing
-        recorded lower bound). The lake table's commit carries the whole
-        pre-merge manifest: backfill its post-commit fields."""
-        if isinstance(sink, LakeTable):
-            snap = sink.epoch_snapshot(epoch)
-            manifest = snap and snap["summary"].get("manifest")
-            if manifest is None:
-                return None
-            metrics = dict(manifest["metrics"], healed=True,
-                           bytes_written=int(snap["summary"].get("bytes_written") or 0))
-            return dict(manifest, metrics=metrics, snapshot_version=snap["version"],
-                        committed_at=snap["committed_at"])
-        info = sink.epoch_info(epoch) or {}
-        if info.get("lsn_lo") is not None:
-            lo = int(info["lsn_lo"])
-        if info.get("lsn_hi") is None or lo is None:
-            return None
-        hi, rows = int(info["lsn_hi"]), int(info.get("rows_written") or 0)
-        manifest = self._manifest(epoch, (lo, hi), {"all": {"max_lsn": hi, "rows": rows}},
-                                  rows_read=None, rows_upserted=rows, rows_deleted=None)
-        manifest["metrics"]["healed"] = True
-        return manifest
+    @staticmethod
+    def _committed(manifest: dict, res: MergeResult, **metrics) -> dict:
+        """``manifest`` completed from the sink's commit of its epoch,
+        ``res``: the bytes it wrote, its snapshot version and its commit
+        stamp (now, when the sink records none), plus ``metrics`` (the
+        live epoch's wall time, or a heal's ``healed`` mark)."""
+        return dict(manifest,
+                    metrics=dict(manifest["metrics"], bytes_written=res.bytes_written, **metrics),
+                    snapshot_version=res.version, committed_at=res.committed_at or utc_now())
 
     def _staging_dir(self, epoch: int) -> str:
         return os.path.join(self.checkpoints.path, "_staging", f"e{epoch:08d}")

@@ -13,7 +13,7 @@ returns the table, and the engine takes its one lake path for it —
 bucketed stage, epoch census, the whole manifest in the snapshot
 summary. The two SQL warehouses honour the ``WarehouseBackend``
 contract (merge / merge_files / overwrite / read / epoch idempotence +
-an applied-lsn-range ledger):
+an epoch ledger that records the epoch's manifest):
 
 - :class:`DuckBackend` — an embedded SQL warehouse (DuckDB file),
   standing in for the reference's ClickHouse/Snowflake targets: the
@@ -42,20 +42,23 @@ pytest). SQLite cannot ingest parquet natively, so its one load path
 streams Arrow record batches of bounded size through ``executemany``
 — memory O(batch), never O(delta); on Postgres that loop IS the COPY.
 
-Exactly-once: every SQL warehouse keeps an ``_epochs`` ledger
-(epoch id → rows, applied lsn range, recorded by ``merge_files``; the
-lake table's ledger is its snapshot summaries). A replayed epoch id
-short-circuits to a skipped no-op BEFORE any mutation, and the
-recorded lsn range lets the engine heal a crash between merge and
-manifest-finalize without ever advancing the watermark past rows that
-were not applied: ``CdcEngine``'s one recover finalizes such an epoch
-from the ledger before the loop plans, and its one epoch body does the
-same inline when a replayed epoch hits the ledger (see the
-``etl_warehouse_agnostic_spark.engine`` module docstring).
+Exactly-once: every sink keeps one epoch ledger, and the engine's
+commit of an epoch records the epoch's checkpoint manifest in it, in
+the same transaction as the data: a SQL warehouse's ``_epochs`` table
+(epoch id → manifest JSON, ``merge_files(manifest=)``), the lake
+table's snapshot summaries (``merge(manifest=)``); both read it back
+through ``epoch_manifest``. A replayed epoch id short-circuits to a
+skipped no-op BEFORE any mutation, and ``CdcEngine`` heals a crash
+between merge and manifest-finalize by finalizing the recorded
+manifest, so the watermark never passes rows that were not applied
+(see the ``etl_warehouse_agnostic_spark.engine`` module docstring). A
+warehouse whose ``_epochs`` table has no ``manifest`` column (an older
+ledger format) raises on open.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -75,7 +78,7 @@ class WarehouseBackend(Protocol):
     """The contract of a non-lake sink: exactly what the engine and the
     models call on a warehouse (J2/J3 + T2/T3). A ``LakeTable`` sink is
     told apart by its type and takes the engine's lake path instead.
-    The engine records an applied lsn range only through
+    The engine records an epoch's manifest only through
     ``merge_files``."""
 
     def merge(
@@ -89,7 +92,7 @@ class WarehouseBackend(Protocol):
         self,
         files: list[str],
         epoch_id: int | None = None,
-        lsn_range: tuple[int, int] | None = None,
+        manifest: dict | None = None,
     ) -> MergeResult: ...
 
     def overwrite(self, df: DataFrame, epoch_id: int | None = None) -> MergeResult: ...
@@ -108,7 +111,7 @@ class WarehouseBackend(Protocol):
 
     def epoch_committed(self, epoch_id: int) -> bool: ...
 
-    def epoch_info(self, epoch_id: int) -> dict | None: ...
+    def epoch_manifest(self, epoch_id: int) -> tuple[dict, MergeResult] | None: ...
 
     def record_epochs(self, epoch_ids: list[int]) -> int | None: ...
 
@@ -154,8 +157,8 @@ class _SqlWarehouse:
 
     MERGE semantics (``merge_files``): within ONE transaction, delete
     the target rows whose key appears in the op-tagged file set, insert
-    its rows with ``op <> 'D'``, record the epoch + its applied lsn
-    range in the ``_epochs`` ledger. Every delete lands before any
+    its rows with ``op <> 'D'``, record the epoch + its manifest in the
+    ``_epochs`` ledger. Every delete lands before any
     insert, so a key both upserted and deleted nets to the upsert, as
     in ``LakeTable.merge``. A replayed epoch id short-circuits
     to a skipped no-op BEFORE any export or mutation — the same
@@ -197,18 +200,17 @@ class _SqlWarehouse:
         b._schema = schema
         b._keys = list(key_cols)
         _sweep_stale_spill(b.spill_dir)
-        b._create_target()
-        n = b._TYPES["bigint"]
         b._con.execute(
-            f"CREATE TABLE IF NOT EXISTS _epochs (epoch_id {n} PRIMARY KEY, "
-            f"rows_written {n}, lsn_lo {n}, lsn_hi {n})"
+            f"CREATE TABLE IF NOT EXISTS _epochs (epoch_id {b._TYPES['bigint']} PRIMARY KEY, "
+            f"manifest {b._TYPES['string']})"
         )
-        # Opening a warehouse created before the lsn-range ledger: the
-        # IF NOT EXISTS above keeps the old table, so add the columns.
-        have = set(b._columns("_epochs"))
-        for col in ("lsn_lo", "lsn_hi"):
-            if col not in have:
-                b._con.execute(f"ALTER TABLE _epochs ADD COLUMN {col} {n}")
+        if "manifest" not in b._columns("_epochs"):
+            b._con.close()
+            raise ValueError(
+                f"{path}: its _epochs ledger has no manifest column (an older "
+                "ledger format), so a lost manifest could not be healed from it"
+            )
+        b._create_target()
         return b
 
     def _sql_type(self, dt: T.DataType) -> str:
@@ -261,25 +263,27 @@ class _SqlWarehouse:
     def committed_epochs(self) -> list[int]:
         return [r[0] for r in self._con.execute("SELECT epoch_id FROM _epochs ORDER BY 1").fetchall()]
 
-    def epoch_info(self, epoch_id: int) -> dict | None:
+    def epoch_manifest(self, epoch_id: int) -> tuple[dict, MergeResult] | None:
+        """``LakeTable.epoch_manifest`` for the ledger: the manifest
+        ``merge_files`` recorded with the epoch, and a result with the
+        version and bytes its live commit returned (0: a warehouse has
+        no versions and counts no bytes); None when the epoch was
+        stamped without one."""
         r = self._con.execute(
-            "SELECT rows_written, lsn_lo, lsn_hi FROM _epochs WHERE epoch_id = ?",
-            [epoch_id],
+            "SELECT manifest FROM _epochs WHERE epoch_id = ?", [epoch_id]
         ).fetchone()
-        if r is None:
+        if r is None or r[0] is None:
             return None
-        return {"rows_written": int(r[0] or 0),
-                "lsn_lo": None if r[1] is None else int(r[1]),
-                "lsn_hi": None if r[2] is None else int(r[2])}
+        return json.loads(r[0]), MergeResult(0, epoch_id, 0, 0, 0)
 
     def record_epochs(self, epoch_ids: list[int]) -> None:
         """``LakeTable.record_epochs`` for the ledger: the ids not yet
-        committed, with no data change and no lsn range, in ONE insert
+        committed, with no data change and no manifest, in ONE insert
         (its own transaction on the autocommit connection)."""
         new = sorted(set(epoch_ids) - set(self.committed_epochs()))
         if new:
-            self._con.execute("INSERT INTO _epochs (epoch_id, rows_written) VALUES "
-                              + ", ".join(["(?, 0)"] * len(new)), new)
+            self._con.execute("INSERT INTO _epochs (epoch_id) VALUES "
+                              + ", ".join(["(?)"] * len(new)), new)
 
     # -- contract -----------------------------------------------------
 
@@ -291,18 +295,18 @@ class _SqlWarehouse:
         schema = T.StructType(list(self._schema.fields) + [T.StructField(_OP, T.StringType())])
         return self._commit_epoch(epoch_id, self._apply_merge, export=("up", delta, schema))
 
-    def merge_files(self, files, epoch_id=None, lsn_range=None) -> MergeResult:
-        return self._commit_epoch(epoch_id, self._apply_merge, files=files, lsn_range=lsn_range)
+    def merge_files(self, files, epoch_id=None, manifest=None) -> MergeResult:
+        return self._commit_epoch(epoch_id, self._apply_merge, files=files, manifest=manifest)
 
     def overwrite(self, df, epoch_id=None) -> MergeResult:
         return self._commit_epoch(epoch_id, self._apply_overwrite,
                                   export=("full", df, self._schema))
 
     def _commit_epoch(self, epoch_id, apply, files=(), export=None,
-                      lsn_range=None) -> MergeResult:
+                      manifest=None) -> MergeResult:
         """Replay check → ``files``, or the (tag, df, schema) ``export``
         Spark writes into a spill dir → ONE transaction: ``apply(files)``
-        + the ledger row (with ``lsn_range`` when ``merge_files`` has
+        + the ledger row (with the ``manifest`` when ``merge_files`` has
         one) → commit (rollback on error) → spill cleanup."""
         # The guard runs BEFORE any export or mutation, so a replayed
         # epoch is a clean skipped no-op, not a PK-conflict rollback.
@@ -316,11 +320,9 @@ class _SqlWarehouse:
             try:
                 rows = apply(files)
                 if epoch_id is not None:
-                    lo, hi = lsn_range if lsn_range is not None else (None, None)
                     self._con.execute(
-                        "INSERT INTO _epochs (epoch_id, rows_written, lsn_lo, lsn_hi) "
-                        "VALUES (?, ?, ?, ?)",
-                        [epoch_id, rows, lo, hi],
+                        "INSERT INTO _epochs (epoch_id, manifest) VALUES (?, ?)",
+                        [epoch_id, None if manifest is None else json.dumps(manifest, default=str)],
                     )
                 self._con.execute("COMMIT")
             except Exception:

@@ -7,12 +7,12 @@ protocol: tmp file + fsync + checksum + atomic publish
 (FIXTURES.md F4) under ``<dir>/epoch=<N>.json``.
 
 Exactly-once contract (SURVEY.md §2.9 T2, §7.4):
-  1. the lake-table MERGE commits atomically, carrying the epoch id in
-     its snapshot summary;
+  1. the sink's MERGE commits atomically, recording the epoch id and
+     its manifest in the sink's epoch ledger (a lake table's snapshot
+     summary, a warehouse's ``_epochs`` table);
   2. only then is the manifest finalized here.
-Crash between (1) and (2) → recovery finds the epoch in snapshot
-summaries and finalizes the manifest without re-applying (see
-CdcEngine.recover).
+Crash between (1) and (2) → recovery reads the recorded manifest back
+and finalizes it without re-applying (see CdcEngine.recover).
 """
 
 from __future__ import annotations
@@ -100,13 +100,6 @@ class ManifestStore:
         body = json.dumps(manifest, sort_keys=True, default=str)
         doc = {"manifest": manifest, "checksum": hashlib.md5(body.encode()).hexdigest()}
         publish_json(doc, final)  # lost to a concurrent finalize: same content
-
-    def last_offsets(self) -> dict[str, int]:
-        """Per-source-partition max LSN as of the newest epoch."""
-        last = self.last_epoch()
-        if last is None:
-            return {}
-        return {k: v["max_lsn"] for k, v in self.get(last)["offsets"].items()}
 
     def high_water_lsn(self) -> int:
         last = self.last_epoch()

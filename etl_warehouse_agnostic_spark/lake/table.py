@@ -62,6 +62,7 @@ from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.functions.scalars import bucket_of
 from etl_warehouse_agnostic_spark.lake.manifest import publish_json, utc_now
+from etl_warehouse_agnostic_spark.operators.evolution import project_columns
 
 _BUCKET = "_bucket"  # physical layout column kept in data files
 _PB = "_pb"  # throwaway copy used only for partitionBy at write time
@@ -227,6 +228,8 @@ class MergeResult:
     bytes_written: int
     buckets_rewritten: int
     skipped: bool = False
+    # the commit's own stamp, where the sink records one (None: now)
+    committed_at: str | None = None
 
 
 def _atomic_write_json(payload: dict, final_path: str) -> None:
@@ -352,6 +355,20 @@ class LakeTable:
                 return snap
             v = snap["parent"]
         return None
+
+    def epoch_manifest(self, epoch_id: int) -> tuple[dict, MergeResult] | None:
+        """The manifest the commit of ``epoch_id`` recorded
+        (``merge(manifest=)``) and that commit's result; None when the
+        epoch was stamped without one (``record_epochs``, a model merge,
+        an ``overwrite``) or its snapshot has expired."""
+        snap = self.epoch_snapshot(epoch_id)
+        summary = snap["summary"] if snap else {}
+        if summary.get("manifest") is None:
+            return None
+        return summary["manifest"], MergeResult(
+            snap["version"], epoch_id, summary["rows_written"], summary["bytes_written"],
+            summary.get("buckets_rewritten", 0), committed_at=snap["committed_at"],
+        )
 
     # ---------------- read ----------------
 
@@ -597,7 +614,7 @@ class LakeTable:
         cast to its key types), both carrying ``_bucket``."""
         schema = T.StructType.fromJson(snap["schema"])
         keys = snap["key_cols"]
-        up = _with_bucket(self._align(upserts, schema), snap)
+        up = _with_bucket(project_columns(upserts, schema, keep=[_BUCKET]), snap)
         # No dropDuplicates: LEFT ANTI ignores right-side duplicates,
         # and a bucket census distincts for itself — the dedup here
         # was one whole extra Exchange of the key set per epoch.
@@ -632,18 +649,6 @@ class LakeTable:
             anti_keys = F.broadcast(anti_keys)
         rows = self._read_files(snap, buckets=buckets, day_range=day_range)
         return rows.join(anti_keys, on=snap["key_cols"], how="left_anti").unionByName(up)
-
-    def _align(self, df: DataFrame, schema: T.StructType) -> DataFrame:
-        """Project df onto the table schema: missing columns → NULL,
-        order fixed, types cast (JVM-side; add-only evolution)."""
-        cols = []
-        for f in schema.fields:
-            if f.name in df.columns:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        extra = [c for c in df.columns if c == _BUCKET]
-        return df.select(*cols, *extra)
 
     @_retried
     def evolve_schema(self, new_columns: T.StructType | list[T.StructField]) -> T.StructType:
@@ -688,7 +693,8 @@ class LakeTable:
         cur = self.snapshot()
         if epoch_id is not None and epoch_id in cur.get("committed_epochs", []):
             return MergeResult(cur["version"], epoch_id, 0, 0, 0, skipped=True)
-        data = _with_bucket(self._align(df, T.StructType.fromJson(cur["schema"])), cur)
+        schema = T.StructType.fromJson(cur["schema"])
+        data = _with_bucket(project_columns(df, schema, keep=[_BUCKET]), cur)
         out, files, rows, nbytes = self._write_attempt(cur, "e", data, self.max_records_per_file)
         v = self._publish(
             cur,
@@ -775,6 +781,32 @@ class LakeTable:
             if not dirs and not files and root != self.data_dir:
                 os.rmdir(root)
 
+    def file_census(
+        self,
+        target_file_bytes: int = 128 * 1024 * 1024,
+        min_files: int = 2,
+        snap: dict | None = None,
+    ) -> dict[int, tuple[int, int, bool]]:
+        """Per bucket of snapshot ``snap`` (default: the current one),
+        in bucket order: (files, bytes, fragmented). A bucket is
+        fragmented when one of its file sets — the files of one
+        time-partition dir, or of the whole bucket on an unpartitioned
+        table — holds ≥ ``min_files`` files averaging under
+        ``target_file_bytes``. A rewrite writes one file per set, so a
+        bucket spread over several days is not fragmented for that.
+        Snapshot metadata and file sizes only, no Spark job."""
+        snap = self.snapshot() if snap is None else snap
+        out = {}
+        for b, paths in sorted(snap["files"].items(), key=lambda kv: int(kv[0])):
+            sets: dict[str | None, list[int]] = {}
+            for p in paths:
+                sets.setdefault(_file_day(p), []).append(
+                    os.path.getsize(os.path.join(self.path, p)))
+            fragmented = any(len(sizes) >= min_files and sum(sizes) / len(sizes) < target_file_bytes
+                             for sizes in sets.values())
+            out[int(b)] = (len(paths), sum(map(sum, sets.values())), fragmented)
+        return out
+
     @_retried
     def rewrite_small_files(
         self,
@@ -782,9 +814,8 @@ class LakeTable:
         min_files: int = 2,
     ) -> dict:
         """Compaction (Iceberg rewrite_data_files / MergeTree background
-        merge analog): bin-pack each bucket whose file set is fragmented
-        — ≥ ``min_files`` files AND an average file size below
-        ``target_file_bytes`` — into a fresh single file set, committed
+        merge analog): bin-pack each bucket that :meth:`file_census`
+        flags as fragmented into a fresh single file set, committed
         as one atomic snapshot. Logical content is untouched (proven by
         test: content hash identical before/after); committed-epoch ids
         carry forward, so exactly-once survives compaction.
@@ -797,13 +828,8 @@ class LakeTable:
         re-derives the candidates from the winner's snapshot.
         """
         cur = self.snapshot()
-        candidates: list[int] = []
-        for b, paths in cur["files"].items():
-            if len(paths) < min_files:
-                continue
-            sizes = [os.path.getsize(os.path.join(self.path, p)) for p in paths]
-            if sum(sizes) / len(sizes) < target_file_bytes:
-                candidates.append(int(b))
+        candidates = [b for b, (_, _, frag) in self.file_census(
+            target_file_bytes, min_files, snap=cur).items() if frag]
         if not candidates:
             return {"buckets_compacted": 0, "files_before": 0, "files_after": 0, "version": cur["version"]}
         data = self._read_files(cur, buckets=candidates)  # carries _bucket
@@ -849,7 +875,7 @@ class LakeTable:
         upserts: DataFrame,
         delete_keys: DataFrame | None = None,
         epoch_id: int | None = None,
-        extra_summary: dict | None = None,
+        manifest: dict | None = None,
         *,
         census: EpochCensus | None = None,
     ) -> MergeResult:
@@ -869,6 +895,11 @@ class LakeTable:
         LWW dedup guarantees this). Only buckets containing changed keys
         are read and rewritten; unaffected buckets' files carry over
         into the new snapshot untouched.
+
+        ``manifest`` (the engine's checkpoint manifest of the epoch)
+        rides in the commit's summary: the table's epoch ledger, which
+        :meth:`epoch_manifest` reads back after a crash before the
+        manifest file was finalized.
 
         ``census`` is the epoch's :class:`EpochCensus`: the engine
         passes the bronze one to bronze and to every model merge, the
@@ -893,7 +924,7 @@ class LakeTable:
         if epoch_id is not None and epoch_id in cur.get("committed_epochs", []):
             return MergeResult(cur["version"], epoch_id, 0, 0, 0, skipped=True)
         up, changed_keys = self._delta(cur, upserts, delete_keys)
-        summary = {"operation": "merge", "epoch_id": epoch_id}
+        summary = {"operation": "merge", "epoch_id": epoch_id, "manifest": manifest}
 
         # Affected buckets: from the caller's census when this layout
         # coarsens it, else a tiny (≤ num_buckets rows) collect.
@@ -928,7 +959,7 @@ class LakeTable:
         v = self._publish(
             cur,
             {**summary, "rows_written": rows, "bytes_written": nbytes,
-             "buckets_rewritten": len(affected), **(extra_summary or {})},
+             "buckets_rewritten": len(affected)},
             files, rewritten=affected, epochs=[epoch_id], written_dir=out,
         )
         return MergeResult(v, epoch_id, rows, nbytes, len(affected))

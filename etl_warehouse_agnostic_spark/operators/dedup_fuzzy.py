@@ -106,19 +106,6 @@ def minhash_signatures_wide(
     return shingles.groupBy(id_col).agg(*aggs)
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str, num_hashes: int = 16
-) -> DataFrame:
-    """(id, seed, minhash) — tall view of
-    :func:`minhash_signatures_wide` (stack, narrow op, no extra
-    shuffle). Kept for API compatibility and per-seed inspection."""
-    wide = minhash_signatures_wide(shingles, id_col, num_hashes)
-    pairs = ", ".join(f"{s}, m{s}" for s in range(num_hashes))
-    return wide.selectExpr(
-        id_col, f"stack({num_hashes}, {pairs}) as (seed, minhash)"
-    )
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,

@@ -12,16 +12,16 @@ events — onto the evolved schema.
 Two equivalent projection paths (tested equal):
 
 - ``project_columns``: pure JVM Column select (null-fill + cast) —
-  the fast path when no Python-side normalization is needed.
+  the fast path, and the lake table's projection onto its own schema.
 - ``project_arrow``: ``mapInPandas`` over Arrow record batches — whole
   pandas columns at a time, zero per-row Python (the north rule's
-  mandated mechanism, with room for Python-side payload normalization
-  hooks such as text canonicalization).
+  mandated mechanism); the engine takes it for a batch that evolves
+  the schema.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
@@ -30,20 +30,6 @@ from pyspark.sql import types as T
 
 if TYPE_CHECKING:
     import pandas as pd
-
-_SPARK_TO_PANDAS_CAST = {
-    "string": "object",
-    "int": "Int32",
-    "bigint": "Int64",
-    "double": "float64",
-    "float": "float32",
-    "boolean": "boolean",
-}
-
-
-def missing_fields(df: DataFrame, schema: T.StructType) -> list[T.StructField]:
-    have = set(df.columns)
-    return [f for f in schema.fields if f.name not in have]
 
 
 def new_fields(df: DataFrame, schema: T.StructType, passthrough: set[str] | None = None) -> list[T.StructField]:
@@ -69,14 +55,11 @@ def project_arrow(
     df: DataFrame,
     schema: T.StructType,
     keep: list[str] | None = None,
-    normalize: dict[str, Callable[["pd.Series"], "pd.Series"]] | None = None,
 ) -> DataFrame:
     """Arrow-vectorized projection via ``mapInPandas``.
 
-    Each Arrow batch arrives as a pandas DataFrame; columns are added /
-    reordered / normalized with whole-Series operations only. The
-    optional ``normalize`` hooks (e.g. text canonicalization for the
-    ``text`` column) are Series→Series — still vectorized.
+    Each Arrow batch arrives as a pandas DataFrame; columns are added
+    and reordered with whole-Series operations only.
     """
     keep_cols = [c for c in (keep or []) if c in df.columns]
     out_schema = T.StructType(
@@ -84,7 +67,6 @@ def project_arrow(
         + [df.schema[c] for c in keep_cols]
     )
     target_names = [f.name for f in out_schema.fields]
-    norm = normalize or {}
 
     def _project(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -93,9 +75,6 @@ def project_arrow(
             for name in target_names:
                 if name not in pdf.columns:
                     pdf[name] = None
-            for name, fn in norm.items():
-                if name in pdf.columns:
-                    pdf[name] = fn(pdf[name])
             yield pdf[target_names]
 
     return df.mapInPandas(_project, schema=out_schema)

@@ -118,27 +118,11 @@ def table_health(
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> DataFrame:
     """Per-bucket physical layout census from the current snapshot —
-    file counts, bytes, and a ``fragmented`` flag matching
-    ``rewrite_small_files``'s candidate rule (≥2 files AND average
-    file size under ``target_file_bytes``), so the frame doubles as
-    the compaction plan. Snapshot metadata + ``os.path.getsize`` only;
-    no data-plane job (a copy-on-write table's file inventory IS its
-    snapshot)."""
-    import os
-
-    snap = table.snapshot()
-    rows = []
-    for b, paths in sorted(snap["files"].items(), key=lambda kv: int(kv[0])):
-        sizes = [os.path.getsize(os.path.join(table.path, p)) for p in paths]
-        total = sum(sizes)
-        avg = total // max(len(sizes), 1)
-        rows.append(
-            (
-                int(b),
-                len(sizes),
-                int(total),
-                int(avg),
-                len(sizes) >= 2 and avg < target_file_bytes,
-            )
-        )
+    file counts, bytes, and a ``fragmented`` flag from
+    ``LakeTable.file_census``, the rule ``rewrite_small_files`` picks
+    its candidates by, so the frame doubles as the compaction plan.
+    Snapshot metadata + file sizes only; no data-plane job (a
+    copy-on-write table's file inventory IS its snapshot)."""
+    rows = [(b, n, total, total // max(n, 1), frag)
+            for b, (n, total, frag) in table.file_census(target_file_bytes).items()]
     return spark.createDataFrame(rows, TABLE_HEALTH_SCHEMA)

@@ -19,3 +19,18 @@ def tmpdir_path():
     d = tempfile.mkdtemp(prefix="etlwa-test-")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture()
+def assert_healed_is_live():
+    """Check that a manifest ``recover`` healed from the sink's ledger is
+    the one the live epoch finalized, but for the heal mark, the epoch's
+    wall time and its commit stamp."""
+
+    def check(healed: dict, live: dict) -> None:
+        assert healed["metrics"].pop("healed") is True
+        for m in (healed, live):
+            del m["metrics"]["wall_ms"], m["committed_at"]
+        assert healed == live
+
+    return check

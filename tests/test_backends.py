@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_warehouse_agnostic_spark.engine import CdcEngine
-from etl_warehouse_agnostic_spark.lake import backends
 from etl_warehouse_agnostic_spark.lake.backends import DuckBackend, make_warehouse
 from etl_warehouse_agnostic_spark.lake.manifest import ManifestStore
 from etl_warehouse_agnostic_spark.lake.table import LakeTable
@@ -209,37 +208,41 @@ def test_run_warehouse_on_lake_table_equals_run(spark, tmpdir_path):
     assert healed["offsets"] == ck2.get(3)["offsets"]
 
 
-def test_warehouse_loop_heals_crash_between_merge_and_manifest(spark, tmpdir_path):
+@pytest.mark.parametrize("wtype", ["duckdb", "sqlite"])
+def test_warehouse_loop_heals_crash_between_merge_and_manifest(spark, tmpdir_path, wtype,
+                                                               assert_healed_is_live):
     """T2 on the warehouse path: a crash after the warehouse MERGE but
     before the manifest finalize must heal on the next run — the epoch
     is found in the warehouse's ledger, the merge is a skipped no-op,
-    and the manifest gets finalized without re-applying."""
+    and the manifest the ledger recorded gets finalized without
+    re-applying: the one the live epoch finalized, counts, offsets and
+    lineage included."""
     from etl_warehouse_agnostic_spark.sources.changes import ChangeStreamSource
 
     chg = generate_changes(spark, 2000, n_convs=20, turns_per_conv=6, seed=17).localCheckpoint()
-    duck = DuckBackend.create(
-        spark, os.path.join(tmpdir_path, "wh.duckdb"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS
-    )
+    wh = make_warehouse(spark, {"type": wtype, "path": os.path.join(tmpdir_path, "wh.db")},
+                        TRANSCRIPTS_SCHEMA_V1, KEY_COLS)
     ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
     eng = CdcEngine(spark, None, ck)
-    eng.run(ChangeStreamSource(spark, df=chg), epoch_size=800, sink=duck)
-    state_before = _final_state(duck.read())
+    eng.run(ChangeStreamSource(spark, df=chg), epoch_size=800, sink=wh)
+    state_before = _final_state(wh.read())
     last = ck.last_epoch()
     assert last is not None and last >= 2
+    live = ck.get(last)
 
     # simulate the crash window: the last epoch's MERGE committed (it is
     # in the warehouse ledger) but its manifest write was lost
     os.unlink(os.path.join(ck.path, f"epoch={last:08d}.json"))
     assert not ck.is_finalized(last)
-    assert last in duck.committed_epochs()
+    assert last in wh.committed_epochs()
 
     # upfront recovery heals the manifest from the ledger BEFORE the
     # loop plans anything; with no new LSNs the loop then does nothing
-    results = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=800, sink=duck)
+    results = eng.run(ChangeStreamSource(spark, df=chg), epoch_size=800, sink=wh)
     assert results == []
     assert ck.is_finalized(last)
-    assert ck.get(last)["metrics"].get("healed") is True
-    assert _final_state(duck.read()) == state_before
+    assert_healed_is_live(ck.get(last), live)
+    assert _final_state(wh.read()) == state_before
 
 
 def test_three_backends_converge_to_identical_state(spark, tmpdir_path):
@@ -363,12 +366,8 @@ def test_warehouse_heal_of_truncated_epoch_does_not_lose_new_lsns(spark, tmpdir_
     # epoch 1: (0,1000]; epoch 2: (1000,1200] — truncated by source max
     tail(target, ck, old)
     assert ck.high_water_lsn() == 1200
-    if sink == "duckdb":
-        info = target.epoch_info(2)
-        recorded = (info["lsn_lo"], info["lsn_hi"])
-    else:
-        recorded = tuple(target.epoch_snapshot(2)["summary"]["manifest"]["lineage"]["lsn_range"])
-    assert recorded == (1000, 1200)
+    manifest, _ = target.epoch_manifest(2)
+    assert manifest["lineage"]["lsn_range"] == [1000, 1200]
 
     # crash window: epoch 2 merged (ledger) but its manifest was lost
     os.unlink(os.path.join(ck.path, "epoch=00000002.json"))
@@ -408,6 +407,7 @@ def test_overwrite_replay_is_skipped_noop_everywhere(spark, tmpdir_path):
         res = wh.overwrite(df2, epoch_id=7)  # replay: must NOT apply df2
         assert res.skipped, t
         assert wh.committed_epochs().count(7) == 1, t
+        assert wh.epoch_manifest(7) is None, t  # nothing for recover to heal from
         assert _final_state(wh.read()) == _final_state(df), t
 
 
@@ -474,41 +474,10 @@ def test_merge_key_in_both_upserts_and_deletes_nets_to_upsert(spark, tmpdir_path
 
 
 @pytest.mark.parametrize("wtype", ["duckdb", "sqlite"])
-def test_recover_warehouse_skips_null_lsn_lo_ledger_rows(spark, tmpdir_path, wtype):
-    """ADVICE r4: a legacy ledger row with NULL lsn_lo must NOT be
-    healed with a coerced lo=0 (false gap/overlap in pipeline_health);
-    it heals inline at replay with the loop's computed lo instead."""
-    schema = TRANSCRIPTS_SCHEMA_V1
-    wh = make_warehouse(
-        spark, {"type": wtype, "path": os.path.join(tmpdir_path, f"wh-{wtype}")}, schema, KEY_COLS
-    )
-    cols = [f.name for f in schema.fields]
-    df = spark.createDataFrame([("c1", 0, "user", "t", None)], schema).select(*cols)
-    wh.merge(df, epoch_id=1)  # ledger row with NULL lo/hi
-    wh._con.execute("UPDATE _epochs SET lsn_hi = 500 WHERE epoch_id = 1")
-
-    ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
-    eng = CdcEngine(spark, None, ck)
-    assert eng.recover(sink=wh) == []  # NULL lsn_lo → not healed upfront
-    assert not ck.is_finalized(1)
-
-    # inline replay heal: the loop's computed lo survives, recorded hi wins
-    empty_changes = spark.createDataFrame(
-        [],
-        "lsn long, op string, conv_id string, turn_idx int, "
-        "role string, text string, ts timestamp",
-    )
-    res = eng.apply_epoch(empty_changes, epoch=1, lsn_range=(0, 900), sink=wh)
-    assert res.skipped
-    m = ck.get(1)
-    assert m["lineage"]["lsn_range"] == [0, 500]
-
-
-@pytest.mark.parametrize("wtype", ["duckdb", "sqlite"])
-def test_legacy_epochs_ledger_gains_lsn_columns_on_open(spark, tmpdir_path, wtype):
-    """A warehouse whose ``_epochs`` ledger predates the applied lsn
-    range opens with ``lsn_lo``/``lsn_hi`` added; its old rows read them
-    as NULL (never a made-up range), and new epochs record theirs."""
+def test_epochs_ledger_without_manifest_column_raises_on_open(spark, tmpdir_path, wtype):
+    """A warehouse whose ``_epochs`` ledger predates the recorded
+    manifest (epoch id and row count only) cannot heal a lost manifest,
+    so opening it raises and names the missing column."""
     path = os.path.join(tmpdir_path, f"old-{wtype}.db")
     if wtype == "duckdb":
         import duckdb
@@ -522,26 +491,8 @@ def test_legacy_epochs_ledger_gains_lsn_columns_on_open(spark, tmpdir_path, wtyp
     con.execute("INSERT INTO _epochs VALUES (1, 7)")
     con.close()
 
-    config = {"type": wtype, "path": path}
-    wh = make_warehouse(spark, config, TRANSCRIPTS_SCHEMA_V1, KEY_COLS)
-    assert wh._con.execute(
-        "SELECT lsn_lo, lsn_hi FROM _epochs WHERE epoch_id = 1"
-    ).fetchone() == (None, None)
-    assert wh.epoch_info(1) == {"rows_written": 7, "lsn_lo": None, "lsn_hi": None}
-    df = spark.createDataFrame([("c1", 0, "user", "t", None)], TRANSCRIPTS_SCHEMA_V1)
-    files = backends._export_delta(
-        df.withColumn("op", F.lit("U")),
-        T.StructType(list(TRANSCRIPTS_SCHEMA_V1.fields) + [T.StructField("op", T.StringType())]),
-        os.path.join(tmpdir_path, f"delta-{wtype}"),
-    )
-    wh.merge_files(files, epoch_id=2, lsn_range=(10, 20))
-    wh._con.close()
-
-    # a second open finds the columns already there
-    re = make_warehouse(spark, config, TRANSCRIPTS_SCHEMA_V1, KEY_COLS)
-    assert re.committed_epochs() == [1, 2]
-    assert re.epoch_info(2) == {"rows_written": 1, "lsn_lo": 10, "lsn_hi": 20}
-    re.close()
+    with pytest.raises(ValueError, match="manifest column"):
+        make_warehouse(spark, {"type": wtype, "path": path}, TRANSCRIPTS_SCHEMA_V1, KEY_COLS)
 
 
 def test_make_warehouse_rejects_unknown_sql_config_keys(spark, tmpdir_path):

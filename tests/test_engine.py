@@ -110,12 +110,14 @@ def test_lookback_overlap_is_idempotent(spark, tmpdir_path, changes_path):
     assert table_state(eng.table) == [tuple(r) for r in oracle_final_state(changes_path)]
 
 
-def test_crash_between_commit_and_manifest(spark, tmpdir_path, changes_path):
+def test_crash_between_commit_and_manifest(spark, tmpdir_path, changes_path,
+                                          assert_healed_is_live):
     """T2: MERGE committed, manifest lost → recover() finalizes without
     re-applying; the tail loop then continues from the right offset."""
     eng = mk_engine(spark, tmpdir_path)
     src = ChangeStreamSource(spark, path=changes_path)
     eng.run(src, epoch_size=1000, max_epochs=2)
+    live = eng.checkpoints.get(2)
     # simulate crash: drop epoch 2's manifest (commit already durable)
     os.unlink(eng.checkpoints._file(2))
     assert not eng.checkpoints.is_finalized(2)
@@ -130,12 +132,32 @@ def test_crash_between_commit_and_manifest(spark, tmpdir_path, changes_path):
     # metrics backfilled from the snapshot summary, not zeroed
     assert m["metrics"]["bytes_written"] > 0
     assert m["snapshot_version"] == eng.table.epoch_snapshot(2)["version"]
-    assert "committed_at" in m
+    assert m["committed_at"] == eng.table.epoch_snapshot(2)["committed_at"]
+    assert_healed_is_live(m, live)
     assert not os.path.exists(staging)  # recover swept the leak
     v_after_heal = eng.table.latest_version()
     eng.run(src, epoch_size=1000)  # finish the stream
     assert table_state(eng.table) == [tuple(r) for r in oracle_final_state(changes_path)]
     assert eng.table.latest_version() == v_after_heal + 2
+
+
+def test_empty_epoch_manifest_heals_from_the_ledger(spark, tmpdir_path, changes_path,
+                                                    assert_healed_is_live):
+    """An epoch whose slice is empty writes no data, but its commit still
+    records the manifest, so a manifest lost after that commit heals as
+    any other epoch's does."""
+    from pyspark.sql import functions as F
+
+    eng = mk_engine(spark, tmpdir_path)
+    src = ChangeStreamSource(spark, path=changes_path)
+    [res] = eng.run(src, epoch_size=1000, max_epochs=1)
+    hi = res.lsn_range[1]
+    empty = eng.apply_epoch(src.read_slice(0, hi).where(F.lit(False)), 2, lsn_range=(hi, hi + 10))
+    assert not empty.skipped and empty.rows_read == 0
+    live = eng.checkpoints.get(2)
+    os.unlink(eng.checkpoints._file(2))
+    assert eng.recover() == [2]
+    assert_healed_is_live(eng.checkpoints.get(2), live)
 
 
 def test_replay_from_any_checkpoint_reconverges(spark, tmpdir_path, changes_path):

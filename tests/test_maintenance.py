@@ -133,6 +133,31 @@ def test_rewrite_small_files_preserves_content(spark, tmpdir_path):
     assert t.rewrite_small_files(target_file_bytes=1 << 30)["buckets_compacted"] == 0
 
 
+def test_day_partitioned_table_is_not_fragmented_by_its_days(spark, tmpdir_path):
+    """A copy-on-write bucket of a day-partitioned table holds one file
+    per day dir, and a rewrite writes one per (bucket, day) again: one
+    merge spanning several days leaves nothing to compact, so
+    ``rewrite_small_files`` commits no version and ``table_health``
+    flags no bucket."""
+    import datetime as dt
+
+    from etl_warehouse_agnostic_spark.operators.health import table_health
+
+    t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "t"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS,
+        num_buckets=2, partition_spec={"col": "ts", "transform": "day"},
+    )
+    rows = [(f"c{i}", 0, "user", f"t{i}", dt.datetime(2024, 1, 1 + i % 4, 12))
+            for i in range(24)]
+    t.merge(spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA_V1), epoch_id=1)
+    assert all(len(ps) == 4 for ps in t.snapshot()["files"].values()), "4 days per bucket"
+    v = t.latest_version()
+    res = t.rewrite_small_files()
+    assert res["buckets_compacted"] == 0 and res["version"] == v
+    assert t.latest_version() == v
+    assert not any(r.fragmented for r in table_health(spark, t).collect())
+
+
 def test_rebucket_evolution(spark, tmpdir_path):
     t = LakeTable.create(
         spark, os.path.join(tmpdir_path, "t"), TRANSCRIPTS_SCHEMA_V1, KEY_COLS, num_buckets=2
