@@ -61,12 +61,21 @@ Crash between 6 and 7: ``recover`` reads the manifest the sink's
 commit recorded (``epoch_manifest``, the same call on every sink) and
 finalizes it, without re-applying — the write-ahead ordering the
 reference implements as "advance watermark only after verified load"
-(extractors/repsly/extractor.py:1441-1475). The live epoch and the heal
-complete the manifest's post-commit fields in one helper
-(``_committed``), so a healed manifest is the one the epoch would have
-finalized, but for its ``healed`` mark, its wall time (0: the heal did
-not time the epoch) and its commit stamp (the sink's own, where it
-records one).
+(extractors/repsly/extractor.py:1441-1475). It is the one heal path:
+both front ends call it before their first epoch, and ``apply_epoch``
+calls it first when a crashed attempt left the epoch's staging record,
+so a re-applied epoch the sink committed finalizes the recorded
+manifest and replays its models from the retained delta, never from a
+wider recomputed slice. The live epoch and the heal complete the
+manifest's post-commit fields in one helper (``_committed``), so a
+healed manifest is the one the epoch would have finalized, but for its
+``healed`` mark, its wall time (0: the heal did not time the epoch) and
+its commit stamp (the sink's own, where it records one).
+
+Every manifest's ``lineage.lsn_range`` means (watermark, hi], so each
+epoch's lo is the previous epoch's hi: the tail loop records its
+planned slice, and an epoch applied without one (a streamed
+micro-batch) records (high-water lsn, max(its max lsn, high water)].
 """
 
 from __future__ import annotations
@@ -92,8 +101,10 @@ from etl_warehouse_agnostic_spark.lake.table import (
     EpochCensus,
     LakeTable,
     MergeResult,
+    footer_census,
     gated_commits,
     observed,
+    read_files,
 )
 from etl_warehouse_agnostic_spark.operators.dedup import lww_dedup_window, split_ops
 from etl_warehouse_agnostic_spark.operators.evolution import (
@@ -129,9 +140,7 @@ class EpochResult:
     # past it, so scaling/soak harnesses need it separately to attribute
     # non-scaling components (see tools/bench_scaling.py).
     model_wall_ms: dict = field(default_factory=dict)
-    # the lsn range the epoch's manifest finalized — the tail loop's
-    # next watermark (a sink ledger hit may record a narrower range
-    # than the slice the loop planned)
+    # the (watermark, hi] lsn range the epoch's manifest finalized
     lsn_range: tuple[int, int] | None = None
 
 
@@ -245,16 +254,10 @@ class CdcEngine:
         for _, hi in plan(hi_water, source_max):
             if max_epochs is not None and len(results) >= max_epochs:
                 break
-            if hi <= hi_water:
-                continue  # covered by a wider range a ledger hit finalized
             changes = source.read_slice(hi_water, hi, lookback=lookback)
-            rng = (hi_water, hi)
-            res = self.apply_epoch(changes, epoch, lsn_range=rng, sink=sink)
+            res = self.apply_epoch(changes, epoch, lsn_range=(hi_water, hi), sink=sink)
             results.append(res)
-            # The range the epoch actually finalized is the watermark,
-            # never the planned bound: a ledger hit finalizes the range
-            # the sink RECORDED, and the next slice starts there.
-            hi_water = res.lsn_range[1]
+            hi_water = hi
             epoch += 1
             if not res.skipped:
                 self._epochs_applied += 1
@@ -292,13 +295,21 @@ class CdcEngine:
     ) -> EpochResult:
         """Apply one epoch of changes to ``sink`` (default: the engine's
         table) exactly once; also the streaming ``foreachBatch`` target
-        (each micro-batch = one epoch). A caller of this single-epoch
-        API must :meth:`recover` the sink after a crash before it
-        applies the next epoch (both front ends, the tail loop and
-        ``StreamingCdcApply``, do so): an epoch whose manifest finalized
-        but whose models did not all commit is skipped here, and only
-        recover replays its models."""
+        (each micro-batch = one epoch). ``lsn_range`` is the (watermark,
+        hi] slice the changes cover (default: module docstring).
+
+        A finalized epoch is skipped. The staging record of an
+        unfinalized epoch means an earlier attempt crashed, so
+        :meth:`recover` runs first: if the sink committed the epoch,
+        that finalizes it, replays its models and the epoch is skipped.
+        The steady state pays one more file-existence check. A sink
+        that reports the epoch committed anyway (another writer holds
+        it) raises, and every model discards its write."""
         sink = self.table if sink is None else sink
+        if not self.checkpoints.is_finalized(epoch) and os.path.exists(
+            os.path.join(self._staging_dir(epoch), _STAGED_RECORD)
+        ):
+            self.recover(sink=sink)
         if self.checkpoints.is_finalized(epoch):
             rng = self.checkpoints.get(epoch)["lineage"]["lsn_range"]
             return EpochResult(epoch=epoch, skipped=True, lsn_range=tuple(rng))
@@ -323,7 +334,6 @@ class CdcEngine:
         # separate stats pass.
         slice_metrics = [
             F.count(F.lit(1)).alias("rows_read"),
-            F.min("lsn").alias("min_lsn"),
             F.max("lsn").alias("max_lsn"),
         ]
         if "schema_ver" in changes.columns:
@@ -339,10 +349,7 @@ class CdcEngine:
         deduped = lww_dedup_window(changes, self.key_cols, self.order_cols)
         envelope = [c for c in CDC_TYPES if c in deduped.columns]
         project = project_arrow if added else project_columns
-        delta_metrics = [
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_del"),
-        ]
+        delta_metrics = [F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_del")]
         obs_delta = Observation(f"delta-e{epoch}-{uuid.uuid4().hex[:6]}")
         projected = project(deduped, schema, keep=envelope).observe(obs_delta, *delta_metrics)
 
@@ -383,13 +390,11 @@ class CdcEngine:
         slice_stats = observed(obs_slice, changes, slice_metrics)
         delta_stats = observed(obs_delta, delta, delta_metrics)
         rows_read = int(slice_stats.get("rows_read") or 0)
-        n_rows = int(delta_stats.get("rows") or 0)
+        n_rows = sum(o["rows"] for o in offsets.values())
         n_del = int(delta_stats.get("n_del") or 0)
         if lsn_range is None:
-            lsn_range = (
-                int(slice_stats.get("min_lsn") or 0),
-                int(slice_stats.get("max_lsn") or 0),
-            )
+            lo = self.checkpoints.high_water_lsn()
+            lsn_range = (lo, max(int(slice_stats.get("max_lsn") or 0), lo))
         manifest = self._manifest(
             epoch, lsn_range, offsets, rows_read, n_rows - n_del, n_del,
             schema_ver_max=int(slice_stats.get("sv_max") or schema_ver_max),
@@ -423,33 +428,23 @@ class CdcEngine:
                     )
                 else:
                     res = sink.merge_files(exported, epoch_id=epoch, manifest=manifest)
+                if res.skipped:
+                    raise RuntimeError(f"epoch {epoch} is already committed to the sink "
+                                       "by another writer")
                 wall_ms = int((time.monotonic() - t0) * 1000)
-                # Ledger hit: the epoch already committed (a crash
-                # before finalize), possibly under a NARROWER lsn range
-                # than this recomputed slice if the source gained LSNs
-                # before restart. Finalize what the sink RECORDED so the
-                # watermark never passes rows that were not applied.
-                recorded = sink.epoch_manifest(epoch) if res.skipped else None
-                if recorded is not None:
-                    manifest = self._committed(*recorded, healed=True)
-                else:
-                    manifest = self._committed(manifest, res, wall_ms=wall_ms)
-                self.checkpoints.finalize(epoch, manifest)
+                self.checkpoints.finalize(epoch, self._committed(manifest, res, wall_ms=wall_ms))
             except BaseException as e:
                 committed.set_exception(e)  # every model discards its write
                 raise
             committed.set_result(None)
             model_walls = models.result()
         shutil.rmtree(staging_dir, ignore_errors=True)
-        rng = tuple(manifest["lineage"]["lsn_range"])
-        if res.skipped:
-            return EpochResult(epoch=epoch, skipped=True, model_wall_ms=model_walls, lsn_range=rng)
         return EpochResult(
             epoch=epoch, skipped=False, rows_read=rows_read,
             rows_upserted=n_rows - n_del, rows_deleted=n_del,
             bytes_written=res.bytes_written, wall_ms=wall_ms,
             snapshot_version=res.version, offsets=offsets,
-            model_wall_ms=model_walls, lsn_range=rng,
+            model_wall_ms=model_walls, lsn_range=tuple(lsn_range),
         )
 
     def recover(self, sink=None) -> list[int]:
@@ -548,8 +543,6 @@ class CdcEngine:
         in the modulus the delta was staged with (None when unbucketed).
         An empty delta opens as an empty DataFrame of the staged
         schema."""
-        import pyarrow.parquet as pq
-
         record_path = os.path.join(staging_dir, _STAGED_RECORD)
         if not os.path.exists(record_path):
             raise RuntimeError(
@@ -562,27 +555,17 @@ class CdcEngine:
         files: list[str] = []
         offsets: dict[str, dict[str, int]] = {}
         for part, rels in sorted(record["files"].items()):
-            off = offsets[part] = {"max_lsn": 0, "rows": 0}
-            for rel in sorted(rels):
-                files.append(os.path.join(staging_dir, rel))
-                md = pq.ParquetFile(files[-1]).metadata
-                off["rows"] += md.num_rows
-                idx = md.schema.names.index("lsn")  # every slice carries lsn
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    if st is not None and st.has_min_max:
-                        off["max_lsn"] = max(off["max_lsn"], int(st.max))
+            paths = [os.path.join(staging_dir, rel) for rel in sorted(rels)]
+            rows, max_lsn = footer_census(paths, "lsn")  # every slice carries lsn
+            offsets[part] = {"max_lsn": max_lsn or 0, "rows": rows}
+            files += paths
         census = None
         if record["num_buckets"] is not None:
             key = self.key_cols[0]
             census = EpochCensus(key, schema[key].dataType, record["num_buckets"],
                                  tuple(sorted(int(b) for b in offsets)),
                                  sum(o["rows"] for o in offsets.values()))
-        if files:
-            delta = self.spark.read.schema(schema).parquet(*files)
-        else:
-            delta = self.spark.createDataFrame([], schema)
-        return delta, offsets, census
+        return read_files(self.spark, schema, files), offsets, census
 
     def _apply_silver(self, staged: DataFrame, epoch: int,
                       census: EpochCensus | None = None, *,

@@ -23,8 +23,10 @@ an epoch ledger that records the epoch's manifest):
   contract, bulk transfer through a bounded-batch loader.
 
 The two SQL warehouses share one body (``_SqlWarehouse``): the
-``_epochs`` ledger, schema evolution, the spill lifecycle and the
-merge/overwrite transaction skeleton. Each engine supplies only its
+``_epochs`` ledger, schema evolution (the evolved Spark schema is kept
+in a one-row ``_schema`` table, so a reopened warehouse keeps its added
+columns), the spill lifecycle and the merge/overwrite transaction
+skeleton. Each engine supplies only its
 column types, how it begins and rolls back a transaction, how it
 applies a parquet file set, and ``read()``.
 
@@ -53,11 +55,13 @@ between merge and manifest-finalize by finalizing the recorded
 manifest, so the watermark never passes rows that were not applied
 (see the ``etl_warehouse_agnostic_spark.engine`` module docstring). A
 warehouse whose ``_epochs`` table has no ``manifest`` column (an older
-ledger format) raises on open.
+ledger format) raises on open; one without a ``_schema`` table starts
+from the caller's schema.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -197,7 +201,6 @@ class _SqlWarehouse:
         os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
         b = cls(path)
         b._spark = spark
-        b._schema = schema
         b._keys = list(key_cols)
         _sweep_stale_spill(b.spill_dir)
         b._con.execute(
@@ -210,6 +213,13 @@ class _SqlWarehouse:
                 f"{path}: its _epochs ledger has no manifest column (an older "
                 "ledger format), so a lost manifest could not be healed from it"
             )
+        # the Spark schema, evolved columns included; a file without one
+        # starts from the caller's
+        b._con.execute(f"CREATE TABLE IF NOT EXISTS _schema (spark_schema {b._TYPES['string']})")
+        row = b._con.execute("SELECT spark_schema FROM _schema").fetchone()
+        if row is None:
+            b._con.execute("INSERT INTO _schema VALUES (?)", [schema.json()])
+        b._schema = schema if row is None else T.StructType.fromJson(json.loads(row[0]))
         b._create_target()
         return b
 
@@ -237,19 +247,23 @@ class _SqlWarehouse:
         """Add-only evolution, executed by the warehouse itself:
         ``ALTER TABLE ... ADD COLUMN`` per new field — exactly the
         reference's evolution path
-        (extractors/leaflink/extractor.py:1053-1082). Existing rows
-        read the new columns as NULL, same as LakeTable's add-only
+        (extractors/leaflink/extractor.py:1053-1082) — and the evolved
+        schema rewritten into ``_schema``, in one transaction. Existing
+        rows read the new columns as NULL, same as LakeTable's add-only
         column projection."""
         fields = new_columns.fields if isinstance(new_columns, T.StructType) else list(new_columns)
         cur_names = set(self._schema.names)
         added = [f for f in fields if f.name not in cur_names]
-        for f in added:
-            self._con.execute(
-                f'ALTER TABLE {self.table_name} ADD COLUMN '
-                f'"{f.name}" {self._sql_type(f.dataType)}'
-            )
         if added:
-            self._schema = T.StructType(list(self._schema.fields) + added)
+            schema = T.StructType(list(self._schema.fields) + added)
+            with self._transaction():
+                for f in added:
+                    self._con.execute(
+                        f'ALTER TABLE {self.table_name} ADD COLUMN '
+                        f'"{f.name}" {self._sql_type(f.dataType)}'
+                    )
+                self._con.execute("UPDATE _schema SET spark_schema = ?", [schema.json()])
+            self._schema = schema
         return self._schema
 
     # -- the epoch ledger ----------------------------------------------
@@ -316,22 +330,27 @@ class _SqlWarehouse:
         try:
             if export:
                 files = _export_delta(export[1], export[2], spill)
-            self._con.execute(self._BEGIN)
-            try:
+            with self._transaction():
                 rows = apply(files)
                 if epoch_id is not None:
                     self._con.execute(
                         "INSERT INTO _epochs (epoch_id, manifest) VALUES (?, ?)",
                         [epoch_id, None if manifest is None else json.dumps(manifest, default=str)],
                     )
-                self._con.execute("COMMIT")
-            except Exception:
-                self._rollback()
-                raise
             return MergeResult(0, epoch_id, rows, 0, 0)
         finally:
             if spill:
                 shutil.rmtree(spill, ignore_errors=True)
+
+    @contextlib.contextmanager
+    def _transaction(self):  # commit the block, or roll it back
+        self._con.execute(self._BEGIN)
+        try:
+            yield
+            self._con.execute("COMMIT")
+        except Exception:
+            self._rollback()
+            raise
 
     # -- spill lifecycle ------------------------------------------------
 

@@ -118,11 +118,11 @@ class CommitConflict(RuntimeError):
 _COMMIT_RETRIES = 3
 
 # MERGE anti-join build side: when the caller KNOWS the changed row
-# count (an EpochCensus of the merge's own changes: the bronze staging
-# write's Observation, or the day rollup's; the engine strips the count
-# from the bronze census it hands the models, since a transform may fan
-# out) and it is under this bound, the key set is broadcast so the
-# survivors scan is never shuffled by key — the guide-§3.1 "broadcast
+# count (an EpochCensus of the merge's own changes: the bronze staged
+# files' footers, or the day rollup's Observation; the engine strips
+# the count from the bronze census it hands the models, since a
+# transform may fan out) and it is under this bound, the key set is
+# broadcast so the survivors scan is never shuffled by key — the guide-§3.1 "broadcast
 # the side you know is small" call the planner cannot make from size
 # estimates alone. The broadcast side is the changed KEY columns only
 # (``changed_keys.select(*keys)``), never payload, so a row bound is
@@ -177,7 +177,7 @@ class EpochCensus:
     """What one epoch's delta touches, in one table's hash layout:
     ``buckets`` are the ``bucket_of(key, num_buckets)`` values of the
     delta's rows, ``rows`` its row count (both known once the delta is
-    staged, from the staging dirs and the write's Observation; ``rows``
+    staged, from the staging dir's record and footers; ``rows``
     is None where it does not count the merge's changed keys).
 
     A table bucketed on the same key into ``m`` buckets with ``m``
@@ -218,6 +218,44 @@ def observed(obs: Observation, df: DataFrame, metrics: list) -> dict:
         return obs.get
     except Exception:
         return df.agg(*metrics).first().asDict()
+
+
+def footer_census(paths: list[str], col: str | None = None) -> tuple[int, int | None]:
+    """The row count of the parquet files ``paths`` and, with ``col``,
+    the exact max of that integer column, from the footers alone (no
+    Spark job; parquet min/max stats are exact for integers). The max
+    is strict: None (the caller scans) when a row group that may hold a
+    value lacks usable stats or a file with rows lacks ``col``. All-null
+    groups and files without row groups add nothing."""
+    import pyarrow.parquet as pq
+
+    rows, best, exact = 0, None, col is not None
+    for path in paths:
+        md = pq.ParquetFile(path).metadata
+        rows += md.num_rows
+        for rg in range(md.num_row_groups if exact else 0):
+            group = md.row_group(rg)
+            # by leaf path: the arrow field index shifts when nested
+            # columns precede the column
+            idx = next((i for i in range(md.num_columns)
+                        if group.column(i).path_in_schema == col), None)
+            st = None if idx is None else group.column(idx).statistics
+            if st is not None and not st.has_min_max and st.null_count == group.num_rows:
+                continue  # all-null group: nothing to contribute
+            v = st.max if st is not None and st.has_min_max else None
+            if not isinstance(v, int) or isinstance(v, bool):
+                exact = False
+                break
+            best = v if best is None else max(best, v)
+    return rows, best if exact else None
+
+
+def read_files(spark: SparkSession, schema: T.StructType, files: list[str]) -> DataFrame:
+    """The parquet ``files`` read through ``schema``: an empty frame of
+    it when there are none."""
+    if not files:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*files)
 
 
 @dataclass
@@ -388,12 +426,10 @@ class LakeTable:
                         if d is not None and not (day_range[0] <= d <= day_range[1]):
                             continue
                     files.append(os.path.join(self.path, p))
-        if not files:
-            return self.spark.createDataFrame([], schema)
         # Explicit file list = manual partition pruning from snapshot
         # metadata (bucket -> files); add-only schema evolution works
         # because parquet fills columns absent from a file with NULL.
-        return self.spark.read.schema(schema).parquet(*files)
+        return read_files(self.spark, schema, files)
 
     def read(
         self,
@@ -467,8 +503,8 @@ class LakeTable:
     ) -> tuple[dict[str, list[str]], dict[str, int], int]:
         """Write df (must carry _bucket) under out_dir, one file set per
         bucket via partitionBy; returns (bucket->relpaths, {"rows": n},
-        bytes). The row count comes from an Observation attached to the
-        write — no extra pass over the data.
+        bytes). The row count comes from the written files' footers —
+        no extra pass over the data.
 
         ``compression`` overrides the session parquet codec for THIS
         write only (used for ephemeral staging deltas, which are
@@ -488,7 +524,6 @@ class LakeTable:
         """``write_bucketed`` in the layout of snapshot ``snap``, with
         at most ``max_records`` rows per file (None: one file set per
         bucket)."""
-        obs = Observation(f"write-{os.path.basename(out_dir)}-{uuid.uuid4().hex[:6]}")
         spec = snap.get("partition_spec")
         staged = df.withColumn(_PB, F.col(_BUCKET))
         part_cols = [_PB]
@@ -500,8 +535,7 @@ class LakeTable:
             )
             part_cols.append(_PD)
         writer = (
-            staged.observe(obs, F.count(F.lit(1)).alias("rows"))
-            .repartition(F.col(_BUCKET))
+            staged.repartition(F.col(_BUCKET))
             # partition cols lead the sort so FileFormatWriter's
             # required ordering is already satisfied and the key sort
             # survives into the files (min/max stats friendly).
@@ -514,13 +548,6 @@ class LakeTable:
         if compression:
             writer = writer.option("compression", compression)
         writer.parquet(out_dir)
-        try:
-            observed = {k: int(v or 0) for k, v in obs.get.items()}
-        except Exception:
-            # Catalyst can fold tiny local-relation inputs so the
-            # CollectMetrics node never fires (seen with createDataFrame
-            # sources in tests). Count from the written footers.
-            observed = {"rows": None}
         files: dict[str, list[str]] = {}
         nbytes = 0
         for sub in os.listdir(out_dir):
@@ -535,14 +562,8 @@ class LakeTable:
                         full = os.path.join(root, fn)
                         nbytes += os.path.getsize(full)
                         files.setdefault(b, []).append(os.path.relpath(full, self.path))
-        if observed.get("rows") is None:
-            import pyarrow.parquet as pq
-
-            observed = {"rows": sum(
-                pq.ParquetFile(os.path.join(self.path, p)).metadata.num_rows
-                for ps in files.values() for p in ps
-            )}
-        return files, observed, nbytes
+        rows, _ = footer_census([os.path.join(self.path, p) for ps in files.values() for p in ps])
+        return files, {"rows": rows}, nbytes
 
     def _write_attempt(
         self, cur: dict, kind: str, df: DataFrame, max_records: int | None
@@ -553,8 +574,8 @@ class LakeTable:
         out_dir = os.path.join(
             self.data_dir, f"{kind}{cur['version'] + 1:08d}-{uuid.uuid4().hex[:8]}"
         )
-        files, observed, nbytes = self._write(cur, df, out_dir, max_records=max_records)
-        return out_dir, files, observed["rows"], nbytes
+        files, written, nbytes = self._write(cur, df, out_dir, max_records=max_records)
+        return out_dir, files, written["rows"], nbytes
 
     def _publish(
         self,

@@ -21,6 +21,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_warehouse_agnostic_spark.lake.table import footer_census
+
 
 class ChangeStreamSource:
     def __init__(
@@ -51,57 +53,21 @@ class ChangeStreamSource:
         return int(row[0]) if row and row[0] is not None else 0
 
     def _max_lsn_from_footers(self) -> int | None:
-        """Exact max(lsn) from parquet footer statistics — driver-side
-        metadata only, O(files), no Spark job (the same footer-stats
-        pattern as the engine's per-bucket offset lineage). Parquet
-        min/max stats are exact for integer columns, so this is the
-        aggregation's result, not an estimate. Returns None — caller
-        falls back to the scan aggregation — whenever any row group
-        lacks usable stats (missing column, non-integer type, all-null
-        group, foreign writer without stats)."""
-        import pyarrow.parquet as pq
-
-        best: int | None = None
+        """Exact max(lsn) from the parquet footers under ``path``
+        (``footer_census``: metadata only, O(files), no Spark job, the
+        same census as the engine's staged offsets). None — the caller
+        scans — when there are no files, a footer cannot be read, or
+        the census is not exact (a group or file without usable
+        stats, an all-null cursor)."""
+        files = []
+        for root, _, fns in os.walk(self.path):
+            files += [os.path.join(root, f) for f in fns if f.endswith(".parquet")]
+        if not files and self.path.endswith(".parquet") and os.path.isfile(self.path):
+            files = [self.path]
         try:
-            files = []
-            for root, _, fns in os.walk(self.path):
-                files += [os.path.join(root, f) for f in fns if f.endswith(".parquet")]
-            if not files and self.path.endswith(".parquet") and os.path.isfile(self.path):
-                files = [self.path]
-            if not files:
-                return None
-            for fp in files:
-                md = pq.ParquetFile(fp).metadata
-                # leaf-column index by path (arrow field index shifts
-                # when nested columns precede the cursor)
-                ci = next(
-                    (
-                        i
-                        for i in range(md.num_columns)
-                        if md.row_group(0).column(i).path_in_schema == self.lsn_col
-                    ),
-                    None,
-                ) if md.num_row_groups else None
-                if md.num_row_groups == 0:
-                    continue
-                if ci is None:
-                    return None
-                for rg in range(md.num_row_groups):
-                    group = md.row_group(rg)
-                    st = group.column(ci).statistics
-                    if st is None:
-                        return None
-                    if not st.has_min_max:
-                        if st.null_count == group.num_rows:
-                            continue  # all-null group: nothing to contribute
-                        return None
-                    v = st.max
-                    if not isinstance(v, int) or isinstance(v, bool):
-                        return None
-                    best = v if best is None else max(best, v)
+            return footer_census(files, self.lsn_col)[1]
         except Exception:
             return None
-        return best
 
     def read_slice(self, lo_exclusive: int, hi_inclusive: int, lookback: int = 0) -> DataFrame:
         """Events with lo-lookback < lsn <= hi (filter pushed to scan)."""

@@ -18,7 +18,9 @@ Design notes (scale):
 - ``start`` recovers the sink before the query starts, like the batch
   tail loop: a replayed batch whose manifest already finalized is
   skipped, so an epoch whose models did not all commit before a crash
-  is caught up from its retained staging dir first.
+  is caught up from its retained staging dir first. A micro-batch
+  carries no planned slice, so its manifest records (high-water lsn,
+  its max lsn], the same (watermark, hi] range the tail loop records.
 - ``start()`` drains the backlog in bounded batches then stops
   (``trigger(availableNow=True)``) — the streaming analog of the batch
   tail loop; ``start(processing_time)`` tails continuously.

@@ -495,6 +495,44 @@ def test_epochs_ledger_without_manifest_column_raises_on_open(spark, tmpdir_path
         make_warehouse(spark, {"type": wtype, "path": path}, TRANSCRIPTS_SCHEMA_V1, KEY_COLS)
 
 
+@pytest.mark.parametrize("wtype", ["duckdb", "sqlite"])
+def test_reopened_warehouse_keeps_its_evolved_columns(spark, tmpdir_path, wtype):
+    """A warehouse stores its Spark schema: reopened with the schema it
+    was created with, it keeps the column evolution added, reads it
+    back, and a further epoch carrying it applies."""
+    from etl_warehouse_agnostic_spark.sources.changes import ChangeStreamSource
+
+    chg = generate_changes(spark, 2000, n_convs=20, turns_per_conv=6, seed=29,
+                           evolution_lsn=500).localCheckpoint()
+    src = ChangeStreamSource(spark, df=chg)
+    ck = ManifestStore(os.path.join(tmpdir_path, "ck"))
+
+    def opened():
+        return make_warehouse(spark, {"type": wtype, "path": os.path.join(tmpdir_path, "wh")},
+                              TRANSCRIPTS_SCHEMA_V1, KEY_COLS)
+
+    wh = opened()
+    CdcEngine(spark, None, ck).run(src, epoch_size=1000, max_epochs=1, sink=wh)
+    assert "tool" in wh.schema.names
+    wh.close()
+    wh = opened()
+    assert "tool" in wh.schema.names and "tool" in wh.read().columns
+    [res] = CdcEngine(spark, None, ck).run(src, epoch_size=1000, sink=wh)
+    assert not res.skipped
+
+    lake_t = LakeTable.create(spark, os.path.join(tmpdir_path, "lake"), TRANSCRIPTS_SCHEMA_V1,
+                              KEY_COLS, num_buckets=4)
+    CdcEngine(spark, lake_t, ManifestStore(os.path.join(tmpdir_path, "ck-lake"))).run(
+        src, epoch_size=1000)
+    cols = ["conv_id", "turn_idx", "role", "text", "tool"]
+
+    def state(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    assert state(wh.read()) == state(lake_t.read())
+    wh.close()
+
+
 def test_make_warehouse_rejects_unknown_sql_config_keys(spark, tmpdir_path):
     """A SQL warehouse takes no config key besides type and path: a
     stale or misspelled one raises instead of being silently ignored,

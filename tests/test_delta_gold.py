@@ -7,6 +7,7 @@ loudly at construction."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -223,6 +224,43 @@ def test_delta_gold_crash_recovery_exactly_once(spark, tmpdir_path):
     want = sorted(tuple(r) for r in gold.aggregate(bronze.read()).collect())
     assert _rows(gold_t) == want
     assert not os.path.isdir(staging) or not os.listdir(staging)
+
+
+def test_reapply_of_a_committed_epoch_heals_through_recover(spark, tmpdir_path):
+    """Epoch 2 committed to bronze but its finalize raised, so the model
+    discarded its write. A caller then re-applies epoch 2 over a WIDER
+    slice of the grown source without calling recover: the epoch heals
+    through recover, which finalizes the recorded range and replays the
+    model from the delta bronze applied, so the gold table equals its
+    rebuild after the stream is finished."""
+    chg = generate_changes(spark, 2000, n_convs=20, turns_per_conv=6, seed=53).localCheckpoint()
+    bronze, gold_t, gold, eng = _mk(
+        spark, tmpdir_path, ["conv_id"], CONV_GOLD_SCHEMA, {"chars": F.length("text")}
+    )
+    store = eng.checkpoints
+    finalize = store.finalize
+
+    def crash_on_2(epoch, manifest):
+        if epoch == 2:
+            raise RuntimeError("injected crash after the sink commit")
+        finalize(epoch, manifest)
+
+    store.finalize = crash_on_2
+    # epoch 1: (0,1000]; epoch 2: (1000,1200], truncated by the source
+    with pytest.raises(RuntimeError, match="injected"):
+        eng.run(ChangeStreamSource(spark, df=chg.where(F.col("lsn") <= 1200)),
+                epoch_size=EPOCH_SIZE)
+    del store.finalize
+    assert bronze.epoch_committed(2) and not store.is_finalized(2)
+    assert gold_t.committed_epochs() == [1]
+
+    wide = chg.where((F.col("lsn") > 1000) & (F.col("lsn") <= 2000))
+    assert eng.apply_epoch(wide, 2, lsn_range=(1000, 2000)).skipped
+    assert store.get(2)["lineage"]["lsn_range"] == [1000, 1200]
+    eng.run(ChangeStreamSource(spark, df=chg), epoch_size=EPOCH_SIZE)
+    assert store.high_water_lsn() == 2000
+    assert gold_t.committed_epochs() == bronze.committed_epochs()
+    assert _rows(gold_t) == sorted(tuple(r) for r in gold.aggregate(bronze.read()).collect())
 
 
 def test_delta_gold_chained_on_silver(spark, tmpdir_path):

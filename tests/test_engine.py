@@ -160,6 +160,34 @@ def test_empty_epoch_manifest_heals_from_the_ledger(spark, tmpdir_path, changes_
     assert_healed_is_live(eng.checkpoints.get(2), live)
 
 
+def test_rangeless_epochs_record_the_watermark_as_lo(spark, tmpdir_path, changes_path):
+    """An epoch applied without ``lsn_range`` (a streamed micro-batch)
+    records (watermark, hi], the range the tail loop records, so
+    consecutive epochs tile the stream."""
+    from etl_warehouse_agnostic_spark.operators.health import pipeline_health
+
+    eng = mk_engine(spark, tmpdir_path)
+    src = ChangeStreamSource(spark, path=changes_path)
+    for epoch, (lo, hi) in enumerate([(0, 700), (700, 1400), (1400, 2000)], start=1):
+        eng.apply_epoch(src.read_slice(lo, hi), epoch)
+    ranges = [eng.checkpoints.get(e)["lineage"]["lsn_range"] for e in (1, 2, 3)]
+    assert ranges == [[0, 700], [700, 1400], [1400, 2000]]
+    health = pipeline_health(spark, eng.checkpoints).orderBy("epoch").collect()
+    assert [r.watermark_monotone for r in health] == [True, True, True]
+
+
+def test_empty_rangeless_epoch_keeps_the_high_water(spark, tmpdir_path, changes_path):
+    from pyspark.sql import functions as F
+
+    eng = mk_engine(spark, tmpdir_path)
+    src = ChangeStreamSource(spark, path=changes_path)
+    eng.run(src, epoch_size=1000, max_epochs=1)
+    empty = eng.apply_epoch(src.read_slice(0, 1000).where(F.lit(False)), 2)
+    assert not empty.skipped and empty.rows_read == 0
+    assert empty.lsn_range == (1000, 1000)
+    assert eng.checkpoints.high_water_lsn() == 1000
+
+
 def test_replay_from_any_checkpoint_reconverges(spark, tmpdir_path, changes_path):
     """Kill the engine after epoch k, rebuild a fresh engine over the
     same table+manifests, resume → identical final state."""

@@ -5,7 +5,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from etl_warehouse_agnostic_spark.lake.table import CommitConflict, LakeTable, _atomic_write_json
+from etl_warehouse_agnostic_spark.lake.table import (
+    CommitConflict,
+    LakeTable,
+    _atomic_write_json,
+    footer_census,
+)
 from etl_warehouse_agnostic_spark.schemas import KEY_COLS, TRANSCRIPTS_SCHEMA_V1
 from etl_warehouse_agnostic_spark.sources.generator import generate_base_transcripts
 
@@ -228,3 +233,29 @@ def test_day_range_validation_rejects_misuse(spark, tmpdir_path):
     )
     with pytest.raises(ValueError, match="granule format"):
         daily.read(day_range=("2024-01", "2024-02"))
+
+
+def test_footer_census_counts_rows_and_takes_a_strict_max(tmpdir_path):
+    """Rows from every footer; the max over row groups, past an all-null
+    group, and None (scan instead) once a file with rows lacks the
+    column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def write(name, table, **kw):
+        path = os.path.join(tmpdir_path, name)
+        pq.write_table(table, path, **kw)
+        return path
+
+    groups = write("groups.parquet", pa.table({"lsn": pa.array([3, 9, 4, 7, 1], pa.int64())}),
+                   row_group_size=2)
+    nulls = write("nulls.parquet", pa.table({"lsn": pa.array([None, None], pa.int64())}))
+    other = write("other.parquet", pa.table({"id": pa.array([1, 2, 3], pa.int64())}))
+    assert pq.ParquetFile(groups).metadata.num_row_groups == 3
+
+    assert footer_census([groups], "lsn") == (5, 9)
+    assert footer_census([groups, nulls], "lsn") == (7, 9)
+    assert footer_census([nulls], "lsn") == (2, None)
+    assert footer_census([groups, other], "lsn") == (8, None)
+    assert footer_census([groups, other]) == (8, None)
+    assert footer_census([], "lsn") == (0, None)

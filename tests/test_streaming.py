@@ -70,8 +70,11 @@ def test_streaming_backlog_drain_matches_oracle(spark, tmpdir_path, stream_dir):
         .orderBy("conv_id", "turn_idx").collect()
     ]
     assert got == oracle(stream_dir)
-    # multiple micro-batches became multiple committed epochs
-    assert len(eng.checkpoints.epochs()) >= 2
+    # multiple micro-batches became multiple committed epochs, whose
+    # (watermark, hi] ranges tile the stream
+    ranges = [eng.checkpoints.get(e)["lineage"]["lsn_range"] for e in eng.checkpoints.epochs()]
+    assert len(ranges) >= 2 and ranges[0][0] == 0
+    assert all(prev[1] == cur[0] for prev, cur in zip(ranges, ranges[1:]))
 
 
 def test_streaming_restart_is_noop(spark, tmpdir_path, stream_dir):
